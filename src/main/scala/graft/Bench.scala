@@ -1100,7 +1100,10 @@ object Bench {
       java.nio.file.Files.move(tmp, target,
         java.nio.file.StandardCopyOption.ATOMIC_MOVE,
         java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-    } catch { case _: Throwable => () }
+    } catch {
+      case scala.util.control.NonFatal(e) =>
+        System.err.println(s"[bench] bench_summary.json not written: $e")
+    }
     spark.stop()
   }
 }

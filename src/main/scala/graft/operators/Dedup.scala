@@ -1055,11 +1055,11 @@ object Dedup {
     // cluster had to exceed ~N/17 of the |corpus|·|N_k| variant frame to
     // surface at all — the AdvisedJoinProbe finding). Kept as an explicit
     // parameter here so the conf can still opt down.
-    // The advisory's EAGER sketch pass runs over the SAME lazily
-    // checkpointed variant frame the join then consumes (r18): the
-    // sketch materializes it, the self-join and the salt-path filters
-    // read arrays — the variant neighborhood is computed once per call
-    // instead of once per consumer.
+    // The advisory's EAGER sketch pass runs over the lazy variant frame
+    // (variantKeys is deliberately not checkpointed, see its scaladoc):
+    // the sketch and each join leg re-derive the explode from
+    // baseEntities' checkpoint, so the corpus is scanned once while the
+    // ~|s|x neighborhood is never materialized.
     val advice = graft.plans.JoinAdvisor.adviseSelf(
       keys, col("v"),
       broadcastMaxRows, skewFactor, minSaltOutputRows, maxSaltBuckets,

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
 import org.apache.spark.sql.types._
+import scala.util.control.NonFatal
 import graft.functions.TextFunctions._
 
 /** Structured Streaming surface over the `documents` table — the
@@ -23,6 +24,27 @@ object DocumentStreams {
     StructField("doc_id", LongType), StructField("text", StringType),
     StructField("lang", StringType), StructField("source", StringType),
     StructField("n_chars", LongType)))
+
+  /** Declared layouts of the dedup store's three bases. Every store read
+    * goes through these: a schema-less parquet read launches one
+    * footer-reading inference job per call, which a micro-batch would
+    * pay on every probe and every compaction. StreamingSpec pins them
+    * against what the writers produce. */
+  private[graft] val bandsSchema: StructType = StructType(Seq(
+    StructField("old_id", LongType), StructField("band", IntegerType),
+    StructField("bh", LongType)))
+  private[graft] val whSchema: StructType = StructType(Seq(
+    StructField("old_id", LongType),
+    StructField("wh_old", ArrayType(LongType))))
+  private[graft] val survivorSchema: StructType = StructType(Seq(
+    StructField("doc_id", LongType), StructField("lang", StringType)))
+
+  /** Empty survivor frame. Seeding a sink with it makes the sink a
+    * parquet dir from the first trigger, so its read-back works even if
+    * every batch dedups away. */
+  private def emptySurvivors(spark: SparkSession): DataFrame =
+    spark.createDataFrame(
+      new java.util.ArrayList[org.apache.spark.sql.Row](), survivorSchema)
 
   /** File-streaming read of the documents table (micro-batched by the
     * source). */
@@ -116,14 +138,7 @@ object DocumentStreams {
           round(graft.plans.NativeExprs.jaccardSorted(
             col("wh_new"), col("wh_old")), 4) >= threshold, 1)
           .otherwise(0).as("dup"))
-    // Seed the sink with an empty frame so the read-back has a schema even
-    // if no batch produced survivors (and so outPath is a valid parquet dir
-    // from the first trigger).
-    spark.createDataFrame(
-        new java.util.ArrayList[org.apache.spark.sql.Row](),
-        StructType(Seq(StructField("doc_id", LongType),
-          StructField("lang", StringType))))
-      .write.mode("overwrite").parquet(outPath)
+    emptySurvivors(spark).write.mode("overwrite").parquet(outPath)
     withStreamingShufflePartitions(spark, conf.shufflePartitions) {
       val q = probed.writeStream
         .foreachBatch { (batch: DataFrame, _: Long) =>
@@ -145,7 +160,7 @@ object DocumentStreams {
       require(q.recentProgress.flatMap(_.stateOperators).isEmpty,
         "curation gate stream must be stateless (per-batch verdicts)")
     }
-    spark.read.parquet(outPath)
+    spark.read.schema(survivorSchema).parquet(outPath)
       .orderBy(col("doc_id"))
   }
 
@@ -180,14 +195,7 @@ object DocumentStreams {
     val seed = indexSigned.localCheckpoint(true)
     try {
       val (exBands, exWh) = graft.operators.Dedup.preparedFromSigned(seed)
-      // Seed the sink with an empty frame so the read-back has a schema
-      // even if no batch produced survivors (and so outPath is a valid
-      // parquet dir from the first trigger).
-      spark.createDataFrame(
-          new java.util.ArrayList[org.apache.spark.sql.Row](),
-          StructType(Seq(StructField("doc_id", LongType),
-            StructField("lang", StringType))))
-        .write.mode("overwrite").parquet(outPath)
+      emptySurvivors(spark).write.mode("overwrite").parquet(outPath)
       withStreamingShufflePartitions(spark, conf.shufflePartitions) {
         val q = readDocumentStream(spark, dir)
           .filter(col("doc_id") % 10 =!= 0)
@@ -219,63 +227,11 @@ object DocumentStreams {
         require(q.recentProgress.flatMap(_.stateOperators).isEmpty,
           "curation gate stream must be stateless (per-batch verdicts)")
       }
-      spark.read.parquet(outPath)
+      spark.read.schema(survivorSchema).parquet(outPath)
         .orderBy(col("doc_id"))
     } finally { seed.unpersist(); () }
   }
 
-  /** Continuous-ingest curation with index MAINTENANCE — the full
-    * lifecycle [[curationGateToParquet]] stops short of: each arriving
-    * micro-batch is quality-gated, deduped against the PERSISTED
-    * signature index as it stands, its survivors are appended to the
-    * curated corpus, and the survivors' OWN signatures are appended to
-    * the index — so a later batch dedups against everything curated
-    * before it (seed corpus + all earlier batches), exactly how a
-    * production crawl keeps its dedup store current.
-    *
-    * Scale shape: the index lives on distributed storage and is read
-    * per batch through the same banded probe join (never re-signed, never
-    * driver-resident); the per-batch work is
-    * [[graft.operators.Dedup.dedupAgainstSignatureIndex]] verbatim; the
-    * streaming plan itself stays stateless (zero state-store operators,
-    * require()-asserted) because ALL cross-batch state is the persisted
-    * index — bounded by curated-corpus size on disk, not by stream volume
-    * in memory. Within-batch new-new duplicates are intentionally not
-    * compared (dedupAgainstSignatureIndex's documented contract;
-    * minhashDedupSurvivors is the batch-internal tool) — a doc therefore
-    * never collides with its OWN batch's signatures even though they are
-    * appended before the stream finishes.
-    *
-    * Determinism: the incoming crawl is rendered as one parquet file per
-    * batch (`batch b` = pmod(doc_id, batchFiles)) with strictly
-    * increasing modification times, and the file source is throttled to
-    * maxFilesPerTrigger=1 — FileStreamSource orders by (mtime, path), so
-    * batches replay in a fixed order and the survivor set is a pure
-    * function of the corpus (StreamingSpec pins parity with the
-    * sequential batch unroll; q142's oracle re-derives the whole cascade
-    * in SQL).
-    *
-    * @param seedIndex [[graft.operators.Dedup.signatureTable]] rows of the
-    *                  already-curated corpus; persisted to `indexPath` as
-    *                  the stream's starting state.
-    * @param docsPath     crawl relation under `dir` (parameterized so a
-    *                     deployment points at its own table).
-    * @param streamSplit  predicate selecting the crawl side (rows NOT in
-    *                     the seed corpus); default keeps doc_id%10==0 as
-    *                     the never-streamed seed/eval split.
-    * Durability: every batch's three outputs (band rows, wh rows,
-    * survivors) commit ATOMICALLY via the manifest protocol documented at
-    * [[CommitState]] — a mid-batch crash loses nothing and duplicates
-    * nothing, and a foreachBatch replay of an already-committed batch is
-    * a skip (exactly-once). Compaction swaps the manifest the same way,
-    * so the r10 in-place-rewrite hazard (crash ⇒ total index loss) is
-    * structurally gone.
-    *
-    * @param compactEvery rewrite the live entries of all three bases into
-    *                     one target-size token every this many batches (0
-    *                     disables) — bounds the O(batches) listing growth
-    *                     of per-batch commits.
-    * @return surviving (doc_id, lang) resolved through the manifest. */
   /** MANIFEST COMMIT PROTOCOL for the streaming curation store (the
     * production-strength fix the r9/r10 scaladoc promised): the store is
     * three parquet bases — `indexPath/bands`, `indexPath/wh` (the
@@ -288,21 +244,21 @@ object DocumentStreams {
     * concrete paths; a token dir not in the manifest does not exist as
     * far as the store is concerned.
     *
-    * Crash matrix (replacing the r10 "non-transactional 3-append
-    * window", whose failure mode was under-inclusion of a batch, and the
-    * in-place compaction rewrite, whose failure mode was TOTAL index
-    * loss):
-    *   - crash before the manifest swap → every write of the batch is an
-    *     orphan dir; replay recomputes against the unchanged manifest
-    *     view and mode("overwrite") replaces the partial dirs. Nothing
-    *     lost, nothing duplicated.
+    * Crash matrix — ONE commit point per trigger, the swap, whether the
+    * trigger appends a batch token or compacts (replacing the r10
+    * "non-transactional 3-append window", whose failure mode was
+    * under-inclusion of a batch, and the in-place compaction rewrite,
+    * whose failure mode was TOTAL index loss):
+    *   - crash before the swap → every dir the trigger wrote (its
+    *     `batchNNNNN` token, or on a compaction-due trigger its
+    *     `compactNNNNN` token) is an orphan; the replay recomputes
+    *     against the unchanged manifest view and mode("overwrite")
+    *     replaces the partial dirs. Nothing lost, nothing duplicated.
     *   - crash after the swap (before the streaming checkpoint commit) →
-    *     the replayed batch's id is already in the manifest and the
-    *     processor SKIPS it — exactly-once without recomputation.
-    *   - compaction crash before its swap → orphan compact dirs, live
-    *     state untouched; after its swap → stale pre-compaction dirs are
-    *     deleted best-effort and are unreadable anyway (not in the
-    *     manifest).
+    *     the replayed batch's id is already recorded and the processor
+    *     SKIPS it — exactly-once without recomputation. Dirs a
+    *     compaction replaced are unreadable (not in the manifest) and
+    *     deleted best-effort.
     * The manifest also carries the replay-skip record separately from the
     * live entries, so compaction (which REPLACES entries) never erases
     * it. SINGLE-WRITER contract: the manifest swap is atomic but the
@@ -413,93 +369,153 @@ object DocumentStreams {
       indexPath: String, outPath: String, seedSurvivors: Boolean): Unit = {
     seedBands.write.mode("overwrite").parquet(s"$indexPath/bands/seed")
     seedWh.write.mode("overwrite").parquet(s"$indexPath/wh/seed")
-    // empty survivor seed so the read-back has a schema even if every
-    // batch dedups away
     if (seedSurvivors)
-      spark.createDataFrame(
-          new java.util.ArrayList[org.apache.spark.sql.Row](),
-          StructType(Seq(StructField("doc_id", LongType),
-            StructField("lang", StringType))))
-        .write.mode("overwrite").parquet(s"$outPath/seed")
+      emptySurvivors(spark).write.mode("overwrite").parquet(s"$outPath/seed")
     commitCommits(spark, indexPath, CommitState(Seq("seed"), -1L))
   }
 
+  /** A base's committed rows: the manifest's entries, read by the base's
+    * declared schema. */
+  private def readBase(spark: SparkSession, schema: StructType,
+      base: String, entries: Seq[String]): DataFrame =
+    spark.read.schema(schema).parquet(entries.map(e => s"$base/$e"): _*)
+
   /** Read the curated corpus as committed by the manifest. */
   private[graft] def readCurated(
-      spark: SparkSession, indexPath: String, outPath: String): DataFrame = {
-    val st = readCommits(spark, indexPath)
-    spark.read.parquet(st.entries.map(e => s"$outPath/$e"): _*)
+      spark: SparkSession, indexPath: String, outPath: String): DataFrame =
+    readBase(spark, survivorSchema, outPath,
+      readCommits(spark, indexPath).entries)
+
+  private def compactionDue(batchId: Long, compactEvery: Int): Boolean =
+    compactEvery > 0 && (batchId + 1) % compactEvery == 0
+
+  /** Sign a micro-batch ONCE and dedup it against the index as of
+    * `st` (the manifest view — the batch's own rows are not in it, so a
+    * doc never meets its own signatures). Tokenize→hash→minhash used to
+    * evaluate three times per batch (under the probe's band side, under
+    * its word-hash join-back, and again for the store writes), because
+    * each consumer re-derived signatures from `text` in its own lazy
+    * subtree; the eager `signed` checkpoint is the one frame they all
+    * read, and signDocs re-widens a file-thin batch first (the q184
+    * rule). Returns the kept docs as signed rows (doc_id, lang, wh,
+    * mh_bands), eagerly checkpointed — the caller unpersists. */
+  private def signAndProbe(
+      spark: SparkSession, st: CommitState, indexPath: String,
+      docs: DataFrame, numHashes: Int, bands: Int,
+      threshold: Double): DataFrame = {
+    val exBands = readBase(spark, bandsSchema, s"$indexPath/bands", st.entries)
+    val exWh = readBase(spark, whSchema, s"$indexPath/wh", st.entries)
+    val signed = graft.operators.Dedup.signDocs(
+      docs, col("text"), col("doc_id"), carry = Seq(col("lang")),
+      numHashes = numHashes, bands = bands).localCheckpoint(true)
+    // the join-back attaches lang/wh/mh_bands to the survivor ids so the
+    // store writes re-read THIS checkpoint; once it is materialized the
+    // lineage no longer reaches `signed`
+    try graft.operators.Dedup.dedupSignedAgainstPreparedIndex(
+        signed, exBands, exWh, threshold)
+      .join(signed, Seq("doc_id"))
+      .localCheckpoint(true)
+    finally { signed.unpersist(); () }
+  }
+
+  /** The store's one write path, behind the trigger's one commit point.
+    * Each base (`index/bands`, `index/wh`, and with `includeSurvivors`
+    * the survivor base) is written ONCE under a fresh token: a plain
+    * trigger writes its `kept` projection as one-file `batchNNNNN`
+    * (micro-batches are small; one file per batch keeps listings short)
+    * and the manifest appends it; a compaction-due trigger writes the
+    * base's live entries ∪ its `kept` projection as `compactNNNNN`,
+    * ceil(live bytes/target) files, and the manifest swaps to that one
+    * entry. With no `kept` rows the call is a pure compaction, which
+    * carries `maxBatch` unchanged. mode("overwrite") lets a replay after
+    * a pre-swap crash (`failBeforeCommit` injects one) replace the
+    * partial dirs. */
+  private def commitToStore(
+      spark: SparkSession, st: CommitState, indexPath: String,
+      outPath: String, batchId: Long, kept: Option[DataFrame],
+      compactTargetBytes: Option[Long], includeSurvivors: Boolean,
+      failBeforeCommit: Boolean): Unit = {
+    val conf = spark.sparkContext.hadoopConfiguration
+    def path(d: String) = new org.apache.hadoop.fs.Path(d)
+    val bases = Seq[(String, StructType, DataFrame => DataFrame)](
+        (s"$indexPath/bands", bandsSchema,
+          graft.operators.Dedup.preparedFromSigned(_)._1),
+        (s"$indexPath/wh", whSchema,
+          graft.operators.Dedup.preparedFromSigned(_)._2)) ++
+      (if (includeSurvivors)
+        Seq((outPath, survivorSchema,
+          (k: DataFrame) => k.select(col("doc_id"), col("lang"))))
+      else Seq.empty)
+    val token = compactTargetBytes.fold(f"batch$batchId%05d")(
+      _ => f"compact$batchId%05d")
+    for ((base, schema, project) <- bases) {
+      val rows = kept.map(project)
+      val out = compactTargetBytes match {
+        case None => rows.get.coalesce(1)
+        case Some(target) =>
+          val bytes = st.entries.map { e =>
+            val hp = path(s"$base/$e")
+            val fs = hp.getFileSystem(conf)
+            if (fs.exists(hp)) fs.getContentSummary(hp).getLength else 0L
+          }.sum
+          val want = math.max(1L, (bytes + target - 1) / target).toInt
+          val live = readBase(spark, schema, base, st.entries)
+          rows.fold(live)(live.unionByName(_)).coalesce(want)
+      }
+      out.write.mode("overwrite").parquet(s"$base/$token")
+    }
+    if (failBeforeCommit)
+      throw new IllegalStateException("injected crash before manifest commit")
+    val entries =
+      if (compactTargetBytes.isDefined) Seq(token) else st.entries :+ token
+    val maxBatch =
+      if (kept.isDefined) math.max(st.maxBatch, batchId) else st.maxBatch
+    commitCommits(spark, indexPath, CommitState(entries, maxBatch))
+    // the swap is durable; replaced dirs are unreachable — deletion is
+    // pure housekeeping and may fail without consequence (a fatal error
+    // or an interrupt of a stopping stream still propagates)
+    if (compactTargetBytes.isDefined)
+      for ((base, _, _) <- bases; e <- st.entries) {
+        val hp = path(s"$base/$e")
+        try { hp.getFileSystem(conf).delete(hp, true); () }
+        catch { case NonFatal(_) => () }
+      }
   }
 
   /** One micro-batch of the incremental curation lifecycle under the
     * manifest protocol: gate → dedup against the manifest view of the
-    * index → write the batch's three outputs under a batch token
-    * (idempotent overwrite) → swap the manifest. Public-to-the-package so
-    * the crash-replay spec can drive it directly; `failBeforeCommit`
-    * injects a crash in the one window that exists (after the dir writes,
-    * before the swap). */
+    * index → write the kept rows to all three bases and swap the
+    * manifest ([[commitToStore]]: a batch token, or every
+    * `compactEvery` batches one compacted token per base) — the
+    * trigger's one commit point. Public-to-the-package so the
+    * crash-replay spec can drive it directly; `failBeforeCommit` injects
+    * a crash in the one window that exists (after the dir writes, before
+    * the swap). */
   private[graft] def processCurationBatch(
       spark: SparkSession, batch: DataFrame, batchId: Long,
       indexPath: String, outPath: String,
       numHashes: Int, bands: Int, threshold: Double,
+      compactEvery: Int = 0, compactTargetBytes: Long = 128L << 20,
       failBeforeCommit: Boolean = false): Unit = {
     val st = readCommits(spark, indexPath)
     // exactly-once replay skip: the batch committed, the stream
     // checkpoint just didn't record it before the crash (ids are
     // monotonic — the CommitState contract — so <= max means committed)
     if (batchId <= st.maxBatch) return
-    // the index AS OF this batch = the manifest view; the batch's own
-    // token is not in it, so a doc never meets its own signatures
-    val exBands =
-      spark.read.parquet(st.entries.map(e => s"$indexPath/bands/$e"): _*)
-    val exWh =
-      spark.read.parquet(st.entries.map(e => s"$indexPath/wh/$e"): _*)
-    val gated = batch.filter(qualityGate(col("text")))
-    // Sign ONCE per batch: tokenize→hash→minhash previously evaluated
-    // three times per batch (under the probe's band side, under its
-    // word-hash join-back, and again for the index/survivor writes),
-    // because each consumer re-derived signatures from `text` in its own
-    // lazy subtree. The eager `signed` checkpoint materializes the one
-    // frame every consumer reads; signDocs itself re-widens a
-    // file-thin batch before the signature map (the q184 rule).
-    val signed = graft.operators.Dedup.signDocs(
-      gated, col("text"), col("doc_id"), carry = Seq(col("lang")),
-      numHashes = numHashes, bands = bands).localCheckpoint(true)
-    // the probe reads materialized arrays; the join-back attaches
-    // lang/wh/mh_bands to the survivor ids so the three writes below are
-    // cheap re-reads of THIS checkpoint, exactly as before
-    val kept = graft.operators.Dedup.dedupSignedAgainstPreparedIndex(
-        signed, exBands, exWh, threshold)
-      .join(signed, Seq("doc_id"))
-      .localCheckpoint(true)
-    try {
-      val token = f"batch$batchId%05d"
-      // coalesce(1): micro-batch outputs are small by definition; one
-      // file per batch keeps later batches' listings (and trigger commit
-      // overhead) from growing with file count. mode("overwrite") makes
-      // a replay after a pre-commit crash replace partial dirs.
-      kept.select(col("doc_id").as("old_id"),
-          posexplode(col("mh_bands")).as(Seq("band", "bh")))
-        .coalesce(1).write.mode("overwrite")
-        .parquet(s"$indexPath/bands/$token")
-      kept.select(col("doc_id").as("old_id"), col("wh").as("wh_old"))
-        .coalesce(1).write.mode("overwrite").parquet(s"$indexPath/wh/$token")
-      kept.select(col("doc_id"), col("lang"))
-        .coalesce(1).write.mode("overwrite").parquet(s"$outPath/$token")
-      if (failBeforeCommit)
-        throw new IllegalStateException(
-          "injected crash before manifest commit")
-      commitCommits(spark, indexPath,
-        CommitState(st.entries :+ token, math.max(st.maxBatch, batchId)))
-    } finally { kept.unpersist(); signed.unpersist(); () }
+    val kept = signAndProbe(spark, st, indexPath,
+      batch.filter(qualityGate(col("text"))), numHashes, bands, threshold)
+    try commitToStore(spark, st, indexPath, outPath, batchId, Some(kept),
+      Option.when(compactionDue(batchId, compactEvery))(compactTargetBytes),
+      includeSurvivors = true, failBeforeCommit)
+    finally { kept.unpersist(); () }
   }
 
-  /** Size-tiered compaction under the manifest protocol: rewrite the
-    * UNION of the live entries of each base into one `compactNNNNN`
-    * token dir (ceil(bytes/targetBytes) files), swap the manifest to the
-    * single compacted entry, then delete the replaced dirs best-effort
-    * (a crash leaves only unreadable orphans — the live state is always
-    * whatever the manifest names, never a partially-rewritten dir).
+  /** Compaction under the manifest protocol, outside any batch: rewrite
+    * the UNION of the live entries of each base into one `compactNNNNN`
+    * token dir (ceil(bytes/targetBytes) files) and swap the manifest to
+    * that single entry — every live entry is rewritten, the seed
+    * included. It is [[commitToStore]] with no rows to add: the same
+    * write, swap and best-effort cleanup a compaction-due trigger runs.
     *
     * `includeSurvivors = false` compacts the INDEX BASES ONLY — the
     * keyed-connector lifecycle ([[incrementalDedupToKeyed]]), whose
@@ -515,36 +531,64 @@ object DocumentStreams {
       includeSurvivors: Boolean = true,
       failBeforeCommit: Boolean = false): Unit = {
     val st = readCommits(spark, indexPath)
-    if (st.entries.size <= 1) return
-    val conf = spark.sparkContext.hadoopConfiguration
-    val token = f"compact$batchId%05d"
-    val bases = Seq(s"$indexPath/bands", s"$indexPath/wh") ++
-      (if (includeSurvivors) Seq(outPath) else Seq.empty)
-    for (base <- bases) {
-      val dirs = st.entries.map(e => s"$base/$e")
-      val bytes = dirs.map { d =>
-        val hp = new org.apache.hadoop.fs.Path(d)
-        val fs = hp.getFileSystem(conf)
-        if (fs.exists(hp)) fs.getContentSummary(hp).getLength else 0L
-      }.sum
-      val want = math.max(1L, (bytes + targetBytes - 1) / targetBytes).toInt
-      spark.read.parquet(dirs: _*)
-        .coalesce(want).write.mode("overwrite").parquet(s"$base/$token")
-    }
-    if (failBeforeCommit)
-      throw new IllegalStateException(
-        "injected crash before compaction manifest swap")
-    commitCommits(spark, indexPath, CommitState(Seq(token), st.maxBatch))
-    // the swap is durable; stale dirs are unreachable — deletion is pure
-    // housekeeping and may fail without consequence
-    for (base <- bases; e <- st.entries) {
-      try {
-        val hp = new org.apache.hadoop.fs.Path(s"$base/$e")
-        hp.getFileSystem(conf).delete(hp, true); ()
-      } catch { case _: Throwable => () }
-    }
+    if (st.entries.size > 1)
+      commitToStore(spark, st, indexPath, outPath, batchId, None,
+        Some(targetBytes), includeSurvivors, failBeforeCommit)
   }
 
+  /** Continuous-ingest curation with index MAINTENANCE — the full
+    * lifecycle [[curationGateToParquet]] stops short of: each arriving
+    * micro-batch is quality-gated, deduped against the PERSISTED
+    * signature index as it stands, its survivors are appended to the
+    * curated corpus, and the survivors' OWN signatures are appended to
+    * the index — so a later batch dedups against everything curated
+    * before it (seed corpus + all earlier batches), exactly how a
+    * production crawl keeps its dedup store current.
+    *
+    * Scale shape: the index lives on distributed storage and is read
+    * per batch through the same banded probe join (never re-signed, never
+    * driver-resident); the per-batch work is
+    * [[graft.operators.Dedup.dedupAgainstSignatureIndex]] verbatim; the
+    * streaming plan itself stays stateless (zero state-store operators,
+    * require()-asserted) because ALL cross-batch state is the persisted
+    * index — bounded by curated-corpus size on disk, not by stream volume
+    * in memory. Within-batch new-new duplicates are intentionally not
+    * compared (dedupAgainstSignatureIndex's documented contract;
+    * minhashDedupSurvivors is the batch-internal tool) — a doc therefore
+    * never collides with its OWN batch's signatures even though they are
+    * appended before the stream finishes.
+    *
+    * Determinism: the incoming crawl is rendered as one parquet file per
+    * batch (`batch b` = pmod(doc_id, batchFiles)) with strictly
+    * increasing modification times, and the file source is throttled to
+    * maxFilesPerTrigger=1 — FileStreamSource orders by (mtime, path), so
+    * batches replay in a fixed order and the survivor set is a pure
+    * function of the corpus (StreamingSpec pins parity with the
+    * sequential batch unroll; q142's oracle re-derives the whole cascade
+    * in SQL).
+    *
+    * @param seedIndex [[graft.operators.Dedup.signatureTable]] rows of the
+    *                  already-curated corpus; persisted to `indexPath` as
+    *                  the stream's starting state.
+    * @param docsPath     crawl relation under `dir` (parameterized so a
+    *                     deployment points at its own table).
+    * @param streamSplit  predicate selecting the crawl side (rows NOT in
+    *                     the seed corpus); default keeps doc_id%10==0 as
+    *                     the never-streamed seed/eval split.
+    * Durability: every batch's three outputs (band rows, wh rows,
+    * survivors) commit ATOMICALLY via the manifest protocol documented at
+    * [[CommitState]] — a mid-batch crash loses nothing and duplicates
+    * nothing, and a foreachBatch replay of an already-committed batch is
+    * a skip (exactly-once). A compacting trigger commits through the same
+    * single swap, so the r10 in-place-rewrite hazard (crash ⇒ total index
+    * loss) is structurally gone.
+    *
+    * @param compactEvery every this many batches (0 disables), the
+    *                     trigger writes each base's live entries plus its
+    *                     own rows as one target-size token instead of a
+    *                     batch token — bounds the O(batches) listing
+    *                     growth of per-batch commits.
+    * @return surviving (doc_id, lang) resolved through the manifest. */
   def incrementalCurationToParquet(
       spark: SparkSession, dir: String, seedIndex: DataFrame,
       outPath: String, indexPath: String, batchFiles: Int = 3,
@@ -603,20 +647,13 @@ object DocumentStreams {
       val q = incoming.writeStream
         .foreachBatch { (batch: DataFrame, batchId: Long) =>
           // all batch effects commit atomically through the manifest
-          // swap in processCurationBatch (crash matrix at CommitState)
+          // swap in processCurationBatch (crash matrix at CommitState).
+          // Even at one file per batch the listings grow O(batches) over
+          // a stream's lifetime, so every compactEvery batches that same
+          // swap installs one ceil(bytes/target)-file token holding the
+          // live entries and the batch's rows.
           processCurationBatch(spark, batch, batchId, indexPath, outPath,
-            numHashes, bands, threshold)
-          // size-tiered compaction: even at one file per batch the
-          // listings grow O(batches) over a stream's lifetime; every
-          // compactEvery batches the live entries are rewritten into one
-          // ceil(bytes/target)-file token and the manifest swaps to it.
-          // Runs AFTER this batch's commit and BEFORE the next batch's
-          // manifest read, so a batch still never sees its own
-          // signatures.
-          if (compactEvery > 0 && (batchId + 1) % compactEvery == 0)
-            compactCommitted(spark, indexPath, outPath, batchId,
-              compactTargetBytes)
-          ()
+            numHashes, bands, threshold, compactEvery, compactTargetBytes)
         }
         .options(conf.options)
         .trigger(Trigger.AvailableNow())
@@ -661,7 +698,8 @@ object DocumentStreams {
     * `graft-keyed` layout through [[graft.sources.v2.KeyedJsonStream
     * .appendBatch]] (the connector's own batch-id marker + residue-scrub
     * idempotence), then append the novel docs' signatures to the index
-    * under the manifest protocol.
+    * under the manifest protocol ([[commitToStore]] with the index bases
+    * only — every `compactEvery` batches as one compacted token).
     *
     * Two stores, each idempotent per batch id, COMMITTED IN A FIXED
     * ORDER (keyed first, manifest second) — that ordering is what makes
@@ -680,23 +718,12 @@ object DocumentStreams {
       spark: SparkSession, batch: DataFrame, batchId: Long,
       indexPath: String, outPath: String, shards: Int,
       numHashes: Int, bands: Int, threshold: Double,
+      compactEvery: Int = 0, compactTargetBytes: Long = 128L << 20,
       failBeforeCommit: Boolean = false): Unit = {
     val st = readCommits(spark, indexPath)
     if (batchId <= st.maxBatch) return
-    val exBands =
-      spark.read.parquet(st.entries.map(e => s"$indexPath/bands/$e"): _*)
-    val exWh =
-      spark.read.parquet(st.entries.map(e => s"$indexPath/wh/$e"): _*)
-    // sign ONCE per batch — the [[processCurationBatch]] rule, for the
-    // same three-evaluations reason (probe band side, probe wh
-    // join-back, index writes); signDocs re-widens a file-thin batch
-    val signed = graft.operators.Dedup.signDocs(
-      batch, col("text"), col("doc_id"), carry = Seq(col("lang")),
-      numHashes = numHashes, bands = bands).localCheckpoint(true)
-    val kept = graft.operators.Dedup.dedupSignedAgainstPreparedIndex(
-        signed, exBands, exWh, threshold)
-      .join(signed, Seq("doc_id"))
-      .localCheckpoint(true)
+    val kept = signAndProbe(
+      spark, st, indexPath, batch, numHashes, bands, threshold)
     try {
       // 1) novel docs into the keyed store (its ledger makes a replay of
       // a committed id a whole-batch skip)
@@ -705,20 +732,13 @@ object DocumentStreams {
           pmod(xxhash64(col("doc_id")), lit(shards.toLong))
             .cast("int").as("shard")),
         outPath, "shard", batchId)
-      // 2) their signatures into the index (manifest swap LAST)
-      val token = f"batch$batchId%05d"
-      kept.select(col("doc_id").as("old_id"),
-          posexplode(col("mh_bands")).as(Seq("band", "bh")))
-        .coalesce(1).write.mode("overwrite")
-        .parquet(s"$indexPath/bands/$token")
-      kept.select(col("doc_id").as("old_id"), col("wh").as("wh_old"))
-        .coalesce(1).write.mode("overwrite").parquet(s"$indexPath/wh/$token")
-      if (failBeforeCommit)
-        throw new IllegalStateException(
-          "injected crash between keyed commit and manifest swap")
-      commitCommits(spark, indexPath,
-        CommitState(st.entries :+ token, math.max(st.maxBatch, batchId)))
-    } finally { kept.unpersist(); signed.unpersist(); () }
+      // 2) their signatures into the index (manifest swap LAST);
+      // includeSurvivors = false: the survivor store is the keyed
+      // layout, not a manifest-resolved parquet base
+      commitToStore(spark, st, indexPath, outPath, batchId, Some(kept),
+        Option.when(compactionDue(batchId, compactEvery))(compactTargetBytes),
+        includeSurvivors = false, failBeforeCommit)
+    } finally { kept.unpersist(); () }
   }
 
   /** Incremental near-dup dedup with the curated corpus living in the
@@ -739,11 +759,13 @@ object DocumentStreams {
     * Returns the curated corpus read back THROUGH the connector's scan.
     * Within-batch new-new duplicates are out of scope, exactly as in
     * [[incrementalCurationToParquet]] (dedupAgainstSignatureIndex's
-    * documented contract). */
-  /** @param compactEvery rewrite BOTH stores' accreted per-batch state
+    * documented contract).
+    *
+    * @param compactEvery rewrite BOTH stores' accreted per-batch state
     *                      every this many batches (0 disables): the
-    *                      signature index's live entries into one token
-    *                      (r16 verdict #5 — manifest swap, `maxBatch`
+    *                      signature index's live entries plus the
+    *                      batch's rows into one token (r16 verdict #5 —
+    *                      the trigger's one manifest swap, `maxBatch`
     *                      carried) AND the keyed survivor store's
     *                      per-shard batch files into one generation
     *                      (r17 verdict #3 —
@@ -812,20 +834,15 @@ object DocumentStreams {
     withStreamingShufflePartitions(spark, conf.shufflePartitions) {
       val q = incoming.writeStream
         .foreachBatch { (batch: DataFrame, batchId: Long) =>
+          // the index compacts inside the batch's own manifest swap; the
+          // keyed survivor store compacts AFTER the two-store commit,
+          // through its OWN generation protocol, with the batch ledger
+          // carried as the replay authority
           processKeyedDedupBatch(spark, batch, batchId, indexPath, outPath,
-            shards, numHashes, bands, threshold)
-          // compaction AFTER this batch's two-store commit and BEFORE
-          // the next batch's manifest read — a batch still never meets
-          // its own signatures. The index compacts through its manifest
-          // (includeSurvivors=false: the survivor store is NOT a
-          // manifest-resolved parquet base); the keyed survivor store
-          // compacts through its OWN generation protocol, with the
-          // batch ledger carried as the replay authority.
-          if (compactEvery > 0 && (batchId + 1) % compactEvery == 0) {
-            compactCommitted(spark, indexPath, outPath, batchId,
-              compactTargetBytes, includeSurvivors = false)
+            shards, numHashes, bands, threshold, compactEvery,
+            compactTargetBytes)
+          if (compactionDue(batchId, compactEvery))
             graft.sources.v2.KeyedJsonStream.compact(outPath, "shard")
-          }
           ()
         }
         .options(conf.options)

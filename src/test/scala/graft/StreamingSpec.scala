@@ -501,6 +501,205 @@ class StreamingSpec extends SparkSpec {
         s"(${bandFiles(idxA)} vs ${bandFiles(idxB)})")
   }
 
+  // --- the fused compaction commit: fixtures shared by the tests below ---
+  private def curationSeed() = {
+    val docs = Tables(spark, sfDir).documents
+    graft.operators.Dedup.signatureTable(
+      docs.filter(col("doc_id") % 10 === 0), col("text"), col("doc_id"),
+      numHashes = 64, bands = 4)
+  }
+  private def crawlBatch(b: Int) = Tables(spark, sfDir).documents
+    .filter(col("doc_id") % 10 =!= 0)
+    .filter(pmod(col("doc_id"), lit(3)) === b)
+  private def tmpDir(tag: String): String =
+    java.nio.file.Files.createTempDirectory(s"graft-spec-$tag").toString
+  private def tokenDirs(base: String): Seq[String] =
+    Option(new java.io.File(base).listFiles).getOrElse(Array.empty)
+      .filter(_.isDirectory).map(_.getName).toSeq.sorted
+  private val keyedSchema = org.apache.spark.sql.types.StructType(Seq(
+    org.apache.spark.sql.types.StructField("doc_id",
+      org.apache.spark.sql.types.LongType),
+    org.apache.spark.sql.types.StructField("lang",
+      org.apache.spark.sql.types.StringType),
+    org.apache.spark.sql.types.StructField("shard",
+      org.apache.spark.sql.types.IntegerType)))
+  private def keyedCurated(out: String): Seq[Long] =
+    spark.read.format("graft-keyed").schema(keyedSchema)
+      .option("keycol", "shard").load(out)
+      .collect().map(_.getLong(0)).toSeq.sorted
+
+  test("dedup store: the declared base schemas match what every writer " +
+    "produces (long-format seed, signed seed, batch and compact tokens)") {
+    // every store read goes through DocumentStreams' declared schemas; a
+    // writer whose layout drifts would otherwise read back null columns
+    import graft.streaming.DocumentStreams
+    def fields(s: org.apache.spark.sql.types.StructType) =
+      s.fields.map(f => (f.name, f.dataType)).toSeq
+    def check(idx: String, out: String, token: String): Unit =
+      for ((base, declared) <- Seq(
+          s"$idx/bands" -> DocumentStreams.bandsSchema,
+          s"$idx/wh" -> DocumentStreams.whSchema,
+          out -> DocumentStreams.survivorSchema))
+        assert(fields(spark.read.parquet(s"$base/$token").schema) ===
+          fields(declared), s"$base/$token")
+    val idx = tmpDir("schema-idx")
+    val out = tmpDir("schema-out")
+    DocumentStreams.initCurationStore(spark, curationSeed(), idx, out)
+    check(idx, out, "seed")
+    DocumentStreams.processCurationBatch(spark, crawlBatch(0), 0L, idx, out,
+      numHashes = 64, bands = 4, threshold = 0.95)
+    check(idx, out, "batch00000")
+    DocumentStreams.processCurationBatch(spark, crawlBatch(1), 1L, idx, out,
+      numHashes = 64, bands = 4, threshold = 0.95, compactEvery = 2)
+    check(idx, out, "compact00001")
+    val sIdx = tmpDir("schema-sidx")
+    val sOut = tmpDir("schema-sout")
+    val docs = Tables(spark, sfDir).documents
+    DocumentStreams.initCurationStoreSigned(spark,
+      graft.operators.Dedup.signDocs(docs.filter(col("doc_id") % 10 === 0),
+        col("text"), col("doc_id"), numHashes = 64, bands = 4),
+      sIdx, sOut)
+    check(sIdx, sOut, "seed")
+  }
+
+  test("incremental curation: a compaction-due trigger commits once — a " +
+    "crash before its swap changes nothing, and the replay installs one " +
+    "compact token holding the crash-free survivors") {
+    import graft.streaming.DocumentStreams
+    val seedIdx = curationSeed()
+    def process(idx: String, out: String, b: Int, compactEvery: Int,
+        fail: Boolean = false): Unit =
+      DocumentStreams.processCurationBatch(spark, crawlBatch(b), b.toLong,
+        idx, out, numHashes = 64, bands = 4, threshold = 0.95,
+        compactEvery = compactEvery, failBeforeCommit = fail)
+    def survivors(idx: String, out: String): Seq[(Long, String)] =
+      DocumentStreams.readCurated(spark, idx, out)
+        .collect().map(r => (r.getLong(0), r.getString(1))).toSeq.sorted
+    val idx = tmpDir("fused-idx")
+    val out = tmpDir("fused-out")
+    DocumentStreams.initCurationStore(spark, seedIdx, idx, out)
+    process(idx, out, 0, compactEvery = 2)
+    val before = DocumentStreams.readCommits(spark, idx)
+    assert(before === DocumentStreams.CommitState(Seq("seed", "batch00000"), 0L))
+    val survBefore = survivors(idx, out)
+    // batch 1 is compaction-due (compactEvery = 2): crash before the swap
+    intercept[IllegalStateException] {
+      process(idx, out, 1, compactEvery = 2, fail = true)
+    }
+    assert(DocumentStreams.readCommits(spark, idx) === before,
+      "a pre-swap crash must leave the manifest unchanged")
+    assert(survivors(idx, out) === survBefore)
+    // replay: one swap to the compacted token, maxBatch recorded
+    process(idx, out, 1, compactEvery = 2)
+    assert(DocumentStreams.readCommits(spark, idx) ===
+      DocumentStreams.CommitState(Seq("compact00001"), 1L))
+    for (base <- Seq(s"$idx/bands", s"$idx/wh", out))
+      assert(tokenDirs(base) === Seq("compact00001"),
+        s"$base must hold only the compacted token")
+    // the verdicts equal a crash-free store that never compacts
+    val cleanIdx = tmpDir("fused-clean-idx")
+    val cleanOut = tmpDir("fused-clean-out")
+    DocumentStreams.initCurationStore(spark, seedIdx, cleanIdx, cleanOut)
+    (0 to 1).foreach(b => process(cleanIdx, cleanOut, b, compactEvery = 0))
+    assert(survivors(idx, out) === survivors(cleanIdx, cleanOut))
+    assert(survivors(idx, out).size > survBefore.size,
+      "batch 1 must add survivors for the replay to be observable")
+    // a replay after the swap is a skip
+    process(idx, out, 1, compactEvery = 2)
+    assert(DocumentStreams.readCommits(spark, idx) ===
+      DocumentStreams.CommitState(Seq("compact00001"), 1L))
+  }
+
+  test("keyed incremental dedup: a compaction-due trigger commits the " +
+    "index once — a crash after the keyed commit and before the swap " +
+    "replays to one compact token, with the keyed ledger skipping") {
+    import graft.streaming.DocumentStreams
+    import graft.sources.v2.{KeyedJsonStream => KJS}
+    val seedIdx = curationSeed()
+    def process(idx: String, out: String, b: Int, compactEvery: Int,
+        fail: Boolean = false): Unit =
+      DocumentStreams.processKeyedDedupBatch(spark, crawlBatch(b), b.toLong,
+        idx, out, shards = 8, numHashes = 64, bands = 4, threshold = 0.95,
+        compactEvery = compactEvery, failBeforeCommit = fail)
+    val idx = tmpDir("kfused-idx")
+    val out = tmpDir("kfused-out")
+    DocumentStreams.initCurationStore(spark, seedIdx, idx, out,
+      seedSurvivors = false)
+    process(idx, out, 0, compactEvery = 2)
+    val before = DocumentStreams.readCommits(spark, idx)
+    intercept[IllegalStateException] {
+      process(idx, out, 1, compactEvery = 2, fail = true)
+    }
+    assert(KJS.isCommitted(out, 1L),
+      "the crash window under test is AFTER the keyed commit")
+    assert(DocumentStreams.readCommits(spark, idx) === before,
+      "...and BEFORE the manifest swap")
+    val afterCrash = keyedCurated(out)
+    process(idx, out, 1, compactEvery = 2)
+    assert(DocumentStreams.readCommits(spark, idx) ===
+      DocumentStreams.CommitState(Seq("compact00001"), 1L))
+    for (base <- Seq(s"$idx/bands", s"$idx/wh"))
+      assert(tokenDirs(base) === Seq("compact00001"),
+        s"$base must hold only the compacted token")
+    assert(keyedCurated(out) === afterCrash,
+      "the replay must not change the keyed store")
+    assert(!KJS.appendBatch(
+      crawlBatch(1).select(col("doc_id"), col("lang"),
+        pmod(xxhash64(col("doc_id")), lit(8L)).cast("int").as("shard")),
+      out, "shard", 1L),
+      "the keyed ledger must skip the replayed id")
+    // batch 2 against the compacted index keeps what a crash-free,
+    // never-compacted store keeps
+    process(idx, out, 2, compactEvery = 2)
+    val cleanIdx = tmpDir("kfused-clean-idx")
+    val cleanOut = tmpDir("kfused-clean-out")
+    DocumentStreams.initCurationStore(spark, seedIdx, cleanIdx, cleanOut,
+      seedSurvivors = false)
+    (0 to 2).foreach(b => process(cleanIdx, cleanOut, b, compactEvery = 0))
+    assert(keyedCurated(out) === keyedCurated(cleanOut),
+      "crash+replay+compaction must equal the crash-free cascade")
+  }
+
+  test("incremental curation: a trigger's Spark-job budget, with and " +
+    "without compaction (no schema inference, no second commit pass)") {
+    import graft.streaming.DocumentStreams
+    val group = s"graft-job-budget-${System.nanoTime()}"
+    val jobs = new java.util.concurrent.atomic.AtomicInteger()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(
+          e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        if (Option(e.properties).exists(
+            _.getProperty("spark.jobGroup.id") == group))
+          jobs.incrementAndGet()
+    }
+    val idx = tmpDir("budget-idx")
+    val out = tmpDir("budget-out")
+    DocumentStreams.initCurationStore(spark, curationSeed(), idx, out)
+    def jobsOf(b: Int, compactEvery: Int): Int = {
+      val sc = spark.sparkContext
+      org.apache.spark.GraftSparkBridge.drainListenerBus(sc)
+      jobs.set(0)
+      sc.setJobGroup(group, "trigger job budget")
+      try DocumentStreams.processCurationBatch(spark, crawlBatch(b),
+        b.toLong, idx, out, numHashes = 64, bands = 4, threshold = 0.95,
+        compactEvery = compactEvery)
+      finally sc.clearJobGroup()
+      org.apache.spark.GraftSparkBridge.drainListenerBus(sc)
+      jobs.get()
+    }
+    spark.sparkContext.addSparkListener(listener)
+    val (plain, compacting) =
+      try (jobsOf(0, compactEvery = 0), jobsOf(1, compactEvery = 1))
+      finally spark.sparkContext.removeSparkListener(listener)
+    assert(DocumentStreams.readCommits(spark, idx).entries ===
+      Seq("compact00001"))
+    info(s"Spark jobs per trigger: plain $plain, compacting $compacting")
+    // the counts this layout reaches on the fixture: a schema-inferring
+    // store read or a second commit pass would add jobs
+    assert(plain <= 14, s"plain trigger ran $plain jobs")
+    assert(compacting <= 14, s"compacting trigger ran $compacting jobs")
+  }
+
   test("keyed survivor store: generation compaction swaps atomically — a " +
     "crash before the _gen swap changes nothing, the fold preserves " +
     "reads byte-for-byte, ledger markers survive, and appends continue") {
