@@ -1,8 +1,9 @@
 package graft.migration
 
 import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.sql.functions._
-import graft.sources.RateLimitedSink
+import graft.sources.{BoundedErrorAccumulator, RateLimitedSink}
 
 /** The reference's CLI surface (SyncCustomers.php:17, SyncTickets.php:18-19,
   * ViewTicket.php:18-19), carried option-for-option. */
@@ -22,8 +23,11 @@ case class SyncReport(published: Long, errors: Long, batches: Long)
   * dataflow. The nested acquire→process→publish-per-page interleaving of
   * the reference (§3.2) is deliberately UN-nested: one declarative plan
   * per stage, pages becoming partitions, with the rate-limited publish as
-  * the terminal foreachPartition. Inputs are DataFrames so the same
-  * pipelines run from fixtures, parquet dumps, or the live paged source.
+  * the terminal foreachPartition. A sync call executes its plan once: that
+  * one pass posts the ok rows and records the error rows, and the error
+  * total and grouped CSV are read from what it recorded. Inputs are
+  * DataFrames so the same pipelines run from fixtures, parquet dumps, or
+  * the live paged source.
   */
 object Pipelines {
 
@@ -36,22 +40,31 @@ object Pipelines {
     * The fetch is restricted to attachments referenced by the SELECTED
     * messages first (semi-join on the attachments_href message id, the
     * reference's per-message attachment fetch, TP:280-284) — a --tickets
-    * point migration must fetch that ticket's payloads, not the corpus's. */
+    * point migration must fetch that ticket's payloads, not the corpus's.
+    *
+    * Returns the frame and a release for what this call pinned: the
+    * caller runs it once its last action over the frame has finished. */
   private def withPayloads(
-      attachments: DataFrame, selectedMessages: DataFrame): DataFrame = {
+      attachments: DataFrame, selectedMessages: DataFrame): (DataFrame, () => Unit) = {
     val relevant = attachments.join(
       selectedMessages.filter(col("attachments_href").isNotNull)
         .select(MigrationFunctions.hrefAttachmentMessageId(
           col("attachments_href")).as("message_id")),
       Seq("message_id"), "left_semi")
-    if (relevant.columns.contains("payload")) relevant
-    // eager localCheckpoint: the fetched frame feeds BOTH the uploaded and
-    // failed-note branches of the final plan (and publish + error-count
-    // actions) — left lazy, the side-effecting HTTP fetch stage would
-    // re-GET every attachment once per consumer, and a URL that succeeds
-    // in one execution but fails in the other could appear both uploaded
-    // and failed-noted. Checkpointing pins one fetch outcome per URL.
-    else AttachmentFetch.fetchPayloads(relevant).localCheckpoint(true)
+    if (relevant.columns.contains("payload")) (relevant, () => ())
+    else {
+      // eager localCheckpoint: the fetched frame feeds BOTH the uploaded
+      // and failed-note branches of the final plan — left lazy, the
+      // side-effecting HTTP fetch stage would re-GET every attachment once
+      // per consumer, and a URL that succeeds in one execution but fails
+      // in the other could appear both uploaded and failed-noted.
+      // Checkpointing pins one fetch outcome per URL; its blocks are
+      // released through the checkpoint's RDD (a frame's unpersist() only
+      // drops cache entries, not a checkpoint).
+      val fetched = AttachmentFetch.fetchPayloads(relevant).localCheckpoint(true)
+      val pinned = fetched.queryExecution.logical.collect { case r: LogicalRDD => r.rdd }
+      (fetched, () => pinned.foreach(_.unpersist(blocking = false)))
+    }
   }
 
   /** F4: --startPage/--stopPage prune when the input carries a `page`
@@ -65,23 +78,30 @@ object Pipelines {
           col("page") <= hi.getOrElse(Int.MaxValue))
     }
 
+  /** One pass over `transformed`: the rate-limited publish posts the ok
+    * rows and, in the same `foreachPartition`, records every error row's
+    * (error_type, error_detail) into a bounded accumulator — exact counts
+    * per type plus a sample capped at `BoundedErrorAccumulator.DefaultCap`
+    * (the reference's publish-and-record loop, SyncCommandBase.php:163-193).
+    * The error total and the grouped CSV come from that driver-side
+    * summary, so nothing re-executes the transform after the side effect:
+    * over a live source a second execution could disagree with what was
+    * posted, and would re-fetch the API. */
   private def publishOkAndReport(
-      transformed0: DataFrame, ratePerMinute: Int, batchSize: Int,
+      transformed: DataFrame, ratePerMinute: Int, batchSize: Int,
       parallelism: Int, errorCsv: Option[(String, String)])(
       post: Seq[Row] => Unit): SyncReport = {
-    // one materialization feeds publish, error count, and the CSV — over a
-    // live source a re-execution per consumer could disagree with what was
-    // actually posted (and would re-fetch the API after the side effect)
-    val transformed = transformed0.persist()
-    try {
-      val (batches, published) = RateLimitedSink.publishCounted(
-        ErrorChannel.ok(transformed), ratePerMinute, batchSize, parallelism)(post)
-      val nErrs = ErrorChannel.errors(transformed).count()
-      errorCsv.foreach { case (dir, stamp) =>
-        if (nErrs > 0) ErrorChannel.writeCsvReport(transformed, dir, stamp)
-      }
-      SyncReport(published, nErrs, batches)
-    } finally transformed.unpersist()
+    val spark = transformed.sparkSession
+    val errs = new BoundedErrorAccumulator(BoundedErrorAccumulator.DefaultCap)
+    spark.sparkContext.register(errs, "graft.sync.errors")
+    val (batches, published) = RateLimitedSink.publishCounted(
+      transformed, ratePerMinute, batchSize, parallelism,
+      ErrorChannel.router(transformed.schema, (e: (String, String)) => errs.add(e)))(post)
+    val summary = errs.value
+    errorCsv.foreach { case (dir, stamp) =>
+      if (summary.total > 0) ErrorChannel.writeCsvReport(spark, summary, dir, stamp)
+    }
+    SyncReport(published, summary.total, batches)
   }
 
   /** sync-customers (§3.1, SC:41-88): acquire → P1 transform → ok/err
@@ -123,13 +143,15 @@ object Pipelines {
       else pageFiltered(tickets, opts)
     val selectedMessages = messages.join(
       selected.select(col("number").as("ticket_number")), Seq("ticket_number"), "left_semi")
-    val threads = TicketTransform.threadsByTicket(
-      selectedMessages, withPayloads(attachments, selectedMessages),
-      hsUsers, hsCustomers, opts.customerEmails)
-    val convs = TicketTransform.conversations(
-      selected, threads, hsMailboxes, hsCustomers, defaultMailboxEmail,
-      if (opts.checkDuplicates) Some(existingConversations) else None)
-    Right(publishOkAndReport(convs, ratePerMinute, batchSize, parallelism, errorCsv)(post))
+    val (payloads, release) = withPayloads(attachments, selectedMessages)
+    try {
+      val threads = TicketTransform.threadsByTicket(
+        selectedMessages, payloads, hsUsers, hsCustomers, opts.customerEmails)
+      val convs = TicketTransform.conversations(
+        selected, threads, hsMailboxes, hsCustomers, defaultMailboxEmail,
+        if (opts.checkDuplicates) Some(existingConversations) else None)
+      Right(publishOkAndReport(convs, ratePerMinute, batchSize, parallelism, errorCsv)(post))
+    } finally release()
   }
 
   /** view-ticket (§3.3, VT:46-67): point lookup + dump of the assembled
@@ -141,11 +163,13 @@ object Pipelines {
       opts: SyncOptions = SyncOptions()): String = {
     val one = tickets.filter(col("number") === number)
     val oneMessages = messages.filter(col("ticket_number") === number)
-    val threads = TicketTransform.threadsByTicket(
-      oneMessages, withPayloads(attachments, oneMessages),
-      hsUsers, hsCustomers, opts.customerEmails)
-    TicketTransform.conversations(
-      one, threads, hsMailboxes, hsCustomers, defaultMailboxEmail)
-      .toJSON.collect().mkString("\n")
+    val (payloads, release) = withPayloads(attachments, oneMessages)
+    try {
+      val threads = TicketTransform.threadsByTicket(
+        oneMessages, payloads, hsUsers, hsCustomers, opts.customerEmails)
+      TicketTransform.conversations(
+        one, threads, hsMailboxes, hsCustomers, defaultMailboxEmail)
+        .toJSON.collect().mkString("\n")
+    } finally release()
   }
 }

@@ -20,9 +20,10 @@ import ErrorChannel.{ErrorType, ErrorDetail}
   *            ref X8/J5, status X10, dates X11, hybrid wrapper P6)
   *
   * Dims are broadcast; the only fact-fact shuffles are messages⋈attachments
-  * (equi on message id) and the final ticket⋈threads groupBy — both keyed,
-  * both AQE-skew-safe. Blobs never pass through a collect_list: the hash is
-  * computed in stage A and only (filename, mime, hash) travels on.
+  * (equi on message id), the one per-ticket thread groupBy and the final
+  * ticket⋈threads join — all keyed, all AQE-skew-safe. Blobs never pass
+  * through a collect_list: the hash is computed in stage A and only
+  * (filename, mime, hash) travels on.
   */
 object TicketTransform {
 
@@ -160,27 +161,29 @@ object TicketTransform {
 
     // N1: nest threads per ticket, explicitly sorted (created_at, seq,
     // thread_type) — the reference depends on arrival order (TP:189), the
-    // engine makes determinism explicit (SURVEY §7.2)
-    all.filter(col(ErrorType).isNull)
-      .groupBy(col("ticket_number"))
-      .agg(array_sort(collect_list(struct(
+    // engine makes determinism explicit (SURVEY §7.2). One aggregation
+    // builds both sides: ok threads and error details are collected
+    // through `when` (collect_list skips the nulls it yields for the other
+    // side), so the thread subtree is planned once and needs no join.
+    val isError = col(ErrorType).isNotNull
+    val nErrors = count(when(isError, 1))
+    all.groupBy(col("ticket_number"))
+      .agg(array_sort(collect_list(when(!isError, struct(
         col("created_at_iso"), col("seq"), col("thread_type"), col("body"),
-        col("created_by"), col("to_list"), col("attachments")))).as("threads"))
-      .join(
-        all.filter(col(ErrorType).isNotNull)
-          .groupBy(col("ticket_number"))
-          .agg(count(lit(1)).as("n_thread_errors"),
-            array_join(array_sort(collect_list(col(ErrorDetail))), "; ")
-              .as("thread_error_details")),
-        Seq("ticket_number"), "full_outer")
+        col("created_by"), col("to_list"), col("attachments"))))).as("threads"),
+        nErrors.as("n_thread_errors"),
+        when(nErrors > 0,
+          array_join(array_sort(collect_list(when(isError, col(ErrorDetail)))), "; "))
+          .as("thread_error_details"))
       .select(col("ticket_number"),
-        coalesce(col("threads"), array().cast(
+        // the declared thread type, every field nullable, as callers see it
+        col("threads").cast(
           "array<struct<created_at_iso:string,seq:int,thread_type:string," +
           "body:string,created_by:struct<type:string,id:bigint,email:string>," +
           "to_list:array<string>," +
-          "attachments:array<struct<filename:string,mime_type:string,hash:string>>>>"))
+          "attachments:array<struct<filename:string,mime_type:string,hash:string>>>>")
           .as("threads"),
-        coalesce(col("n_thread_errors"), lit(0L)).as("n_thread_errors"),
+        col("n_thread_errors"),
         col("thread_error_details"))
   }
 

@@ -233,7 +233,7 @@ object HttpPublisher {
       parallelism: Int,
       idCol: Option[String] = None,
       maxRetries: Int = 3,
-      maxErrorSamples: Int = 10000): (Long, Long, DataFrame) = {
+      maxErrorSamples: Int = BoundedErrorAccumulator.DefaultCap): (Long, Long, DataFrame) = {
     val spark = df.sparkSession
     val acc = new BoundedErrorAccumulator(maxErrorSamples)
     spark.sparkContext.register(acc, "graft.publish.errors")
@@ -242,16 +242,7 @@ object HttpPublisher {
       new HttpPublisher(endpoint, (e: (String, String)) => acc.add(e),
         idCol, maxRetries))
     import spark.implicits._
-    val be = acc.value
-    val sampledByType =
-      be.samples.groupBy(_._1).view.mapValues(_.size.toLong).toMap
-    val overflow = be.typeCounts.toSeq.sortBy(_._1).collect {
-      case (t, n) if n > sampledByType.getOrElse(t, 0L) =>
-        (t, s"[sample cap ${be.cap} reached] " +
-          s"${n - sampledByType.getOrElse(t, 0L)} more detail lines " +
-          s"dropped (exact '$t' count: $n)")
-    }
-    val errDf = (be.samples ++ overflow)
+    val errDf = acc.value.rows
       .toDF(graft.migration.ErrorChannel.ErrorType,
         graft.migration.ErrorChannel.ErrorDetail)
     (batches, rows, errDf)
@@ -265,6 +256,27 @@ final case class BoundedErrors(
     typeCounts: Map[String, Long],
     cap: Int) {
   def total: Long = typeCounts.values.sum
+
+  /** The error-channel rows: the samples, plus ONE flagged overflow row
+    * per type whose exact count exceeds its sampled rows. */
+  def rows: Seq[(String, String)] = {
+    val sampledByType =
+      samples.groupBy(_._1).view.mapValues(_.size.toLong).toMap
+    val overflow = typeCounts.toSeq.sortBy(_._1).collect {
+      case (t, n) if n > sampledByType.getOrElse(t, 0L) =>
+        (t, s"[sample cap $cap reached] " +
+          s"${n - sampledByType.getOrElse(t, 0L)} more detail lines " +
+          s"dropped (exact '$t' count: $n)")
+    }
+    samples ++ overflow
+  }
+}
+
+object BoundedErrorAccumulator {
+  /** Sample cap of the driver-side error accumulators: the classic
+    * publisher's (`HttpPublisher.publish`) and the sync pipelines'
+    * error channel (`graft.migration.Pipelines`). */
+  val DefaultCap: Int = 10000
 }
 
 /** Driver-bounded replacement for the publish paths' historical

@@ -12,7 +12,10 @@ import org.apache.spark.sql.{DataFrame, Row}
   * `df.coalesce(n).foreachPartition(...)` with bucket rate R/n keeps the
   * aggregate under R without any cross-executor coordination (the same
   * decomposition maxRatePerPartition uses). Records post in batches —
-  * one call per `batchSize` rows, not per row.
+  * one call per `batchSize` rows, not per row. A routing function can
+  * withhold rows from the post inside the same pass, so a pipeline that
+  * publishes its ok rows and quarantines its error rows reads its input
+  * once.
   *
   * The HTTP layer is pluggable (`post`): tests inject a recorder; a real
   * deployment injects an HTTP client. No network is touched here.
@@ -53,19 +56,27 @@ object RateLimitedSink {
   /** As [[publish]], returning (batches, rows) — both counted by the
     * publish pass itself via accumulators, so the row count is exactly
     * what was posted (a separate count() would re-execute the pipeline,
-    * which over a live source may no longer agree). */
+    * which over a live source may no longer agree).
+    *
+    * `route` maps each row of `df` to the row to post, or to None to
+    * withhold it; batching, the token bucket and both counters see only
+    * the routed rows. A caller that quarantines rows (the sync pipelines'
+    * error channel, [[graft.migration.ErrorChannel.router]]) records the
+    * withheld ones from inside `route`, so publish and quarantine share
+    * this one pass. */
   def publishCounted(
       df: DataFrame,
       ratePerMinute: Int,
       batchSize: Int,
-      parallelism: Int)(
+      parallelism: Int,
+      route: Row => Option[Row] = Some(_))(
       post: Seq[Row] => Unit): (Long, Long) = {
     val perPartitionRate = math.max(1, ratePerMinute / parallelism)
     val batchCounter = df.sparkSession.sparkContext.longAccumulator("graft.publish.batches")
     val rowCounter = df.sparkSession.sparkContext.longAccumulator("graft.publish.rows")
     df.coalesce(parallelism).foreachPartition { (it: Iterator[Row]) =>
       val bucket = new TokenBucket(perPartitionRate)
-      it.grouped(batchSize).foreach { batch =>
+      it.flatMap(route).grouped(batchSize).foreach { batch =>
         bucket.acquire()
         post(batch)
         batchCounter.add(1)

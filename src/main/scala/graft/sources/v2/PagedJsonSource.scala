@@ -87,9 +87,14 @@ object PagedJson {
     * total_pages drives the page-URL range — the count-first call. */
   def listPages(path: String): Seq[(Int, String)] =
     if (isHttp(path)) {
-      val total = readManifest(path).map(_._2.toInt).getOrElse(
-        throw new IllegalArgumentException(
-          s"graft-pages: $path/meta.json with total_pages is required for HTTP scans"))
+      val total = manifestOrFailure(path) match {
+        case Right(Some(m)) => m.totalPages.toInt
+        case other =>
+          val cause = other.left.toOption
+          throw new IllegalArgumentException(
+            s"graft-pages: $path/meta.json with total_pages is required for HTTP scans" +
+              cause.fold("")(e => s" (fetch failed: $e)"), cause.orNull)
+      }
       (1 to total).map(n => n -> s"$path/page-$n.json")
     } else {
       val dir = new java.io.File(path)
@@ -115,18 +120,25 @@ object PagedJson {
   // planning against a stale page count forever.
   private val ManifestTtlMs = 30000L
   private val manifestCache =
-    new java.util.concurrent.ConcurrentHashMap[String, (Long, Option[Manifest])]()
+    new java.util.concurrent.ConcurrentHashMap[String, (Long, Manifest)]()
 
-  /** Full manifest, file or HTTP (cached). Only SUCCESSFUL fetches are
+  /** Full manifest, file or HTTP (cached); None when it is missing,
+    * unparseable or could not be fetched. Only SUCCESSFUL fetches are
     * cached — caching a transient failure would poison planning on the
     * path for the whole TTL. */
-  def readManifestFull(path: String): Option[Manifest] = {
+  def readManifestFull(path: String): Option[Manifest] =
+    manifestOrFailure(path).toOption.flatten
+
+  /** As [[readManifestFull]], keeping why a fetch failed: Left(cause) when
+    * reading meta.json threw (an unreachable server, an HTTP error),
+    * Right(None) when it was read but lacks the totals. */
+  private def manifestOrFailure(path: String): Either[Exception, Option[Manifest]] = {
     val now = System.currentTimeMillis()
     val cached = manifestCache.get(path)
-    if (cached != null && now - cached._1 < ManifestTtlMs) cached._2
+    if (cached != null && now - cached._1 < ManifestTtlMs) Right(Some(cached._2))
     else {
       val fresh = fetchManifest(path)
-      if (fresh.isDefined) manifestCache.put(path, (now, fresh))
+      fresh.foreach(_.foreach(m => manifestCache.put(path, (now, m))))
       fresh
     }
   }
@@ -135,7 +147,7 @@ object PagedJson {
   def readManifest(path: String): Option[(Long, Long)] =
     readManifestFull(path).map(m => (m.totalCount, m.totalPages))
 
-  private def fetchManifest(path: String): Option[Manifest] = try {
+  private def fetchManifest(path: String): Either[Exception, Option[Manifest]] = try {
     val txt =
       if (isHttp(path)) HttpFetch.get(s"$path/meta.json", RateLimitConf(0, 0)).mkString("\n")
       else new String(java.nio.file.Files.readAllBytes(
@@ -143,8 +155,8 @@ object PagedJson {
     val count = "\"total_count\"\\s*:\\s*(\\d+)".r.findFirstMatchIn(txt).map(_.group(1).toLong)
     val pagesTotal = "\"total_pages\"\\s*:\\s*(\\d+)".r.findFirstMatchIn(txt).map(_.group(1).toLong)
     val perPage = "\"per_page\"\\s*:\\s*(\\d+)".r.findFirstMatchIn(txt).map(_.group(1).toLong)
-    for (c <- count; p <- pagesTotal) yield Manifest(c, p, perPage)
-  } catch { case _: Exception => None }
+    Right(for (c <- count; p <- pagesTotal) yield Manifest(c, p, perPage))
+  } catch { case e: Exception => Left(e) }
 
   /** Exact row count of the pruned page range [minPage, maxPage] from
     * the manifest ALONE — zero pages listed, opened, or fetched. Defined

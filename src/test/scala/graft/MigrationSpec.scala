@@ -67,6 +67,21 @@ class MigrationSpec extends SparkSpec {
     assert(t1002.getAs[Long]("n_thread_errors") === 1L) // ghost agent
   }
 
+  test("thread aggregate: per-ticket thread count, error count and " +
+    "error details, null details for a ticket without thread errors") {
+    val threads = TicketTransform.threadsByTicket(
+      Fixtures.messagesDf(spark), Fixtures.attachmentsDf(spark),
+      Fixtures.hsUsersDf(spark), Fixtures.hsCustomersDf(spark))
+    val got = threads.select(col("ticket_number"), size(col("threads")),
+        col("n_thread_errors"), col("thread_error_details"))
+      .collect().map(r => (r.getLong(0), r.getInt(1), r.getLong(2), r.getString(3)))
+      .sortBy(_._1).toSeq
+    assert(got === Seq(
+      (1001L, 3, 0L, null),
+      (1002L, 2, 1L, "no HelpScout user for agent ghost@corp.com"),
+      (1003L, 1, 0L, null)))
+  }
+
   test("customerEmails override forces note author to customer thread (J4/P5)") {
     val threads = TicketTransform.threadsByTicket(
       Fixtures.messagesDf(spark), Fixtures.attachmentsDf(spark),
@@ -146,5 +161,18 @@ class MigrationSpec extends SparkSpec {
     ErrorChannel.writeCsvReport(out, tmp, "20160201000000")
     val files = new java.io.File(s"$tmp/sync-errors-20160201000000").listFiles()
     assert(files.exists(_.getName.endsWith(".csv")))
+    // the driver-side form equals the grouped frame below the sample cap,
+    // in Spark's UTF-8 byte order (a supplementary character sorts after
+    // U+FF01 there, before it in Java String order) and skipping null
+    // details as collect_list does
+    import spark.implicits._
+    val pairs = Seq(("\uFF01 type", "\uD83D\uDE00 late"), ("\uFF01 type", "\uFF01 early"),
+      ("\uFF01 type", null), ("\uD83D\uDE00 type", "x"), ("a", "b; c"), ("a", null))
+    val acc = new graft.sources.BoundedErrorAccumulator(pairs.size)
+    pairs.foreach(acc.add)
+    val frame = pairs.toDF(ErrorChannel.ErrorType, ErrorChannel.ErrorDetail)
+    assert(ErrorChannel.groupedRows(acc.value) ===
+      ErrorChannel.groupedReport(frame).collect()
+        .map(r => (r.getString(0), r.getLong(1), r.getString(2))).toSeq)
   }
 }

@@ -1,7 +1,9 @@
 package graft
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.sql.Row
-import graft.migration.{Fixtures, Pipelines, SyncOptions}
+import graft.migration.{Fixtures, Pipelines, Schemas, SyncOptions}
 
 /** Local-mode executor-side recorder: a top-level object so the publish
   * closure serializes without dragging the spec (and its SparkSession). */
@@ -19,6 +21,15 @@ class PipelinesSpec extends SparkSpec {
   private def posted = PipelinePostRecorder.posted
   private def post: Seq[Row] => Unit = PipelinePostRecorder.post
 
+  /** The lines of the one CSV file a sync call wrote into `dir`. */
+  private def csvLines(dir: String): Seq[String] = {
+    val parts = new java.io.File(dir).listFiles()
+      .filter(f => f.getName.startsWith("part-") && f.getName.endsWith(".csv"))
+    assert(parts.length === 1, s"expected one CSV file in $dir")
+    java.nio.file.Files.readAllLines(parts.head.toPath,
+      java.nio.charset.StandardCharsets.UTF_8).asScala.toSeq
+  }
+
   test("sync-customers publishes ok rows, quarantines errors, writes the CSV") {
     posted.clear()
     val tmp = java.nio.file.Files.createTempDirectory("graft-synccust").toString
@@ -29,8 +40,83 @@ class PipelinesSpec extends SparkSpec {
     assert(report.published === Fixtures.customers.size - 1L)
     assert(posted.size().toLong === report.published)
     assert(report.batches >= 1L)
-    val csv = new java.io.File(s"$tmp/sync-errors-20160201000000")
-    assert(csv.exists, "error CSV directory missing")
+    assert(csvLines(s"$tmp/sync-errors-20160201000000") === Seq(
+      "error_type,n,details",
+      "missing_email,1,customer 'No Email' has no email"))
+  }
+
+  test("sync-customers past the error sample cap: exact n, one overflow " +
+    "flag among the sampled details") {
+    import spark.implicits._
+    import graft.sources.BoundedErrorAccumulator
+    posted.clear()
+    val cap = BoundedErrorAccumulator.DefaultCap
+    val noEmail = (1 to cap + 7).map(i => Schemas.GrooveCustomer(
+      "", s"Nomail $i", None, None, None, None, None, None, None, None))
+    val total = noEmail.size + 1L // plus the fixture's no-email row
+    val tmp = java.nio.file.Files.createTempDirectory("graft-synccap").toString
+    val report = Pipelines.syncCustomers(
+      (Fixtures.customers ++ noEmail).toDF(),
+      errorCsv = Some((tmp, "cap")))(post)
+    assert(report.errors === total)
+    assert(report.published === Fixtures.customers.size - 1L)
+    val lines = csvLines(s"$tmp/sync-errors-cap")
+    assert(lines.size === 2 && lines.head === "error_type,n,details")
+    val Array(errorType, n, details) = lines(1).split(",", 3)
+    assert(errorType === "missing_email")
+    assert(n.toLong === total, "n must be the exact count past the cap")
+    val entries = details.split("; ").toSeq
+    assert(entries.size === cap + 1, "the cap's samples plus one flag")
+    val flags = entries.filter(_.startsWith("[sample cap"))
+    assert(flags === Seq(s"[sample cap $cap reached] ${total - cap} more " +
+      s"detail lines dropped (exact 'missing_email' count: $total)"))
+    assert(entries.filterNot(_.startsWith("[sample cap")).forall(d =>
+      d.startsWith("customer '") && d.endsWith("' has no email")))
+  }
+
+  test("sync calls stay within their Spark-job budget: one publish pass, " +
+    "no error re-count, a shuffle-free CSV write") {
+    val group = s"graft-sync-budget-${System.nanoTime()}"
+    val jobs = new java.util.concurrent.atomic.AtomicInteger()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(
+          e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        if (Option(e.properties).exists(
+            _.getProperty("spark.jobGroup.id") == group))
+          jobs.incrementAndGet()
+    }
+    val tmp = java.nio.file.Files.createTempDirectory("graft-syncbudget").toString
+    def jobsOf(call: => Unit): Int = {
+      val sc = spark.sparkContext
+      org.apache.spark.GraftSparkBridge.drainListenerBus(sc)
+      jobs.set(0)
+      sc.setJobGroup(group, "sync job budget")
+      try call finally sc.clearJobGroup()
+      org.apache.spark.GraftSparkBridge.drainListenerBus(sc)
+      jobs.get()
+    }
+    spark.sparkContext.addSparkListener(listener)
+    val (customers, tickets) =
+      try (
+        jobsOf(Pipelines.syncCustomers(Fixtures.customersDf(spark),
+          errorCsv = Some((tmp, "customers")))(post)),
+        jobsOf(Pipelines.syncTickets(
+          Fixtures.ticketsDf(spark), Fixtures.messagesDf(spark),
+          Fixtures.attachmentsDf(spark),
+          Fixtures.grooveMailboxesDf(spark), Fixtures.grooveAgentsDf(spark),
+          Fixtures.hsMailboxesDf(spark), Fixtures.hsUsersDf(spark),
+          Fixtures.hsCustomersDf(spark), Fixtures.existingConversationsDf(spark),
+          Fixtures.defaultMailboxEmail, SyncOptions(bypassValidation = true),
+          errorCsv = Some((tmp, "tickets")))(post)))
+      finally spark.sparkContext.removeSparkListener(listener)
+    // both calls had errors, so both wrote their CSV
+    assert(new java.io.File(s"$tmp/sync-errors-customers").isDirectory)
+    assert(new java.io.File(s"$tmp/sync-errors-tickets").isDirectory)
+    info(s"Spark jobs per call: syncCustomers $customers, syncTickets $tickets")
+    // the counts the one-pass publish reaches on the fixtures: a separate
+    // error count or a grouped-report shuffle would add jobs
+    assert(customers <= 2, s"syncCustomers ran $customers jobs")
+    assert(tickets <= 13, s"syncTickets ran $tickets jobs")
   }
 
   test("sync-tickets: validation gate aborts with the unmatched report (ST exit)") {
@@ -87,7 +173,6 @@ class PipelinesSpec extends SparkSpec {
     // publish the identical record set.
     import com.sun.net.httpserver.{HttpExchange, HttpHandler, HttpServer}
     import graft.sources.HttpPublisher
-    import scala.jdk.CollectionConverters._
 
     val ticketLines = Fixtures.ticketsDf(spark).toJSON.collect().toSeq
     val attachmentBytes: Map[String, Array[Byte]] = Fixtures.attachments
@@ -155,6 +240,8 @@ class PipelinesSpec extends SparkSpec {
         .map(a => (a.message_id, a.filename, a.size, s"$base/files/${a.filename}"))
         .toDF("message_id", "filename", "size", "url")
       val acc = spark.sparkContext.collectionAccumulator[(String, String)]("e2e-errs")
+      val sc = spark.sparkContext
+      val persistedBefore = sc.getPersistentRDDs.keySet
       val report = Pipelines.syncTickets(
         wireTickets, Fixtures.messagesDf(spark), liveAttachments,
         Fixtures.grooveMailboxesDf(spark), Fixtures.grooveAgentsDf(spark),
@@ -165,6 +252,9 @@ class PipelinesSpec extends SparkSpec {
           idCol = Some("groove_ticket_number"))).toOption.get
 
       assert(report.published.toInt === expected.size)
+      // the fetched-payload checkpoint is released once the publish ends
+      assert((sc.getPersistentRDDs.keySet -- persistedBefore).isEmpty,
+        s"syncTickets left RDDs persisted: ${sc.getPersistentRDDs.keySet -- persistedBefore}")
       assert(acc.value.isEmpty, s"publish errors: ${acc.value}")
       // the failed note must carry the live fetch failure's reason (the
       // reference reports the caught exception next to the note, TP:314)
@@ -207,6 +297,16 @@ class PipelinesSpec extends SparkSpec {
       assert(fetched.nonEmpty && fetched.forall(p =>
         p.endsWith("burning.png") || p.endsWith("manual.pdf")),
         s"point migration fetched unrelated payloads: $fetched")
+
+      // view-ticket over live attachments releases its checkpoint too
+      val persistedBeforeView = sc.getPersistentRDDs.keySet
+      val dump = Pipelines.viewTicket(
+        wireTickets, Fixtures.messagesDf(spark), liveAttachments,
+        Fixtures.hsMailboxesDf(spark), Fixtures.hsUsersDf(spark),
+        Fixtures.hsCustomersDf(spark), Fixtures.defaultMailboxEmail, 1001L)
+      assert(dump.contains("\"groove_ticket_number\":1001"))
+      assert((sc.getPersistentRDDs.keySet -- persistedBeforeView).isEmpty,
+        "viewTicket left RDDs persisted")
     } finally server.stop(0)
   }
 }

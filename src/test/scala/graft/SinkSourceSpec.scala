@@ -282,6 +282,26 @@ class SinkSourceSpec extends SparkSpec {
     } finally server.stop(0)
   }
 
+  test("paged source over an unreachable server: the scan error keeps " +
+    "the manifest fetch failure as its cause") {
+    val port = { val s = new java.net.ServerSocket(0); try s.getLocalPort finally s.close() }
+    val schema = org.apache.spark.sql.types.StructType(Seq(
+      org.apache.spark.sql.types.StructField("email", org.apache.spark.sql.types.StringType)))
+    val e = intercept[Exception] {
+      spark.read.format("graft-pages").schema(schema)
+        .load(s"http://127.0.0.1:$port/api").collect()
+    }
+    val chain = Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null).toSeq
+    val manifestErr = chain.collectFirst {
+      case m: IllegalArgumentException if m.getMessage.contains("meta.json") => m
+    }
+    assert(manifestErr.isDefined, s"no manifest error in ${chain.mkString(" <- ")}")
+    assert(manifestErr.get.getCause.isInstanceOf[java.net.ConnectException],
+      s"the cause must be the connection failure: ${manifestErr.get.getCause}")
+    assert(manifestErr.get.getMessage.contains("ConnectException"),
+      s"the message must name the connection failure: ${manifestErr.get.getMessage}")
+  }
+
   test("S6 live attachment fetch: payloads, 404 -> failed note, 429 retry, throttle") {
     import com.sun.net.httpserver.{HttpExchange, HttpHandler, HttpServer}
     import graft.migration.{AttachmentFetch, TicketTransform}
