@@ -19,11 +19,16 @@ import ErrorChannel.{ErrorType, ErrorDetail}
   *   stage D  tickets → conversations (dedup J6, mailbox J1/J2, customer
   *            ref X8/J5, status X10, dates X11, hybrid wrapper P6)
   *
-  * Dims are broadcast; the only fact-fact shuffles are messages⋈attachments
-  * (equi on message id), the one per-ticket thread groupBy and the final
-  * ticket⋈threads join — all keyed, all AQE-skew-safe. Blobs never pass
-  * through a collect_list: the hash is computed in stage A and only
-  * (filename, mime, hash) travels on.
+  * Dims are broadcast and the default mailbox is looked up once, before
+  * the plan runs, as a literal. The paged source reports its size, so a
+  * small selection of tickets is broadcast into the message scan and the
+  * attachment aggregate into the thread rows at plan time. The shuffles
+  * left are the per-message attachment groupBy, the one per-ticket thread
+  * groupBy and the ticket side of the final ticket⋈threads join (the
+  * planner's estimate of the threads is a product of join sizes; AQE
+  * broadcasts them once they exist) — all keyed, all AQE-skew-safe.
+  * Blobs never pass through a collect_list: the hash is computed in stage
+  * A and only (filename, mime, hash) travels on.
   */
 object TicketTransform {
 
@@ -213,13 +218,18 @@ object TicketTransform {
       case None => base
     }
 
-    // J1: mailbox by ci name; J2: default-mailbox fallback by email
+    // J1: mailbox by ci name; J2: default-mailbox fallback by email,
+    // collected into a literal of the dim's id type — null when no
+    // mailbox has that email, so those tickets surface as
+    // unknown_mailbox errors instead of vanishing. The first match in
+    // partition order, as a limit(1) would pick, but in one job: a limit
+    // over a multi-partition dim can take a second job to reach the match.
     val mb = hsMailboxes.select(col("id").as("mailbox_id"),
       lower(col("name")).as("mb_name"))
-    val defaultMb = hsMailboxes
+    val defaultMailboxId = lit(hsMailboxes
       .filter(lower(col("email")) === defaultMailboxEmail.toLowerCase)
-      .select(col("id").as("default_mailbox_id"))
-      .limit(1)
+      .select(col("id")).collect().headOption.map(_.get(0)).orNull)
+      .cast(hsMailboxes.schema("id").dataType)
 
     // X8 → J5: customer ref from the ticket's customer link
     val custs = hsCustomers.select(col("id").as("customer_id"),
@@ -227,9 +237,7 @@ object TicketTransform {
 
     val enriched = deduped
       .join(broadcast(mb), lower(col("mailbox")) === col("mb_name"), "left")
-      .crossJoin(broadcast(defaultMb))
-      .withColumn("resolved_mailbox_id",
-        coalesce(col("mailbox_id"), col("default_mailbox_id")))
+      .withColumn("resolved_mailbox_id", coalesce(col("mailbox_id"), defaultMailboxId))
       .withColumn("customer_email", hrefCustomerId(col("customer_href")))
       .join(broadcast(custs),
         lower(col("customer_email")) === col("c_email"), "left")

@@ -6,6 +6,8 @@ import scala.jdk.CollectionConverters._
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.catalyst.json.{CreateJacksonParser, JSONOptions, JacksonParser}
+import org.apache.spark.sql.catalyst.plans.logical.statsEstimation.EstimationUtils
+import org.apache.spark.sql.catalyst.types.DataTypeUtils
 import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability, TableProvider}
 import org.apache.spark.sql.connector.expressions.Transform
 import org.apache.spark.sql.connector.read._
@@ -114,7 +116,7 @@ object PagedJson {
   final case class Manifest(totalCount: Long, totalPages: Long,
       perPage: Option[Long])
 
-  // short-TTL manifest cache: one planning pass calls readManifest from
+  // short-TTL manifest cache: one planning pass reads the manifest from
   // both listPages and estimateStatistics — over HTTP that was two remote
   // round-trips per query plan. The TTL keeps a long-lived session from
   // planning against a stale page count forever.
@@ -142,10 +144,6 @@ object PagedJson {
       fresh
     }
   }
-
-  /** (total_count, total_pages) — the pre-r14 two-field view. */
-  def readManifest(path: String): Option[(Long, Long)] =
-    readManifestFull(path).map(m => (m.totalCount, m.totalPages))
 
   private def fetchManifest(path: String): Either[Exception, Option[Manifest]] = try {
     val txt =
@@ -411,17 +409,26 @@ class PagedJsonScan(
     new PagedJsonReaderFactory(userSchema, required, rate)
 
   /** A1 count-first planning: row count from the manifest, no page opened.
-    * Page-pruned scans scale the estimate by the selected page fraction. */
+    * Page-pruned scans scale the estimate by the selected page fraction.
+    * The size is the selected page files' bytes; over HTTP, where no page
+    * is fetched at planning, it is those rows times the pruned read
+    * schema's per-row width (`EstimationUtils.getSizePerRow`, the width
+    * CBO uses), so a small page window is broadcast at plan time instead
+    * of sort-merge-joined through a shuffle. A manifest without pages
+    * leaves the rows, and over HTTP the size, unknown: Spark never
+    * broadcasts a side of unknown size. */
   override def estimateStatistics(): Statistics = new Statistics {
-    private val totals: Option[(Long, Long)] = PagedJson.readManifest(path)
-    override def sizeInBytes(): util.OptionalLong =
-      if (PagedJson.isHttp(path)) util.OptionalLong.empty()
-      else util.OptionalLong.of(pages.map(f => new java.io.File(f._2).length()).sum)
-    override def numRows(): util.OptionalLong = totals match {
-      case Some((c, p)) if p > 0 =>
-        util.OptionalLong.of(math.max(1L, c * pages.size / p))
-      case _ => util.OptionalLong.empty()
+    private val rows: Option[Long] = PagedJson.readManifestFull(path).collect {
+      case m if m.totalPages > 0 => math.max(1L, m.totalCount * pages.size / m.totalPages)
     }
+    override def sizeInBytes(): util.OptionalLong =
+      if (!PagedJson.isHttp(path))
+        util.OptionalLong.of(pages.map(f => new java.io.File(f._2).length()).sum)
+      else rows.fold(util.OptionalLong.empty())(n => util.OptionalLong.of(
+        (EstimationUtils.getSizePerRow(DataTypeUtils.toAttributes(required)) * n)
+          .min(Long.MaxValue).toLong))
+    override def numRows(): util.OptionalLong =
+      rows.fold(util.OptionalLong.empty())(util.OptionalLong.of)
   }
 }
 

@@ -170,11 +170,17 @@ class MainSpec extends SparkSpec {
       assert(err.contains("--defaultMailbox"),
         "the error must name the flag that fixes it")
     }
-    // the explicit flag still works against the empty dim
-    val rcOk = Main.run(Array("sync-tickets", s"--data=$d",
-      s"--out=${freshOut()}", "--bypassValidation",
-      s"--defaultMailbox=${Fixtures.defaultMailboxEmail}"), spark)
+    // the explicit flag still works against the empty dim: no mailbox
+    // resolves, so every ticket is reported, none dropped
+    val buf = new java.io.ByteArrayOutputStream()
+    val rcOk = Console.withOut(new java.io.PrintStream(buf)) {
+      Main.run(Array("sync-tickets", s"--data=$d",
+        s"--out=${freshOut()}", "--bypassValidation",
+        s"--defaultMailbox=${Fixtures.defaultMailboxEmail}"), spark)
+    }
     assert(rcOk === 0)
+    assert(buf.toString("UTF-8").contains(
+      s"published=0 errors=${Fixtures.tickets.size} "))
   }
 
   test("flag parsing maps 1:1 onto SyncOptions") {

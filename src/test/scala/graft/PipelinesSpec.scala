@@ -3,7 +3,7 @@ package graft
 import scala.jdk.CollectionConverters._
 
 import org.apache.spark.sql.Row
-import graft.migration.{Fixtures, Pipelines, Schemas, SyncOptions}
+import graft.migration.{Fixtures, Pipelines, Schemas, SyncOptions, Validation}
 
 /** Local-mode executor-side recorder: a top-level object so the publish
   * closure serializes without dragging the spec (and its SparkSession). */
@@ -96,7 +96,7 @@ class PipelinesSpec extends SparkSpec {
       jobs.get()
     }
     spark.sparkContext.addSparkListener(listener)
-    val (customers, tickets) =
+    val (customers, tickets, gate) =
       try (
         jobsOf(Pipelines.syncCustomers(Fixtures.customersDf(spark),
           errorCsv = Some((tmp, "customers")))(post)),
@@ -107,16 +107,22 @@ class PipelinesSpec extends SparkSpec {
           Fixtures.hsMailboxesDf(spark), Fixtures.hsUsersDf(spark),
           Fixtures.hsCustomersDf(spark), Fixtures.existingConversationsDf(spark),
           Fixtures.defaultMailboxEmail, SyncOptions(bypassValidation = true),
-          errorCsv = Some((tmp, "tickets")))(post)))
+          errorCsv = Some((tmp, "tickets")))(post)),
+        jobsOf(Validation.gate(
+          Fixtures.grooveMailboxesDf(spark), Fixtures.hsMailboxesDf(spark),
+          Fixtures.grooveAgentsDf(spark), Fixtures.hsUsersDf(spark))))
       finally spark.sparkContext.removeSparkListener(listener)
     // both calls had errors, so both wrote their CSV
     assert(new java.io.File(s"$tmp/sync-errors-customers").isDirectory)
     assert(new java.io.File(s"$tmp/sync-errors-tickets").isDirectory)
-    info(s"Spark jobs per call: syncCustomers $customers, syncTickets $tickets")
+    info(s"Spark jobs per call: syncCustomers $customers, syncTickets $tickets, " +
+      s"Validation.gate $gate")
     // the counts the one-pass publish reaches on the fixtures: a separate
-    // error count or a grouped-report shuffle would add jobs
+    // error count or a grouped-report shuffle would add jobs, and so would
+    // a broadcast of the default mailbox or of the gate's dims
     assert(customers <= 2, s"syncCustomers ran $customers jobs")
-    assert(tickets <= 13, s"syncTickets ran $tickets jobs")
+    assert(tickets <= 12, s"syncTickets ran $tickets jobs")
+    assert(gate <= 1, s"Validation.gate ran $gate jobs")
   }
 
   test("sync-tickets: validation gate aborts with the unmatched report (ST exit)") {
@@ -152,6 +158,28 @@ class PipelinesSpec extends SparkSpec {
     val one = run(SyncOptions(bypassValidation = true, tickets = Seq(1001L)))
     assert(one === 1L)
     assert(posted.size() === 1)
+  }
+
+  test("sync-tickets with a default mailbox that matches nothing drops no " +
+    "ticket: the unmatched ones are reported as unknown_mailbox") {
+    posted.clear()
+    val tmp = java.nio.file.Files.createTempDirectory("graft-nodefault").toString
+    val report = Pipelines.syncTickets(
+      Fixtures.ticketsDf(spark), Fixtures.messagesDf(spark),
+      Fixtures.attachmentsDf(spark),
+      Fixtures.grooveMailboxesDf(spark), Fixtures.grooveAgentsDf(spark),
+      Fixtures.hsMailboxesDf(spark), Fixtures.hsUsersDf(spark),
+      Fixtures.hsCustomersDf(spark), Fixtures.existingConversationsDf(spark),
+      "nobody@nowhere.example", SyncOptions(bypassValidation = true),
+      errorCsv = Some((tmp, "nodefault")))(post).toOption.get
+    assert(report.published + report.errors === Fixtures.tickets.size.toLong)
+    val unmatched = Fixtures.tickets.filterNot(t =>
+      Fixtures.hsMailboxes.exists(_.name.equalsIgnoreCase(t.mailbox)))
+    assert(unmatched.nonEmpty, "the fixtures plant a ticket in an unmatched mailbox")
+    assert(csvLines(s"$tmp/sync-errors-nodefault")
+      .filter(_.startsWith("unknown_mailbox,")) === Seq(
+        s"unknown_mailbox,${unmatched.size}," + unmatched
+          .map(t => s"no HelpScout mailbox for '${t.mailbox}'").sorted.mkString("; ")))
   }
 
   test("view-ticket dumps the assembled conversation for one ticket") {

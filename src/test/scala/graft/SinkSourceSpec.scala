@@ -107,10 +107,74 @@ class SinkSourceSpec extends SparkSpec {
     val pruned = df.select("email").queryExecution.executedPlan.toString
     assert(!pruned.contains("name"), s"expected pruned read schema: $pruned")
 
-    // manifest statistics drive count-first planning (A1)
+    // manifest statistics drive count-first planning (A1): the manifest's
+    // row count, and the page files' byte total as the size
     val stats = df.queryExecution.optimizedPlan.stats
-    assert(stats.rowCount.contains(BigInt(Fixtures.customers.size)) ||
-      stats.sizeInBytes > 0) // rowCount surfaces when CBO reads v2 stats
+    val pageBytes = new java.io.File(dir).listFiles()
+      .filter(_.getName.startsWith("page-")).map(_.length()).sum
+    assert(stats.rowCount === Some(BigInt(Fixtures.customers.size)))
+    assert(stats.sizeInBytes === BigInt(pageBytes))
+  }
+
+  test("HTTP paged scan is sized from its manifest: rows x read width, a " +
+    "one-page window broadcasts, a manifest without pages leaves it unknown") {
+    import com.sun.net.httpserver.{HttpExchange, HttpServer}
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeLike
+    import org.apache.spark.sql.execution.joins.BroadcastHashJoinExec
+    val pages = Fixtures.customers.grouped(3).map(_.map(c =>
+      s"""{"email":${ujson(c.email)},"name":${ujson(c.name)}}""").mkString("\n")).toVector
+    val server = HttpServer.create(new java.net.InetSocketAddress("127.0.0.1", 0), 0)
+    server.createContext("/", (ex: HttpExchange) => {
+      val body = ex.getRequestURI.getPath match {
+        case "/c/meta.json" => Some(s"""{"pagination":{"total_count":""" +
+          s"""${Fixtures.customers.size},"total_pages":${pages.size}}}""")
+        case s"/c/page-$n.json" => pages.lift(n.toInt - 1)
+        case "/none/meta.json" => Some("""{"pagination":{"total_count":0,"total_pages":0}}""")
+        case _ => None
+      }
+      body.map(_.getBytes("UTF-8")) match {
+        case Some(b) => ex.sendResponseHeaders(200, b.length); ex.getResponseBody.write(b)
+        case None => ex.sendResponseHeaders(404, -1)
+      }
+      ex.close()
+    })
+    server.start()
+    try {
+      val base = s"http://127.0.0.1:${server.getAddress.getPort}"
+      val schema = org.apache.spark.sql.types.StructType(Seq(
+        org.apache.spark.sql.types.StructField("email", org.apache.spark.sql.types.StringType),
+        org.apache.spark.sql.types.StructField("name", org.apache.spark.sql.types.StringType)))
+      val df = spark.read.format("graft-pages").schema(schema).load(s"$base/c")
+      def size(d: org.apache.spark.sql.DataFrame): BigInt =
+        d.queryExecution.optimizedPlan.stats.sizeInBytes
+      // 8 rows x (8 row overhead + 20 per string + 4 for the page int)
+      assert(size(df) === BigInt(8 * 52))
+      assert(size(df.select("email")) === BigInt(8 * 28), "the pruned width")
+      // one of three pages: 8 * 1 / 3 rows
+      val onePage = df.where(col("page") === 1)
+      assert(size(onePage) === BigInt(2 * 52))
+
+      // only the paged side of a left join can be broadcast, and its size
+      // now licenses it: no shuffle is planned at all
+      val emails = spark.range(0, 1000)
+        .select(concat(lit("u"), col("id"), lit("@example.com")).as("email"))
+      val joined = emails.join(onePage, Seq("email"), "left")
+      val initial = joined.queryExecution.executedPlan match {
+        case a: AdaptiveSparkPlanExec => a.initialPlan
+        case p => p
+      }
+      val bhj = initial.collect { case j: BroadcastHashJoinExec => j }
+      assert(bhj.size === 1 && bhj.head.right.toString.contains("BatchScan"),
+        s"the page scan must be the broadcast side:\n$initial")
+      assert(initial.collect { case e: ShuffleExchangeLike => e }.isEmpty,
+        s"no shuffle may be planned:\n$initial")
+      assert(joined.count() === 1000L)
+
+      val none = spark.read.format("graft-pages").schema(schema).load(s"$base/none")
+      assert(size(none) === BigInt(spark.sessionState.conf.defaultSizeInBytes),
+        "no pages in the manifest: the size stays unknown, never broadcast")
+    } finally server.stop(0)
   }
 
   test("pruned COUNT apportionment: exact manifest-only answers, refusals") {
