@@ -1,7 +1,6 @@
 package graft.migration
 
 import org.apache.spark.sql.{DataFrame, Row}
-import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.sql.functions._
 import graft.sources.{BoundedErrorAccumulator, RateLimitedSink}
 
@@ -58,12 +57,8 @@ object Pipelines {
       // side-effecting HTTP fetch stage would re-GET every attachment once
       // per consumer, and a URL that succeeds in one execution but fails
       // in the other could appear both uploaded and failed-noted.
-      // Checkpointing pins one fetch outcome per URL; its blocks are
-      // released through the checkpoint's RDD (a frame's unpersist() only
-      // drops cache entries, not a checkpoint).
-      val fetched = AttachmentFetch.fetchPayloads(relevant).localCheckpoint(true)
-      val pinned = fetched.queryExecution.logical.collect { case r: LogicalRDD => r.rdd }
-      (fetched, () => pinned.foreach(_.unpersist(blocking = false)))
+      // Checkpointing pins one fetch outcome per URL.
+      graft.Checkpoints.owned(AttachmentFetch.fetchPayloads(relevant))
     }
   }
 

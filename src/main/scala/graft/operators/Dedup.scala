@@ -650,7 +650,8 @@ object Dedup {
     * hash, one 'band' row per minhash LSH band, one 'sim' row carrying
     * the 64-bit simhash — the artifact a 100 TB dedup pipeline
     * materializes ONCE and every later batch probes (q77's export;
-    * the q38/q39 oracles and [[dedupAgainstSignatureIndex]] read it).
+    * the DuckDB oracles of the near-dup queries read it; [[signDocs]]
+    * computes the same wh and band values, which DedupSpec pins).
     * Map-only: a straight scan→write at any scale. */
   def signatureTable(docs: DataFrame, textCol: Column, idCol: Column,
       numHashes: Int = 64, bands: Int = 4): DataFrame = {
@@ -673,84 +674,15 @@ object Dedup {
         col("e.idx").as("idx"), col("e.value").as("value"))
   }
 
-  /** Incremental near-dup dedup: survivors of an INCOMING batch deduped
-    * against an EXISTING corpus's [[signatureTable]] index — the shape a
-    * continuously-crawling 100 TB pipeline actually runs: the existing
-    * corpus is NEVER re-read or re-hashed; the new batch signs itself
-    * map-only (with the SAME (numHashes, bands) the index was built
-    * with — parameter drift would silently probe wrong bands, so pass
-    * what you persisted), probes the stored band rows for candidates,
-    * and exact-jaccard-verifies against the stored word-hash rows.
-    * Within-batch duplicates are [[minhashDedupSurvivors]]' job — this
-    * operator answers only "is it already in the corpus". */
-  def dedupAgainstSignatureIndex(
-      incoming: DataFrame, index: DataFrame, textCol: Column, idCol: Column,
-      numHashes: Int = 64, bands: Int = 4, threshold: Double = 0.95): DataFrame = {
-    val (exBands, exWh) = prepareSignatureIndex(index)
-    dedupAgainstPreparedIndex(
-      incoming, exBands, exWh, textCol, idCol, numHashes, bands, threshold)
-  }
-
-  /** [[signatureTable]]'s long format re-shaped into the PROBE-READY
-    * layout [[dedupAgainstPreparedIndex]] consumes: band rows
-    * (old_id, band, bh) plus ONE pre-grouped word-hash array row per doc
-    * (old_id, wh_old). The long format stays the interchange/export
-    * shape (q77's fixture); a deployment that probes the index
-    * repeatedly — every micro-batch of a continuous crawl — persists
-    * THIS layout instead, because re-deriving wh_old is an O(index)
-    * groupBy per probe. */
-  def prepareSignatureIndex(index: DataFrame): (DataFrame, DataFrame) = {
-    val exBands = index.filter(col("kind") === "band")
-      .select(col("doc_id").as("old_id"),
-        col("idx").cast("int").as("band"), col("value").as("bh"))
-    val exWh = index.filter(col("kind") === "wh")
-      .groupBy(col("doc_id"))
-      .agg(transform(array_sort(collect_list(struct(col("idx"), col("value")))),
-        s => s.getField("value")).as("wh_old"))
-      .select(col("doc_id").as("old_id"), col("wh_old"))
-    (exBands, exWh)
-  }
-
-  /** [[dedupAgainstSignatureIndex]] against a pre-shaped index (see
-    * [[prepareSignatureIndex]]) — the per-probe cost is then the banded
-    * join itself, with no per-probe re-aggregation of the index. */
-  def dedupAgainstPreparedIndex(
-      incoming: DataFrame, exBands: DataFrame, exWh: DataFrame,
-      textCol: Column, idCol: Column,
-      numHashes: Int = 64, bands: Int = 4, threshold: Double = 0.95): DataFrame = {
-    val rows = numHashes / bands
-    require(rows * bands == numHashes, "bands must divide numHashes")
-    val newSigs = incoming.select(idCol.cast("long").as("new_id"),
-      array_sort(array_distinct(elementHashes(tokens(textCol)))).as("wh_new"))
-    val newBands = newSigs
-      .withColumn("sig", minhashFromHashes(col("wh_new"), numHashes))
-      .select(col("new_id"),
-        posexplode(lshBandHashes(col("sig"), bands, rows)).as(Seq("band", "bh")))
-    val dropped = newBands.join(exBands, Seq("band", "bh"))
-      .select(col("new_id"), col("old_id")).distinct()
-      .join(newSigs, Seq("new_id"))
-      .join(exWh, Seq("old_id"))
-      .filter(round(graft.plans.NativeExprs.jaccardSorted(
-        col("wh_new"), col("wh_old")), 4) >= threshold)
-      .select(col("new_id").as("doc_id")).distinct()
-    incoming.select(idCol.cast("long").as("doc_id"))
-      .join(dropped, Seq("doc_id"), "left_anti")
-  }
-
   /** ONE signing pass per batch, shared by every consumer: each doc's
     * sorted distinct word-hash array PLUS its minhash LSH band hashes,
-    * as one frame (doc_id, carry..., wh, mh_bands). The micro-batch
-    * dedup lifecycles previously evaluated tokenize→hash→minhash up to
-    * three times per batch — once under the probe's band side, once
-    * under its word-hash join-back, once more for the index write —
-    * because each consumer re-derived signatures from `text` inside its
-    * own lazy subtree. A caller that localCheckpoints THIS frame pays
-    * the per-row signature cost exactly once and every consumer
+    * as one frame (doc_id, carry..., wh, mh_bands). A caller that
+    * localCheckpoints THIS frame pays the per-row signature cost
+    * (tokenize→hash→minhash) exactly once and every consumer
     * ([[dedupSignedAgainstPreparedIndex]], the band/wh index writes, the
-    * survivor write) reads materialized arrays. Expressions are
-    * verbatim [[signatureTable]]/[[dedupAgainstPreparedIndex]] algebra,
-    * so signatures are bit-identical to the unshared paths
-    * (DedupSpec pins both equalities). */
+    * survivor write) reads materialized arrays. Expressions are verbatim
+    * [[signatureTable]] algebra, so `wh` and `mh_bands` are bit-identical
+    * to its 'wh' and 'band' rows (DedupSpec pins the equality). */
   def signDocs(docs: DataFrame, textCol: Column, idCol: Column,
       carry: Seq[Column] = Seq.empty,
       numHashes: Int = 64, bands: Int = 4): DataFrame = {
@@ -766,13 +698,11 @@ object Dedup {
   }
 
   /** [[signDocs]]' frame reshaped to the PROBE-READY index layout
-    * [[dedupAgainstPreparedIndex]] consumes — (old_id, band, bh) rows
-    * plus (old_id, wh_old) array rows. Both frames are lazy projections
+    * [[dedupSignedAgainstPreparedIndex]] consumes — (old_id, band, bh)
+    * rows plus one (old_id, wh_old) array row per doc, the layout the
+    * streaming curation store persists. Both frames are lazy projections
     * of `signed`: checkpoint `signed` first and the two store writes
-    * share one signature computation, where the long-format route
-    * (prepareSignatureIndex ∘ signatureTable) pays an |wh|-row explode
-    * plus a groupBy EXCHANGE just to rebuild the arrays it started
-    * from. Layouts are bit-identical to that route (DedupSpec pin). */
+    * share one signature computation, with no index-shaped shuffle. */
   def preparedFromSigned(signed: DataFrame): (DataFrame, DataFrame) = {
     val exBands = signed.select(col("doc_id").as("old_id"),
       posexplode(col("mh_bands")).as(Seq("band", "bh")))
@@ -781,11 +711,19 @@ object Dedup {
     (exBands, exWh)
   }
 
-  /** [[dedupAgainstPreparedIndex]] for a batch already signed by
-    * [[signDocs]]: the identical banded-candidate + exact-jaccard
-    * verdict (DedupSpec pins equality), with the signature computation
-    * lifted to the caller so the probe, the index append and the
-    * survivor write share one pass. */
+  /** Incremental near-dup dedup: the ids of an INCOMING batch, signed by
+    * [[signDocs]], that no doc of an EXISTING corpus's prepared index
+    * ([[preparedFromSigned]]) confirms as a near-dup — the shape a
+    * continuously-crawling 100 TB pipeline actually runs: the existing
+    * corpus is NEVER re-read or re-hashed; the batch's banded LSH
+    * candidates are probed against the stored band rows and
+    * exact-jaccard-verified against the stored word-hash arrays. Both
+    * sides must be signed with the SAME (numHashes, bands) — parameter
+    * drift would silently probe wrong bands. The signature computation
+    * is lifted to the caller so the probe, the index append and the
+    * survivor write share one pass. Within-batch duplicates are
+    * [[minhashDedupSurvivors]]' job — this operator answers only "is it
+    * already in the corpus". */
   def dedupSignedAgainstPreparedIndex(
       signed: DataFrame, exBands: DataFrame, exWh: DataFrame,
       threshold: Double = 0.95): DataFrame = {

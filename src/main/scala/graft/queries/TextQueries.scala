@@ -2039,7 +2039,7 @@ object TextQueries extends QueryPack {
       ORDER BY d.doc_id"""))
 
   /** Incremental dedup against the persisted signature index
-    * (operators.Dedup.dedupAgainstSignatureIndex): odd doc_ids play the
+    * (operators.Dedup.dedupSignedAgainstPreparedIndex): odd doc_ids play the
     * incoming crawl batch, even doc_ids the already-indexed corpus.
     * FULL ORACLE via the q77 fixture: because the operator's map-only
     * signing of the incoming side is the SAME expression q77 ran over
@@ -2050,12 +2050,9 @@ object TextQueries extends QueryPack {
     "q100_incremental_dedup",
     (s, dir) => {
       val docs = Tables(s, dir).documents
-      // sign-once form (r18): the classic composition evaluated the
-      // incoming side's tokenize→minhash under BOTH probe subtrees and
-      // the index side's under both prepared layouts (lazy subtrees are
-      // not shared across a plan), ~2× the signature compute for the
-      // same verdict. Each side signs once into an eager checkpoint;
-      // the probe algebra (and the oracle) are unchanged.
+      // each side signs once into an eager checkpoint: lazy subtrees are
+      // not shared across a plan, so the probe's band side and its
+      // word-hash join-back would otherwise each re-sign the batch
       val signedIdx = Dedup.signDocs(
         docs.filter(col("doc_id") % 2 === 0), col("text"), col("doc_id"),
         numHashes = 64, bands = 4).localCheckpoint(true)
@@ -2545,29 +2542,25 @@ object TextQueries extends QueryPack {
     })
 
   /** The q125 curation gate + decontamination stage as a STRUCTURED
-    * STREAM (streaming.DocumentStreams.curationGateToParquet): the train
-    * split arrives as file-source micro-batches under
-    * Trigger.AvailableNow, is Gopher-gated map-only, signed with the
-    * index's own minhash/LSH parameters, probed against the static
-    * signature index of the eval split (stream-static left join — no
-    * stream-stream join), and the per-doc confirm verdict is computed
-    * PER BATCH inside foreachBatch (a file source delivers each doc in
-    * exactly one micro-batch), with survivors appended to parquet — a
-    * stateless streaming plan (zero state-store operators, asserted on
-    * every run) with no driver-side result table. FULL ORACLE via the
-    * q77 signature fixture (the q100 SQL shape: band-equality candidates
-    * + sorted-word-hash jaccard ≥ 0.95) gated by the q92 Gopher fixture —
-    * so the streaming row is hash-verified end-to-end, and
-    * StreamingSpec additionally pins batch parity against the same gate
-    * + dedupAgainstSignatureIndex composition. */
+    * STREAM (streaming.DocumentStreams.curationGateToParquetSigned): the
+    * train split arrives as file-source micro-batches under
+    * Trigger.AvailableNow; inside foreachBatch each batch is
+    * Gopher-gated, signed with the index's own minhash/LSH parameters
+    * and probed against the checkpointed signature index of the eval
+    * split (no stream-stream join). The per-doc confirm verdict is
+    * computed PER BATCH (a file source delivers each doc in exactly one
+    * micro-batch), with survivors appended to parquet — a stateless
+    * streaming plan (zero state-store operators, asserted on every run)
+    * with no driver-side result table. FULL ORACLE via the q77 signature
+    * fixture (the q100 SQL shape: band-equality candidates +
+    * sorted-word-hash jaccard ≥ 0.95) gated by the q92 Gopher fixture —
+    * so the streaming row is hash-verified end-to-end, and StreamingSpec
+    * additionally pins batch parity against the same gate +
+    * dedupSignedAgainstPreparedIndex composition. */
   private val q130 = Q(
     "q130_stream_curation_gate",
     (s, dir) => {
       val docs = Tables(s, dir).documents
-      // signed seed (r18): one signing pass + zero index-shaped shuffles
-      // vs the long-format signatureTable → prepareSignatureIndex route;
-      // the oracle (and StreamingSpec's parity pin) prove the survivor
-      // set is unchanged
       val index = Dedup.signDocs(
         docs.filter(col("doc_id") % 10 === 0), col("text"), col("doc_id"),
         numHashes = 64, bands = 4)
@@ -2602,7 +2595,7 @@ object TextQueries extends QueryPack {
       ORDER BY doc_id"""))
 
   /** Streaming curation with index MAINTENANCE
-    * ([[graft.streaming.DocumentStreams.incrementalCurationToParquet]]):
+    * ([[graft.streaming.DocumentStreams.incrementalCurationToParquetSigned]]):
     * the q130 gate+dedup lifecycle plus the piece a real continuous crawl
     * needs — each micro-batch's survivors append their OWN signatures to
     * the persisted index, so batch 1 dedups against the seed corpus AND
@@ -2611,7 +2604,7 @@ object TextQueries extends QueryPack {
     * mtime order and maxFilesPerTrigger=1, so the cascade is
     * deterministic. ALL cross-batch state is the on-disk index (streaming
     * plan stateless, require()-asserted); within-batch new-new pairs are
-    * intentionally out of scope (dedupAgainstSignatureIndex's contract).
+    * intentionally out of scope (the incremental probe's contract).
     *
     * FULL ORACLE: the q130 SQL widened to the 3-batch unroll — `near` is
     * the role-agnostic banded-candidate + exact-jaccard pair set from the
@@ -2621,7 +2614,6 @@ object TextQueries extends QueryPack {
     "q142_stream_index_maintenance",
     (s, dir) => {
       val docs = Tables(s, dir).documents
-      // signed seed (r18): see q130 — same lifecycle, same equivalence
       val seedIdx = Dedup.signDocs(
         docs.filter(col("doc_id") % 10 === 0), col("text"), col("doc_id"),
         numHashes = 64, bands = 4)
@@ -2687,7 +2679,7 @@ object TextQueries extends QueryPack {
     (s, dir) => {
       import graft.streaming.DocumentStreams
       val docs = Tables(s, dir).documents
-      val seedIdx = Dedup.signatureTable(
+      val seedIdx = Dedup.signDocs(
         docs.filter(col("doc_id") % 10 === 0), col("text"), col("doc_id"),
         numHashes = 64, bands = 4)
       val idxPath =
@@ -3831,7 +3823,8 @@ object TextQueries extends QueryPack {
       GROUP BY lang ORDER BY lang"""))
 
   /** Incremental near-dup dedup with the curated corpus in the KEYED
-    * CONNECTOR ([[graft.streaming.DocumentStreams.incrementalDedupToKeyed]])
+    * CONNECTOR
+    * ([[graft.streaming.DocumentStreams.incrementalDedupToKeyedSigned]])
     * — the single most common real 100 TB pipeline loop (a continuously
     * crawled corpus), composed from pieces graded separately: q38's
     * banded MinHash/LSH algebra probing a PERSISTED index (q142's
@@ -3850,7 +3843,6 @@ object TextQueries extends QueryPack {
     (s, dir) => {
       import graft.streaming.DocumentStreams
       val docs = Tables(s, dir).documents
-      // signed seed (r18): see q130 — same lifecycle, same equivalence
       val seedIdx = Dedup.signDocs(
         docs.filter(col("doc_id") % 10 === 0), col("text"), col("doc_id"),
         numHashes = 64, bands = 4)
@@ -3934,7 +3926,6 @@ object TextQueries extends QueryPack {
     (s, dir) => {
       import graft.streaming.DocumentStreams
       val docs = Tables(s, dir).documents
-      // signed seed (r18): see q130 — same lifecycle, same equivalence
       val seedIdx = Dedup.signDocs(
         docs.filter(col("doc_id") % 10 === 0), col("text"), col("doc_id"),
         numHashes = 64, bands = 4)

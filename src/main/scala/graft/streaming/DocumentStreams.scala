@@ -71,120 +71,39 @@ object DocumentStreams {
   }
 
   /** Gate + incremental decontamination of a STREAMED crawl batch against
-    * a static near-dup signature index (Dedup.signatureTable's layout),
-    * run to completion under Trigger.AvailableNow, appending survivors to
-    * a parquet directory.
+    * a static near-dup signature index, run to completion under
+    * Trigger.AvailableNow, appending survivors to a parquet directory.
     *
     * Stream plan — each piece chosen for what streaming can actually
     * incrementalize:
-    *   - the quality gate and the signing (word-hash set + minhash LSH
-    *     bands, the SAME expressions the index was built with) are
-    *     map-only over each micro-batch;
-    *   - candidate probing is a stream-STATIC left join against the
-    *     (band, bh)-keyed index rows with their stored word-hash sets
-    *     attached — no stream-stream join anywhere (the batch operator's
-    *     anti-join re-meets the incoming frame, which a stream cannot;
-    *     here the dup verdict rides the stream row itself);
+    *   - the static index is checkpointed ONCE before the stream starts
+    *     and projected into the probe layout; the checkpoint's exact size
+    *     stats let Catalyst broadcast it while it fits;
+    *   - inside foreachBatch each batch is quality-gated and signed (the
+    *     SAME expressions the index was signed with) after the
+    *     conditional re-widen (the q184 rule: a file-delivered batch
+    *     arrives with one partition per file), then probed against the
+    *     index — no stream-stream join anywhere;
     *   - the per-doc "any candidate confirms" existential needs NO
     *     cross-batch state at all: a file source delivers each document
-    *     in exactly one micro-batch, so the max(dup) verdict is computed
-    *     per batch inside foreachBatch and survivors are APPENDED to the
-    *     output directory. The streaming plan itself is stateless (zero
+    *     in exactly one micro-batch, so the per-batch verdict IS the
+    *     per-doc verdict and survivors are APPENDED to the output
+    *     directory. The streaming plan itself is stateless (zero
     *     state-store operators — asserted on every run), nothing is
     *     materialized on the driver, and the output is distributed
     *     storage: the shape that survives a corpus-cardinality stream.
     * Output: surviving (doc_id, lang) read back from `outPath` —
     * batch-parity-pinned in StreamingSpec against the same gate +
-    * Dedup.dedupAgainstSignatureIndex composition, and hash-verified
-    * end-to-end by q130's oracle over the q77/q92 fixtures.
+    * [[graft.operators.Dedup.dedupSignedAgainstPreparedIndex]]
+    * composition, and hash-verified end-to-end by q130's oracle over the
+    * q77/q92 fixtures.
     *
-    * @param index  Dedup.signatureTable rows (doc_id, kind, idx, value) of
-    *               the already-curated corpus — read it from its persisted
-    *               parquet in production; parameter drift caveats of
-    *               dedupAgainstSignatureIndex apply identically.
+    * @param indexSigned [[graft.operators.Dedup.signDocs]] frame of the
+    *               already-curated corpus, signed with this call's
+    *               `numHashes`/`bands` (parameter drift would silently
+    *               probe wrong bands).
     * @param outPath parquet directory the surviving rows are appended to
     *               (the "curated corpus" sink a production stream feeds). */
-  def curationGateToParquet(
-      spark: SparkSession, dir: String, index: DataFrame, outPath: String,
-      numHashes: Int = 64, bands: Int = 4, threshold: Double = 0.95,
-      conf: EventStreams.StreamRunConf = EventStreams.StreamRunConf()): DataFrame = {
-    val rows = numHashes / bands
-    require(rows * bands == numHashes, "bands must divide numHashes")
-    // static side: (band, bh) → stored word-hash set, prejoined once
-    val exBands = index.filter(col("kind") === "band")
-      .select(col("doc_id").as("old_id"),
-        col("idx").cast("int").as("band"), col("value").as("bh"))
-    val exWh = index.filter(col("kind") === "wh")
-      .groupBy(col("doc_id"))
-      .agg(transform(array_sort(collect_list(struct(col("idx"), col("value")))),
-        s => s.getField("value")).as("wh_old"))
-      .select(col("doc_id").as("old_id"), col("wh_old"))
-    val ex = exBands.join(exWh, Seq("old_id"))
-    // stream side: incoming crawl = the q125 train split, gated map-only,
-    // signed with the index's own parameters
-    val incoming = readDocumentStream(spark, dir)
-      .filter(col("doc_id") % 10 =!= 0)
-      .filter(qualityGate(col("text")))
-      .select(col("doc_id"), col("lang"),
-        array_sort(array_distinct(elementHashes(tokens(col("text")))))
-          .as("wh_new"))
-    val probed = incoming
-      .withColumn("sig", minhashFromHashes(col("wh_new"), numHashes))
-      .select(col("doc_id"), col("lang"), col("wh_new"),
-        posexplode(lshBandHashes(col("sig"), bands, rows)).as(Seq("band", "bh")))
-      .join(ex, Seq("band", "bh"), "left")
-      .select(col("doc_id"), col("lang"),
-        when(col("wh_old").isNotNull &&
-          round(graft.plans.NativeExprs.jaccardSorted(
-            col("wh_new"), col("wh_old")), 4) >= threshold, 1)
-          .otherwise(0).as("dup"))
-    emptySurvivors(spark).write.mode("overwrite").parquet(outPath)
-    withStreamingShufflePartitions(spark, conf.shufflePartitions) {
-      val q = probed.writeStream
-        .foreachBatch { (batch: DataFrame, _: Long) =>
-          // each doc appears in exactly one micro-batch (file source), so
-          // this per-batch existential IS the per-doc verdict
-          batch.groupBy(col("doc_id"), col("lang"))
-            .agg(max(col("dup")).as("dup"))
-            .filter(col("dup") === 0)
-            .select(col("doc_id"), col("lang"))
-            .write.mode("append").parquet(outPath)
-          ()
-        }
-        .options(conf.options)
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-      // the scale pin: the registered plan keeps NO streaming state — the
-      // verdict lives per batch, never in a state store or a memory sink
-      require(q.recentProgress.flatMap(_.stateOperators).isEmpty,
-        "curation gate stream must be stateless (per-batch verdicts)")
-    }
-    spark.read.schema(survivorSchema).parquet(outPath)
-      .orderBy(col("doc_id"))
-  }
-
-  /** [[curationGateToParquet]] with the static index given as a
-    * [[graft.operators.Dedup.signDocs]] frame, and the per-batch work
-    * moved INSIDE foreachBatch (the [[incrementalCurationToParquet]]
-    * architecture — still stateless, still no stream-stream join, still
-    * per-batch existential verdicts). Two costs the in-plan form pays
-    * disappear:
-    *
-    *  - the static side is checkpointed ONCE before the stream starts —
-    *    the long-format route re-derived the index's explode + groupBy
-    *    under every micro-batch's join, and the checkpoint's exact size
-    *    stats let Catalyst broadcast it while it fits;
-    *  - the gate + signing of each batch run after the conditional
-    *    re-widen (the q184 rule): a file-delivered batch arrives with
-    *    partition count = its file count — at fixture scale ONE task
-    *    carried the whole tokenize/minhash pass while every other core
-    *    idled; at deployment scale batches span many splits and the
-    *    branch is a no-op.
-    *
-    * Survivor set is bit-identical to [[curationGateToParquet]]
-    * (StreamingSpec pins the parity): "no candidate confirms" and
-    * "not in the confirmed-dup anti-set" are the same existential. */
   def curationGateToParquetSigned(
       spark: SparkSession, dir: String, indexSigned: DataFrame,
       outPath: String,
@@ -192,7 +111,7 @@ object DocumentStreams {
       conf: EventStreams.StreamRunConf = EventStreams.StreamRunConf()): DataFrame = {
     val rows = numHashes / bands
     require(rows * bands == numHashes, "bands must divide numHashes")
-    val seed = indexSigned.localCheckpoint(true)
+    val (seed, releaseSeed) = graft.Checkpoints.owned(indexSigned)
     try {
       val (exBands, exWh) = graft.operators.Dedup.preparedFromSigned(seed)
       emptySurvivors(spark).write.mode("overwrite").parquet(outPath)
@@ -202,20 +121,17 @@ object DocumentStreams {
           .writeStream
           .foreachBatch { (batch: DataFrame, _: Long) =>
             val gated = batch.filter(qualityGate(col("text")))
-            val signed = graft.operators.Dedup.signDocs(
-              gated, col("text"), col("doc_id"), carry = Seq(col("lang")),
-              numHashes = numHashes, bands = bands).localCheckpoint(true)
+            val (signed, release) = graft.Checkpoints.owned(
+              graft.operators.Dedup.signDocs(
+                gated, col("text"), col("doc_id"), carry = Seq(col("lang")),
+                numHashes = numHashes, bands = bands))
             try {
-              // each doc appears in exactly one micro-batch (file
-              // source), so this per-batch anti-set IS the per-doc
-              // verdict
               graft.operators.Dedup.dedupSignedAgainstPreparedIndex(
                   signed, exBands, exWh, threshold)
                 .join(signed.select(col("doc_id"), col("lang")),
                   Seq("doc_id"))
                 .write.mode("append").parquet(outPath)
-            } finally { signed.unpersist(); () }
-            ()
+            } finally release()
           }
           .options(conf.options)
           .trigger(Trigger.AvailableNow())
@@ -229,7 +145,7 @@ object DocumentStreams {
       }
       spark.read.schema(survivorSchema).parquet(outPath)
         .orderBy(col("doc_id"))
-    } finally { seed.unpersist(); () }
+    } finally releaseSeed()
   }
 
   /** MANIFEST COMMIT PROTOCOL for the streaming curation store (the
@@ -317,61 +233,33 @@ object DocumentStreams {
       .rename(tmp, p, org.apache.hadoop.fs.Options.Rename.OVERWRITE)
   }
 
-  /** Seed the curation store: prepared seed index under token `seed` in
-    * both index bases, an empty (schema-bearing) survivor dir (skipped
-    * when the survivor store is NOT manifest-resolved parquet — the
-    * keyed-connector variant owns its own layout), and the initial
-    * manifest. */
+  /** Seed the curation store from a [[graft.operators.Dedup.signDocs]]
+    * frame: the probe-ready layout (band rows + word-hash arrays) under
+    * token `seed` in both index bases, an empty (schema-bearing) survivor
+    * dir (skipped when the survivor store is NOT manifest-resolved
+    * parquet — the keyed-connector variant owns its own layout), and the
+    * initial manifest. The signed frame is checkpointed once, so both
+    * index writes are projections of one signing pass with no
+    * index-shaped shuffle. */
   private[graft] def initCurationStore(
-      spark: SparkSession, seedIndex: DataFrame,
-      indexPath: String, outPath: String,
-      seedSurvivors: Boolean = true): Unit = {
-    // the persisted dedup store keeps the PROBE-READY layout (band rows +
-    // pre-grouped wh arrays): re-deriving wh arrays from the long format
-    // would be an O(index) groupBy on EVERY micro-batch
-    val (seedBands, seedWh) = graft.operators.Dedup.prepareSignatureIndex(seedIndex)
-    initCurationStorePrepared(
-      spark, seedBands, seedWh, indexPath, outPath, seedSurvivors)
-  }
-
-  /** [[initCurationStore]] for a seed already signed by
-    * [[graft.operators.Dedup.signDocs]]: the long-format route pays an
-    * |wh|-row explode and a groupBy EXCHANGE of the whole seed index
-    * just to rebuild the arrays the signing started from, and — because
-    * the two store writes evaluate their lazy inputs independently —
-    * tokenizes the seed corpus once per write. Here the signed frame is
-    * checkpointed once and both probe-layout writes are projections of
-    * it: one signing pass, zero index-shaped shuffles. Layout on disk is
-    * bit-identical (DedupSpec pins preparedFromSigned against
-    * prepareSignatureIndex∘signatureTable). */
-  private[graft] def initCurationStoreSigned(
       spark: SparkSession, seedSigned: DataFrame,
       indexPath: String, outPath: String,
       seedSurvivors: Boolean = true): Unit = {
-    val seed = seedSigned.localCheckpoint(true)
+    val (seed, release) = graft.Checkpoints.owned(seedSigned)
     try {
       val (seedBands, seedWh) = graft.operators.Dedup.preparedFromSigned(seed)
       // coalesce(1): the per-batch token convention applied to the seed.
       // The signing ran wide in the eager checkpoint above; uncoalesced,
       // a re-widened seed lands one file PER PARTITION and every later
       // micro-batch re-lists and re-opens the whole seed store. Safe
-      // here precisely because the inputs are materialized arrays (the
-      // legacy long-format path stays uncoalesced — its frames are lazy
-      // and a coalesce(1) would serialize the seed signing itself).
-      initCurationStorePrepared(
-        spark, seedBands.coalesce(1), seedWh.coalesce(1),
-        indexPath, outPath, seedSurvivors)
-    } finally { seed.unpersist(); () }
-  }
-
-  private def initCurationStorePrepared(
-      spark: SparkSession, seedBands: DataFrame, seedWh: DataFrame,
-      indexPath: String, outPath: String, seedSurvivors: Boolean): Unit = {
-    seedBands.write.mode("overwrite").parquet(s"$indexPath/bands/seed")
-    seedWh.write.mode("overwrite").parquet(s"$indexPath/wh/seed")
-    if (seedSurvivors)
-      emptySurvivors(spark).write.mode("overwrite").parquet(s"$outPath/seed")
-    commitCommits(spark, indexPath, CommitState(Seq("seed"), -1L))
+      // because the inputs are materialized arrays: a coalesce(1) never
+      // reaches the signing itself.
+      seedBands.coalesce(1).write.mode("overwrite").parquet(s"$indexPath/bands/seed")
+      seedWh.coalesce(1).write.mode("overwrite").parquet(s"$indexPath/wh/seed")
+      if (seedSurvivors)
+        emptySurvivors(spark).write.mode("overwrite").parquet(s"$outPath/seed")
+      commitCommits(spark, indexPath, CommitState(Seq("seed"), -1L))
+    } finally release()
   }
 
   /** A base's committed rows: the manifest's entries, read by the base's
@@ -391,31 +279,29 @@ object DocumentStreams {
 
   /** Sign a micro-batch ONCE and dedup it against the index as of
     * `st` (the manifest view — the batch's own rows are not in it, so a
-    * doc never meets its own signatures). Tokenize→hash→minhash used to
-    * evaluate three times per batch (under the probe's band side, under
-    * its word-hash join-back, and again for the store writes), because
-    * each consumer re-derived signatures from `text` in its own lazy
-    * subtree; the eager `signed` checkpoint is the one frame they all
-    * read, and signDocs re-widens a file-thin batch first (the q184
-    * rule). Returns the kept docs as signed rows (doc_id, lang, wh,
-    * mh_bands), eagerly checkpointed — the caller unpersists. */
+    * doc never meets its own signatures). The eager `signed` checkpoint
+    * is the one frame the probe's band side, its word-hash join-back and
+    * the store writes all read, so tokenize→hash→minhash runs once per
+    * batch; signDocs re-widens a file-thin batch first (the q184 rule).
+    * Returns the kept docs as signed rows (doc_id, lang, wh, mh_bands),
+    * eagerly checkpointed, and their release — the caller runs it. */
   private def signAndProbe(
       spark: SparkSession, st: CommitState, indexPath: String,
       docs: DataFrame, numHashes: Int, bands: Int,
-      threshold: Double): DataFrame = {
+      threshold: Double): (DataFrame, () => Unit) = {
     val exBands = readBase(spark, bandsSchema, s"$indexPath/bands", st.entries)
     val exWh = readBase(spark, whSchema, s"$indexPath/wh", st.entries)
-    val signed = graft.operators.Dedup.signDocs(
+    val (signed, release) = graft.Checkpoints.owned(graft.operators.Dedup.signDocs(
       docs, col("text"), col("doc_id"), carry = Seq(col("lang")),
-      numHashes = numHashes, bands = bands).localCheckpoint(true)
+      numHashes = numHashes, bands = bands))
     // the join-back attaches lang/wh/mh_bands to the survivor ids so the
     // store writes re-read THIS checkpoint; once it is materialized the
     // lineage no longer reaches `signed`
-    try graft.operators.Dedup.dedupSignedAgainstPreparedIndex(
-        signed, exBands, exWh, threshold)
-      .join(signed, Seq("doc_id"))
-      .localCheckpoint(true)
-    finally { signed.unpersist(); () }
+    try graft.Checkpoints.owned(
+      graft.operators.Dedup.dedupSignedAgainstPreparedIndex(
+          signed, exBands, exWh, threshold)
+        .join(signed, Seq("doc_id")))
+    finally release()
   }
 
   /** The store's one write path, behind the trigger's one commit point.
@@ -502,12 +388,12 @@ object DocumentStreams {
     // checkpoint just didn't record it before the crash (ids are
     // monotonic — the CommitState contract — so <= max means committed)
     if (batchId <= st.maxBatch) return
-    val kept = signAndProbe(spark, st, indexPath,
+    val (kept, release) = signAndProbe(spark, st, indexPath,
       batch.filter(qualityGate(col("text"))), numHashes, bands, threshold)
     try commitToStore(spark, st, indexPath, outPath, batchId, Some(kept),
       Option.when(compactionDue(batchId, compactEvery))(compactTargetBytes),
       includeSurvivors = true, failBeforeCommit)
-    finally { kept.unpersist(); () }
+    finally release()
   }
 
   /** Compaction under the manifest protocol, outside any batch: rewrite
@@ -518,7 +404,7 @@ object DocumentStreams {
     * write, swap and best-effort cleanup a compaction-due trigger runs.
     *
     * `includeSurvivors = false` compacts the INDEX BASES ONLY — the
-    * keyed-connector lifecycle ([[incrementalDedupToKeyed]]), whose
+    * keyed-connector lifecycle ([[incrementalDedupToKeyedSigned]]), whose
     * survivor store is the `graft-keyed` layout with its own batch
     * ledger, not a manifest-resolved parquet base. `failBeforeCommit`
     * injects a crash in the only window the protocol leaves (compact
@@ -537,8 +423,8 @@ object DocumentStreams {
   }
 
   /** Continuous-ingest curation with index MAINTENANCE — the full
-    * lifecycle [[curationGateToParquet]] stops short of: each arriving
-    * micro-batch is quality-gated, deduped against the PERSISTED
+    * lifecycle [[curationGateToParquetSigned]] stops short of: each
+    * arriving micro-batch is quality-gated, deduped against the PERSISTED
     * signature index as it stands, its survivors are appended to the
     * curated corpus, and the survivors' OWN signatures are appended to
     * the index — so a later batch dedups against everything curated
@@ -547,16 +433,16 @@ object DocumentStreams {
     *
     * Scale shape: the index lives on distributed storage and is read
     * per batch through the same banded probe join (never re-signed, never
-    * driver-resident); the per-batch work is
-    * [[graft.operators.Dedup.dedupAgainstSignatureIndex]] verbatim; the
-    * streaming plan itself stays stateless (zero state-store operators,
-    * require()-asserted) because ALL cross-batch state is the persisted
-    * index — bounded by curated-corpus size on disk, not by stream volume
-    * in memory. Within-batch new-new duplicates are intentionally not
-    * compared (dedupAgainstSignatureIndex's documented contract;
-    * minhashDedupSurvivors is the batch-internal tool) — a doc therefore
-    * never collides with its OWN batch's signatures even though they are
-    * appended before the stream finishes.
+    * driver-resident); the per-batch work is [[processCurationBatch]]
+    * ([[graft.operators.Dedup.dedupSignedAgainstPreparedIndex]] against
+    * the manifest view); the streaming plan itself stays stateless (zero
+    * state-store operators, require()-asserted) because ALL cross-batch
+    * state is the persisted index — bounded by curated-corpus size on
+    * disk, not by stream volume in memory. Within-batch new-new
+    * duplicates are intentionally not compared (the probe's documented
+    * contract; minhashDedupSurvivors is the batch-internal tool) — a doc
+    * therefore never collides with its OWN batch's signatures even
+    * though they are appended before the stream finishes.
     *
     * Determinism: the incoming crawl is rendered as one parquet file per
     * batch (`batch b` = pmod(doc_id, batchFiles)) with strictly
@@ -567,48 +453,28 @@ object DocumentStreams {
     * sequential batch unroll; q142's oracle re-derives the whole cascade
     * in SQL).
     *
-    * @param seedIndex [[graft.operators.Dedup.signatureTable]] rows of the
-    *                  already-curated corpus; persisted to `indexPath` as
-    *                  the stream's starting state.
-    * @param docsPath     crawl relation under `dir` (parameterized so a
-    *                     deployment points at its own table).
-    * @param streamSplit  predicate selecting the crawl side (rows NOT in
-    *                     the seed corpus); default keeps doc_id%10==0 as
-    *                     the never-streamed seed/eval split.
     * Durability: every batch's three outputs (band rows, wh rows,
     * survivors) commit ATOMICALLY via the manifest protocol documented at
     * [[CommitState]] — a mid-batch crash loses nothing and duplicates
     * nothing, and a foreachBatch replay of an already-committed batch is
     * a skip (exactly-once). A compacting trigger commits through the same
-    * single swap, so the r10 in-place-rewrite hazard (crash ⇒ total index
-    * loss) is structurally gone.
+    * single swap, so a crash can never lose the index.
     *
+    * @param seedSigned [[graft.operators.Dedup.signDocs]] frame of the
+    *                   already-curated corpus, signed with this call's
+    *                   `numHashes`/`bands`; persisted to `indexPath` as
+    *                   the stream's starting state ([[initCurationStore]]).
+    * @param docsPath     crawl relation under `dir` (parameterized so a
+    *                     deployment points at its own table).
+    * @param streamSplit  predicate selecting the crawl side (rows NOT in
+    *                     the seed corpus); default keeps doc_id%10==0 as
+    *                     the never-streamed seed/eval split.
     * @param compactEvery every this many batches (0 disables), the
     *                     trigger writes each base's live entries plus its
     *                     own rows as one target-size token instead of a
     *                     batch token — bounds the O(batches) listing
     *                     growth of per-batch commits.
     * @return surviving (doc_id, lang) resolved through the manifest. */
-  def incrementalCurationToParquet(
-      spark: SparkSession, dir: String, seedIndex: DataFrame,
-      outPath: String, indexPath: String, batchFiles: Int = 3,
-      numHashes: Int = 64, bands: Int = 4, threshold: Double = 0.95,
-      conf: EventStreams.StreamRunConf = EventStreams.StreamRunConf(),
-      docsPath: String = "documents.parquet",
-      streamSplit: Column = col("doc_id") % 10 =!= 0,
-      compactEvery: Int = 2,
-      compactTargetBytes: Long = 128L << 20): DataFrame =
-    runIncrementalCuration(
-      spark, dir, initCurationStore(spark, seedIndex, indexPath, outPath),
-      outPath, indexPath, batchFiles, numHashes, bands, threshold, conf,
-      docsPath, streamSplit, compactEvery, compactTargetBytes)
-
-  /** [[incrementalCurationToParquet]] with the seed given as a
-    * [[graft.operators.Dedup.signDocs]] frame instead of the long-format
-    * signature table: seeding then pays one signing pass and zero
-    * index-shaped shuffles (see [[initCurationStoreSigned]]) — the form
-    * a pipeline whose seed is a document table (rather than an exported
-    * q77-style index) should call. Everything downstream is identical. */
   def incrementalCurationToParquetSigned(
       spark: SparkSession, dir: String, seedSigned: DataFrame,
       outPath: String, indexPath: String, batchFiles: Int = 3,
@@ -617,28 +483,11 @@ object DocumentStreams {
       docsPath: String = "documents.parquet",
       streamSplit: Column = col("doc_id") % 10 =!= 0,
       compactEvery: Int = 2,
-      compactTargetBytes: Long = 128L << 20): DataFrame =
-    runIncrementalCuration(
-      spark, dir,
-      initCurationStoreSigned(spark, seedSigned, indexPath, outPath),
-      outPath, indexPath, batchFiles, numHashes, bands, threshold, conf,
-      docsPath, streamSplit, compactEvery, compactTargetBytes)
-
-  private def runIncrementalCuration(
-      spark: SparkSession, dir: String, initStore: => Unit,
-      outPath: String, indexPath: String, batchFiles: Int,
-      numHashes: Int, bands: Int, threshold: Double,
-      conf: EventStreams.StreamRunConf, docsPath: String,
-      streamSplit: Column, compactEvery: Int,
-      compactTargetBytes: Long): DataFrame = {
+      compactTargetBytes: Long = 128L << 20): DataFrame = {
     require(batchFiles >= 1, "need at least one batch file")
-    // streamSplit selects the crawl side (default: the 10%-eval split is
-    // the seed corpus and never streams); both the predicate and the
-    // source relation are parameters so a deployment can point the stream
-    // at its own crawl table without editing the operator
     val docs = spark.read.parquet(s"$dir/$docsPath").filter(streamSplit)
     val streamDir = renderCrawlBatches(docs, batchFiles)
-    initStore
+    initCurationStore(spark, seedSigned, indexPath, outPath)
     val incoming = spark.readStream
       .schema(documentSchema)
       .option("maxFilesPerTrigger", 1)
@@ -693,8 +542,8 @@ object DocumentStreams {
   }
 
   /** One micro-batch of the KEYED-CONNECTOR incremental dedup lifecycle
-    * ([[incrementalDedupToKeyed]]): dedup the batch against the manifest
-    * view of the signature index, append the NOVEL docs into the
+    * ([[incrementalDedupToKeyedSigned]]): dedup the batch against the
+    * manifest view of the signature index, append the NOVEL docs into the
     * `graft-keyed` layout through [[graft.sources.v2.KeyedJsonStream
     * .appendBatch]] (the connector's own batch-id marker + residue-scrub
     * idempotence), then append the novel docs' signatures to the index
@@ -722,7 +571,7 @@ object DocumentStreams {
       failBeforeCommit: Boolean = false): Unit = {
     val st = readCommits(spark, indexPath)
     if (batchId <= st.maxBatch) return
-    val kept = signAndProbe(
+    val (kept, release) = signAndProbe(
       spark, st, indexPath, batch, numHashes, bands, threshold)
     try {
       // 1) novel docs into the keyed store (its ledger makes a replay of
@@ -738,7 +587,7 @@ object DocumentStreams {
       commitToStore(spark, st, indexPath, outPath, batchId, Some(kept),
         Option.when(compactionDue(batchId, compactEvery))(compactTargetBytes),
         includeSurvivors = false, failBeforeCommit)
-    } finally { kept.unpersist(); () }
+    } finally release()
   }
 
   /** Incremental near-dup dedup with the curated corpus living in the
@@ -746,30 +595,32 @@ object DocumentStreams {
     * composed from pieces the engine already grades separately: new
     * documents arrive as throttled micro-batches, each batch probes the
     * PERSISTED MinHash/LSH band index (q38's banded algebra through
-    * [[graft.operators.Dedup.dedupAgainstPreparedIndex]] — seed corpus ∪
-    * every earlier batch's survivors, never re-signed), and ONLY NOVEL
-    * docs append — into the `graft-keyed` layout (so the curated corpus
-    * is immediately SPJ-joinable shuffle-free, q176's read side) and
-    * into the index. Exactly-once across BOTH stores via the connector's
-    * batch ledger + the index manifest, committed in the fixed order
-    * [[processKeyedDedupBatch]] documents; the streaming plan itself is
-    * stateless (require()-asserted — ALL cross-batch state is on disk,
-    * bounded by curated-corpus size, not stream volume).
+    * [[graft.operators.Dedup.dedupSignedAgainstPreparedIndex]] — seed
+    * corpus ∪ every earlier batch's survivors, never re-signed), and ONLY
+    * NOVEL docs append — into the `graft-keyed` layout (so the curated
+    * corpus is immediately SPJ-joinable shuffle-free, q176's read side)
+    * and into the index. Exactly-once across BOTH stores via the
+    * connector's batch ledger + the index manifest, committed in the
+    * fixed order [[processKeyedDedupBatch]] documents; the streaming plan
+    * itself is stateless (require()-asserted — ALL cross-batch state is
+    * on disk, bounded by curated-corpus size, not stream volume).
     *
     * Returns the curated corpus read back THROUGH the connector's scan.
     * Within-batch new-new duplicates are out of scope, exactly as in
-    * [[incrementalCurationToParquet]] (dedupAgainstSignatureIndex's
-    * documented contract).
+    * [[incrementalCurationToParquetSigned]].
     *
+    * @param seedSigned [[graft.operators.Dedup.signDocs]] frame of the
+    *                   already-curated corpus, signed with this call's
+    *                   `numHashes`/`bands`; persisted to `indexPath` as
+    *                   the stream's starting state ([[initCurationStore]]).
     * @param compactEvery rewrite BOTH stores' accreted per-batch state
     *                      every this many batches (0 disables): the
     *                      signature index's live entries plus the
-    *                      batch's rows into one token (r16 verdict #5 —
-    *                      the trigger's one manifest swap, `maxBatch`
-    *                      carried) AND the keyed survivor store's
-    *                      per-shard batch files into one generation
-    *                      (r17 verdict #3 —
-    *                      [[graft.sources.v2.KeyedJsonStream.compact]],
+    *                      batch's rows into one token (the trigger's one
+    *                      manifest swap, `maxBatch` carried) AND the keyed
+    *                      survivor store's per-shard batch files into one
+    *                      generation
+    *                      ([[graft.sources.v2.KeyedJsonStream.compact]],
     *                      `_gen` manifest swap, ledger markers carried so
     *                      replay skips are identical pre/post). Without
     *                      either, a years-long crawl loop pays an
@@ -778,27 +629,6 @@ object DocumentStreams {
     *                      grades the full cascade over both compacted
     *                      stores against q227's verbatim oracle:
     *                      compaction must move bytes, never verdicts. */
-  def incrementalDedupToKeyed(
-      spark: SparkSession, dir: String, seedIndex: DataFrame,
-      outPath: String, indexPath: String, batchFiles: Int = 3,
-      shards: Int = 8, numHashes: Int = 64, bands: Int = 4,
-      threshold: Double = 0.95,
-      conf: EventStreams.StreamRunConf = EventStreams.StreamRunConf(),
-      docsPath: String = "documents.parquet",
-      streamSplit: Column = col("doc_id") % 10 =!= 0,
-      compactEvery: Int = 0,
-      compactTargetBytes: Long = 128L << 20): DataFrame =
-    runIncrementalDedupToKeyed(
-      spark, dir,
-      initCurationStore(spark, seedIndex, indexPath, outPath,
-        seedSurvivors = false),
-      outPath, indexPath, batchFiles, shards, numHashes, bands, threshold,
-      conf, docsPath, streamSplit, compactEvery, compactTargetBytes)
-
-  /** [[incrementalDedupToKeyed]] with the seed given as a
-    * [[graft.operators.Dedup.signDocs]] frame — one seed signing pass,
-    * zero index-shaped shuffles (see [[initCurationStoreSigned]]);
-    * everything downstream identical. */
   def incrementalDedupToKeyedSigned(
       spark: SparkSession, dir: String, seedSigned: DataFrame,
       outPath: String, indexPath: String, batchFiles: Int = 3,
@@ -808,25 +638,12 @@ object DocumentStreams {
       docsPath: String = "documents.parquet",
       streamSplit: Column = col("doc_id") % 10 =!= 0,
       compactEvery: Int = 0,
-      compactTargetBytes: Long = 128L << 20): DataFrame =
-    runIncrementalDedupToKeyed(
-      spark, dir,
-      initCurationStoreSigned(spark, seedSigned, indexPath, outPath,
-        seedSurvivors = false),
-      outPath, indexPath, batchFiles, shards, numHashes, bands, threshold,
-      conf, docsPath, streamSplit, compactEvery, compactTargetBytes)
-
-  private def runIncrementalDedupToKeyed(
-      spark: SparkSession, dir: String, initStore: => Unit,
-      outPath: String, indexPath: String, batchFiles: Int,
-      shards: Int, numHashes: Int, bands: Int, threshold: Double,
-      conf: EventStreams.StreamRunConf, docsPath: String,
-      streamSplit: Column, compactEvery: Int,
-      compactTargetBytes: Long): DataFrame = {
+      compactTargetBytes: Long = 128L << 20): DataFrame = {
     require(batchFiles >= 1, "need at least one batch file")
     val docs = spark.read.parquet(s"$dir/$docsPath").filter(streamSplit)
     val streamDir = renderCrawlBatches(docs, batchFiles)
-    initStore
+    initCurationStore(spark, seedSigned, indexPath, outPath,
+      seedSurvivors = false)
     val incoming = spark.readStream
       .schema(documentSchema)
       .option("maxFilesPerTrigger", 1)

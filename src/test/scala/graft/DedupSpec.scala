@@ -428,9 +428,11 @@ class DedupSpec extends SparkSpec {
       (3L, "novel unseen text that matches nothing in the existing index at all"),
       (5L, "novel unseen text that matches nothing in the existing index at all"))
       .toDF("doc_id", "text")
-    val index = Dedup.signatureTable(existing, col("text"), col("doc_id"))
-    val kept = Dedup.dedupAgainstSignatureIndex(
-        incoming, index, col("text"), col("doc_id"), threshold = 0.9)
+    val (exBands, exWh) = Dedup.preparedFromSigned(
+      Dedup.signDocs(existing, col("text"), col("doc_id")))
+    val kept = Dedup.dedupSignedAgainstPreparedIndex(
+        Dedup.signDocs(incoming, col("text"), col("doc_id")),
+        exBands, exWh, threshold = 0.9)
       .collect().map(_.getLong(0)).toSet
     // 1 duplicates indexed doc 2 → dropped; 3 and 5 duplicate EACH OTHER
     // but nothing in the index → both kept (within-batch dedup is a
@@ -438,43 +440,24 @@ class DedupSpec extends SparkSpec {
     assert(kept === Set(3L, 5L))
   }
 
-  test("signDocs: prepared layouts and verdicts match the long-format route") {
-    // the r18 sign-once devices must be BIT-IDENTICAL restatements of
-    // the signatureTable algebra — these two pins are what the
-    // scaladocs of signDocs / preparedFromSigned / initCurationStoreSigned
-    // promise
+  test("signDocs: wh and mh_bands equal signatureTable's wh and band rows") {
+    // the near-dup oracles read signatureTable's long-format rows while
+    // the engine probes signDocs' arrays: both must carry one signature
     val half = docs.filter(col("doc_id") % 2 === 0)
     val signed = Dedup.signDocs(
       half, col("text"), col("doc_id"), numHashes = 64, bands = 4)
-    val (fastBands, fastWh) = Dedup.preparedFromSigned(signed)
-    val (slowBands, slowWh) = Dedup.prepareSignatureIndex(
-      Dedup.signatureTable(half, col("text"), col("doc_id"),
-        numHashes = 64, bands = 4))
+    val table = Dedup.signatureTable(
+      half, col("text"), col("doc_id"), numHashes = 64, bands = 4)
     def rows(df: org.apache.spark.sql.DataFrame): Set[String] =
-      df.collect().map(_.toString).toSet
-    assert(fastBands.columns.toSeq === slowBands.columns.toSeq)
-    // dataTypes only: the fast route's posexplode marks band/bh
-    // non-nullable where the long format is nullable — parquet readers
-    // normalize both to optional, and the pre-r18 PER-BATCH writes were
-    // already non-nullable posexplodes against a nullable seed
-    assert(fastBands.schema.map(_.dataType) === slowBands.schema.map(_.dataType),
-      "band layout types must match the long-format route (int band)")
-    assert(rows(fastBands) === rows(slowBands))
-    assert(fastWh.columns.toSeq === slowWh.columns.toSeq)
-    assert(rows(fastWh.selectExpr("old_id", "cast(wh_old as string)")) ===
-      rows(slowWh.selectExpr("old_id", "cast(wh_old as string)")))
-    // verdict parity of the pre-signed probe against the classic one
-    val oddIn = docs.filter(col("doc_id") % 2 === 1)
-    val keptClassic = Dedup.dedupAgainstPreparedIndex(
-        oddIn, slowBands, slowWh, col("text"), col("doc_id"),
-        numHashes = 64, bands = 4, threshold = 0.95)
-      .collect().map(_.getLong(0)).toSet
-    val keptSigned = Dedup.dedupSignedAgainstPreparedIndex(
-        Dedup.signDocs(oddIn, col("text"), col("doc_id"),
-          numHashes = 64, bands = 4),
-        fastBands, fastWh, threshold = 0.95)
-      .collect().map(_.getLong(0)).toSet
-    assert(keptSigned === keptClassic)
+      df.selectExpr("doc_id", "cast(v as string)").collect().map(_.toString).toSet
+    def regrouped(kind: String) = table.filter(col("kind") === kind)
+      .groupBy(col("doc_id"))
+      .agg(transform(array_sort(collect_list(struct(col("idx"), col("value")))),
+        s => s.getField("value")).as("v"))
+    assert(rows(signed.select(col("doc_id"), col("wh").as("v"))) ===
+      rows(regrouped("wh")))
+    assert(rows(signed.select(col("doc_id"), col("mh_bands").as("v"))) ===
+      rows(regrouped("band")))
   }
 
   test("incremental dedup agrees with the symmetric pair dedup across the split") {
@@ -482,10 +465,11 @@ class DedupSpec extends SparkSpec {
     // pass must ALSO appear as a dropped id in some odd-even near-dup
     // pair of the full symmetric operator at the same threshold
     val oddIn = docs.filter(col("doc_id") % 2 === 1)
-    val evenIx = Dedup.signatureTable(
-      docs.filter(col("doc_id") % 2 === 0), col("text"), col("doc_id"))
-    val keptIncremental = Dedup.dedupAgainstSignatureIndex(
-        oddIn, evenIx, col("text"), col("doc_id"), threshold = 0.95)
+    val (evenBands, evenWh) = Dedup.preparedFromSigned(Dedup.signDocs(
+      docs.filter(col("doc_id") % 2 === 0), col("text"), col("doc_id")))
+    val keptIncremental = Dedup.dedupSignedAgainstPreparedIndex(
+        Dedup.signDocs(oddIn, col("text"), col("doc_id")),
+        evenBands, evenWh, threshold = 0.95)
       .collect().map(_.getLong(0)).toSet
     val crossPairs = Dedup.minhashNearDupPairs(
         docs, col("text"), col("doc_id"), numHashes = 64, bands = 4,

@@ -76,42 +76,20 @@ class PipelinesSpec extends SparkSpec {
 
   test("sync calls stay within their Spark-job budget: one publish pass, " +
     "no error re-count, a shuffle-free CSV write") {
-    val group = s"graft-sync-budget-${System.nanoTime()}"
-    val jobs = new java.util.concurrent.atomic.AtomicInteger()
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(
-          e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-        if (Option(e.properties).exists(
-            _.getProperty("spark.jobGroup.id") == group))
-          jobs.incrementAndGet()
-    }
     val tmp = java.nio.file.Files.createTempDirectory("graft-syncbudget").toString
-    def jobsOf(call: => Unit): Int = {
-      val sc = spark.sparkContext
-      org.apache.spark.GraftSparkBridge.drainListenerBus(sc)
-      jobs.set(0)
-      sc.setJobGroup(group, "sync job budget")
-      try call finally sc.clearJobGroup()
-      org.apache.spark.GraftSparkBridge.drainListenerBus(sc)
-      jobs.get()
-    }
-    spark.sparkContext.addSparkListener(listener)
-    val (customers, tickets, gate) =
-      try (
-        jobsOf(Pipelines.syncCustomers(Fixtures.customersDf(spark),
-          errorCsv = Some((tmp, "customers")))(post)),
-        jobsOf(Pipelines.syncTickets(
-          Fixtures.ticketsDf(spark), Fixtures.messagesDf(spark),
-          Fixtures.attachmentsDf(spark),
-          Fixtures.grooveMailboxesDf(spark), Fixtures.grooveAgentsDf(spark),
-          Fixtures.hsMailboxesDf(spark), Fixtures.hsUsersDf(spark),
-          Fixtures.hsCustomersDf(spark), Fixtures.existingConversationsDf(spark),
-          Fixtures.defaultMailboxEmail, SyncOptions(bypassValidation = true),
-          errorCsv = Some((tmp, "tickets")))(post)),
-        jobsOf(Validation.gate(
-          Fixtures.grooveMailboxesDf(spark), Fixtures.hsMailboxesDf(spark),
-          Fixtures.grooveAgentsDf(spark), Fixtures.hsUsersDf(spark))))
-      finally spark.sparkContext.removeSparkListener(listener)
+    val customers = jobsIn(Pipelines.syncCustomers(Fixtures.customersDf(spark),
+      errorCsv = Some((tmp, "customers")))(post))
+    val tickets = jobsIn(Pipelines.syncTickets(
+      Fixtures.ticketsDf(spark), Fixtures.messagesDf(spark),
+      Fixtures.attachmentsDf(spark),
+      Fixtures.grooveMailboxesDf(spark), Fixtures.grooveAgentsDf(spark),
+      Fixtures.hsMailboxesDf(spark), Fixtures.hsUsersDf(spark),
+      Fixtures.hsCustomersDf(spark), Fixtures.existingConversationsDf(spark),
+      Fixtures.defaultMailboxEmail, SyncOptions(bypassValidation = true),
+      errorCsv = Some((tmp, "tickets")))(post))
+    val gate = jobsIn(Validation.gate(
+      Fixtures.grooveMailboxesDf(spark), Fixtures.hsMailboxesDf(spark),
+      Fixtures.grooveAgentsDf(spark), Fixtures.hsUsersDf(spark)))
     // both calls had errors, so both wrote their CSV
     assert(new java.io.File(s"$tmp/sync-errors-customers").isDirectory)
     assert(new java.io.File(s"$tmp/sync-errors-tickets").isDirectory)

@@ -163,36 +163,20 @@ class StreamingSpec extends SparkSpec {
   test("streaming curation gate matches the batch gate + index-dedup composition") {
     // q130's operator: gate + sign + probe-the-persisted-index on a file
     // stream must keep exactly the docs the batch composition keeps
-    import graft.operators.Dedup
     import graft.streaming.DocumentStreams
     val docs = Tables(spark, sfDir).documents
-    val index = Dedup.signatureTable(
-      docs.filter(col("doc_id") % 10 === 0), col("text"), col("doc_id"),
-      numHashes = 64, bands = 4)
-    val streamed = DocumentStreams.curationGateToParquet(
-      spark, sfDir, index,
-      java.nio.file.Files.createTempDirectory("graft-spec-curation").toString)
+    val index = curationSeed()
+    val streamed = DocumentStreams.curationGateToParquetSigned(
+      spark, sfDir, index, tmpDir("curation"))
       .collect().map(r => (r.getLong(0), r.getString(1))).toSeq
     val gated = docs.filter(col("doc_id") % 10 =!= 0)
       .filter(DocumentStreams.qualityGate(col("text")))
-    val batch = Dedup.dedupAgainstSignatureIndex(
-        gated, index, col("text"), col("doc_id"),
-        numHashes = 64, bands = 4, threshold = 0.95)
+    val batch = keptAgainst(gated, index)
       .join(docs.select(col("doc_id"), col("lang")), Seq("doc_id"))
       .orderBy(col("doc_id"))
       .collect().map(r => (r.getLong(0), r.getString(1))).toSeq
     assert(streamed === batch)
     assert(streamed.nonEmpty, "fixture must keep at least one doc")
-    // the r18 signed-seed foreachBatch form must keep the identical
-    // survivor set (same algebra, signature computation shared + batch
-    // re-widened — the curationGateToParquetSigned scaladoc's parity pin)
-    val signedForm = DocumentStreams.curationGateToParquetSigned(
-      spark, sfDir,
-      Dedup.signDocs(docs.filter(col("doc_id") % 10 === 0),
-        col("text"), col("doc_id"), numHashes = 64, bands = 4),
-      java.nio.file.Files.createTempDirectory("graft-spec-curation-s").toString)
-      .collect().map(r => (r.getLong(0), r.getString(1))).toSeq
-    assert(signedForm === batch)
   }
 
   test("incremental curation: stream == sequential unroll; the growing index binds") {
@@ -202,13 +186,9 @@ class StreamingSpec extends SparkSpec {
     import graft.operators.Dedup
     import graft.streaming.DocumentStreams
     val docs = Tables(spark, sfDir).documents
-    val seedIdx = Dedup.signatureTable(
-      docs.filter(col("doc_id") % 10 === 0), col("text"), col("doc_id"),
-      numHashes = 64, bands = 4)
-    val streamed = DocumentStreams.incrementalCurationToParquet(
-        spark, sfDir, seedIdx,
-        java.nio.file.Files.createTempDirectory("graft-spec-inc-out").toString,
-        java.nio.file.Files.createTempDirectory("graft-spec-inc-idx").toString,
+    val seedIdx = curationSeed()
+    val streamed = DocumentStreams.incrementalCurationToParquetSigned(
+        spark, sfDir, seedIdx, tmpDir("inc-out"), tmpDir("inc-idx"),
         batchFiles = 3)
       .collect().map(r => (r.getLong(0), r.getString(1))).toSeq
     val gatedAll = docs.filter(col("doc_id") % 10 =!= 0)
@@ -217,23 +197,18 @@ class StreamingSpec extends SparkSpec {
     var unrolled = Seq.empty[(Long, String)]
     for (b <- 0 until 3) {
       val gb = gatedAll.filter(pmod(col("doc_id"), lit(3)) === b)
-      val sIds = Dedup.dedupAgainstSignatureIndex(
-        gb, idx, col("text"), col("doc_id"),
-        numHashes = 64, bands = 4, threshold = 0.95)
       val kept = gb.withColumn("doc_id", col("doc_id").cast("long"))
-        .join(sIds, Seq("doc_id")).localCheckpoint(true)
+        .join(keptAgainst(gb, idx), Seq("doc_id")).localCheckpoint(true)
       unrolled ++= kept.select(col("doc_id"), col("lang"))
         .collect().map(r => (r.getLong(0), r.getString(1)))
-      idx = idx.unionByName(Dedup.signatureTable(
+      idx = idx.unionByName(Dedup.signDocs(
         kept, col("text"), col("doc_id"), numHashes = 64, bands = 4))
         .localCheckpoint(true)
     }
     assert(streamed.sorted === unrolled.sorted)
     // the maintenance semantics must BIND on the fixture: dedup against
     // the seed alone keeps strictly more docs than the growing index
-    val seedOnly = Dedup.dedupAgainstSignatureIndex(
-      gatedAll, seedIdx, col("text"), col("doc_id"),
-      numHashes = 64, bands = 4, threshold = 0.95).count()
+    val seedOnly = keptAgainst(gatedAll, seedIdx).count()
     assert(seedOnly > streamed.size.toLong,
       "fixture must contain cross-batch near-dups for q142 to exercise")
   }
@@ -242,18 +217,12 @@ class StreamingSpec extends SparkSpec {
     // per-batch appends grow the index listing O(batches); compaction must
     // rewrite bands/+wh/ into a bounded file count WITHOUT changing the
     // survivor cascade (a batch still never sees its own signatures)
-    import graft.operators.Dedup
     import graft.streaming.DocumentStreams
-    val docs = Tables(spark, sfDir).documents
-    val seedIdx = Dedup.signatureTable(
-      docs.filter(col("doc_id") % 10 === 0), col("text"), col("doc_id"),
-      numHashes = 64, bands = 4)
+    val seedIdx = curationSeed()
     def run(compactEvery: Int): (Seq[(Long, String)], Int) = {
-      val idxPath = java.nio.file.Files
-        .createTempDirectory(s"graft-spec-compact-$compactEvery").toString
-      val surv = DocumentStreams.incrementalCurationToParquet(
-          spark, sfDir, seedIdx,
-          java.nio.file.Files.createTempDirectory("graft-spec-compact-out").toString,
+      val idxPath = tmpDir(s"compact-$compactEvery")
+      val surv = DocumentStreams.incrementalCurationToParquetSigned(
+          spark, sfDir, seedIdx, tmpDir("compact-out"),
           idxPath, batchFiles = 3, compactEvery = compactEvery)
         .collect().map(r => (r.getLong(0), r.getString(1))).toSeq.sorted
       // token dirs under bands/ — count parquet files across all of them
@@ -281,12 +250,9 @@ class StreamingSpec extends SparkSpec {
     // (2) replaying the batch commits it exactly once; (3) replaying an
     // already-committed batch (crash after swap, before the streaming
     // checkpoint) is a skip, not a double-commit.
-    import graft.operators.Dedup
     import graft.streaming.DocumentStreams
     val docs = Tables(spark, sfDir).documents
-    val seedIdx = Dedup.signatureTable(
-      docs.filter(col("doc_id") % 10 === 0), col("text"), col("doc_id"),
-      numHashes = 64, bands = 4)
+    val seedIdx = curationSeed()
     val idxPath = java.nio.file.Files
       .createTempDirectory("graft-spec-crash-idx").toString
     val outPath = java.nio.file.Files
@@ -313,10 +279,8 @@ class StreamingSpec extends SparkSpec {
       outPath, numHashes = 64, bands = 4, threshold = 0.95)
     val afterReplay = survivors()
     assert(afterReplay.nonEmpty, "fixture batch must keep at least one doc")
-    val expected = Dedup.dedupAgainstSignatureIndex(
-        batch0.filter(DocumentStreams.qualityGate(col("text"))),
-        seedIdx, col("text"), col("doc_id"),
-        numHashes = 64, bands = 4, threshold = 0.95)
+    val expected = keptAgainst(
+        batch0.filter(DocumentStreams.qualityGate(col("text"))), seedIdx)
       .join(docs.select(col("doc_id"), col("lang")), Seq("doc_id"))
       .collect().map(r => (r.getLong(0), r.getString(1))).toSeq.sorted
     assert(afterReplay === expected,
@@ -335,13 +299,10 @@ class StreamingSpec extends SparkSpec {
     // the q206 crash matrix applied to the TWO-store lifecycle
     // (DocumentStreams.processKeyedDedupBatch): keyed ledger commits
     // first, index manifest second — drive each window directly.
-    import graft.operators.Dedup
     import graft.streaming.DocumentStreams
     import graft.sources.v2.{KeyedJsonStream => KJS}
     val docs = Tables(spark, sfDir).documents
-    val seedIdx = Dedup.signatureTable(
-      docs.filter(col("doc_id") % 10 === 0), col("text"), col("doc_id"),
-      numHashes = 64, bands = 4)
+    val seedIdx = curationSeed()
     val idxPath = java.nio.file.Files
       .createTempDirectory("graft-spec-kcrash-idx").toString
     val outPath = java.nio.file.Files
@@ -417,13 +378,10 @@ class StreamingSpec extends SparkSpec {
     // manifest atomicity as batch commits — graded here by building two
     // identical stores, compacting one, and requiring batch 2's
     // survivors to be IDENTICAL against both index states.
-    import graft.operators.Dedup
     import graft.streaming.DocumentStreams
     import graft.sources.v2.{KeyedJsonStream => KJS}
     val docs = Tables(spark, sfDir).documents
-    val seedIdx = Dedup.signatureTable(
-      docs.filter(col("doc_id") % 10 === 0), col("text"), col("doc_id"),
-      numHashes = 64, bands = 4)
+    val seedIdx = curationSeed()
     val crawl = docs.filter(col("doc_id") % 10 =!= 0)
     def batch(b: Int) = crawl.filter(pmod(col("doc_id"), lit(3)) === b)
     val outSchema = org.apache.spark.sql.types.StructType(Seq(
@@ -504,9 +462,21 @@ class StreamingSpec extends SparkSpec {
   // --- the fused compaction commit: fixtures shared by the tests below ---
   private def curationSeed() = {
     val docs = Tables(spark, sfDir).documents
-    graft.operators.Dedup.signatureTable(
+    graft.operators.Dedup.signDocs(
       docs.filter(col("doc_id") % 10 === 0), col("text"), col("doc_id"),
       numHashes = 64, bands = 4)
+  }
+  /** The batch reference verdict: the ids of `docs` that no doc of the
+    * signed `index` confirms as a near-dup. */
+  private def keptAgainst(
+      docs: org.apache.spark.sql.DataFrame,
+      index: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame = {
+    import graft.operators.Dedup
+    val (exBands, exWh) = Dedup.preparedFromSigned(index)
+    Dedup.dedupSignedAgainstPreparedIndex(
+      Dedup.signDocs(docs, col("text"), col("doc_id"),
+        numHashes = 64, bands = 4),
+      exBands, exWh, threshold = 0.95)
   }
   private def crawlBatch(b: Int) = Tables(spark, sfDir).documents
     .filter(col("doc_id") % 10 =!= 0)
@@ -529,7 +499,7 @@ class StreamingSpec extends SparkSpec {
       .collect().map(_.getLong(0)).toSeq.sorted
 
   test("dedup store: the declared base schemas match what every writer " +
-    "produces (long-format seed, signed seed, batch and compact tokens)") {
+    "produces (seed, batch and compact tokens)") {
     // every store read goes through DocumentStreams' declared schemas; a
     // writer whose layout drifts would otherwise read back null columns
     import graft.streaming.DocumentStreams
@@ -552,14 +522,6 @@ class StreamingSpec extends SparkSpec {
     DocumentStreams.processCurationBatch(spark, crawlBatch(1), 1L, idx, out,
       numHashes = 64, bands = 4, threshold = 0.95, compactEvery = 2)
     check(idx, out, "compact00001")
-    val sIdx = tmpDir("schema-sidx")
-    val sOut = tmpDir("schema-sout")
-    val docs = Tables(spark, sfDir).documents
-    DocumentStreams.initCurationStoreSigned(spark,
-      graft.operators.Dedup.signDocs(docs.filter(col("doc_id") % 10 === 0),
-        col("text"), col("doc_id"), numHashes = 64, bands = 4),
-      sIdx, sOut)
-    check(sIdx, sOut, "seed")
   }
 
   test("incremental curation: a compaction-due trigger commits once — a " +
@@ -663,34 +625,15 @@ class StreamingSpec extends SparkSpec {
   test("incremental curation: a trigger's Spark-job budget, with and " +
     "without compaction (no schema inference, no second commit pass)") {
     import graft.streaming.DocumentStreams
-    val group = s"graft-job-budget-${System.nanoTime()}"
-    val jobs = new java.util.concurrent.atomic.AtomicInteger()
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(
-          e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-        if (Option(e.properties).exists(
-            _.getProperty("spark.jobGroup.id") == group))
-          jobs.incrementAndGet()
-    }
     val idx = tmpDir("budget-idx")
     val out = tmpDir("budget-out")
     DocumentStreams.initCurationStore(spark, curationSeed(), idx, out)
-    def jobsOf(b: Int, compactEvery: Int): Int = {
-      val sc = spark.sparkContext
-      org.apache.spark.GraftSparkBridge.drainListenerBus(sc)
-      jobs.set(0)
-      sc.setJobGroup(group, "trigger job budget")
-      try DocumentStreams.processCurationBatch(spark, crawlBatch(b),
+    def jobsOf(b: Int, compactEvery: Int): Int =
+      jobsIn(DocumentStreams.processCurationBatch(spark, crawlBatch(b),
         b.toLong, idx, out, numHashes = 64, bands = 4, threshold = 0.95,
-        compactEvery = compactEvery)
-      finally sc.clearJobGroup()
-      org.apache.spark.GraftSparkBridge.drainListenerBus(sc)
-      jobs.get()
-    }
-    spark.sparkContext.addSparkListener(listener)
-    val (plain, compacting) =
-      try (jobsOf(0, compactEvery = 0), jobsOf(1, compactEvery = 1))
-      finally spark.sparkContext.removeSparkListener(listener)
+        compactEvery = compactEvery))
+    val plain = jobsOf(0, compactEvery = 0)
+    val compacting = jobsOf(1, compactEvery = 1)
     assert(DocumentStreams.readCommits(spark, idx).entries ===
       Seq("compact00001"))
     info(s"Spark jobs per trigger: plain $plain, compacting $compacting")
@@ -698,6 +641,33 @@ class StreamingSpec extends SparkSpec {
     // store read or a second commit pass would add jobs
     assert(plain <= 14, s"plain trigger ran $plain jobs")
     assert(compacting <= 14, s"compacting trigger ran $compacting jobs")
+  }
+
+  test("dedup store: the seed and every trigger of both lifecycles release " +
+    "the checkpoints they create") {
+    import graft.streaming.DocumentStreams
+    val sc = spark.sparkContext
+    def persisted(): Seq[Int] = sc.getPersistentRDDs.keys.toSeq.sorted
+    val before = (persisted() :+ -1).max
+    val (idx, out) = (tmpDir("release-idx"), tmpDir("release-out"))
+    DocumentStreams.initCurationStore(spark, curationSeed(), idx, out)
+    DocumentStreams.processCurationBatch(spark, crawlBatch(0), 0L, idx, out,
+      numHashes = 64, bands = 4, threshold = 0.95)
+    DocumentStreams.processCurationBatch(spark, crawlBatch(1), 1L, idx, out,
+      numHashes = 64, bands = 4, threshold = 0.95, compactEvery = 2)
+    assert(DocumentStreams.readCommits(spark, idx).entries ===
+      Seq("compact00001"), "the second trigger must have compacted")
+    val (kIdx, kOut) = (tmpDir("release-kidx"), tmpDir("release-kout"))
+    DocumentStreams.initCurationStore(spark, curationSeed(), kIdx, kOut,
+      seedSurvivors = false)
+    DocumentStreams.processKeyedDedupBatch(spark, crawlBatch(0), 0L,
+      kIdx, kOut, shards = 8, numHashes = 64, bands = 4, threshold = 0.95)
+    // a release unpersists asynchronously: poll to a deadline
+    val deadline = System.nanoTime() + 10L * 1000 * 1000 * 1000
+    while (persisted().exists(_ > before) && System.nanoTime() < deadline)
+      Thread.sleep(100)
+    assert(persisted().filter(_ > before) === Seq.empty,
+      "RDDs the store calls persisted are still held")
   }
 
   test("keyed survivor store: generation compaction swaps atomically — a " +
@@ -708,13 +678,10 @@ class StreamingSpec extends SparkSpec {
     // shard's committed batch files into one generation file; the ONLY
     // visibility flip is the `_gen` manifest rename, and the `_batches`
     // ledger is carried untouched as the replay authority.
-    import graft.operators.Dedup
     import graft.streaming.DocumentStreams
     import graft.sources.v2.{KeyedJson, KeyedJsonStream => KJS}
     val docs = Tables(spark, sfDir).documents
-    val seedIdx = Dedup.signatureTable(
-      docs.filter(col("doc_id") % 10 === 0), col("text"), col("doc_id"),
-      numHashes = 64, bands = 4)
+    val seedIdx = curationSeed()
     val crawl = docs.filter(col("doc_id") % 10 =!= 0)
     def batch(b: Int) = crawl.filter(pmod(col("doc_id"), lit(3)) === b)
     val outSchema = org.apache.spark.sql.types.StructType(Seq(

@@ -153,11 +153,12 @@ object TextScaleProbe {
           graft.operators.Multimodal.ingestFromDocuments(big)))
     }
     time("incremental_dedup") {
-      Dedup.dedupAgainstSignatureIndex(
-        big.filter(col("doc_id") % 2 === 1),
-        Dedup.signatureTable(big.filter(col("doc_id") % 2 === 0),
+      val (exBands, exWh) = Dedup.preparedFromSigned(Dedup.signDocs(
+        big.filter(col("doc_id") % 2 === 0), col("text"), col("doc_id")))
+      Dedup.dedupSignedAgainstPreparedIndex(
+        Dedup.signDocs(big.filter(col("doc_id") % 2 === 1),
           col("text"), col("doc_id")),
-        col("text"), col("doc_id"))
+        exBands, exWh)
     }
     spark.stop()
   }
