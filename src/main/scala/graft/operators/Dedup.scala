@@ -679,8 +679,9 @@ object Dedup {
     * as one frame (doc_id, carry..., wh, mh_bands). A caller that
     * localCheckpoints THIS frame pays the per-row signature cost
     * (tokenize→hash→minhash) exactly once and every consumer
-    * ([[dedupSignedAgainstPreparedIndex]], the band/wh index writes, the
-    * survivor write) reads materialized arrays. Expressions are verbatim
+    * ([[dedupSignedAgainstIndex]] on either side, the curation store's
+    * one write) reads materialized arrays. The frame is also the
+    * streaming curation store's row layout. Expressions are verbatim
     * [[signatureTable]] algebra, so `wh` and `mh_bands` are bit-identical
     * to its 'wh' and 'band' rows (DedupSpec pins the equality). */
   def signDocs(docs: DataFrame, textCol: Column, idCol: Column,
@@ -697,48 +698,41 @@ object Dedup {
         lshBandHashes(minhashFromHashes(col("wh"), numHashes), bands, rows))
   }
 
-  /** [[signDocs]]' frame reshaped to the PROBE-READY index layout
-    * [[dedupSignedAgainstPreparedIndex]] consumes — (old_id, band, bh)
-    * rows plus one (old_id, wh_old) array row per doc, the layout the
-    * streaming curation store persists. Both frames are lazy projections
-    * of `signed`: checkpoint `signed` first and the two store writes
-    * share one signature computation, with no index-shaped shuffle. */
-  def preparedFromSigned(signed: DataFrame): (DataFrame, DataFrame) = {
-    val exBands = signed.select(col("doc_id").as("old_id"),
-      posexplode(col("mh_bands")).as(Seq("band", "bh")))
-    val exWh = signed.select(col("doc_id").as("old_id"),
-      col("wh").as("wh_old"))
-    (exBands, exWh)
-  }
-
-  /** Incremental near-dup dedup: the ids of an INCOMING batch, signed by
-    * [[signDocs]], that no doc of an EXISTING corpus's prepared index
-    * ([[preparedFromSigned]]) confirms as a near-dup — the shape a
+  /** Incremental near-dup dedup: the rows of an INCOMING batch, signed
+    * by [[signDocs]], that no doc of an EXISTING corpus's signed `index`
+    * (any frame with [[signDocs]]' `wh` and `mh_bands` columns, such as
+    * the streaming curation store) confirms as a near-dup — the shape a
     * continuously-crawling 100 TB pipeline actually runs: the existing
-    * corpus is NEVER re-read or re-hashed; the batch's banded LSH
-    * candidates are probed against the stored band rows and
-    * exact-jaccard-verified against the stored word-hash arrays. Both
-    * sides must be signed with the SAME (numHashes, bands) — parameter
-    * drift would silently probe wrong bands. The signature computation
-    * is lifted to the caller so the probe, the index append and the
-    * survivor write share one pass. Within-batch duplicates are
+    * corpus is NEVER re-read as text or re-hashed. Both sides must be
+    * signed with the SAME (numHashes, bands) — parameter drift would
+    * silently probe wrong bands. Within-batch duplicates are
     * [[minhashDedupSurvivors]]' job — this operator answers only "is it
-    * already in the corpus". */
-  def dedupSignedAgainstPreparedIndex(
-      signed: DataFrame, exBands: DataFrame, exWh: DataFrame,
+    * already in the corpus".
+    *
+    * One pass, no shuffle: the batch's posexploded bands, carrying each
+    * doc's word hashes, are broadcast against the index's posexploded
+    * bands, and the exact-Jaccard confirm runs in that same stage, so the
+    * index is only ever the streamed side. The confirmed ids are then the
+    * broadcast build side of a left-anti join over `signed`, so the
+    * result is `signed`'s own rows and no signed row crosses a shuffle.
+    * The ids are broadcast undeduped: they hold at most bands × batch
+    * rows × the largest near-dup cluster a batch doc hits in the index.
+    * `signed` is read twice (the band broadcast and the anti join's
+    * streamed side): checkpoint it so the signing runs once. */
+  def dedupSignedAgainstIndex(
+      signed: DataFrame, index: DataFrame,
       threshold: Double = 0.95): DataFrame = {
-    val newSigs = signed.select(
-      col("doc_id").as("new_id"), col("wh").as("wh_new"))
     val newBands = signed.select(col("doc_id").as("new_id"),
+      col("wh").as("wh_new"),
       posexplode(col("mh_bands")).as(Seq("band", "bh")))
-    val dropped = newBands.join(exBands, Seq("band", "bh"))
-      .select(col("new_id"), col("old_id")).distinct()
-      .join(newSigs, Seq("new_id"))
-      .join(exWh, Seq("old_id"))
+    val confirmed = index
+      .select(col("wh").as("wh_old"),
+        posexplode(col("mh_bands")).as(Seq("band", "bh")))
+      .join(broadcast(newBands), Seq("band", "bh"))
       .filter(round(graft.plans.NativeExprs.jaccardSorted(
         col("wh_new"), col("wh_old")), 4) >= threshold)
-      .select(col("new_id").as("doc_id")).distinct()
-    signed.select(col("doc_id")).join(dropped, Seq("doc_id"), "left_anti")
+      .select(col("new_id").as("doc_id"))
+    signed.join(broadcast(confirmed), Seq("doc_id"), "left_anti")
   }
 
   /** Exact duplicate-SPAN detection — substring-level dedup in the style

@@ -2039,7 +2039,7 @@ object TextQueries extends QueryPack {
       ORDER BY d.doc_id"""))
 
   /** Incremental dedup against the persisted signature index
-    * (operators.Dedup.dedupSignedAgainstPreparedIndex): odd doc_ids play the
+    * (operators.Dedup.dedupSignedAgainstIndex): odd doc_ids play the
     * incoming crawl batch, even doc_ids the already-indexed corpus.
     * FULL ORACLE via the q77 fixture: because the operator's map-only
     * signing of the incoming side is the SAME expression q77 ran over
@@ -2050,19 +2050,17 @@ object TextQueries extends QueryPack {
     "q100_incremental_dedup",
     (s, dir) => {
       val docs = Tables(s, dir).documents
-      // each side signs once into an eager checkpoint: lazy subtrees are
-      // not shared across a plan, so the probe's band side and its
-      // word-hash join-back would otherwise each re-sign the batch
       val signedIdx = Dedup.signDocs(
         docs.filter(col("doc_id") % 2 === 0), col("text"), col("doc_id"),
-        numHashes = 64, bands = 4).localCheckpoint(true)
-      val (exBands, exWh) = Dedup.preparedFromSigned(signedIdx)
+        numHashes = 64, bands = 4)
+      // the incoming side signs once into an eager checkpoint: the probe
+      // reads it twice (its band broadcast and the anti join), and lazy
+      // subtrees are not shared across a plan
       val signedIn = Dedup.signDocs(
         docs.filter(col("doc_id") % 2 === 1), col("text"), col("doc_id"),
         numHashes = 64, bands = 4).localCheckpoint(true)
-      Dedup.dedupSignedAgainstPreparedIndex(
-          signedIn, exBands, exWh, threshold = 0.95)
-        .orderBy(col("doc_id"))
+      Dedup.dedupSignedAgainstIndex(signedIn, signedIdx, threshold = 0.95)
+        .select(col("doc_id")).orderBy(col("doc_id"))
     },
     Some("""WITH raw AS (SELECT doc_id, kind, idx, value
         FROM read_parquet('__VERIFY_OUT__/q77_signature_table/*.parquet')),
@@ -2556,7 +2554,7 @@ object TextQueries extends QueryPack {
     * sorted-word-hash jaccard ≥ 0.95) gated by the q92 Gopher fixture —
     * so the streaming row is hash-verified end-to-end, and StreamingSpec
     * additionally pins batch parity against the same gate +
-    * dedupSignedAgainstPreparedIndex composition. */
+    * dedupSignedAgainstIndex composition. */
   private val q130 = Q(
     "q130_stream_curation_gate",
     (s, dir) => {

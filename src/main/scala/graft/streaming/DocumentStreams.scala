@@ -25,18 +25,19 @@ object DocumentStreams {
     StructField("lang", StringType), StructField("source", StringType),
     StructField("n_chars", LongType)))
 
-  /** Declared layouts of the dedup store's three bases. Every store read
-    * goes through these: a schema-less parquet read launches one
+  /** Declared layout of the dedup store's one table:
+    * [[graft.operators.Dedup.signDocs]]' columns (doc_id, lang, wh,
+    * mh_bands) plus `curated`, false for seed rows. Every store read
+    * goes through it: a schema-less parquet read launches one
     * footer-reading inference job per call, which a micro-batch would
-    * pay on every probe and every compaction. StreamingSpec pins them
+    * pay on every probe and every compaction. StreamingSpec pins it
     * against what the writers produce. */
-  private[graft] val bandsSchema: StructType = StructType(Seq(
-    StructField("old_id", LongType), StructField("band", IntegerType),
-    StructField("bh", LongType)))
-  private[graft] val whSchema: StructType = StructType(Seq(
-    StructField("old_id", LongType),
-    StructField("wh_old", ArrayType(LongType))))
-  private[graft] val survivorSchema: StructType = StructType(Seq(
+  private[graft] val storeSchema: StructType = StructType(Seq(
+    StructField("doc_id", LongType), StructField("lang", StringType),
+    StructField("wh", ArrayType(LongType)),
+    StructField("mh_bands", ArrayType(LongType)),
+    StructField("curated", BooleanType)))
+  private val survivorSchema: StructType = StructType(Seq(
     StructField("doc_id", LongType), StructField("lang", StringType)))
 
   /** Empty survivor frame. Seeding a sink with it makes the sink a
@@ -54,14 +55,6 @@ object DocumentStreams {
       .option("pathGlobFilter", "documents.parquet")
       .parquet(dir)
 
-  private def withStreamingShufflePartitions[T](
-      spark: SparkSession, n: Int)(f: => T): T = {
-    val key = "spark.sql.shuffle.partitions"
-    val prior = spark.conf.get(key)
-    spark.conf.set(key, n.toString)
-    try f finally spark.conf.set(key, prior)
-  }
-
   /** The q125 quality gate as a reusable predicate (Gopher-style
     * thresholds). */
   def qualityGate(textCol: Column): Column = {
@@ -76,9 +69,9 @@ object DocumentStreams {
     *
     * Stream plan — each piece chosen for what streaming can actually
     * incrementalize:
-    *   - the static index is checkpointed ONCE before the stream starts
-    *     and projected into the probe layout; the checkpoint's exact size
-    *     stats let Catalyst broadcast it while it fits;
+    *   - the static index is checkpointed ONCE before the stream starts,
+    *     so no batch re-signs it; each probe streams it past the batch's
+    *     broadcast bands;
     *   - inside foreachBatch each batch is quality-gated and signed (the
     *     SAME expressions the index was signed with) after the
     *     conditional re-widen (the q184 rule: a file-delivered batch
@@ -94,7 +87,7 @@ object DocumentStreams {
     *     storage: the shape that survives a corpus-cardinality stream.
     * Output: surviving (doc_id, lang) read back from `outPath` —
     * batch-parity-pinned in StreamingSpec against the same gate +
-    * [[graft.operators.Dedup.dedupSignedAgainstPreparedIndex]]
+    * [[graft.operators.Dedup.dedupSignedAgainstIndex]]
     * composition, and hash-verified end-to-end by q130's oracle over the
     * q77/q92 fixtures.
     *
@@ -113,9 +106,8 @@ object DocumentStreams {
     require(rows * bands == numHashes, "bands must divide numHashes")
     val (seed, releaseSeed) = graft.Checkpoints.owned(indexSigned)
     try {
-      val (exBands, exWh) = graft.operators.Dedup.preparedFromSigned(seed)
       emptySurvivors(spark).write.mode("overwrite").parquet(outPath)
-      withStreamingShufflePartitions(spark, conf.shufflePartitions) {
+      EventStreams.withStreamingShufflePartitions(spark, conf.shufflePartitions) {
         val q = readDocumentStream(spark, dir)
           .filter(col("doc_id") % 10 =!= 0)
           .writeStream
@@ -125,13 +117,11 @@ object DocumentStreams {
               graft.operators.Dedup.signDocs(
                 gated, col("text"), col("doc_id"), carry = Seq(col("lang")),
                 numHashes = numHashes, bands = bands))
-            try {
-              graft.operators.Dedup.dedupSignedAgainstPreparedIndex(
-                  signed, exBands, exWh, threshold)
-                .join(signed.select(col("doc_id"), col("lang")),
-                  Seq("doc_id"))
-                .write.mode("append").parquet(outPath)
-            } finally release()
+            try graft.operators.Dedup.dedupSignedAgainstIndex(
+                signed, seed, threshold)
+              .select(col("doc_id"), col("lang"))
+              .write.mode("append").parquet(outPath)
+            finally release()
           }
           .options(conf.options)
           .trigger(Trigger.AvailableNow())
@@ -150,22 +140,26 @@ object DocumentStreams {
 
   /** MANIFEST COMMIT PROTOCOL for the streaming curation store (the
     * production-strength fix the r9/r10 scaladoc promised): the store is
-    * three parquet bases — `indexPath/bands`, `indexPath/wh` (the
-    * signature index) and `outPath` (the curated corpus) — each holding
-    * batch-token SUBDIRECTORIES (`seed`, `batch00001`, `compact00002`,
-    * …). Which tokens are LIVE is decided solely by one manifest file
-    * (`indexPath/_commits`, leading underscore so parquet listings skip
-    * it), swapped atomically via FileContext.rename(OVERWRITE) — atomic
-    * on HDFS and on POSIX local paths. Readers resolve the manifest to
-    * concrete paths; a token dir not in the manifest does not exist as
-    * far as the store is concerned.
+    * ONE parquet table in [[storeSchema]] — every signed doc, seed rows
+    * and curated rows told apart by the `curated` flag — so the signature
+    * index and the curated corpus are one set of rows. Its base is
+    * `outPath` when the table also serves the curated corpus, or
+    * `indexPath` when a keyed store holds the survivors ([[tableBase]]).
+    * The base holds batch-token SUBDIRECTORIES (`seed`, `batch00001`,
+    * `compact00002`, …), each written once. Which tokens are LIVE is
+    * decided solely by one manifest file (`indexPath/_commits`, leading
+    * underscore so parquet listings skip it), swapped atomically via
+    * FileContext.rename(OVERWRITE) — atomic on HDFS and on POSIX local
+    * paths. Readers resolve the manifest to concrete paths; a token dir
+    * not in the manifest does not exist as far as the store is
+    * concerned.
     *
     * Crash matrix — ONE commit point per trigger, the swap, whether the
     * trigger appends a batch token or compacts (replacing the r10
     * "non-transactional 3-append window", whose failure mode was
     * under-inclusion of a batch, and the in-place compaction rewrite,
     * whose failure mode was TOTAL index loss):
-    *   - crash before the swap → every dir the trigger wrote (its
+    *   - crash before the swap → the one dir the trigger wrote (its
     *     `batchNNNNN` token, or on a compaction-due trigger its
     *     `compactNNNNN` token) is an orphan; the replay recomputes
     *     against the unchanged manifest view and mode("overwrite")
@@ -233,89 +227,86 @@ object DocumentStreams {
       .rename(tmp, p, org.apache.hadoop.fs.Options.Rename.OVERWRITE)
   }
 
+  /** The table's base dir: `outPath` when the table is also the parquet
+    * survivor store, else `indexPath` (the keyed lifecycle, whose
+    * survivors live in the `graft-keyed` layout at `outPath`). */
+  private def tableBase(
+      indexPath: String, outPath: String, parquetSurvivors: Boolean): String =
+    if (parquetSurvivors) outPath else indexPath
+
+  /** `signed` rows in [[storeSchema]], flagged `curated`. Seed rows store
+    * a null `lang`: only curated rows are read back as the corpus, and a
+    * seed frame need not carry one. */
+  private def storeRows(signed: DataFrame, curated: Boolean): DataFrame =
+    signed.select(col("doc_id"),
+      (if (curated) col("lang") else lit(null).cast(StringType)).as("lang"),
+      col("wh"), col("mh_bands"), lit(curated).as("curated"))
+
   /** Seed the curation store from a [[graft.operators.Dedup.signDocs]]
-    * frame: the probe-ready layout (band rows + word-hash arrays) under
-    * token `seed` in both index bases, an empty (schema-bearing) survivor
-    * dir (skipped when the survivor store is NOT manifest-resolved
-    * parquet — the keyed-connector variant owns its own layout), and the
-    * initial manifest. The signed frame is checkpointed once, so both
-    * index writes are projections of one signing pass with no
-    * index-shaped shuffle. */
+    * frame: its rows, flagged not curated, as the table's `seed` token
+    * (under `outPath`, or under `indexPath` when `seedSurvivors` is false
+    * because the keyed-connector variant owns the survivor layout), then
+    * the initial manifest. One write. */
   private[graft] def initCurationStore(
       spark: SparkSession, seedSigned: DataFrame,
       indexPath: String, outPath: String,
       seedSurvivors: Boolean = true): Unit = {
+    // coalesce(1): the per-batch token convention applied to the seed, so
+    // later micro-batches do not re-list and re-open one seed file per
+    // partition. The eager checkpoint keeps the signing wide: without it
+    // the coalesce would pull a re-widened signing into one task.
     val (seed, release) = graft.Checkpoints.owned(seedSigned)
     try {
-      val (seedBands, seedWh) = graft.operators.Dedup.preparedFromSigned(seed)
-      // coalesce(1): the per-batch token convention applied to the seed.
-      // The signing ran wide in the eager checkpoint above; uncoalesced,
-      // a re-widened seed lands one file PER PARTITION and every later
-      // micro-batch re-lists and re-opens the whole seed store. Safe
-      // because the inputs are materialized arrays: a coalesce(1) never
-      // reaches the signing itself.
-      seedBands.coalesce(1).write.mode("overwrite").parquet(s"$indexPath/bands/seed")
-      seedWh.coalesce(1).write.mode("overwrite").parquet(s"$indexPath/wh/seed")
-      if (seedSurvivors)
-        emptySurvivors(spark).write.mode("overwrite").parquet(s"$outPath/seed")
+      storeRows(seed, curated = false).coalesce(1).write.mode("overwrite")
+        .parquet(s"${tableBase(indexPath, outPath, seedSurvivors)}/seed")
       commitCommits(spark, indexPath, CommitState(Seq("seed"), -1L))
     } finally release()
   }
 
-  /** A base's committed rows: the manifest's entries, read by the base's
-    * declared schema. */
-  private def readBase(spark: SparkSession, schema: StructType,
-      base: String, entries: Seq[String]): DataFrame =
-    spark.read.schema(schema).parquet(entries.map(e => s"$base/$e"): _*)
+  /** The table's committed rows: the manifest's entries under `base`. */
+  private def readTable(
+      spark: SparkSession, base: String, entries: Seq[String]): DataFrame =
+    spark.read.schema(storeSchema).parquet(entries.map(e => s"$base/$e"): _*)
 
   /** Read the curated corpus as committed by the manifest. */
   private[graft] def readCurated(
       spark: SparkSession, indexPath: String, outPath: String): DataFrame =
-    readBase(spark, survivorSchema, outPath,
-      readCommits(spark, indexPath).entries)
+    readTable(spark, outPath, readCommits(spark, indexPath).entries)
+      .filter(col("curated")).select(col("doc_id"), col("lang"))
 
   private def compactionDue(batchId: Long, compactEvery: Int): Boolean =
     compactEvery > 0 && (batchId + 1) % compactEvery == 0
 
-  /** Sign a micro-batch ONCE and dedup it against the index as of
-    * `st` (the manifest view — the batch's own rows are not in it, so a
-    * doc never meets its own signatures). The eager `signed` checkpoint
-    * is the one frame the probe's band side, its word-hash join-back and
-    * the store writes all read, so tokenize→hash→minhash runs once per
-    * batch; signDocs re-widens a file-thin batch first (the q184 rule).
-    * Returns the kept docs as signed rows (doc_id, lang, wh, mh_bands),
-    * eagerly checkpointed, and their release — the caller runs it. */
+  /** Sign a micro-batch ONCE and dedup it against the table under
+    * `base` as of `st` (the manifest view — the batch's own rows are not
+    * in it, so a doc never meets its own signatures). Returns the kept
+    * docs as signed rows (doc_id, lang, wh, mh_bands), lazily over the
+    * eager `signed` checkpoint that both sides of the probe read, and
+    * that checkpoint's release — the caller runs it after its last
+    * action over the kept rows. signDocs re-widens a file-thin batch
+    * first (the q184 rule). */
   private def signAndProbe(
-      spark: SparkSession, st: CommitState, indexPath: String,
+      spark: SparkSession, st: CommitState, base: String,
       docs: DataFrame, numHashes: Int, bands: Int,
       threshold: Double): (DataFrame, () => Unit) = {
-    val exBands = readBase(spark, bandsSchema, s"$indexPath/bands", st.entries)
-    val exWh = readBase(spark, whSchema, s"$indexPath/wh", st.entries)
     val (signed, release) = graft.Checkpoints.owned(graft.operators.Dedup.signDocs(
       docs, col("text"), col("doc_id"), carry = Seq(col("lang")),
       numHashes = numHashes, bands = bands))
-    // the join-back attaches lang/wh/mh_bands to the survivor ids so the
-    // store writes re-read THIS checkpoint; once it is materialized the
-    // lineage no longer reaches `signed`
-    try graft.Checkpoints.owned(
-      graft.operators.Dedup.dedupSignedAgainstPreparedIndex(
-          signed, exBands, exWh, threshold)
-        .join(signed, Seq("doc_id")))
-    finally release()
+    (graft.operators.Dedup.dedupSignedAgainstIndex(
+      signed, readTable(spark, base, st.entries), threshold), release)
   }
 
-  /** The store's one write path, behind the trigger's one commit point.
-    * Each base (`index/bands`, `index/wh`, and with `includeSurvivors`
-    * the survivor base) is written ONCE under a fresh token: a plain
-    * trigger writes its `kept` projection as one-file `batchNNNNN`
+  /** The store's one write path, behind the trigger's one commit point:
+    * the table is written ONCE under a fresh token. A plain trigger
+    * writes its `kept` rows (flagged curated) as one-file `batchNNNNN`
     * (micro-batches are small; one file per batch keeps listings short)
     * and the manifest appends it; a compaction-due trigger writes the
-    * base's live entries ∪ its `kept` projection as `compactNNNNN`,
-    * ceil(live bytes/target) files, and the manifest swaps to that one
-    * entry. With no `kept` rows the call is a pure compaction, which
-    * carries `maxBatch` unchanged. mode("overwrite") lets a replay after
-    * a pre-swap crash (`failBeforeCommit` injects one) replace the
-    * partial dirs. */
+    * live entries ∪ its `kept` rows as `compactNNNNN`, ceil(live
+    * bytes/target) files, and the manifest swaps to that one entry. With
+    * no `kept` rows the call is a pure compaction, which carries
+    * `maxBatch` unchanged. `includeSurvivors` picks the table's base
+    * ([[tableBase]]). mode("overwrite") lets a replay after a pre-swap
+    * crash (`failBeforeCommit` injects one) replace the partial dir. */
   private def commitToStore(
       spark: SparkSession, st: CommitState, indexPath: String,
       outPath: String, batchId: Long, kept: Option[DataFrame],
@@ -323,33 +314,23 @@ object DocumentStreams {
       failBeforeCommit: Boolean): Unit = {
     val conf = spark.sparkContext.hadoopConfiguration
     def path(d: String) = new org.apache.hadoop.fs.Path(d)
-    val bases = Seq[(String, StructType, DataFrame => DataFrame)](
-        (s"$indexPath/bands", bandsSchema,
-          graft.operators.Dedup.preparedFromSigned(_)._1),
-        (s"$indexPath/wh", whSchema,
-          graft.operators.Dedup.preparedFromSigned(_)._2)) ++
-      (if (includeSurvivors)
-        Seq((outPath, survivorSchema,
-          (k: DataFrame) => k.select(col("doc_id"), col("lang"))))
-      else Seq.empty)
+    val base = tableBase(indexPath, outPath, includeSurvivors)
     val token = compactTargetBytes.fold(f"batch$batchId%05d")(
       _ => f"compact$batchId%05d")
-    for ((base, schema, project) <- bases) {
-      val rows = kept.map(project)
-      val out = compactTargetBytes match {
-        case None => rows.get.coalesce(1)
-        case Some(target) =>
-          val bytes = st.entries.map { e =>
-            val hp = path(s"$base/$e")
-            val fs = hp.getFileSystem(conf)
-            if (fs.exists(hp)) fs.getContentSummary(hp).getLength else 0L
-          }.sum
-          val want = math.max(1L, (bytes + target - 1) / target).toInt
-          val live = readBase(spark, schema, base, st.entries)
-          rows.fold(live)(live.unionByName(_)).coalesce(want)
-      }
-      out.write.mode("overwrite").parquet(s"$base/$token")
+    val rows = kept.map(storeRows(_, curated = true))
+    val out = compactTargetBytes match {
+      case None => rows.get.coalesce(1)
+      case Some(target) =>
+        val bytes = st.entries.map { e =>
+          val hp = path(s"$base/$e")
+          val fs = hp.getFileSystem(conf)
+          if (fs.exists(hp)) fs.getContentSummary(hp).getLength else 0L
+        }.sum
+        val want = math.max(1L, (bytes + target - 1) / target).toInt
+        val live = readTable(spark, base, st.entries)
+        rows.fold(live)(live.unionByName(_)).coalesce(want)
     }
+    out.write.mode("overwrite").parquet(s"$base/$token")
     if (failBeforeCommit)
       throw new IllegalStateException("injected crash before manifest commit")
     val entries =
@@ -361,7 +342,7 @@ object DocumentStreams {
     // pure housekeeping and may fail without consequence (a fatal error
     // or an interrupt of a stopping stream still propagates)
     if (compactTargetBytes.isDefined)
-      for ((base, _, _) <- bases; e <- st.entries) {
+      for (e <- st.entries) {
         val hp = path(s"$base/$e")
         try { hp.getFileSystem(conf).delete(hp, true); () }
         catch { case NonFatal(_) => () }
@@ -370,12 +351,13 @@ object DocumentStreams {
 
   /** One micro-batch of the incremental curation lifecycle under the
     * manifest protocol: gate → dedup against the manifest view of the
-    * index → write the kept rows to all three bases and swap the
-    * manifest ([[commitToStore]]: a batch token, or every
-    * `compactEvery` batches one compacted token per base) — the
-    * trigger's one commit point. Public-to-the-package so the
+    * table → write the kept rows to the table and swap the manifest
+    * ([[commitToStore]]: a batch token, or every `compactEvery` batches
+    * one compacted token) — the trigger's one commit point. The probe
+    * result has one consumer, the write, so it is written as it is
+    * computed, not checkpointed. Public-to-the-package so the
     * crash-replay spec can drive it directly; `failBeforeCommit` injects
-    * a crash in the one window that exists (after the dir writes, before
+    * a crash in the one window that exists (after the dir write, before
     * the swap). */
   private[graft] def processCurationBatch(
       spark: SparkSession, batch: DataFrame, batchId: Long,
@@ -388,7 +370,7 @@ object DocumentStreams {
     // checkpoint just didn't record it before the crash (ids are
     // monotonic — the CommitState contract — so <= max means committed)
     if (batchId <= st.maxBatch) return
-    val (kept, release) = signAndProbe(spark, st, indexPath,
+    val (kept, release) = signAndProbe(spark, st, outPath,
       batch.filter(qualityGate(col("text"))), numHashes, bands, threshold)
     try commitToStore(spark, st, indexPath, outPath, batchId, Some(kept),
       Option.when(compactionDue(batchId, compactEvery))(compactTargetBytes),
@@ -397,18 +379,18 @@ object DocumentStreams {
   }
 
   /** Compaction under the manifest protocol, outside any batch: rewrite
-    * the UNION of the live entries of each base into one `compactNNNNN`
+    * the UNION of the table's live entries into one `compactNNNNN`
     * token dir (ceil(bytes/targetBytes) files) and swap the manifest to
     * that single entry — every live entry is rewritten, the seed
     * included. It is [[commitToStore]] with no rows to add: the same
     * write, swap and best-effort cleanup a compaction-due trigger runs.
     *
-    * `includeSurvivors = false` compacts the INDEX BASES ONLY — the
-    * keyed-connector lifecycle ([[incrementalDedupToKeyedSigned]]), whose
-    * survivor store is the `graft-keyed` layout with its own batch
-    * ledger, not a manifest-resolved parquet base. `failBeforeCommit`
+    * `includeSurvivors = false` compacts the table under `indexPath` —
+    * the keyed-connector lifecycle ([[incrementalDedupToKeyedSigned]]),
+    * whose survivor store is the `graft-keyed` layout with its own batch
+    * ledger, not the manifest-resolved table. `failBeforeCommit`
     * injects a crash in the only window the protocol leaves (compact
-    * dirs written, manifest not yet swapped) for the crash spec; the
+    * dir written, manifest not yet swapped) for the crash spec; the
     * `maxBatch` replay record is carried UNCHANGED through the swap, so
     * the exactly-once skip survives compaction. */
   private[graft] def compactCommitted(
@@ -431,11 +413,12 @@ object DocumentStreams {
     * before it (seed corpus + all earlier batches), exactly how a
     * production crawl keeps its dedup store current.
     *
-    * Scale shape: the index lives on distributed storage and is read
-    * per batch through the same banded probe join (never re-signed, never
-    * driver-resident); the per-batch work is [[processCurationBatch]]
-    * ([[graft.operators.Dedup.dedupSignedAgainstPreparedIndex]] against
-    * the manifest view); the streaming plan itself stays stateless (zero
+    * Scale shape: the index lives on distributed storage and is streamed
+    * once per batch past the batch's broadcast bands (never re-signed,
+    * never broadcast, never driver-resident); the per-batch work is
+    * [[processCurationBatch]]
+    * ([[graft.operators.Dedup.dedupSignedAgainstIndex]] against the
+    * manifest view); the streaming plan itself stays stateless (zero
     * state-store operators, require()-asserted) because ALL cross-batch
     * state is the persisted index — bounded by curated-corpus size on
     * disk, not by stream volume in memory. Within-batch new-new
@@ -453,9 +436,8 @@ object DocumentStreams {
     * sequential batch unroll; q142's oracle re-derives the whole cascade
     * in SQL).
     *
-    * Durability: every batch's three outputs (band rows, wh rows,
-    * survivors) commit ATOMICALLY via the manifest protocol documented at
-    * [[CommitState]] — a mid-batch crash loses nothing and duplicates
+    * Durability: every batch's one table token commits ATOMICALLY via the
+    * manifest protocol documented at [[CommitState]] — a mid-batch crash loses nothing and duplicates
     * nothing, and a foreachBatch replay of an already-committed batch is
     * a skip (exactly-once). A compacting trigger commits through the same
     * single swap, so a crash can never lose the index.
@@ -469,8 +451,11 @@ object DocumentStreams {
     * @param streamSplit  predicate selecting the crawl side (rows NOT in
     *                     the seed corpus); default keeps doc_id%10==0 as
     *                     the never-streamed seed/eval split.
+    * @param outPath    the store table's base: the curated corpus is its
+    *                     `curated` rows ([[readCurated]]).
+    * @param indexPath  the manifest's dir ([[CommitState]]).
     * @param compactEvery every this many batches (0 disables), the
-    *                     trigger writes each base's live entries plus its
+    *                     trigger writes the table's live entries plus its
     *                     own rows as one target-size token instead of a
     *                     batch token — bounds the O(batches) listing
     *                     growth of per-batch commits.
@@ -486,13 +471,8 @@ object DocumentStreams {
       compactTargetBytes: Long = 128L << 20): DataFrame = {
     require(batchFiles >= 1, "need at least one batch file")
     val docs = spark.read.parquet(s"$dir/$docsPath").filter(streamSplit)
-    val streamDir = renderCrawlBatches(docs, batchFiles)
     initCurationStore(spark, seedSigned, indexPath, outPath)
-    val incoming = spark.readStream
-      .schema(documentSchema)
-      .option("maxFilesPerTrigger", 1)
-      .parquet(streamDir)
-    withStreamingShufflePartitions(spark, conf.shufflePartitions) {
+    withCrawlBatches(spark, docs, batchFiles, conf) { incoming =>
       val q = incoming.writeStream
         .foreachBatch { (batch: DataFrame, batchId: Long) =>
           // all batch effects commit atomically through the manifest
@@ -514,31 +494,52 @@ object DocumentStreams {
     readCurated(spark, indexPath, outPath).orderBy(col("doc_id"))
   }
 
-  /** Render a crawl relation as one parquet file per micro-batch
-    * (`batch b` = pmod(doc_id, batchFiles)) with strictly increasing
-    * mtimes — FileStreamSource orders by (mtime, path), so throttled
-    * replays process batches in a fixed order and every downstream
-    * cascade is a pure function of the corpus. ONE partitioned write
-    * renders every file (partitionBy drops the bat column, so the stream
-    * schema is untouched); a per-batch filter+write loop would re-scan
-    * the corpus batchFiles times. */
-  private def renderCrawlBatches(docs: DataFrame, batchFiles: Int): String = {
-    import java.nio.file.{Files, Paths}
-    val streamDir = Files.createTempDirectory("graft-crawl").toString
-    val tmp = Files.createTempDirectory("graft-crawl-part").toString
-    docs.withColumn("bat", pmod(col("doc_id"), lit(batchFiles)))
-      .coalesce(1).write.partitionBy("bat").mode("overwrite").parquet(tmp)
-    (0 until batchFiles).foreach { b =>
-      val partDir = new java.io.File(tmp, s"bat=$b")
-      val part = Option(partDir.listFiles).getOrElse(Array.empty)
-        .find(_.getName.endsWith(".parquet"))
-        .getOrElse(throw new IllegalStateException(s"no part file for batch $b"))
-      val dest = Paths.get(streamDir, f"batch$b%02d.parquet")
-      Files.move(part.toPath, dest)
-      require(dest.toFile.setLastModified((b + 1) * 60000L),
-        s"could not stamp batch $b's replay order")
-    }
-    streamDir
+  /** Run `f` over a throttled (maxFilesPerTrigger=1) file stream of
+    * `docs` rendered by [[renderCrawlBatches]], with `conf`'s shuffle
+    * partitions set while `f` starts and awaits its query. The rendered
+    * crawl is deleted once `f` returns or throws: it is a full copy of
+    * the crawl on local disk, and `f` has terminated its query by then. */
+  private def withCrawlBatches[T](
+      spark: SparkSession, docs: DataFrame, batchFiles: Int,
+      conf: EventStreams.StreamRunConf)(f: DataFrame => T): T = {
+    val streamDir = java.nio.file.Files.createTempDirectory("graft-crawl")
+    try {
+      renderCrawlBatches(docs, batchFiles, streamDir)
+      EventStreams.withStreamingShufflePartitions(spark, conf.shufflePartitions) {
+        f(spark.readStream.schema(documentSchema)
+          .option("maxFilesPerTrigger", 1).parquet(streamDir.toString))
+      }
+    } finally org.apache.hadoop.fs.FileUtil.fullyDelete(streamDir.toFile)
+  }
+
+  /** Render a crawl relation into `streamDir` as one parquet file per
+    * micro-batch (`batch b` = pmod(doc_id, batchFiles)) with strictly
+    * increasing mtimes — FileStreamSource orders by (mtime, path), so
+    * throttled replays process batches in a fixed order and every
+    * downstream cascade is a pure function of the corpus. ONE partitioned
+    * write renders every file (partitionBy drops the bat column, so the
+    * stream schema is untouched); a per-batch filter+write loop would
+    * re-scan the corpus batchFiles times. The partitioned write's own dir
+    * is deleted once its files are moved. */
+  private def renderCrawlBatches(
+      docs: DataFrame, batchFiles: Int, streamDir: java.nio.file.Path): Unit = {
+    import java.nio.file.Files
+    val tmp = Files.createTempDirectory("graft-crawl-part").toFile
+    try {
+      docs.withColumn("bat", pmod(col("doc_id"), lit(batchFiles)))
+        .coalesce(1).write.partitionBy("bat").mode("overwrite")
+        .parquet(tmp.toString)
+      (0 until batchFiles).foreach { b =>
+        val partDir = new java.io.File(tmp, s"bat=$b")
+        val part = Option(partDir.listFiles).getOrElse(Array.empty)
+          .find(_.getName.endsWith(".parquet"))
+          .getOrElse(throw new IllegalStateException(s"no part file for batch $b"))
+        val dest = streamDir.resolve(f"batch$b%02d.parquet")
+        Files.move(part.toPath, dest)
+        require(dest.toFile.setLastModified((b + 1) * 60000L),
+          s"could not stamp batch $b's replay order")
+      }
+    } finally org.apache.hadoop.fs.FileUtil.fullyDelete(tmp)
   }
 
   /** One micro-batch of the KEYED-CONNECTOR incremental dedup lifecycle
@@ -546,9 +547,10 @@ object DocumentStreams {
     * manifest view of the signature index, append the NOVEL docs into the
     * `graft-keyed` layout through [[graft.sources.v2.KeyedJsonStream
     * .appendBatch]] (the connector's own batch-id marker + residue-scrub
-    * idempotence), then append the novel docs' signatures to the index
-    * under the manifest protocol ([[commitToStore]] with the index bases
-    * only — every `compactEvery` batches as one compacted token).
+    * idempotence), then append the novel docs' signed rows to the table
+    * under `indexPath` through the manifest protocol ([[commitToStore]];
+    * every `compactEvery` batches as one compacted token). The kept rows
+    * have two consumers, so they are checkpointed once.
     *
     * Two stores, each idempotent per batch id, COMMITTED IN A FIXED
     * ORDER (keyed first, manifest second) — that ordering is what makes
@@ -559,7 +561,7 @@ object DocumentStreams {
     *  - crash between keyed commit and manifest swap → the replay
     *    recomputes the same survivors (manifest still unchanged — this is
     *    why the index must commit LAST), the keyed append skips on its
-    *    marker, the index writes overwrite the orphan token and swap;
+    *    marker, the table write overwrites the orphan token and swaps;
     *  - crash after the swap → `batchId <= maxBatch` skips the batch
     *    whole; the keyed marker agrees by the ordering invariant.
     * `failBeforeCommit` injects the middle window for the crash spec. */
@@ -571,8 +573,10 @@ object DocumentStreams {
       failBeforeCommit: Boolean = false): Unit = {
     val st = readCommits(spark, indexPath)
     if (batchId <= st.maxBatch) return
-    val (kept, release) = signAndProbe(
+    val (probed, releaseSigned) = signAndProbe(
       spark, st, indexPath, batch, numHashes, bands, threshold)
+    val (kept, release) =
+      try graft.Checkpoints.owned(probed) finally releaseSigned()
     try {
       // 1) novel docs into the keyed store (its ledger makes a replay of
       // a committed id a whole-batch skip)
@@ -581,9 +585,9 @@ object DocumentStreams {
           pmod(xxhash64(col("doc_id")), lit(shards.toLong))
             .cast("int").as("shard")),
         outPath, "shard", batchId)
-      // 2) their signatures into the index (manifest swap LAST);
+      // 2) their signed rows into the table (manifest swap LAST);
       // includeSurvivors = false: the survivor store is the keyed
-      // layout, not a manifest-resolved parquet base
+      // layout, so the table lives under indexPath
       commitToStore(spark, st, indexPath, outPath, batchId, Some(kept),
         Option.when(compactionDue(batchId, compactEvery))(compactTargetBytes),
         includeSurvivors = false, failBeforeCommit)
@@ -595,7 +599,7 @@ object DocumentStreams {
     * composed from pieces the engine already grades separately: new
     * documents arrive as throttled micro-batches, each batch probes the
     * PERSISTED MinHash/LSH band index (q38's banded algebra through
-    * [[graft.operators.Dedup.dedupSignedAgainstPreparedIndex]] — seed
+    * [[graft.operators.Dedup.dedupSignedAgainstIndex]] — seed
     * corpus ∪ every earlier batch's survivors, never re-signed), and ONLY
     * NOVEL docs append — into the `graft-keyed` layout (so the curated
     * corpus is immediately SPJ-joinable shuffle-free, q176's read side)
@@ -641,14 +645,9 @@ object DocumentStreams {
       compactTargetBytes: Long = 128L << 20): DataFrame = {
     require(batchFiles >= 1, "need at least one batch file")
     val docs = spark.read.parquet(s"$dir/$docsPath").filter(streamSplit)
-    val streamDir = renderCrawlBatches(docs, batchFiles)
     initCurationStore(spark, seedSigned, indexPath, outPath,
       seedSurvivors = false)
-    val incoming = spark.readStream
-      .schema(documentSchema)
-      .option("maxFilesPerTrigger", 1)
-      .parquet(streamDir)
-    withStreamingShufflePartitions(spark, conf.shufflePartitions) {
+    withCrawlBatches(spark, docs, batchFiles, conf) { incoming =>
       val q = incoming.writeStream
         .foreachBatch { (batch: DataFrame, batchId: Long) =>
           // the index compacts inside the batch's own manifest swap; the

@@ -66,7 +66,8 @@ object EventStreams {
     * scale; a real deployment sizes it once per stream job via
     * [[StreamRunConf]]. Applies only to queries STARTED under the conf
     * (it's fixed at query start). */
-  private def withStreamingShufflePartitions[T](spark: SparkSession, n: Int)(f: => T): T = {
+  private[streaming] def withStreamingShufflePartitions[T](
+      spark: SparkSession, n: Int)(f: => T): T = {
     val key = "spark.sql.shuffle.partitions"
     val prior = spark.conf.get(key)
     spark.conf.set(key, n.toString)

@@ -428,16 +428,51 @@ class DedupSpec extends SparkSpec {
       (3L, "novel unseen text that matches nothing in the existing index at all"),
       (5L, "novel unseen text that matches nothing in the existing index at all"))
       .toDF("doc_id", "text")
-    val (exBands, exWh) = Dedup.preparedFromSigned(
-      Dedup.signDocs(existing, col("text"), col("doc_id")))
-    val kept = Dedup.dedupSignedAgainstPreparedIndex(
-        Dedup.signDocs(incoming, col("text"), col("doc_id")),
-        exBands, exWh, threshold = 0.9)
-      .collect().map(_.getLong(0)).toSet
+    val signedIn = Dedup.signDocs(incoming, col("text"), col("doc_id"))
+    val keptRows = Dedup.dedupSignedAgainstIndex(signedIn,
+        Dedup.signDocs(existing, col("text"), col("doc_id")), threshold = 0.9)
+    // the probe returns the batch's own signed rows
+    assert(keptRows.columns.toSeq === signedIn.columns.toSeq)
+    val kept = keptRows.collect().map(_.getLong(0)).toSet
     // 1 duplicates indexed doc 2 → dropped; 3 and 5 duplicate EACH OTHER
     // but nothing in the index → both kept (within-batch dedup is a
     // separate pass by contract)
     assert(kept === Set(3L, 5L))
+  }
+
+  test("incremental dedup probe: no shuffle, and the stored index is only " +
+    "ever a streamed side") {
+    // the probe's cost must follow the batch: the stored index is scanned
+    // past the batch's broadcast bands, never broadcast itself, and no
+    // row of either side crosses a shuffle
+    import org.apache.spark.sql.execution.{FileSourceScanExec, SparkPlan}
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+    import org.apache.spark.sql.execution.joins.BroadcastHashJoinExec
+    import org.apache.spark.sql.catalyst.optimizer.BuildRight
+    val dir = java.nio.file.Files.createTempDirectory("graft-spec-probe-idx")
+      .toString
+    Dedup.signDocs(docs.filter(col("doc_id") % 2 === 0), col("text"),
+      col("doc_id")).write.mode("overwrite").parquet(dir)
+    val key = "spark.sql.adaptive.enabled"
+    val prior = spark.conf.get(key)
+    spark.conf.set(key, "false")
+    val plan = try Dedup.dedupSignedAgainstIndex(
+        Dedup.signDocs(docs.filter(col("doc_id") % 2 === 1), col("text"),
+          col("doc_id")).localCheckpoint(true),
+        spark.read.parquet(dir))
+      .queryExecution.executedPlan
+    finally spark.conf.set(key, prior)
+    // the side of its nearest enclosing join each file scan sits on
+    def scanSides(p: SparkPlan, side: String): Seq[String] = p match {
+      case j: BroadcastHashJoinExec =>
+        val (build, stream) =
+          if (j.buildSide == BuildRight) (j.right, j.left) else (j.left, j.right)
+        scanSides(build, "build") ++ scanSides(stream, "stream")
+      case _: FileSourceScanExec => Seq(side)
+      case other => other.children.flatMap(scanSides(_, side))
+    }
+    assert(plan.collect { case e: ShuffleExchangeExec => e }.isEmpty, plan)
+    assert(scanSides(plan, "none") === Seq("stream"), plan)
   }
 
   test("signDocs: wh and mh_bands equal signatureTable's wh and band rows") {
@@ -460,16 +495,52 @@ class DedupSpec extends SparkSpec {
       rows(regrouped("band")))
   }
 
+  test("signDocs banding: band-collision rate of exact-Jaccard pairs " +
+    "matches 1-(1-J^rows)^bands") {
+    // synthetic pairs of known word-set Jaccard J = shared / (shared + 2
+    // unique-per-side counts), every word distinct across pairs so the
+    // pairs are independent trials of the 64-hash, 4-band signature
+    import spark.implicits._
+    val perJ = 400
+    val shapes = Seq((0.90, 90, 5, 5), (0.95, 95, 3, 2), (0.98, 98, 1, 1))
+    val pairs = for {
+      ((_, shared, onlyA, onlyB), s) <- shapes.zipWithIndex
+      p <- 0 until perJ
+    } yield {
+      def words(tag: String, n: Int) = (0 until n).map(k => s"s${s}p${p}$tag$k")
+      val common = words("c", shared)
+      val id = (s * perJ + p).toLong
+      Seq((2 * id, (common ++ words("a", onlyA)).mkString(" ")),
+        (2 * id + 1, (common ++ words("b", onlyB)).mkString(" ")))
+    }
+    val signed = Dedup.signDocs(pairs.flatten.toDF("doc_id", "text"),
+        col("text"), col("doc_id"), numHashes = 64, bands = 4)
+      .collect().map(r => r.getLong(0) -> r.getSeq[Long](2)).toMap
+    for (((j, shared, onlyA, onlyB), s) <- shapes.zipWithIndex) {
+      assert(shared.toDouble / (shared + onlyA + onlyB) === j)
+      val hits = (0 until perJ).count { p =>
+        val id = (s * perJ + p).toLong
+        signed(2 * id).zip(signed(2 * id + 1)).exists { case (a, b) => a == b }
+      }
+      val expected = 1 - math.pow(1 - math.pow(j, 16), 4)
+      val sigma = math.sqrt(expected * (1 - expected) / perJ)
+      val rate = hits.toDouble / perJ
+      info(f"J=$j%.2f: band-collision rate $rate%.4f, theory $expected%.4f")
+      assert(math.abs(rate - expected) <= 4 * sigma,
+        f"J=$j: rate $rate%.4f is off theory $expected%.4f by more than 4σ")
+    }
+  }
+
   test("incremental dedup agrees with the symmetric pair dedup across the split") {
     // the fixture parity split: every odd doc dropped by the incremental
     // pass must ALSO appear as a dropped id in some odd-even near-dup
     // pair of the full symmetric operator at the same threshold
     val oddIn = docs.filter(col("doc_id") % 2 === 1)
-    val (evenBands, evenWh) = Dedup.preparedFromSigned(Dedup.signDocs(
-      docs.filter(col("doc_id") % 2 === 0), col("text"), col("doc_id")))
-    val keptIncremental = Dedup.dedupSignedAgainstPreparedIndex(
+    val keptIncremental = Dedup.dedupSignedAgainstIndex(
         Dedup.signDocs(oddIn, col("text"), col("doc_id")),
-        evenBands, evenWh, threshold = 0.95)
+        Dedup.signDocs(docs.filter(col("doc_id") % 2 === 0),
+          col("text"), col("doc_id")),
+        threshold = 0.95)
       .collect().map(_.getLong(0)).toSet
     val crossPairs = Dedup.minhashNearDupPairs(
         docs, col("text"), col("doc_id"), numHashes = 64, bands = 4,

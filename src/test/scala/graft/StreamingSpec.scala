@@ -214,24 +214,24 @@ class StreamingSpec extends SparkSpec {
   }
 
   test("incremental curation: compaction bounds index files, survivors unchanged") {
-    // per-batch appends grow the index listing O(batches); compaction must
-    // rewrite bands/+wh/ into a bounded file count WITHOUT changing the
+    // per-batch appends grow the table's listing O(batches); compaction
+    // must rewrite it into a bounded file count WITHOUT changing the
     // survivor cascade (a batch still never sees its own signatures)
     import graft.streaming.DocumentStreams
     val seedIdx = curationSeed()
     def run(compactEvery: Int): (Seq[(Long, String)], Int) = {
-      val idxPath = tmpDir(s"compact-$compactEvery")
+      val outPath = tmpDir(s"compact-out-$compactEvery")
       val surv = DocumentStreams.incrementalCurationToParquetSigned(
-          spark, sfDir, seedIdx, tmpDir("compact-out"),
-          idxPath, batchFiles = 3, compactEvery = compactEvery)
+          spark, sfDir, seedIdx, outPath,
+          tmpDir("compact-idx"), batchFiles = 3, compactEvery = compactEvery)
         .collect().map(r => (r.getLong(0), r.getString(1))).toSeq.sorted
-      // token dirs under bands/ — count parquet files across all of them
+      // the table's token dirs — count parquet files across all of them
       def countParquet(f: java.io.File): Int =
         Option(f.listFiles).getOrElse(Array.empty).map { c =>
           if (c.isDirectory) countParquet(c)
           else if (c.getName.endsWith(".parquet")) 1 else 0
         }.sum
-      (surv, countParquet(new java.io.File(s"$idxPath/bands")))
+      (surv, countParquet(new java.io.File(outPath)))
     }
     val (survOff, filesOff) = run(compactEvery = 0)
     val (survOn, filesOn) = run(compactEvery = 1)
@@ -239,7 +239,7 @@ class StreamingSpec extends SparkSpec {
     // off: seed token + one token dir per batch; on: every batch ends
     // with a manifest swap to one ceil(bytes/128MB)=1-file compact token
     // (the replaced dirs are deleted after the swap)
-    assert(filesOn === 1, s"compacted bands base must hold 1 file, got $filesOn")
+    assert(filesOn === 1, s"compacted table must hold 1 file, got $filesOn")
     assert(filesOff > filesOn, "fixture must make compaction observable")
   }
 
@@ -451,7 +451,7 @@ class StreamingSpec extends SparkSpec {
     // and the compaction bounded the file count: one file per index base
     def bandFiles(idx: String): Int =
       DocumentStreams.readCommits(spark, idx).entries
-        .flatMap(e => Option(new java.io.File(s"$idx/bands/$e").listFiles)
+        .flatMap(e => Option(new java.io.File(s"$idx/$e").listFiles)
           .getOrElse(Array.empty).toSeq)
         .count(_.getName.endsWith(".parquet"))
     assert(bandFiles(idxA) < bandFiles(idxB),
@@ -472,11 +472,11 @@ class StreamingSpec extends SparkSpec {
       docs: org.apache.spark.sql.DataFrame,
       index: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame = {
     import graft.operators.Dedup
-    val (exBands, exWh) = Dedup.preparedFromSigned(index)
-    Dedup.dedupSignedAgainstPreparedIndex(
-      Dedup.signDocs(docs, col("text"), col("doc_id"),
-        numHashes = 64, bands = 4),
-      exBands, exWh, threshold = 0.95)
+    Dedup.dedupSignedAgainstIndex(
+        Dedup.signDocs(docs, col("text"), col("doc_id"),
+          numHashes = 64, bands = 4),
+        index, threshold = 0.95)
+      .select(col("doc_id"))
   }
   private def crawlBatch(b: Int) = Tables(spark, sfDir).documents
     .filter(col("doc_id") % 10 =!= 0)
@@ -500,28 +500,33 @@ class StreamingSpec extends SparkSpec {
 
   test("dedup store: the declared base schemas match what every writer " +
     "produces (seed, batch and compact tokens)") {
-    // every store read goes through DocumentStreams' declared schemas; a
-    // writer whose layout drifts would otherwise read back null columns
+    // every store read goes through DocumentStreams' declared table
+    // schema; a writer whose layout drifts would otherwise read back null
+    // columns. Both lifecycles' table bases are checked.
     import graft.streaming.DocumentStreams
     def fields(s: org.apache.spark.sql.types.StructType) =
       s.fields.map(f => (f.name, f.dataType)).toSeq
-    def check(idx: String, out: String, token: String): Unit =
-      for ((base, declared) <- Seq(
-          s"$idx/bands" -> DocumentStreams.bandsSchema,
-          s"$idx/wh" -> DocumentStreams.whSchema,
-          out -> DocumentStreams.survivorSchema))
-        assert(fields(spark.read.parquet(s"$base/$token").schema) ===
-          fields(declared), s"$base/$token")
+    def check(base: String, token: String): Unit =
+      assert(fields(spark.read.parquet(s"$base/$token").schema) ===
+        fields(DocumentStreams.storeSchema), s"$base/$token")
     val idx = tmpDir("schema-idx")
     val out = tmpDir("schema-out")
     DocumentStreams.initCurationStore(spark, curationSeed(), idx, out)
-    check(idx, out, "seed")
+    check(out, "seed")
     DocumentStreams.processCurationBatch(spark, crawlBatch(0), 0L, idx, out,
       numHashes = 64, bands = 4, threshold = 0.95)
-    check(idx, out, "batch00000")
+    check(out, "batch00000")
     DocumentStreams.processCurationBatch(spark, crawlBatch(1), 1L, idx, out,
       numHashes = 64, bands = 4, threshold = 0.95, compactEvery = 2)
-    check(idx, out, "compact00001")
+    check(out, "compact00001")
+    assert(tokenDirs(idx) === Seq.empty, "the manifest dir holds no table")
+    val (kIdx, kOut) = (tmpDir("schema-kidx"), tmpDir("schema-kout"))
+    DocumentStreams.initCurationStore(spark, curationSeed(), kIdx, kOut,
+      seedSurvivors = false)
+    check(kIdx, "seed")
+    DocumentStreams.processKeyedDedupBatch(spark, crawlBatch(0), 0L,
+      kIdx, kOut, shards = 8, numHashes = 64, bands = 4, threshold = 0.95)
+    check(kIdx, "batch00000")
   }
 
   test("incremental curation: a compaction-due trigger commits once — a " +
@@ -555,9 +560,8 @@ class StreamingSpec extends SparkSpec {
     process(idx, out, 1, compactEvery = 2)
     assert(DocumentStreams.readCommits(spark, idx) ===
       DocumentStreams.CommitState(Seq("compact00001"), 1L))
-    for (base <- Seq(s"$idx/bands", s"$idx/wh", out))
-      assert(tokenDirs(base) === Seq("compact00001"),
-        s"$base must hold only the compacted token")
+    assert(tokenDirs(out) === Seq("compact00001"),
+      "the table must hold only the compacted token")
     // the verdicts equal a crash-free store that never compacts
     val cleanIdx = tmpDir("fused-clean-idx")
     val cleanOut = tmpDir("fused-clean-out")
@@ -600,9 +604,8 @@ class StreamingSpec extends SparkSpec {
     process(idx, out, 1, compactEvery = 2)
     assert(DocumentStreams.readCommits(spark, idx) ===
       DocumentStreams.CommitState(Seq("compact00001"), 1L))
-    for (base <- Seq(s"$idx/bands", s"$idx/wh"))
-      assert(tokenDirs(base) === Seq("compact00001"),
-        s"$base must hold only the compacted token")
+    assert(tokenDirs(idx) === Seq("compact00001"),
+      "the table must hold only the compacted token")
     assert(keyedCurated(out) === afterCrash,
       "the replay must not change the keyed store")
     assert(!KJS.appendBatch(
@@ -637,10 +640,33 @@ class StreamingSpec extends SparkSpec {
     assert(DocumentStreams.readCommits(spark, idx).entries ===
       Seq("compact00001"))
     info(s"Spark jobs per trigger: plain $plain, compacting $compacting")
-    // the counts this layout reaches on the fixture: a schema-inferring
-    // store read or a second commit pass would add jobs
-    assert(plain <= 14, s"plain trigger ran $plain jobs")
-    assert(compacting <= 14, s"compacting trigger ran $compacting jobs")
+    // the counts this layout reaches on the fixture: the signing
+    // checkpoint, the probe's two broadcasts and the one table write. A
+    // schema-inferring store read, a checkpoint of the probe result, a
+    // shuffled probe stage or a second write would add jobs
+    assert(plain <= 6, s"plain trigger ran $plain jobs")
+    assert(compacting <= 6, s"compacting trigger ran $compacting jobs")
+  }
+
+  test("incremental curation: both lifecycles delete the crawl copies " +
+    "they render") {
+    // each call renders the crawl as batch files under java.io.tmpdir;
+    // a full copy of the crawl must not outlive the call
+    import graft.streaming.DocumentStreams
+    val tmp = new java.io.File(System.getProperty("java.io.tmpdir"))
+    def crawlCopies(): Set[String] = Option(tmp.listFiles).getOrElse(Array.empty)
+      .map(_.getName).filter(_.startsWith("graft-crawl")).toSet
+    val before = crawlCopies()
+    DocumentStreams.incrementalCurationToParquetSigned(spark, sfDir,
+      curationSeed(), tmpDir("tmpdir-out"), tmpDir("tmpdir-idx"),
+      batchFiles = 3)
+    assert(crawlCopies() -- before === Set.empty,
+      "the parquet lifecycle left its crawl copies behind")
+    DocumentStreams.incrementalDedupToKeyedSigned(spark, sfDir,
+      curationSeed(), tmpDir("tmpdir-kout"), tmpDir("tmpdir-kidx"),
+      batchFiles = 3)
+    assert(crawlCopies() -- before === Set.empty,
+      "the keyed lifecycle left its crawl copies behind")
   }
 
   test("dedup store: the seed and every trigger of both lifecycles release " +

@@ -153,12 +153,11 @@ object TextScaleProbe {
           graft.operators.Multimodal.ingestFromDocuments(big)))
     }
     time("incremental_dedup") {
-      val (exBands, exWh) = Dedup.preparedFromSigned(Dedup.signDocs(
-        big.filter(col("doc_id") % 2 === 0), col("text"), col("doc_id")))
-      Dedup.dedupSignedAgainstPreparedIndex(
+      Dedup.dedupSignedAgainstIndex(
         Dedup.signDocs(big.filter(col("doc_id") % 2 === 1),
           col("text"), col("doc_id")),
-        exBands, exWh)
+        Dedup.signDocs(big.filter(col("doc_id") % 2 === 0),
+          col("text"), col("doc_id")))
     }
     spark.stop()
   }
