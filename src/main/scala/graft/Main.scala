@@ -4,7 +4,8 @@ import java.io.File
 
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 
-import graft.migration.{Pipelines, SyncOptions}
+import graft.migration.{ErrorChannel, Pipelines, SyncOptions, SyncReport}
+import graft.sources.{BoundedErrorAccumulator, HttpPublisher}
 
 /** The reference's user-facing CLI (Kernel.php:15-19) as a
   * spark-submit-able main: `sync-customers`, `sync-tickets`,
@@ -22,8 +23,10 @@ import graft.migration.{Pipelines, SyncOptions}
   * engine documents for migrations (acquire once, then iterate offline).
   * Publishing goes to `--apiUrl=URL` (the reference's live REST publish,
   * via [[graft.sources.HttpPublisher]] with rate limiting and Retry-After
-  * handling) or, by default, to `--out=DIR` as JSON-lines part files (or
-  * stdout when neither is given) — a dry-run shape the reference lacks.
+  * handling; the API's rejections count into the printed `errors=` and
+  * the `--errorCsv` report) or, by default, to `--out=DIR` as JSON-lines
+  * part files (or stdout when neither is given) — a dry-run shape the
+  * reference lacks.
   *
   * Exit codes: 0 ok, 1 validation-gate failure (the reference's `exit()`
   * on gate failure, SyncTickets.php:91/107) or pipeline error, 2 usage
@@ -137,18 +140,37 @@ object Main {
 
   /** The publish target as the `post` closure Pipelines expects: live
     * HTTP when `--apiUrl` is set, JSON-lines part files under `--out`,
-    * stdout otherwise. The error accumulator only feeds HttpPublisher's
-    * capture; file/stdout publishes can't fail per-record. */
-  private def publisher(
-      spark: SparkSession, cli: Cli): (Seq[Row] => Unit) = cli.apiUrl match {
+    * stdout otherwise. A live publish also returns the bounded accumulator
+    * its POST failures land in (the reference's `$errorMapping`,
+    * TicketPublisher.php:56-86); file/stdout publishes can't fail
+    * per-record. The live publisher names each record by `idCol`, which
+    * also becomes its Idempotency-Key. */
+  private def publisher(spark: SparkSession, cli: Cli, idCol: String)
+      : (Seq[Row] => Unit, Option[BoundedErrorAccumulator]) = cli.apiUrl match {
     case Some(url) =>
-      val acc = spark.sparkContext
-        .collectionAccumulator[(String, String)]("graft.cli.publish.errors")
-      new graft.sources.HttpPublisher(url, acc)
+      val errors = new BoundedErrorAccumulator(BoundedErrorAccumulator.DefaultCap)
+      spark.sparkContext.register(errors, "graft.cli.publish.errors")
+      (new HttpPublisher(url, errors.add _, idCol = Some(idCol)), Some(errors))
     case None => cli.out match {
-      case Some(dir) => new JsonLinesPublisher(dir)
-      case None => (batch: Seq[Row]) => batch.foreach(r => println(r.json))
+      case Some(dir) => (new JsonLinesPublisher(dir), None)
+      case None => ((batch: Seq[Row]) => batch.foreach(r => println(r.json)), None)
     }
+  }
+
+  /** Print the run's summary line. The API's rejections count into
+    * `errors=` and, with `--errorCsv`, get their own grouped CSV
+    * (`sync-errors-<stamp>-publish`) beside the pipeline's: the pipeline's
+    * report covers only the rows it withheld from the publish. */
+  private def printReport(
+      spark: SparkSession, report: SyncReport,
+      publishErrors: Option[BoundedErrorAccumulator],
+      errorCsv: Option[(String, String)]): Unit = {
+    val rejected = publishErrors.map(_.value).filter(_.total > 0)
+    for (summary <- rejected; (dir, stamp) <- errorCsv)
+      ErrorChannel.writeCsvReport(spark, summary, dir, s"$stamp-publish")
+    println(s"published=${report.published} " +
+      s"errors=${report.errors + rejected.map(_.total).getOrElse(0L)} " +
+      s"batches=${report.batches}")
   }
 
   /** Resolved default mailbox: the flag, else the lexicographically first
@@ -186,12 +208,12 @@ object Main {
         val t = table(spark, cli.data, _: String)
         cli.cmd match {
           case "sync-customers" =>
+            val (post, publishErrors) = publisher(spark, cli, "primary_email")
+            val csv = errorCsvTarget(cli)
             val report = Pipelines.syncCustomers(
               t("customers"), cli.opts, cli.ratePerMinute,
-              math.max(1, cli.batchSize), cli.parallelism,
-              errorCsvTarget(cli))(publisher(spark, cli))
-            println(s"published=${report.published} errors=${report.errors} " +
-              s"batches=${report.batches}")
+              math.max(1, cli.batchSize), cli.parallelism, csv)(post)
+            printReport(spark, report, publishErrors, csv)
             0
           case "sync-tickets" =>
             val hsMailboxes = t("hs_mailboxes")
@@ -200,14 +222,16 @@ object Main {
                 System.err.println(s"error: $err\n$usage")
                 2
               case Right(defaultMailbox) =>
+                val (post, publishErrors) =
+                  publisher(spark, cli, "groove_ticket_number")
+                val csv = errorCsvTarget(cli)
                 Pipelines.syncTickets(
                   t("tickets"), t("messages"), t("attachments"),
                   t("groove_mailboxes"), t("groove_agents"),
                   hsMailboxes, t("hs_users"), t("hs_customers"),
                   t("existing_conversations"), defaultMailbox, cli.opts,
                   cli.ratePerMinute, math.max(1, cli.batchSize),
-                  cli.parallelism, errorCsvTarget(cli))(
-                  publisher(spark, cli)) match {
+                  cli.parallelism, csv)(post) match {
                   case Left(bad) =>
                     System.err.println("validation gate failed " +
                       "(--bypassValidation to override):")
@@ -222,8 +246,7 @@ object Main {
                         s"  ... and more (showing first $MaxErrorReportRows)")
                     1
                   case Right(report) =>
-                    println(s"published=${report.published} " +
-                      s"errors=${report.errors} batches=${report.batches}")
+                    printReport(spark, report, publishErrors, csv)
                     0
                 }
             }

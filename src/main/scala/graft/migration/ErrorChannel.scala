@@ -35,7 +35,7 @@ object ErrorChannel {
   /** The publish-pass split of a frame with `schema`: an ok row routes to
     * the post as [[ok]] would leave it (error columns dropped); an error
     * row's (error_type, error_detail) goes to `record` and is withheld.
-    * For [[graft.sources.RateLimitedSink.publishCounted]]'s `route`. */
+    * For [[graft.sources.RateLimitedSink.publish]]'s `route`. */
   def router(
       schema: StructType, record: ((String, String)) => Unit): Row => Option[Row] = {
     val t = schema.fieldIndex(ErrorType)

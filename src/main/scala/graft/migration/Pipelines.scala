@@ -89,7 +89,7 @@ object Pipelines {
     val spark = transformed.sparkSession
     val errs = new BoundedErrorAccumulator(BoundedErrorAccumulator.DefaultCap)
     spark.sparkContext.register(errs, "graft.sync.errors")
-    val (batches, published) = RateLimitedSink.publishCounted(
+    val (batches, published) = RateLimitedSink.publish(
       transformed, ratePerMinute, batchSize, parallelism,
       ErrorChannel.router(transformed.schema, (e: (String, String)) => errs.add(e)))(post)
     val summary = errs.value

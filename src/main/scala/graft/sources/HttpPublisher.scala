@@ -1,9 +1,6 @@
 package graft.sources
 
-import scala.jdk.CollectionConverters._
-
-import org.apache.spark.sql.{DataFrame, Row}
-import org.apache.spark.util.CollectionAccumulator
+import org.apache.spark.sql.Row
 
 /** K1/K2 default HTTP publisher — the reference's per-record REST publish
   * with ApiException capture (TicketPublisher.php:30-91,
@@ -31,16 +28,21 @@ import org.apache.spark.util.CollectionAccumulator
   *    message with the record identifier as the detail
   *    (TicketPublisher.php:62, 64-76).
   *
+  * Replay key: with `idCol`, every POST of a record — its retries and a
+  * rerun of the same window — carries `Idempotency-Key: <idCol value>`,
+  * so a service that honors the header applies the record once. A null id
+  * sends no header; without `idCol` the requests carry no extra header.
+  * A service that ignores the header still sees every replayed POST; the
+  * reference's guard there is the duplicate probe (`checkDuplicates`,
+  * TicketProcessor.php:353-373).
+  *
   * The captured pairs convert to the standard error channel
   * (`error_type`/`error_detail`), so `ErrorChannel.groupedReport` /
   * `writeCsvReport` produce exactly the reference's grouped CSV
-  * (APIHelper.php:241-261) with no extra plumbing.
-  *
-  * Scale: the accumulator carries only FAILED records' (type, detail)
-  * strings — the expected-case volume is tiny; a pipeline expecting mass
-  * failure should quarantine pre-publish via ErrorChannel instead. Rate
-  * limiting stays the sink's job (token bucket per partition); this class
-  * only posts and records.
+  * (APIHelper.php:241-261) with no extra plumbing. Record them into a
+  * [[BoundedErrorAccumulator]] to bound the driver's state when a down
+  * endpoint fails every record. Rate limiting stays the sink's job (token
+  * bucket per partition); this class only posts and records.
   */
 final class HttpPublisher(
     endpoint: String,
@@ -51,63 +53,18 @@ final class HttpPublisher(
     readTimeoutMs: Int = 30000,
     maxRetryAfterMs: Long = 4000L) extends (Seq[Row] => Unit) with Serializable {
 
-  /** Accumulator-backed form (the classic foreachPartition path): the
-    * captured pairs ride a driver-side CollectionAccumulator. The DSv2
-    * write path ([[graft.sources.v2.HttpPublishSource]]) passes a
-    * task-local buffer instead and ships the pairs through its
-    * WriterCommitMessage — same capture logic, commit-protocol
-    * transport. */
-  def this(
-      endpoint: String,
-      errors: CollectionAccumulator[(String, String)],
-      idCol: Option[String],
-      maxRetries: Int) =
-    this(endpoint, (e: (String, String)) => errors.add(e), idCol, maxRetries)
-
-  def this(
-      endpoint: String,
-      errors: CollectionAccumulator[(String, String)]) =
-    this(endpoint, (e: (String, String)) => errors.add(e))
-
-
-  private val core = new HttpPostCore(endpoint, record, maxRetries,
-    connectTimeoutMs, readTimeoutMs, maxRetryAfterMs)
-
   override def apply(batch: Seq[Row]): Unit = batch.foreach(postOne)
 
-  /** The record identifier in error details (the reference cites
-    * "(Groove ticket #N)", TicketPublisher.php:56). */
-  private def identify(row: Row): String =
-    idCol.map(c => s"($c=${row.getAs[Any](c)})")
-      .getOrElse(s"(record ${row.json.take(80)})")
-
-  private def postOne(row: Row): Unit = core.post(row.json, identify(row))
-}
-
-/** The transport half of the publisher — one JSON body POSTed with the
-  * full retry/Retry-After/ApiException-capture contract documented at
-  * [[HttpPublisher]], factored row-representation-free so BOTH publish
-  * surfaces share it: the classic Row-based `foreachPartition` path and
-  * the DSv2 InternalRow write path
-  * ([[graft.sources.v2.HttpPublishSource]]), whose rows never convert
-  * to external Rows. */
-private[sources] final class HttpPostCore(
-    endpoint: String,
-    record: ((String, String)) => Unit,
-    maxRetries: Int = 3,
-    connectTimeoutMs: Int = 10000,
-    readTimeoutMs: Int = 30000,
-    maxRetryAfterMs: Long = 4000L) extends Serializable {
-
-  /** POST `bodyJson`; `ident` is the record identifier used in captured
-    * error details; `headers` are extra request headers (the DSv2 path's
-    * optional Idempotency-Key rides here — empty for the classic path,
-    * keeping its requests byte-identical). Never throws (capture
-    * contract). */
-  def post(
-      bodyJson: String, ident: String,
-      headers: Seq[(String, String)] = Nil): Unit = {
-    val body = bodyJson.getBytes("UTF-8")
+  /** POST one record; never throws (capture contract). */
+  private def postOne(row: Row): Unit = {
+    val json = row.json
+    val id = idCol.map(c => row.getAs[Any](c))
+    // the record identifier in error details (the reference cites
+    // "(Groove ticket #N)", TicketPublisher.php:56)
+    val ident = idCol.map(c => s"($c=${id.get})")
+      .getOrElse(s"(record ${json.take(80)})")
+    val idempotencyKey = id.flatMap(Option(_)).map(String.valueOf)
+    val body = json.getBytes("UTF-8")
     var attempt = 0
     try {
       while (true) {
@@ -115,7 +72,7 @@ private[sources] final class HttpPostCore(
           .openConnection().asInstanceOf[java.net.HttpURLConnection]
         conn.setRequestMethod("POST")
         conn.setRequestProperty("Content-Type", "application/json")
-        headers.foreach { case (k, v) => conn.setRequestProperty(k, v) }
+        idempotencyKey.foreach(conn.setRequestProperty("Idempotency-Key", _))
         conn.setDoOutput(true)
         conn.setConnectTimeout(connectTimeoutMs)
         conn.setReadTimeout(readTimeoutMs)
@@ -206,47 +163,6 @@ object HttpPublisher {
       math.max(0L, java.time.Duration.between(
         java.time.Instant.now(), at.toInstant).toMillis)
     }.toOption)
-
-  /** Publish `df` to `endpoint` through [[RateLimitedSink.publishCounted]]
-    * with the default HTTP publisher. Returns (batches, rowsPosted, errors)
-    * where `errors` is an `error_type`/`error_detail` DataFrame ready for
-    * `ErrorChannel.groupedReport`/`writeCsvReport` (the reference's
-    * end-of-run CSV export, TicketPublisher.php:80-86). `rowsPosted`
-    * counts attempts; failed records appear in `errors` (one row per
-    * captured pair, as in `$errorMapping`).
-    *
-    * Driver-memory bound (r17 verdict #1, applied to the classic path):
-    * the accumulator is [[BoundedErrorAccumulator]] — exact per-TYPE
-    * counts (bounded by distinct error types, not failed rows) plus at
-    * most `maxErrorSamples` sampled pairs. When a type overflows the
-    * sample cap, `errors` carries its sampled rows plus ONE flagged
-    * overflow row stating the exact count — a down endpoint failing
-    * every record of a 100 TB publish costs the driver the cap, not one
-    * pair per row. A pipeline needing complete per-record detail at that
-    * volume should use the DSv2 path (graft-http), whose spool keeps it
-    * executor-side. */
-  def publish(
-      df: DataFrame,
-      endpoint: String,
-      ratePerMinute: Int,
-      batchSize: Int,
-      parallelism: Int,
-      idCol: Option[String] = None,
-      maxRetries: Int = 3,
-      maxErrorSamples: Int = BoundedErrorAccumulator.DefaultCap): (Long, Long, DataFrame) = {
-    val spark = df.sparkSession
-    val acc = new BoundedErrorAccumulator(maxErrorSamples)
-    spark.sparkContext.register(acc, "graft.publish.errors")
-    val (batches, rows) = RateLimitedSink.publishCounted(
-      df, ratePerMinute, batchSize, parallelism)(
-      new HttpPublisher(endpoint, (e: (String, String)) => acc.add(e),
-        idCol, maxRetries))
-    import spark.implicits._
-    val errDf = acc.value.rows
-      .toDF(graft.migration.ErrorChannel.ErrorType,
-        graft.migration.ErrorChannel.ErrorDetail)
-    (batches, rows, errDf)
-  }
 }
 
 /** Value of [[BoundedErrorAccumulator]]: at most `cap` first-seen pairs
@@ -273,16 +189,15 @@ final case class BoundedErrors(
 }
 
 object BoundedErrorAccumulator {
-  /** Sample cap of the driver-side error accumulators: the classic
-    * publisher's (`HttpPublisher.publish`) and the sync pipelines'
-    * error channel (`graft.migration.Pipelines`). */
+  /** Sample cap of the driver-side error accumulators: the sync
+    * pipelines' error channel (`graft.migration.Pipelines`) and the CLI's
+    * publish errors (`graft.Main`). */
   val DefaultCap: Int = 10000
 }
 
-/** Driver-bounded replacement for the publish paths' historical
-  * CollectionAccumulator (r17 verdict #1): `add` keeps exact counts per
-  * error TYPE (a handful of strings — HTTP codes and API messages) and
-  * samples at most `cap` (type, detail) pairs, so driver state no longer
+/** Driver-bounded error accumulator for the publish path: `add` keeps
+  * exact counts per error TYPE (a handful of strings — HTTP codes and API
+  * messages) and samples at most `cap` (type, detail) pairs, so driver state no longer
   * scales with failed-row count. Merge order across tasks is
   * nondeterministic (as with any accumulator), so WHICH pairs survive
   * the cap is not pinned — only that ≤ cap do and counts stay exact. */

@@ -44,19 +44,10 @@ object RateLimitedSink {
   }
 
   /** Publish `df` through `post` at ≤ ratePerMinute calls/min aggregate.
-    * Returns the number of batches posted (driver-side metric, A2). */
-  def publish(
-      df: DataFrame,
-      ratePerMinute: Int,
-      batchSize: Int,
-      parallelism: Int)(
-      post: Seq[Row] => Unit): Long =
-    publishCounted(df, ratePerMinute, batchSize, parallelism)(post)._1
-
-  /** As [[publish]], returning (batches, rows) — both counted by the
-    * publish pass itself via accumulators, so the row count is exactly
-    * what was posted (a separate count() would re-execute the pipeline,
-    * which over a live source may no longer agree).
+    * Returns (batches, rows), both counted by the publish pass itself via
+    * accumulators, so the row count is exactly what was posted (a
+    * separate count() would re-execute the pipeline, which over a live
+    * source may no longer agree).
     *
     * `route` maps each row of `df` to the row to post, or to None to
     * withhold it; batching, the token bucket and both counters see only
@@ -64,7 +55,7 @@ object RateLimitedSink {
     * error channel, [[graft.migration.ErrorChannel.router]]) records the
     * withheld ones from inside `route`, so publish and quarantine share
     * this one pass. */
-  def publishCounted(
+  def publish(
       df: DataFrame,
       ratePerMinute: Int,
       batchSize: Int,

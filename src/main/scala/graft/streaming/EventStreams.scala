@@ -162,27 +162,29 @@ object EventStreams {
     * dropDuplicatesWithinWatermark contract vs a batch distinct. */
   def dedupReplayToTable(spark: SparkSession, dir: String, tableName: String,
       conf: StreamRunConf = StreamRunConf()): DataFrame = {
-    import java.nio.file.{Files, Paths}
+    import java.nio.file.Files
     val ev = graft.sources.Tables(spark, dir).events
     val dups = ev.filter(pmod(col("event_id"), lit(7)) === 0)
-    val tmp = Files.createTempDirectory("graft-dedup-tmp").toString
-    ev.unionAll(dups)
-      .unionAll(dups.filter(pmod(col("event_id"), lit(21)) === 0))
-      .coalesce(1).write.mode("overwrite").parquet(tmp)
-    val streamDir = Files.createTempDirectory("graft-dedup-stream").toString
-    val part = Option(new java.io.File(tmp).listFiles)
-      .getOrElse(Array.empty).find(_.getName.endsWith(".parquet"))
-      .getOrElse(throw new IllegalStateException("no dedup fixture part file"))
-    Files.move(part.toPath, Paths.get(streamDir, "events.parquet"))
-    withStreamingShufflePartitions(spark, conf.shufflePartitions) {
-      val q = dedupedEventStream(spark, streamDir)
-        .select(col("event_id"), col("ts"), col("user_id"),
-          col("event_type"), col("value"))
-        .writeStream.format("memory").queryName(tableName)
-        .outputMode("append").options(conf.options)
-        .trigger(Trigger.AvailableNow()).start()
-      q.awaitTermination()
-    }
+    val tmp = Files.createTempDirectory("graft-dedup-tmp")
+    val streamDir = Files.createTempDirectory("graft-dedup-stream")
+    try {
+      ev.unionAll(dups)
+        .unionAll(dups.filter(pmod(col("event_id"), lit(21)) === 0))
+        .coalesce(1).write.mode("overwrite").parquet(tmp.toString)
+      val part = Option(tmp.toFile.listFiles)
+        .getOrElse(Array.empty).find(_.getName.endsWith(".parquet"))
+        .getOrElse(throw new IllegalStateException("no dedup fixture part file"))
+      Files.move(part.toPath, streamDir.resolve("events.parquet"))
+      withStreamingShufflePartitions(spark, conf.shufflePartitions) {
+        val q = dedupedEventStream(spark, streamDir.toString)
+          .select(col("event_id"), col("ts"), col("user_id"),
+            col("event_type"), col("value"))
+          .writeStream.format("memory").queryName(tableName)
+          .outputMode("append").options(conf.options)
+          .trigger(Trigger.AvailableNow()).start()
+        q.awaitTermination()
+      }
+    } finally deleteDirs(tmp, streamDir) // the memory sink holds the output
     spark.table(tableName)
   }
 
@@ -515,6 +517,59 @@ object EventStreams {
       joinType)
   }
 
+  /** Run `f` over the view/purchase slice of `events` rendered as TWO
+    * mtime-ordered parquet batch files (real events, then the sentinel
+    * pair 2×maxDelay past the real maximum on BOTH sides — the global
+    * watermark is the min across inputs) and opened as a throttled file
+    * stream: the bounded-replay drain device every outer interval-join
+    * driver needs, extracted once. Sentinel rows carry user_id = −1;
+    * drivers filter them from the output. `f` runs its query to
+    * termination into a memory sink, so the rendered dirs are deleted
+    * once it returns or throws. */
+  private def withViewPurchaseStream[T](
+      spark: SparkSession, dir: String, maxDelayMinutes: Int)(
+      f: DataFrame => T): T = {
+    import java.nio.file.Files
+    val base = graft.sources.Tables(spark, dir).events
+      .filter(col("event_type").isin("view", "purchase"))
+      .select(col("event_id"), col("user_id"), col("event_type"),
+        col("ts").cast("timestamp").as("ts"))
+    val streamDir = Files.createTempDirectory("graft-vconv-src")
+    val tmp = Files.createTempDirectory("graft-vconv-tmp")
+    val tmp2 = Files.createTempDirectory("graft-vconv-tmp2")
+    try {
+      base.coalesce(1).write.mode("overwrite").parquet(tmp.toString)
+      val part0 = Option(tmp.toFile.listFiles).getOrElse(Array.empty)
+        .find(_.getName.endsWith(".parquet"))
+        .getOrElse(throw new IllegalStateException("no rendered events file"))
+      Files.move(part0.toPath, streamDir.resolve("batch00.parquet"))
+      require(streamDir.resolve("batch00.parquet").toFile
+        .setLastModified(60000L), "could not stamp batch 0")
+      val maxTs = base.agg(org.apache.spark.sql.functions.max(col("ts")))
+        .head().getTimestamp(0)
+      val sentinelTs = new java.sql.Timestamp(
+        maxTs.getTime + 2L * maxDelayMinutes * 60000L)
+      import spark.implicits._
+      val sentinel = Seq(
+        (-1L, -1L, "view", sentinelTs),
+        (-2L, -1L, "purchase", sentinelTs))
+        .toDF("event_id", "user_id", "event_type", "ts")
+      sentinel.coalesce(1).write.mode("overwrite").parquet(tmp2.toString)
+      val part1 = Option(tmp2.toFile.listFiles).getOrElse(Array.empty)
+        .find(_.getName.endsWith(".parquet"))
+        .getOrElse(throw new IllegalStateException("no sentinel file"))
+      Files.move(part1.toPath, streamDir.resolve("batch01.parquet"))
+      require(streamDir.resolve("batch01.parquet").toFile
+        .setLastModified(120000L), "could not stamp the sentinel batch")
+      f(spark.readStream.schema(base.schema)
+        .option("maxFilesPerTrigger", 1).parquet(streamDir.toString))
+    } finally deleteDirs(streamDir, tmp, tmp2)
+  }
+
+  /** Delete the local dirs a stream driver rendered its input into. */
+  private def deleteDirs(dirs: java.nio.file.Path*): Unit =
+    dirs.foreach(d => org.apache.hadoop.fs.FileUtil.fullyDelete(d.toFile))
+
   /** Drive [[leftOuterIntervalJoinStreams]] end-to-end over the events
     * table: views left-outer-joined to the purchases that followed
     * within `maxDelayMinutes` — every view surfaces, converted ones
@@ -526,71 +581,28 @@ object EventStreams {
     * as epoch MICROS (unix_micros) — the join matched at micros
     * precision, and a seconds-truncated output would let a boundary
     * match diverge from a micros-exact oracle. */
-  /** The view/purchase slice of `events` rendered as TWO mtime-ordered
-    * parquet batch files (real events, then the sentinel pair 2×maxDelay
-    * past the real maximum on BOTH sides — the global watermark is the
-    * min across inputs) and opened as a throttled file stream: the
-    * bounded-replay drain device every outer interval-join driver needs,
-    * extracted once. Sentinel rows carry user_id = −1; drivers filter
-    * them from the output. */
-  private def viewPurchaseStream(
-      spark: SparkSession, dir: String, maxDelayMinutes: Int): DataFrame = {
-    import java.nio.file.{Files, Paths}
-    val base = graft.sources.Tables(spark, dir).events
-      .filter(col("event_type").isin("view", "purchase"))
-      .select(col("event_id"), col("user_id"), col("event_type"),
-        col("ts").cast("timestamp").as("ts"))
-    val streamDir = Files.createTempDirectory("graft-vconv-src").toString
-    val tmp = Files.createTempDirectory("graft-vconv-tmp").toString
-    base.coalesce(1).write.mode("overwrite").parquet(tmp)
-    val part0 = Option(new java.io.File(tmp).listFiles).getOrElse(Array.empty)
-      .find(_.getName.endsWith(".parquet"))
-      .getOrElse(throw new IllegalStateException("no rendered events file"))
-    Files.move(part0.toPath, Paths.get(streamDir, "batch00.parquet"))
-    require(new java.io.File(streamDir, "batch00.parquet")
-      .setLastModified(60000L), "could not stamp batch 0")
-    val maxTs = base.agg(org.apache.spark.sql.functions.max(col("ts")))
-      .head().getTimestamp(0)
-    val sentinelTs = new java.sql.Timestamp(
-      maxTs.getTime + 2L * maxDelayMinutes * 60000L)
-    import spark.implicits._
-    val sentinel = Seq(
-      (-1L, -1L, "view", sentinelTs),
-      (-2L, -1L, "purchase", sentinelTs))
-      .toDF("event_id", "user_id", "event_type", "ts")
-    val tmp2 = Files.createTempDirectory("graft-vconv-tmp2").toString
-    sentinel.coalesce(1).write.mode("overwrite").parquet(tmp2)
-    val part1 = Option(new java.io.File(tmp2).listFiles).getOrElse(Array.empty)
-      .find(_.getName.endsWith(".parquet"))
-      .getOrElse(throw new IllegalStateException("no sentinel file"))
-    Files.move(part1.toPath, Paths.get(streamDir, "batch01.parquet"))
-    require(new java.io.File(streamDir, "batch01.parquet")
-      .setLastModified(120000L), "could not stamp the sentinel batch")
-    spark.readStream.schema(base.schema)
-      .option("maxFilesPerTrigger", 1).parquet(streamDir)
-  }
-
   def viewConversionsToTable(
       spark: SparkSession, dir: String, tableName: String,
       maxDelayMinutes: Int = 60,
       conf: StreamRunConf = StreamRunConf()): DataFrame = {
-    val incoming = viewPurchaseStream(spark, dir, maxDelayMinutes)
-    val views = incoming.filter(col("event_type") === "view")
-      .select(col("event_id").as("view_id"), col("user_id"), col("ts"))
-    val purchases = incoming.filter(col("event_type") === "purchase")
-      .select(col("event_id").as("purchase_id"), col("user_id"), col("ts"))
-    withStreamingShufflePartitions(spark, conf.shufflePartitions) {
-      val q = leftOuterIntervalJoinStreams(
-          views, purchases, "user_id", "ts", maxDelayMinutes)
-        .select(col("l_user_id").as("user_id"),
-          col("l_view_id").as("view_id"),
-          col("l_ts").as("view_ts"),
-          col("r_purchase_id").as("purchase_id"),
-          col("r_ts").as("purchase_ts"))
-        .writeStream.format("memory").queryName(tableName)
-        .outputMode("append").options(conf.options)
-        .trigger(Trigger.AvailableNow()).start()
-      q.awaitTermination()
+    withViewPurchaseStream(spark, dir, maxDelayMinutes) { incoming =>
+      val views = incoming.filter(col("event_type") === "view")
+        .select(col("event_id").as("view_id"), col("user_id"), col("ts"))
+      val purchases = incoming.filter(col("event_type") === "purchase")
+        .select(col("event_id").as("purchase_id"), col("user_id"), col("ts"))
+      withStreamingShufflePartitions(spark, conf.shufflePartitions) {
+        val q = leftOuterIntervalJoinStreams(
+            views, purchases, "user_id", "ts", maxDelayMinutes)
+          .select(col("l_user_id").as("user_id"),
+            col("l_view_id").as("view_id"),
+            col("l_ts").as("view_ts"),
+            col("r_purchase_id").as("purchase_id"),
+            col("r_ts").as("purchase_ts"))
+          .writeStream.format("memory").queryName(tableName)
+          .outputMode("append").options(conf.options)
+          .trigger(Trigger.AvailableNow()).start()
+        q.awaitTermination()
+      }
     }
     spark.table(tableName)
       .filter(col("user_id") >= 0)
@@ -611,24 +623,25 @@ object EventStreams {
       spark: SparkSession, dir: String, tableName: String,
       maxDelayMinutes: Int = 60,
       conf: StreamRunConf = StreamRunConf()): DataFrame = {
-    val incoming = viewPurchaseStream(spark, dir, maxDelayMinutes)
-    val views = incoming.filter(col("event_type") === "view")
-      .select(col("event_id").as("view_id"), col("user_id"), col("ts"))
-    val purchases = incoming.filter(col("event_type") === "purchase")
-      .select(col("event_id").as("purchase_id"), col("user_id"), col("ts"))
-    withStreamingShufflePartitions(spark, conf.shufflePartitions) {
-      val q = fullOuterIntervalJoinStreams(
-          views, purchases, "user_id", "ts", maxDelayMinutes)
-        .select(
-          coalesce(col("l_user_id"), col("r_user_id")).as("user_id"),
-          col("l_view_id").as("view_id"),
-          col("l_ts").as("view_ts"),
-          col("r_purchase_id").as("purchase_id"),
-          col("r_ts").as("purchase_ts"))
-        .writeStream.format("memory").queryName(tableName)
-        .outputMode("append").options(conf.options)
-        .trigger(Trigger.AvailableNow()).start()
-      q.awaitTermination()
+    withViewPurchaseStream(spark, dir, maxDelayMinutes) { incoming =>
+      val views = incoming.filter(col("event_type") === "view")
+        .select(col("event_id").as("view_id"), col("user_id"), col("ts"))
+      val purchases = incoming.filter(col("event_type") === "purchase")
+        .select(col("event_id").as("purchase_id"), col("user_id"), col("ts"))
+      withStreamingShufflePartitions(spark, conf.shufflePartitions) {
+        val q = fullOuterIntervalJoinStreams(
+            views, purchases, "user_id", "ts", maxDelayMinutes)
+          .select(
+            coalesce(col("l_user_id"), col("r_user_id")).as("user_id"),
+            col("l_view_id").as("view_id"),
+            col("l_ts").as("view_ts"),
+            col("r_purchase_id").as("purchase_id"),
+            col("r_ts").as("purchase_ts"))
+          .writeStream.format("memory").queryName(tableName)
+          .outputMode("append").options(conf.options)
+          .trigger(Trigger.AvailableNow()).start()
+        q.awaitTermination()
+      }
     }
     spark.table(tableName)
       .filter(col("user_id") >= 0)

@@ -1,6 +1,7 @@
 package graft
 
 import java.io.File
+import scala.jdk.CollectionConverters._
 
 import graft.migration.{Fixtures, Pipelines, SyncOptions}
 
@@ -181,6 +182,54 @@ class MainSpec extends SparkSpec {
     assert(rcOk === 0)
     assert(buf.toString("UTF-8").contains(
       s"published=0 errors=${Fixtures.tickets.size} "))
+  }
+
+  test("sync-customers --apiUrl: the API's rejections count into the " +
+    "printed errors and get their own grouped --errorCsv report") {
+    import com.sun.net.httpserver.{HttpExchange, HttpHandler, HttpServer}
+    val posts = new java.util.concurrent.atomic.AtomicInteger()
+    val server = HttpServer.create(
+      new java.net.InetSocketAddress("127.0.0.1", 0), 0)
+    server.createContext("/customers", new HttpHandler {
+      override def handle(ex: HttpExchange): Unit = {
+        val body = new String(ex.getRequestBody.readAllBytes(), "UTF-8")
+        posts.incrementAndGet()
+        if (body.contains("cher@music.com")) {
+          val err = ("""{"message":"Validation failed","errors":[{"property":""" +
+            """"emails","message":"email already exists","value":"x"}]}""")
+            .getBytes("UTF-8")
+          ex.sendResponseHeaders(400, err.length)
+          ex.getResponseBody.write(err)
+        } else ex.sendResponseHeaders(201, -1)
+        ex.close()
+      }
+    })
+    server.start()
+    try {
+      val csvDir = freshOut()
+      val buf = new java.io.ByteArrayOutputStream()
+      val rc = Console.withOut(new java.io.PrintStream(buf)) {
+        Main.run(Array("sync-customers", s"--data=$dataDir",
+          s"--apiUrl=http://127.0.0.1:${server.getAddress.getPort}/customers",
+          s"--errorCsv=$csvDir"), spark)
+      }
+      assert(rc === 0)
+      val published = Fixtures.customers.size - 1 // the no-email row is withheld
+      assert(posts.get === published)
+      // 1 quarantined by the pipeline + 1 rejected by the API
+      assert(buf.toString("UTF-8").contains(
+        s"published=$published errors=2 "), buf.toString("UTF-8"))
+      val reports = new File(csvDir).listFiles().map(_.getName).sorted.toSeq
+      assert(reports.size === 2 && reports(1) === s"${reports(0)}-publish",
+        s"one pipeline report and one publish report: $reports")
+      val csv = new File(csvDir, reports(1)).listFiles()
+        .filter(_.getName.endsWith(".csv")).toSeq
+      assert(csv.size === 1)
+      assert(java.nio.file.Files.readAllLines(csv.head.toPath).asScala.toSeq === Seq(
+        "error_type,n,details",
+        "email already exists,1,Error: [emails] email already exists " +
+          "(primary_email=cher@music.com)"))
+    } finally server.stop(0)
   }
 
   test("flag parsing maps 1:1 onto SyncOptions") {

@@ -216,9 +216,15 @@ class PipelinesSpec extends SparkSpec {
         }
       }
     })
+    // every conversation POST's body with its Idempotency-Key header
+    val keyed = java.util.Collections.synchronizedList(
+      new java.util.ArrayList[(String, Option[String])]())
     server.createContext("/hs", new HttpHandler { // publish endpoint
       override def handle(ex: HttpExchange): Unit = {
-        published.add(new String(ex.getRequestBody.readAllBytes(), "UTF-8"))
+        val body = new String(ex.getRequestBody.readAllBytes(), "UTF-8")
+        published.add(body)
+        keyed.add((body,
+          Option(ex.getRequestHeaders.getFirst("Idempotency-Key"))))
         respond(ex, 201, Array.empty)
       }
     })
@@ -258,6 +264,14 @@ class PipelinesSpec extends SparkSpec {
           idCol = Some("groove_ticket_number"))).toOption.get
 
       assert(report.published.toInt === expected.size)
+      // each POST carries its record's replay key: the ticket number
+      val TicketNumber = "\"groove_ticket_number\":(\\d+)".r.unanchored
+      assert(keyed.size === expected.size)
+      keyed.asScala.foreach { case (body, key) =>
+        val number = body match { case TicketNumber(n) => Some(n); case _ => None }
+        assert(number.nonEmpty && key === number,
+          s"Idempotency-Key $key on the POST of ticket $number")
+      }
       // the fetched-payload checkpoint is released once the publish ends
       assert((sc.getPersistentRDDs.keySet -- persistedBefore).isEmpty,
         s"syncTickets left RDDs persisted: ${sc.getPersistentRDDs.keySet -- persistedBefore}")

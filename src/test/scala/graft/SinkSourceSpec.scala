@@ -3,8 +3,9 @@ package graft
 import java.util.concurrent.atomic.AtomicLong
 import scala.jdk.CollectionConverters._
 import org.apache.spark.sql.functions._
-import graft.sources.{PagedSource, RateLimitedSink}
-import graft.migration.Fixtures
+import org.apache.spark.sql.{DataFrame, Row}
+import graft.sources.{BoundedErrorAccumulator, HttpPublisher, PagedSource, RateLimitedSink}
+import graft.migration.{ErrorChannel, Fixtures}
 
 /** Shared mutable recorder for the sink test — local-mode executors live in
   * this JVM, so a static AtomicLong observes executor-side calls. */
@@ -13,7 +14,37 @@ object SinkRecorder {
   val rows = new AtomicLong(0)
 }
 
+/** A `post` that forwards the first batch of its task and then fails it:
+  * a publish that crashes mid-window. */
+final class FailAfterFirstBatch(post: Seq[Row] => Unit)
+    extends (Seq[Row] => Unit) with Serializable {
+  private var posted = 0
+  override def apply(batch: Seq[Row]): Unit = {
+    if (posted > 0) throw new IllegalStateException("publish crashed mid-window")
+    posted += 1
+    post(batch)
+  }
+}
+
 class SinkSourceSpec extends SparkSpec {
+
+  /** `df` POSTed to `endpoint` through the publish path the sync calls
+    * take: [[RateLimitedSink.publish]] over an [[HttpPublisher]] whose
+    * failures land in a registered [[BoundedErrorAccumulator]]. Returns
+    * (batches, rows, the captured errors as an error-channel frame). */
+  private def httpPublish(
+      df: DataFrame, endpoint: String, batchSize: Int, parallelism: Int,
+      idCol: Option[String], maxRetries: Int,
+      maxErrorSamples: Int = BoundedErrorAccumulator.DefaultCap): (Long, Long, DataFrame) = {
+    val acc = new BoundedErrorAccumulator(maxErrorSamples)
+    spark.sparkContext.register(acc, "publish-errors")
+    val (batches, rows) = RateLimitedSink.publish(
+      df, ratePerMinute = 1000000, batchSize, parallelism)(
+      new HttpPublisher(endpoint, acc.add _, idCol, maxRetries))
+    import spark.implicits._
+    (batches, rows,
+      acc.value.rows.toDF(ErrorChannel.ErrorType, ErrorChannel.ErrorDetail))
+  }
 
   test("token bucket sleeps only when the window is exhausted (A6)") {
     var clock = 0L
@@ -32,12 +63,13 @@ class SinkSourceSpec extends SparkSpec {
   test("publish: batched posts through foreachPartition, counts conserved") {
     SinkRecorder.batches.set(0); SinkRecorder.rows.set(0)
     val df = Fixtures.customersDf(spark)
-    val n = RateLimitedSink.publish(df, ratePerMinute = 100000,
+    val (n, rows) = RateLimitedSink.publish(df, ratePerMinute = 100000,
       batchSize = 3, parallelism = 2) { batch =>
       SinkRecorder.batches.incrementAndGet()
       SinkRecorder.rows.addAndGet(batch.size)
     }
     assert(SinkRecorder.rows.get() === df.count())
+    assert(rows === df.count())
     assert(SinkRecorder.batches.get() === n)
     assert(n >= 3) // 8 rows, batch 3, 2 partitions => at least 3 batches
   }
@@ -448,8 +480,7 @@ class SinkSourceSpec extends SparkSpec {
 
   test("default HTTP publisher: per-record POST, ApiException capture, grouped report, X16 parity") {
     import com.sun.net.httpserver.{HttpExchange, HttpHandler, HttpServer}
-    import graft.migration.{ErrorChannel, MigrationFunctions}
-    import graft.sources.HttpPublisher
+    import graft.migration.MigrationFunctions
     val posted = java.util.Collections.synchronizedList(new java.util.ArrayList[String]())
     val flakyOnce = new java.util.concurrent.atomic.AtomicBoolean(true)
     val apiErrorBody =
@@ -485,9 +516,9 @@ class SinkSourceSpec extends SparkSpec {
         (1001L, "Printer on fire"), (1002L, ""), (1003L, "Flaky"), (1004L, "Down"))
         .toDF("groove_ticket_number", "subject")
 
-      val (batches, rows, errs) = HttpPublisher.publish(
-        conversations, endpoint, ratePerMinute = 100000, batchSize = 2,
-        parallelism = 2, idCol = Some("groove_ticket_number"), maxRetries = 1)
+      val (batches, rows, errs) = httpPublish(
+        conversations, endpoint, batchSize = 2, parallelism = 2,
+        idCol = Some("groove_ticket_number"), maxRetries = 1)
       assert(rows === 4 && batches >= 2)
       // one POST per record: 4 records + 1 flaky retry + 1 Down retry = 6
       assert(posted.size === 6, s"got ${posted.size} posts: $posted")
@@ -525,7 +556,6 @@ class SinkSourceSpec extends SparkSpec {
   }
 
   test("Retry-After parsing: delta-seconds, HTTP-date, garbage") {
-    import graft.sources.HttpPublisher
     assert(HttpPublisher.parseRetryAfterMs("120") === Some(120000L))
     assert(HttpPublisher.parseRetryAfterMs(" 0 ") === Some(0L))
     // a past HTTP-date means "retry now", never negative
@@ -546,7 +576,6 @@ class SinkSourceSpec extends SparkSpec {
 
   test("publisher clamps Retry-After: a day-long hold fails fast into the error channel") {
     import com.sun.net.httpserver.{HttpExchange, HttpHandler, HttpServer}
-    import graft.sources.HttpPublisher
     val hits = new AtomicLong(0)
     val server = HttpServer.create(new java.net.InetSocketAddress("127.0.0.1", 0), 0)
     server.createContext("/conv", new HttpHandler {
@@ -563,9 +592,9 @@ class SinkSourceSpec extends SparkSpec {
       import spark.implicits._
       val df = Seq((1L, "held")).toDF("id", "subject")
       val t0 = System.nanoTime()
-      val (_, rows, errs) = HttpPublisher.publish(
-        df, endpoint, ratePerMinute = 100000, batchSize = 1,
-        parallelism = 1, idCol = Some("id"), maxRetries = 3)
+      val (_, rows, errs) = httpPublish(
+        df, endpoint, batchSize = 1, parallelism = 1,
+        idCol = Some("id"), maxRetries = 3)
       val elapsedMs = (System.nanoTime() - t0) / 1000000L
       // returned within the clamp (not 86400 s), gave up on first response
       assert(elapsedMs < 30000L, s"took ${elapsedMs}ms")
@@ -845,265 +874,8 @@ class SinkSourceSpec extends SparkSpec {
       (200L until 220L) ++ (300L until 320L)).map(identity))
   }
 
-  test("DSv2 HTTP publish: planner-demanded parallelism, per-record " +
-    "POST parity, error spool through commit, and the batch-id crash " +
-    "matrix (replay posts ZERO requests)") {
-    import com.sun.net.httpserver.{HttpExchange, HttpHandler, HttpServer}
-    import graft.migration.ErrorChannel
-    import graft.sources.v2.HttpPublishSource
-    import spark.implicits._
-    val posted = java.util.Collections.synchronizedList(
-      new java.util.ArrayList[String]())
-    val server = HttpServer.create(
-      new java.net.InetSocketAddress("127.0.0.1", 0), 0)
-    server.createContext("/pub", new HttpHandler {
-      override def handle(ex: HttpExchange): Unit = {
-        val body = new String(ex.getRequestBody.readAllBytes(), "UTF-8")
-        posted.add(body)
-        def respond(code: Int, b: Array[Byte]): Unit = {
-          if (b.isEmpty) ex.sendResponseHeaders(code, -1)
-          else { ex.sendResponseHeaders(code, b.length)
-                 ex.getResponseBody.write(b) }
-          ex.close()
-        }
-        if (body.contains("\"subject\":\"\""))
-          respond(400,
-            """{"errors":[{"property":"subject","message":"may not be empty","value":null}]}"""
-              .getBytes("UTF-8"))
-        else respond(201, Array.empty)
-      }
-    })
-    server.start()
-    try {
-      val endpoint = s"http://127.0.0.1:${server.getAddress.getPort}/pub"
-      val ledger = java.nio.file.Files
-        .createTempDirectory("graft-http-ledger").toString
-      val df = Seq((1001L, "Printer on fire"), (1002L, ""),
-        (1003L, "Paper jam"), (1004L, "Toner low")).toDF("id", "subject")
-      def write(extra: (String, String)*): Unit = {
-        var w = df.write.format("graft-http")
-          .option("endpoint", endpoint)
-          .option("rateperminute", "100000")
-          .option("batchsize", "2")
-          .option("parallelism", "2")
-          .option("idcol", "id")
-          .option("maxretries", "1")
-        extra.foreach { case (k, v) => w = w.option(k, v) }
-        w.mode("append").save(ledger)
-      }
-      // ---- plain write: every record posts exactly once ----
-      write()
-      assert(posted.size === 4, s"got ${posted.size}: $posted")
-      assert(posted.asScala.exists(b =>
-        b.contains("\"id\":1001") && b.contains("Printer on fire")))
-      // planner-demanded parallelism: the writer never coalesced on the
-      // caller's side, yet the fan-out was 2 — implicitly proven by the
-      // write succeeding with ratePerMinute split across partitions;
-      // the error spool carries the 400-failed record through commit
-      val errs1 = HttpPublishSource.errors(spark, ledger)
-      val e1 = errs1.orderBy(ErrorChannel.ErrorType).collect()
-      assert(e1.length === 1 && e1(0).getString(0) === "may not be empty",
-        e1.mkString("; "))
-      assert(e1(0).getString(1).contains("[subject] may not be empty (id=1002)"),
-        e1(0).getString(1))
-      // the grouped report consumes the spool with no extra plumbing
-      val report = ErrorChannel.groupedReport(errs1).collect()
-      assert(report.map(r => (r.getString(0), r.getLong(1))).toSeq ===
-        Seq(("may not be empty", 1L)))
-
-      // ---- batch-id exactly-once matrix ----
-      posted.clear()
-      // window 1: crash AFTER posts + error spool, BEFORE the marker
-      intercept[Exception] {
-        write("batchid" -> "7", "failbeforemarker" -> "true")
-      }
-      assert(posted.size === 4,
-        "the crashed attempt posted (at-least-once window, documented)")
-      // window 2: replay of the uncommitted id re-posts (HTTP is not
-      // scrubbable) but scrubs + respools the errors — no double count
-      posted.clear()
-      write("batchid" -> "7")
-      assert(posted.size === 4, "replay of an UNcommitted id must re-post")
-      val errsAfterReplay = HttpPublishSource.errors(spark, ledger)
-        .filter(col(ErrorChannel.ErrorDetail).contains("(id=1002)")).count()
-      assert(errsAfterReplay === 2L, // 1 from the plain write + 1 for id 7
-        s"crash+replay must not double-count the batch's errors " +
-          s"(got $errsAfterReplay)")
-      // window 3: replay of the COMMITTED id posts ZERO requests — the
-      // factory hands out no-op writers, not just a skipped marker write
-      posted.clear()
-      write("batchid" -> "7")
-      assert(posted.isEmpty,
-        s"replayed committed batch must post nothing: $posted")
-    } finally server.stop(0)
-  }
-
-  test("DSv2 publish error transport is BOUNDED: an all-records-fail " +
-    "batch ships capped commit messages while the executor-side spool " +
-    "keeps complete per-record detail (exact counts)") {
-    // r17 verdict #1: a down endpoint at scale previously materialized
-    // one (type, detail) pair per failed row on the driver. Two pins:
-    // (a) the DataWriter's commit message directly — errorCount exact,
-    //     samples hard-capped, full detail in its pending spool file;
-    // (b) end-to-end through df.write — the promoted spool is COMPLETE
-    //     (grouped CSV counts exact) though every record failed.
-    import graft.sources.v2.{HttpPublishConf, HttpPublishCommit, HttpPublishDataWriter, HttpPublishSource}
-    import graft.migration.ErrorChannel
-    import org.apache.spark.sql.catalyst.InternalRow
-    import org.apache.spark.unsafe.types.UTF8String
-    import spark.implicits._
-    val schema = org.apache.spark.sql.types.StructType(Seq(
-      org.apache.spark.sql.types.StructField("id",
-        org.apache.spark.sql.types.LongType),
-      org.apache.spark.sql.types.StructField("subject",
-        org.apache.spark.sql.types.StringType)))
-    // ---- (a) direct writer pin: port 1 refuses every connection ----
-    val ledgerA = java.nio.file.Files
-      .createTempDirectory("graft-http-allfail-a").toString
-    val confA = HttpPublishConf(
-      path = ledgerA, endpoint = "http://127.0.0.1:1/refused",
-      ratePerMinute = 1000000, batchSize = 50, parallelism = 0,
-      idCol = Some("id"), maxRetries = 0, batchId = None,
-      failBeforeMarker = false, maxErrorSamples = 5)
-    val w = new HttpPublishDataWriter(schema, confA, 1000000,
-      tag = "write-test", partitionId = 0, taskId = 0L)
-    val n = 300
-    (1 to n).foreach(i => w.write(InternalRow(
-      i.toLong, UTF8String.fromString(s"s$i"))))
-    val msg = w.commit().asInstanceOf[HttpPublishCommit]
-    w.close()
-    assert(msg.rows === n.toLong)
-    assert(msg.errorCount === n.toLong, "exact count must ride the message")
-    assert(msg.errorSamples.size === 5,
-      s"samples must be hard-capped: ${msg.errorSamples.size}")
-    val spool = java.nio.file.Paths.get(ledgerA, "_errors", ".pending",
-      msg.spoolFile.getOrElse(fail("spool file must be named")))
-    assert(java.nio.file.Files.readAllLines(spool).size === n,
-      "the pending spool must hold every failed record's detail")
-    // ---- (b) end-to-end: a 500-everything server, every record fails ----
-    import com.sun.net.httpserver.{HttpExchange, HttpHandler, HttpServer}
-    val server = HttpServer.create(
-      new java.net.InetSocketAddress("127.0.0.1", 0), 0)
-    server.createContext("/down", new HttpHandler {
-      override def handle(ex: HttpExchange): Unit = {
-        ex.getRequestBody.readAllBytes()
-        ex.sendResponseHeaders(500, -1); ex.close()
-      }
-    })
-    server.start()
-    try {
-      val ledgerB = java.nio.file.Files
-        .createTempDirectory("graft-http-allfail-b").toString
-      val df = (1L to 200L).map(i => (i, s"subj$i")).toDF("id", "subject")
-      df.write.format("graft-http")
-        .option("endpoint",
-          s"http://127.0.0.1:${server.getAddress.getPort}/down")
-        .option("rateperminute", "1000000")
-        .option("batchsize", "50")
-        .option("parallelism", "2")
-        .option("idcol", "id")
-        .option("maxretries", "0")
-        .option("maxerrorsamples", "4")
-        .mode("append").save(ledgerB)
-      val errs = HttpPublishSource.errors(spark, ledgerB)
-      assert(errs.count() === 200L,
-        "the promoted spool must be COMPLETE though every record failed")
-      val report = ErrorChannel.groupedReport(errs).collect()
-      assert(report.map(r => (r.getString(0), r.getLong(1))).toSeq ===
-        Seq(("HTTP 500", 200L)), "grouped CSV counts must stay exact")
-      // every pending file was promoted — nothing left staged
-      val pending = new java.io.File(ledgerB, "_errors/.pending")
-      assert(!pending.isDirectory || pending.listFiles().isEmpty,
-        "commit must promote (not copy) the pending spool")
-    } finally server.stop(0)
-  }
-
-  test("error-spool generation compaction: committed batches fold, a " +
-    "crashed batch's spool stays scrubbable, write-tags stay live, and " +
-    "the read is identical across crash/fold/replay/refold") {
-    import com.sun.net.httpserver.{HttpExchange, HttpHandler, HttpServer}
-    import graft.sources.v2.HttpPublishSource
-    import spark.implicits._
-    val server = HttpServer.create(
-      new java.net.InetSocketAddress("127.0.0.1", 0), 0)
-    server.createContext("/down", new HttpHandler {
-      override def handle(ex: HttpExchange): Unit = {
-        ex.getRequestBody.readAllBytes()
-        ex.sendResponseHeaders(500, -1); ex.close()
-      }
-    })
-    server.start()
-    try {
-      val ledger = java.nio.file.Files
-        .createTempDirectory("graft-http-errgen").toString
-      def write(ids: Seq[Long], extra: (String, String)*): Unit = {
-        var w = ids.map(i => (i, s"s$i")).toDF("id", "subject")
-          .write.format("graft-http")
-          .option("endpoint",
-            s"http://127.0.0.1:${server.getAddress.getPort}/down")
-          .option("rateperminute", "1000000")
-          .option("parallelism", "2")
-          .option("idcol", "id")
-          .option("maxretries", "0")
-        extra.foreach { case (k, v) => w = w.option(k, v) }
-        w.mode("append").save(ledger)
-      }
-      def errCount(): Long =
-        HttpPublishSource.errors(spark, ledger).count()
-      def details(): Seq[String] =
-        HttpPublishSource.errors(spark, ledger)
-          .collect().map(_.getString(1)).toSeq.sorted
-      // committed batches 0 and 1 (3 + 4 errors), one NON-batch write
-      // (2 errors, write-* tag), one CRASHED batch 2 (5 errors promoted,
-      // no marker)
-      write(Seq(1L, 2L, 3L), "batchid" -> "0")
-      write(Seq(10L, 11L, 12L, 13L), "batchid" -> "1")
-      write(Seq(90L))
-      intercept[Exception] {
-        write(Seq(20L, 21L, 22L, 23L, 24L),
-          "batchid" -> "2", "failbeforemarker" -> "true")
-      }
-      val before = details()
-      assert(before.size === 13)
-      // crash window: gen file written, manifest not swapped — invisible
-      intercept[IllegalStateException] {
-        HttpPublishSource.compactErrors(ledger, failBeforeCommit = true)
-      }
-      assert(HttpPublishSource.readErrGen(ledger).isEmpty)
-      assert(details() === before, "orphan gen files must be invisible")
-      // the fold: batches 0-1 fold (markers present), the crashed batch
-      // 2 and the write-* file stay individually live
-      assert(HttpPublishSource.compactErrors(ledger))
-      assert(HttpPublishSource.readErrGen(ledger) ===
-        Some(graft.sources.v2.KeyedJson.GenState(1L, 1L)))
-      assert(details() === before, "the fold must move bytes, never rows")
-      // nothing new to fold → no-op
-      assert(!HttpPublishSource.compactErrors(ledger))
-      // replay of the crashed batch: its commit scrubs the UNFOLDED
-      // batch-2 files and respools — no double count, then batch 2's
-      // marker makes it foldable and a second generation folds it
-      write(Seq(20L, 21L, 22L, 23L, 24L), "batchid" -> "2")
-      assert(details() === before,
-        "replay after the fold must not double-count the crashed batch")
-      assert(HttpPublishSource.compactErrors(ledger))
-      assert(HttpPublishSource.readErrGen(ledger) ===
-        Some(graft.sources.v2.KeyedJson.GenState(2L, 2L)))
-      assert(details() === before)
-      // and the spool is now TWO live files (gen fold + write tag)
-      val live = Option(new java.io.File(ledger, "_errors").listFiles())
-        .getOrElse(Array.empty)
-        .filter(f => f.isFile && !f.getName.startsWith("_") &&
-          !f.getName.startsWith(".")).map(_.getName).toSeq.sorted
-      assert(live.count(_.startsWith("errors-gen-2-")) === 1, live)
-      assert(live.count(_.startsWith("write-")) === 1, live)
-      assert(live.size === 2, s"dead files must be cleaned: $live")
-      assert(errCount() === 13L)
-    } finally server.stop(0)
-  }
-
-  test("graft-http idempotency-key option: a crashed batch's replay " +
-    "presents the same Idempotency-Key per record; option absent sends " +
-    "no header") {
+  test("HttpPublisher Idempotency-Key: a rerun of a crashed publish " +
+    "presents the same key per record; without idCol no header is sent") {
     import com.sun.net.httpserver.{HttpExchange, HttpHandler, HttpServer}
     import spark.implicits._
     // hermetic service that HONORS the header: counts every POST, but
@@ -1128,51 +900,36 @@ class SinkSourceSpec extends SparkSpec {
     server.start()
     try {
       val endpoint = s"http://127.0.0.1:${server.getAddress.getPort}/idem"
-      val ledger = java.nio.file.Files
-        .createTempDirectory("graft-http-idem").toString
       val df = (1L to 6L).map(i => (i, s"subj$i")).toDF("id", "subject")
-      def write(extra: (String, String)*): Unit = {
-        var w = df.write.format("graft-http")
-          .option("endpoint", endpoint)
-          .option("rateperminute", "1000000")
-          .option("batchsize", "2")
-          .option("parallelism", "2")
-          .option("idcol", "id")
-          .option("idempotencykeyfield", "id")
-        extra.foreach { case (k, v) => w = w.option(k, v) }
-        w.mode("append").save(ledger)
-      }
-      // crash mid-batch (after posts, before the marker), then replay:
-      // the wire sees 12 POSTs but only 6 DISTINCT keys — a
+      val errs = new BoundedErrorAccumulator(10)
+      spark.sparkContext.register(errs, "idem-errors")
+      val keyed = new HttpPublisher(endpoint, errs.add _, idCol = Some("id"))
+      // the first run crashes after its first batch of 2; the rerun posts
+      // all 6: the wire sees 8 POSTs but only 6 DISTINCT keys, so a
       // header-honoring service applied each record exactly once
-      intercept[Exception] {
-        write("batchid" -> "3", "failbeforemarker" -> "true")
+      intercept[org.apache.spark.SparkException] {
+        RateLimitedSink.publish(df, ratePerMinute = 1000000, batchSize = 2,
+          parallelism = 1)(new FailAfterFirstBatch(keyed))
       }
-      write("batchid" -> "3")
-      assert(posts.get === 12L,
-        "the at-least-once window re-posts (documented)")
+      assert(posts.get === 2L)
+      RateLimitedSink.publish(df, ratePerMinute = 1000000, batchSize = 2,
+        parallelism = 2)(keyed)
+      assert(posts.get === 8L, "the rerun re-posts every record")
       assert(headerless.get === 0L)
-      assert(applied.size === 6,
-        s"each record must present ONE stable key across the replay: " +
-          s"${applied.size}")
-      // option absent → no header at all (requests byte-identical to
-      // the pre-option behavior)
-      posts.set(0); headerless.set(0)
-      val ledger2 = java.nio.file.Files
-        .createTempDirectory("graft-http-idem2").toString
-      df.write.format("graft-http")
-        .option("endpoint", endpoint)
-        .option("rateperminute", "1000000")
-        .option("parallelism", "2")
-        .mode("append").save(ledger2)
+      assert(applied.asScala.toSet === (1 to 6).map(_.toString).toSet,
+        "each record must present ONE stable key, its id, across the rerun")
+      assert(errs.value.total === 0L)
+      // no idCol → no header at all
+      posts.set(0)
+      RateLimitedSink.publish(df, ratePerMinute = 1000000, batchSize = 2,
+        parallelism = 2)(new HttpPublisher(endpoint, errs.add _))
       assert(posts.get === 6L && headerless.get === 6L,
-        "without the option no Idempotency-Key header may be sent")
+        "without idCol no Idempotency-Key header may be sent")
     } finally server.stop(0)
   }
 
   test("classic publish path is driver-bounded: BoundedErrorAccumulator " +
     "caps samples, keeps exact per-type counts, and flags the overflow") {
-    import graft.sources.{BoundedErrorAccumulator, HttpPublisher}
     import spark.implicits._
     // unit: cap + exact counts through add/merge
     val a = new BoundedErrorAccumulator(3)
@@ -1188,10 +945,9 @@ class SinkSourceSpec extends SparkSpec {
     // end-to-end: every record fails (connection refused), cap 4 —
     // the errors frame is capped + flagged, with the exact count stated
     val df = (1L to 120L).map(i => (i, s"s$i")).toDF("id", "subject")
-    val (_, rows, errs) = HttpPublisher.publish(
-      df, "http://127.0.0.1:1/refused", ratePerMinute = 1000000,
-      batchSize = 10, parallelism = 2, idCol = Some("id"),
-      maxRetries = 0, maxErrorSamples = 4)
+    val (_, rows, errs) = httpPublish(
+      df, "http://127.0.0.1:1/refused", batchSize = 10, parallelism = 2,
+      idCol = Some("id"), maxRetries = 0, maxErrorSamples = 4)
     assert(rows === 120L)
     val errRows = errs.collect()
     assert(errRows.length <= 5,

@@ -669,6 +669,28 @@ class StreamingSpec extends SparkSpec {
       "the keyed lifecycle left its crawl copies behind")
   }
 
+  test("the replay-dedup and view-conversion stream drivers delete the " +
+    "dirs they render") {
+    // both render their input under java.io.tmpdir and stream it into a
+    // memory sink, so no rendered dir is needed once the call returns
+    import graft.streaming.EventStreams
+    val tmp = new java.io.File(System.getProperty("java.io.tmpdir"))
+    def rendered(): Set[String] = Option(tmp.listFiles).getOrElse(Array.empty)
+      .map(_.getName)
+      .filter(n => n.startsWith("graft-dedup") || n.startsWith("graft-vconv"))
+      .toSet
+    val before = rendered()
+    val deduped = EventStreams.dedupReplayToTable(spark, sfDir, "tmpdir_dedup")
+    assert(rendered() -- before === Set.empty,
+      "dedupReplayToTable left its rendered dirs behind")
+    val conversions =
+      EventStreams.viewConversionsToTable(spark, sfDir, "tmpdir_vconv")
+    assert(rendered() -- before === Set.empty,
+      "viewConversionsToTable left its rendered dirs behind")
+    // the memory sinks still serve the results
+    assert(deduped.count() > 0 && conversions.count() > 0)
+  }
+
   test("dedup store: the seed and every trigger of both lifecycles release " +
     "the checkpoints they create") {
     import graft.streaming.DocumentStreams
