@@ -63,7 +63,7 @@ object Pipelines {
   }
 
   /** F4: --startPage/--stopPage prune when the input carries a `page`
-    * column (PagedSource / graft-pages attach one; fixtures don't). */
+    * column (graft-pages attaches one; fixtures don't). */
   private def pageFiltered(df: DataFrame, opts: SyncOptions): DataFrame =
     if (!df.columns.contains("page")) df
     else (opts.startPage, opts.stopPage) match {

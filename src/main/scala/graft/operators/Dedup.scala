@@ -109,10 +109,6 @@ object Dedup {
     df.groupBy(fingerprint(textCol).as("fp"))
       .agg(count(lit(1)).as("n"), min(idCol).as("keep_id"))
 
-  /** Keep-first exact dedup: one surviving row id per fingerprint. */
-  def exactDedupIds(df: DataFrame, textCol: Column, idCol: Column): DataFrame =
-    exactDupGroups(df, textCol, idCol).select(col("keep_id"), col("n"))
-
   /** Candidate near-duplicate pairs via MinHash+LSH over distinct-word
     * sets, verified with exact Jaccard.
     *

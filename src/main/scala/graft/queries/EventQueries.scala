@@ -206,7 +206,7 @@ object EventQueries extends QueryPack {
     "q134_hll_stream",
     (s, dir) => EventStreams.hllRegistersToParquet(
       s, dir,
-      java.nio.file.Files.createTempDirectory("graft-q134-out").toString,
+      graft.Checkpoints.scratchDir(s, "graft-q134-out"),
       p = 9),
     Some {
       import TextQueries.XxhashSqlGen._

@@ -637,42 +637,18 @@ object RelationalQueries extends QueryPack {
     * fixture write stays O(1) in corpus size at any SF (a production
     * deployment's page layout/REST API already exists; nothing here is
     * part of the graded scan plan). */
-  private val pagedOrdersDirs =
-    scala.collection.concurrent.TrieMap.empty[String, String]
   private def pagedOrdersDir(s: SparkSession, dir: String): String =
-    pagedOrdersDirs.getOrElseUpdate(dir, {
-      val out = java.nio.file.Files.createTempDirectory("graft-q131-pages").toString
+    graft.Checkpoints.memo(s, "q131-pages", dir) { out =>
       val keys = Tables(s, dir).orders.select(col("o_orderkey"))
         .filter(col("o_orderkey") < 500L)
-      // ONE partitioned JSON write renders every page file (the q142
-      // device): partitionBy drops the pg column from the record bodies,
-      // so each pg=N dir holds exactly page N's {"o_orderkey":k} lines.
-      // Driver-side work is O(pages) renames + a 1-row aggregate collect
-      // — never a collect of the page DATA (the r9 version collected all
-      // keys and wrote files in a driver loop; bounded here, but the
-      // pattern must not be the template).
-      val tmp = java.nio.file.Files.createTempDirectory("graft-q131-part").toString
-      keys.withColumn("pg", floor(col("o_orderkey") / 50).cast("int"))
-        .coalesce(1).write.partitionBy("pg").mode("overwrite").json(tmp)
-      val pgRe = "pg=(\\d+)".r
-      val pageDirs = Option(new java.io.File(tmp).listFiles)
-        .getOrElse(Array.empty).flatMap(d => d.getName match {
-          case pgRe(n) => Some(n.toInt -> d)
-          case _ => None
-        })
-      pageDirs.foreach { case (p, d) =>
-        val part = Option(d.listFiles).getOrElse(Array.empty)
-          .find(_.getName.endsWith(".json"))
-          .getOrElse(throw new IllegalStateException(s"no json part for page $p"))
-        java.nio.file.Files.move(
-          part.toPath, java.nio.file.Paths.get(s"$out/page-$p.json"))
-      }
+      val pages = graft.Checkpoints.renderBatches(
+        keys.withColumn("pg", floor(col("o_orderkey") / 50).cast("int")),
+        "pg", "json", out)(p => s"page-$p.json")
       val total = keys.count()
       java.nio.file.Files.write(java.nio.file.Paths.get(s"$out/meta.json"),
-        s"""{"pagination":{"total_count":$total,"total_pages":${pageDirs.length}}}"""
+        s"""{"pagination":{"total_count":$total,"total_pages":$pages}}"""
           .getBytes("UTF-8"))
-      out
-    })
+    }
 
   /** q24's page-range scan re-expressed THROUGH the DSv2 paged source
     * (sources.v2.PagedJsonSource, format "graft-pages"): the
@@ -813,40 +789,22 @@ object RelationalQueries extends QueryPack {
     * COUNT apportionment with zero page fetches. Page size 23 is chosen
     * to not divide the row count, so the short-last-page correction is
     * genuinely exercised. Fixture-side only (same O(1)-in-corpus caveat
-    * as pagedOrdersDir). Memo value: (dir, total rows). */
-  private val pagedOrdersFixedDirs =
-    scala.collection.concurrent.TrieMap.empty[String, (String, Long)]
+    * as pagedOrdersDir). */
   private val FixedPageSize = 23
-  private def pagedOrdersFixedDir(
-      s: SparkSession, dir: String): (String, Long) =
-    pagedOrdersFixedDirs.getOrElseUpdate(dir, {
-      val out = java.nio.file.Files.createTempDirectory("graft-q226-pages").toString
+  private def pagedOrdersFixedDir(s: SparkSession, dir: String): String =
+    graft.Checkpoints.memo(s, "q226-pages", dir) { out =>
       val keys = Tables(s, dir).orders.select(col("o_orderkey"))
         .filter(col("o_orderkey") < 500L)
       val w = org.apache.spark.sql.expressions.Window.orderBy(col("o_orderkey"))
-      val tmp = java.nio.file.Files.createTempDirectory("graft-q226-part").toString
-      keys.withColumn("pg",
-          (floor((row_number().over(w) - 1) / FixedPageSize) + 1).cast("int"))
-        .coalesce(1).write.partitionBy("pg").mode("overwrite").json(tmp)
-      val pgRe = "pg=(\\d+)".r
-      val pageDirs = Option(new java.io.File(tmp).listFiles)
-        .getOrElse(Array.empty).flatMap(d => d.getName match {
-          case pgRe(n) => Some(n.toInt -> d)
-          case _ => None
-        })
-      pageDirs.foreach { case (p, d) =>
-        val part = Option(d.listFiles).getOrElse(Array.empty)
-          .find(_.getName.endsWith(".json"))
-          .getOrElse(throw new IllegalStateException(s"no json part for page $p"))
-        java.nio.file.Files.move(
-          part.toPath, java.nio.file.Paths.get(s"$out/page-$p.json"))
-      }
+      val pages = graft.Checkpoints.renderBatches(
+        keys.withColumn("pg",
+          (floor((row_number().over(w) - 1) / FixedPageSize) + 1).cast("int")),
+        "pg", "json", out)(p => s"page-$p.json")
       val total = keys.count()
       java.nio.file.Files.write(java.nio.file.Paths.get(s"$out/meta.json"),
-        s"""{"pagination":{"total_count":$total,"total_pages":${pageDirs.length},"per_page":$FixedPageSize}}"""
+        s"""{"pagination":{"total_count":$total,"total_pages":$pages,"per_page":$FixedPageSize}}"""
           .getBytes("UTF-8"))
-      (out, total)
-    })
+    }
 
   /** PAGE-PRUNED COUNT answered from the manifest alone — q217's
     * pushdown extended to the `--startPage/--stopPage` shape
@@ -864,7 +822,7 @@ object RelationalQueries extends QueryPack {
     "q226_count_pushdown_pruned",
     (s, dir) => {
       import com.sun.net.httpserver.{HttpExchange, HttpHandler, HttpServer}
-      val (fixture, _) = pagedOrdersFixedDir(s, dir)
+      val fixture = pagedOrdersFixedDir(s, dir)
       val requested = java.util.Collections.synchronizedList(
         new java.util.ArrayList[String]())
       val server = HttpServer.create(
@@ -916,31 +874,29 @@ object RelationalQueries extends QueryPack {
     * query must not re-write the tables per bench rep. Table names are
     * dir-scoped to keep multiple SF dirs in one session distinct.
     *
-    * The memo stores catalog table NAMES, which are only meaningful in a
+    * The tables are catalog handles, which are only meaningful in a
     * catalog that actually holds them — a fresh SparkSession in the same
     * JVM (new test suite, bench re-entry) starts with an empty in-memory
-    * catalog, so every hit is re-validated with `catalog.tableExists`
-    * and re-materialized on a miss instead of failing table-not-found.
+    * catalog, so the memo ([[graft.Checkpoints.memo]]) also requires
+    * `catalog.tableExists` and re-materializes on a miss instead of
+    * failing table-not-found.
     * Bucket count rides [[graft.GraftSession.defaultBuckets]] (rows +
     * parallelism), not a constant: at the fixture SFs the cores term
     * binds, at 100 TB the rows term takes over.
     *
     * ONE implementation for both graded pairs (q158 same-count, q160
-    * epoch-drifted) — the tableExists/remove/rebuild revalidation is
-    * subtle enough that two copies would silently diverge.
-    * `ordBucketDivisor` = 1 keeps the co-joined family on ONE derived
-    * count (largest member sets it; mismatched counts would re-shuffle
-    * a side), 2 models the earlier-epoch layout q160 grades. */
+    * epoch-drifted). `ordBucketDivisor` = 1 keeps the co-joined family
+    * on ONE derived count (largest member sets it; mismatched counts
+    * would re-shuffle a side), 2 models the earlier-epoch layout q160
+    * grades. */
   private def memoBucketedPair(
-      memo: scala.collection.concurrent.TrieMap[String, (String, String)],
       s: org.apache.spark.sql.SparkSession, dir: String, qTag: String,
       ordCol: String, ordBucketDivisor: Int): (String, String) = {
-    def build(): (String, String) = {
-      val tag = Integer.toHexString(dir.hashCode)
-      val base = java.nio.file.Files
-        .createTempDirectory(s"graft-$qTag-buckets").toString
+    val tag = Integer.toHexString(dir.hashCode)
+    val (li, ord) = (s"graft_${qTag}_li_$tag", s"graft_${qTag}_ord_$tag")
+    graft.Checkpoints.memo(s, s"$qTag-buckets", dir,
+        s.catalog.tableExists(li) && s.catalog.tableExists(ord)) { base =>
       val t = Tables(s, dir)
-      val (li, ord) = (s"graft_${qTag}_li_$tag", s"graft_${qTag}_ord_$tag")
       val buckets = graft.sources.Bucketing.derivedBuckets(
         t.lineitem, clusterCores = s.sparkContext.defaultParallelism)
       graft.sources.Bucketing.writeBucketed(
@@ -949,22 +905,13 @@ object RelationalQueries extends QueryPack {
       graft.sources.Bucketing.writeBucketed(
         t.orders.select(col("o_orderkey"), col(ordCol)),
         ord, "o_orderkey", buckets / ordBucketDivisor, s"$base/ord")
-      (li, ord)
     }
-    val (li, ord) = memo.getOrElseUpdate(dir, build())
-    if (s.catalog.tableExists(li) && s.catalog.tableExists(ord)) (li, ord)
-    else {
-      memo.remove(dir)
-      memo.getOrElseUpdate(dir, build())
-    }
+    (li, ord)
   }
 
-  private val bucketedTabs =
-    scala.collection.concurrent.TrieMap.empty[String, (String, String)]
   private def bucketedOrdersLineitem(
       s: org.apache.spark.sql.SparkSession, dir: String): (String, String) =
-    memoBucketedPair(bucketedTabs, s, dir, "q158", "o_orderdate",
-      ordBucketDivisor = 1)
+    memoBucketedPair(s, dir, "q158", "o_orderdate", ordBucketDivisor = 1)
 
   /** The bucketed co-located join GRADED (sources.Bucketing, spec-only
     * through r9): lineitem ⋈ orders with both sides bucketed + sorted on
@@ -1014,12 +961,9 @@ object RelationalQueries extends QueryPack {
     * lineitem at the currently-derived bucket count, orders at HALF of
     * it — the layout a real deployment accumulates when a table family
     * is re-bucketed as the corpus doubles. Rides [[memoBucketedPair]]. */
-  private val bucketedDriftTabs =
-    scala.collection.concurrent.TrieMap.empty[String, (String, String)]
   private def bucketedDriftTables(
       s: org.apache.spark.sql.SparkSession, dir: String): (String, String) =
-    memoBucketedPair(bucketedDriftTabs, s, dir, "q160", "o_orderpriority",
-      ordBucketDivisor = 2)
+    memoBucketedPair(s, dir, "q160", "o_orderpriority", ordBucketDivisor = 2)
 
   /** The bucket-count DIVISIBILITY claim of
     * [[graft.GraftSession.defaultBuckets]] graded: that derivation
@@ -1124,22 +1068,14 @@ object RelationalQueries extends QueryPack {
     * the hive-partitioned fact shape every 100 TB warehouse stores its
     * event data in (our flat fixture parquet can't exhibit partition
     * pruning, so the layout is materialized once per dataset). */
-  private val dppFactDirs =
-    scala.collection.concurrent.TrieMap.empty[String, String]
   private def yearPartitionedLineitem(
-      s: org.apache.spark.sql.SparkSession, dir: String): String = {
-    val path = dppFactDirs.getOrElseUpdate(dir, {
-      val base = java.nio.file.Files
-        .createTempDirectory("graft-q164-fact").toString
+      s: org.apache.spark.sql.SparkSession, dir: String): String =
+    graft.Checkpoints.memo(s, "q164-fact", dir) { base =>
       Tables(s, dir).lineitem
         .select(col("l_orderkey"), col("l_extendedprice"),
           year(col("l_shipdate")).as("l_year"))
         .write.partitionBy("l_year").mode("overwrite").parquet(base)
-      base
-    })
-    if (new java.io.File(path).isDirectory) path
-    else { dppFactDirs.remove(dir); yearPartitionedLineitem(s, dir) }
-  }
+    }
 
   /** Dynamic partition pruning graded — the scan-side sibling of q163's
     * runtime Bloom filter: when the fact table is PARTITIONED on the
@@ -1337,18 +1273,13 @@ object RelationalQueries extends QueryPack {
     })
 
   /** Key-sharded JSON fixture pair for q168, one write per dataset dir
-    * (fact + dim `partitionBy(shard)` layouts under a temp base); the
-    * memo revalidates the directories still exist — the q158 catalog
-    * idiom applied to a filesystem fixture. Shard count rides the same
+    * (fact + dim `partitionBy(shard)` layouts under one
+    * [[graft.Checkpoints.memo]] dir). Shard count rides the same
     * [[graft.sources.Bucketing.derivedBuckets]] derivation as the
     * bucketed-join family: one count for the co-joined pair. */
-  private val keyedDirs =
-    scala.collection.concurrent.TrieMap.empty[String, (String, String)]
   private def keyedJsonPair(
       s: org.apache.spark.sql.SparkSession, dir: String): (String, String) = {
-    def build(): (String, String) = {
-      val base = java.nio.file.Files
-        .createTempDirectory("graft-q168-keyed").toString
+    val base = graft.Checkpoints.memo(s, "q168-keyed", dir) { base =>
       val t = Tables(s, dir)
       val shards = graft.sources.Bucketing.derivedBuckets(
         t.lineitem, clusterCores = s.sparkContext.defaultParallelism).toLong
@@ -1358,12 +1289,8 @@ object RelationalQueries extends QueryPack {
       t.orders.select(col("o_orderkey"), col("o_orderpriority"),
           pmod(xxhash64(col("o_orderkey")), lit(shards)).cast("int").as("shard"))
         .write.partitionBy("shard").json(s"$base/dim")
-      (s"$base/fact", s"$base/dim")
     }
-    val (f, d) = keyedDirs.getOrElseUpdate(dir, build())
-    if (new java.io.File(f).isDirectory && new java.io.File(d).isDirectory)
-      (f, d)
-    else { keyedDirs.remove(dir); keyedDirs.getOrElseUpdate(dir, build()) }
+    (s"$base/fact", s"$base/dim")
   }
 
   /** Storage-partitioned join (SPARK-37375) graded — the CONNECTOR leg of
@@ -1445,13 +1372,9 @@ object RelationalQueries extends QueryPack {
     * amortization graded end to end IN ONE CONNECTOR: the ingest
     * exchange is the last shuffle these tables' join keys ever see.
     * Same confs/oracle as q168. */
-  private val keyedWrittenDirs =
-    scala.collection.concurrent.TrieMap.empty[String, (String, String)]
   private def keyedWrittenPair(
       s: org.apache.spark.sql.SparkSession, dir: String): (String, String) = {
-    def build(): (String, String) = {
-      val base = java.nio.file.Files
-        .createTempDirectory("graft-q176-keyed").toString
+    val base = graft.Checkpoints.memo(s, "q176-keyed", dir) { base =>
       val t = Tables(s, dir)
       val shards = graft.sources.Bucketing.derivedBuckets(
         t.lineitem, clusterCores = s.sparkContext.defaultParallelism).toLong
@@ -1463,12 +1386,8 @@ object RelationalQueries extends QueryPack {
           pmod(xxhash64(col("o_orderkey")), lit(shards)).cast("int").as("shard"))
         .write.format("graft-keyed").option("keycol", "shard")
         .mode("append").save(s"$base/dim")
-      (s"$base/fact", s"$base/dim")
     }
-    val (f, d) = keyedWrittenDirs.getOrElseUpdate(dir, build())
-    if (new java.io.File(f).isDirectory && new java.io.File(d).isDirectory)
-      (f, d)
-    else { keyedWrittenDirs.remove(dir); keyedWrittenDirs.getOrElseUpdate(dir, build()) }
+    (s"$base/fact", s"$base/dim")
   }
 
   private val q176 = Q(
@@ -2484,8 +2403,7 @@ object RelationalQueries extends QueryPack {
     "q196_schema_evolution",
     (s, dir) => {
       val docs = Tables(s, dir).documents
-      val base = java.nio.file.Files
-        .createTempDirectory("graft-q196-epochs").toString
+      val base = graft.Checkpoints.scratchDir(s, "graft-q196-epochs")
       docs.filter(col("doc_id") % 2 === 0)
         .select(col("doc_id"), col("lang"))
         .write.mode("overwrite").parquet(s"$base/epoch1")

@@ -996,42 +996,30 @@ object TextQueries extends QueryPack {
     * export stays the fixture q114/q115 score from (exact bit-identity
     * transitively verified there), and the arithmetic is hand-pinned in
     * ClassifierSpec. */
-  /** Per-dataset PERSISTED NB model and score table (the sharedKnnGraph
-    * lifecycle applied to the classifier): a deployment trains the model
+  /** Per-dataset PERSISTED NB model and score table
+    * ([[graft.Checkpoints.memo]]): a deployment trains the model
     * once, materializes the corpus score table once, and every consumer
     * (export, labeling, mismatch audit) reads the parquet instead of
     * re-training / re-scoring per query — q113/q114/q115/q119 used to
     * run the training aggregate four times and the corpus scoring pass
     * three times each bench round. Parquet round-trips the model's and
     * scores' doubles bit-exactly, so all four oracles are unchanged. */
-  private val nbModelPaths =
-    scala.collection.concurrent.TrieMap.empty[String, String]
   private def sharedNbModel(
       s: org.apache.spark.sql.SparkSession,
-      dir: String): org.apache.spark.sql.DataFrame = {
-    val path = nbModelPaths.getOrElseUpdate(dir, {
-      val p = java.nio.file.Files.createTempDirectory("graft-nb-model").toString
+      dir: String): org.apache.spark.sql.DataFrame =
+    s.read.parquet(graft.Checkpoints.memo(s, "nb-model", dir) { p =>
       Classifier.naiveBayes(
           Tables(s, dir).documents, col("text"), col("doc_id"), col("lang"))
         .write.mode("overwrite").parquet(p)
-      p
     })
-    s.read.parquet(path)
-  }
-  private val nbScorePaths =
-    scala.collection.concurrent.TrieMap.empty[String, String]
   private def sharedNbScores(
       s: org.apache.spark.sql.SparkSession,
-      dir: String): org.apache.spark.sql.DataFrame = {
-    val path = nbScorePaths.getOrElseUpdate(dir, {
-      val p = java.nio.file.Files.createTempDirectory("graft-nb-scores").toString
+      dir: String): org.apache.spark.sql.DataFrame =
+    s.read.parquet(graft.Checkpoints.memo(s, "nb-scores", dir) { p =>
       Classifier.nbScores(Tables(s, dir).documents, sharedNbModel(s, dir),
           col("text"), col("doc_id"))
         .write.mode("overwrite").parquet(p)
-      p
     })
-    s.read.parquet(path)
-  }
 
   private val q113 = Q(
     "q113_nb_model",
@@ -1811,37 +1799,25 @@ object TextQueries extends QueryPack {
     * row goes red. Exact bit-identity of the doubles is additionally
     * pinned transitively by q94's full oracle (which folds these very
     * values) and by hand-computed logp in LangModelSpec. */
-  /** Persisted corpus bigram LM + per-doc CE table (the sharedNbModel
-    * lifecycle for the LM family): train once, score once, and
+  /** Persisted corpus bigram LM + per-doc CE table
+    * ([[graft.Checkpoints.memo]]): train once, score once, and
     * q93/q94/q95 read parquet instead of re-running the corpus aggregate
     * (×3) and the scoring pass (×2) per round. Bit-exact round-trip. */
-  private val lmPaths =
-    scala.collection.concurrent.TrieMap.empty[String, String]
   private def sharedBigramLm(
       s: org.apache.spark.sql.SparkSession,
-      dir: String): org.apache.spark.sql.DataFrame = {
-    val path = lmPaths.getOrElseUpdate(dir, {
-      val p = java.nio.file.Files.createTempDirectory("graft-bigram-lm").toString
+      dir: String): org.apache.spark.sql.DataFrame =
+    s.read.parquet(graft.Checkpoints.memo(s, "bigram-lm", dir) { p =>
       LangModel.bigramLm(Tables(s, dir).documents, col("text"), col("doc_id"))
         .write.mode("overwrite").parquet(p)
-      p
     })
-    s.read.parquet(path)
-  }
-  private val docCePaths =
-    scala.collection.concurrent.TrieMap.empty[String, String]
   private def sharedDocCe(
       s: org.apache.spark.sql.SparkSession,
-      dir: String): org.apache.spark.sql.DataFrame = {
-    val path = docCePaths.getOrElseUpdate(dir, {
-      val p = java.nio.file.Files.createTempDirectory("graft-doc-ce").toString
+      dir: String): org.apache.spark.sql.DataFrame =
+    s.read.parquet(graft.Checkpoints.memo(s, "doc-ce", dir) { p =>
       LangModel.crossEntropy(Tables(s, dir).documents, sharedBigramLm(s, dir),
           col("text"), col("doc_id"))
         .write.mode("overwrite").parquet(p)
-      p
     })
-    s.read.parquet(path)
-  }
 
   private val q93 = Q(
     "q93_bigram_lm",
@@ -2177,42 +2153,32 @@ object TextQueries extends QueryPack {
     * positionwise, subtracts, and folds in position order (the q89
     * device) — no libm on the oracle side; in-query re-training must
     * reproduce both exports bit-for-bit (the q81-style cross-check). */
-  /** Persisted DSIR pair LMs + importance-weight table (the shared-model
-    * lifecycle for DSIR): the target/source pair trains once, the corpus
-    * weights materialize once; q102 exports the target LM, q103 keeps the
+  /** Persisted DSIR pair LMs + importance-weight table
+    * ([[graft.Checkpoints.memo]]): the target/source pair trains once,
+    * the corpus weights materialize once; q102 exports the target LM, q103 keeps the
     * LIVE scoring plan (its PlanSpec broadcast pin) over the persisted
     * pair, q104's top-k reads the persisted weights. */
-  private val dsirPairPaths =
-    scala.collection.concurrent.TrieMap.empty[String, String]
   private def sharedDsirPair(
       s: org.apache.spark.sql.SparkSession, dir: String)
       : (org.apache.spark.sql.DataFrame, org.apache.spark.sql.DataFrame) = {
-    val path = dsirPairPaths.getOrElseUpdate(dir, {
-      val p = java.nio.file.Files.createTempDirectory("graft-dsir-pair").toString
+    val path = graft.Checkpoints.memo(s, "dsir-pair", dir) { p =>
       val (lmT, lmS) = LangModel.bigramLmPair(
         Tables(s, dir).documents, col("text"), col("doc_id"),
         col("lang") === "en")
       lmT.write.mode("overwrite").parquet(s"$p/target")
       lmS.write.mode("overwrite").parquet(s"$p/source")
-      p
-    })
+    }
     (s.read.parquet(s"$path/target"), s.read.parquet(s"$path/source"))
   }
-  private val dsirWeightPaths =
-    scala.collection.concurrent.TrieMap.empty[String, String]
   private def sharedDsirWeights(
       s: org.apache.spark.sql.SparkSession,
-      dir: String): org.apache.spark.sql.DataFrame = {
-    val path = dsirWeightPaths.getOrElseUpdate(dir, {
-      val p = java.nio.file.Files.createTempDirectory("graft-dsir-weights").toString
+      dir: String): org.apache.spark.sql.DataFrame =
+    s.read.parquet(graft.Checkpoints.memo(s, "dsir-weights", dir) { p =>
       val (lmT, lmS) = sharedDsirPair(s, dir)
       Dsir.importanceWeights(Tables(s, dir).documents, lmT, lmS,
           col("text"), col("doc_id"))
         .write.mode("overwrite").parquet(p)
-      p
     })
-    s.read.parquet(path)
-  }
 
   private val q103 = Q(
     "q103_dsir_weights",
@@ -2564,7 +2530,7 @@ object TextQueries extends QueryPack {
         numHashes = 64, bands = 4)
       graft.streaming.DocumentStreams.curationGateToParquetSigned(
         s, dir, index,
-        java.nio.file.Files.createTempDirectory("graft-q130-out").toString,
+        graft.Checkpoints.scratchDir(s, "graft-q130-out"),
         numHashes = 64, bands = 4, threshold = 0.95)
     },
     Some("""WITH raw AS (SELECT doc_id, kind, idx, value
@@ -2617,8 +2583,8 @@ object TextQueries extends QueryPack {
         numHashes = 64, bands = 4)
       graft.streaming.DocumentStreams.incrementalCurationToParquetSigned(
         s, dir, seedIdx,
-        java.nio.file.Files.createTempDirectory("graft-q142-out").toString,
-        java.nio.file.Files.createTempDirectory("graft-q142-idx").toString,
+        graft.Checkpoints.scratchDir(s, "graft-q142-out"),
+        graft.Checkpoints.scratchDir(s, "graft-q142-idx"),
         batchFiles = 3, numHashes = 64, bands = 4, threshold = 0.95)
     },
     Some("""WITH raw AS (SELECT doc_id, kind, idx, value
@@ -2680,10 +2646,8 @@ object TextQueries extends QueryPack {
       val seedIdx = Dedup.signDocs(
         docs.filter(col("doc_id") % 10 === 0), col("text"), col("doc_id"),
         numHashes = 64, bands = 4)
-      val idxPath =
-        java.nio.file.Files.createTempDirectory("graft-q159-idx").toString
-      val outPath =
-        java.nio.file.Files.createTempDirectory("graft-q159-out").toString
+      val idxPath = graft.Checkpoints.scratchDir(s, "graft-q159-idx")
+      val outPath = graft.Checkpoints.scratchDir(s, "graft-q159-out")
       DocumentStreams.initCurationStore(s, seedIdx, idxPath, outPath)
       val crawl = docs.filter(col("doc_id") % 10 =!= 0)
       (0 until 3).foreach { b =>
@@ -3271,8 +3235,7 @@ object TextQueries extends QueryPack {
           concat_ws(",", col("doc_id"), col("lang"), lit("oops")))
           .otherwise(concat_ws(",", col("doc_id"), col("lang"),
             col("n_chars"))).as("value"))
-      val csvDir = java.nio.file.Files
-        .createTempDirectory("graft-q194-csv").toString
+      val csvDir = graft.Checkpoints.scratchDir(s, "graft-q194-csv")
       lines.coalesce(1).write.mode("overwrite").text(csvDir)
       val schema = StructType(Seq(
         StructField("doc_id", LongType), StructField("lang", StringType),
@@ -3768,35 +3731,27 @@ object TextQueries extends QueryPack {
   private val q206 = Q(
     "q206_stream_keyed_exactly_once",
     (s, dir) => {
-      import java.nio.file.{Files, Paths}
+      import graft.Checkpoints
       import graft.sources.v2.KeyedJsonStream
       val crawl = s.read.parquet(s"$dir/documents.parquet")
         .filter(col("doc_id") % 10 =!= 0)
         .select(col("doc_id"), col("lang"))
-      // one partitioned write renders all 3 batch files (q142's device)
-      val tmp = Files.createTempDirectory("graft-q206-part").toString
-      val streamDir = Files.createTempDirectory("graft-q206-src").toString
-      crawl.withColumn("bat", pmod(col("doc_id"), lit(3)))
-        .coalesce(1).write.partitionBy("bat").mode("overwrite").json(tmp)
-      (0 until 3).foreach { b =>
-        val part = Option(new java.io.File(tmp, s"bat=$b").listFiles)
-          .getOrElse(Array.empty).find(_.getName.endsWith(".json"))
-          .getOrElse(throw new IllegalStateException(s"no file for batch $b"))
-        val dest = Paths.get(streamDir, f"batch$b%02d.json")
-        Files.move(part.toPath, dest)
-        require(dest.toFile.setLastModified((b + 1) * 60000L),
-          s"could not stamp batch $b's replay order")
-      }
-      val outDir = Files.createTempDirectory("graft-q206-out").toString
-      val ck = Files.createTempDirectory("graft-q206-ck").toString
-      val inSchema = StructType(Seq(
-        StructField("doc_id", LongType), StructField("lang", StringType)))
-      val incoming = s.readStream.schema(inSchema)
-        .option("maxFilesPerTrigger", 1).json(streamDir)
-        .withColumn("shard",
-          pmod(xxhash64(col("doc_id")), lit(8L)).cast("int"))
-      val q = KeyedJsonStream.writer(incoming, outDir, "shard", ck).start()
-      q.awaitTermination()
+      val outDir = Checkpoints.scratchDir(s, "graft-q206-out")
+      val streamDir = Checkpoints.scratchDir(s, "graft-q206-src")
+      val ck = Checkpoints.scratchDir(s, "graft-q206-ck")
+      try {
+        Checkpoints.renderBatches(
+          crawl.withColumn("bat", pmod(col("doc_id"), lit(3))),
+          "bat", "json", streamDir)(b => f"batch$b%02d.json")
+        val inSchema = StructType(Seq(
+          StructField("doc_id", LongType), StructField("lang", StringType)))
+        val incoming = s.readStream.schema(inSchema)
+          .option("maxFilesPerTrigger", 1).json(streamDir)
+          .withColumn("shard",
+            pmod(xxhash64(col("doc_id")), lit(8L)).cast("int"))
+        KeyedJsonStream.writer(incoming, outDir, "shard", ck).start()
+          .awaitTermination()
+      } finally Seq(streamDir, ck).foreach(Checkpoints.release)
       require((0L to 2L).forall(KeyedJsonStream.isCommitted(outDir, _)),
         "all 3 micro-batches must leave commit markers")
       // the at-least-once replay window, in the graded path: batch 1
@@ -3844,10 +3799,8 @@ object TextQueries extends QueryPack {
       val seedIdx = Dedup.signDocs(
         docs.filter(col("doc_id") % 10 === 0), col("text"), col("doc_id"),
         numHashes = 64, bands = 4)
-      val idxPath =
-        java.nio.file.Files.createTempDirectory("graft-q227-idx").toString
-      val outPath =
-        java.nio.file.Files.createTempDirectory("graft-q227-out").toString
+      val idxPath = graft.Checkpoints.scratchDir(s, "graft-q227-idx")
+      val outPath = graft.Checkpoints.scratchDir(s, "graft-q227-out")
       val res = DocumentStreams.incrementalDedupToKeyedSigned(
         s, dir, seedIdx, outPath, idxPath, batchFiles = 3,
         shards = 8, numHashes = 64, bands = 4, threshold = 0.95)
@@ -3927,10 +3880,8 @@ object TextQueries extends QueryPack {
       val seedIdx = Dedup.signDocs(
         docs.filter(col("doc_id") % 10 === 0), col("text"), col("doc_id"),
         numHashes = 64, bands = 4)
-      val idxPath =
-        java.nio.file.Files.createTempDirectory("graft-q236-idx").toString
-      val outPath =
-        java.nio.file.Files.createTempDirectory("graft-q236-out").toString
+      val idxPath = graft.Checkpoints.scratchDir(s, "graft-q236-idx")
+      val outPath = graft.Checkpoints.scratchDir(s, "graft-q236-out")
       val res = DocumentStreams.incrementalDedupToKeyedSigned(
         s, dir, seedIdx, outPath, idxPath, batchFiles = 3,
         shards = 8, numHashes = 64, bands = 4, threshold = 0.95,

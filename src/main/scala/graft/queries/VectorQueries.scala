@@ -46,9 +46,10 @@ object VectorQueries extends QueryPack {
     coarseCentroids.getOrElseUpdate(dir,
       Similarity.kmeansCentroids(Tables(s, dir).embeddings, k = 8, iters = 3))
 
-  /** Per-dataset memo of the PERSISTED kNN-graph edge table — the
-    * writeIvfIndex lifecycle applied to the graph: a deployment
-    * materializes the k-NN edge set ONCE on distributed storage and every
+  /** Per-dataset memo ([[graft.Checkpoints.memo]]) of the PERSISTED
+    * kNN-graph edge table — the writeIvfIndex lifecycle applied to the
+    * graph: a deployment materializes the k-NN edge set ONCE on
+    * distributed storage and every
     * downstream consumer (dedup, clustering, analysis) reads the parquet
     * instead of re-probing the corpus. Parquet round-trips the (long,
     * long, double, int) edge rows exactly, so consuming the persisted
@@ -57,20 +58,14 @@ object VectorQueries extends QueryPack {
     * the independent joined-probe path against the SAME oracle. First
     * caller builds (k=3, nlist=8, nprobe=2 — the q120 geometry, shared
     * centroids); q120 exports via this memo, q121 consumes it. */
-  private val knnGraphPaths =
-    scala.collection.concurrent.TrieMap.empty[String, String]
   private def sharedKnnGraph(
-      s: org.apache.spark.sql.SparkSession, dir: String): org.apache.spark.sql.DataFrame = {
-    val path = knnGraphPaths.getOrElseUpdate(dir, {
-      val p = java.nio.file.Files.createTempDirectory("graft-knn-graph").toString
+      s: org.apache.spark.sql.SparkSession, dir: String): org.apache.spark.sql.DataFrame =
+    s.read.parquet(graft.Checkpoints.memo(s, "knn-graph", dir) { p =>
       Similarity.knnGraph(
           Tables(s, dir).embeddings, k = 3, nlist = 8, nprobe = 2,
           model = Some(sharedCentroids(s, dir)))
         .write.mode("overwrite").parquet(p)
-      p
     })
-    s.read.parquet(path)
-  }
 
   private val resModel = scala.collection.concurrent.TrieMap.empty[
     String,

@@ -495,51 +495,25 @@ object DocumentStreams {
   }
 
   /** Run `f` over a throttled (maxFilesPerTrigger=1) file stream of
-    * `docs` rendered by [[renderCrawlBatches]], with `conf`'s shuffle
-    * partitions set while `f` starts and awaits its query. The rendered
-    * crawl is deleted once `f` returns or throws: it is a full copy of
-    * the crawl on local disk, and `f` has terminated its query by then. */
+    * `docs` rendered as one parquet file per micro-batch (`batch b` =
+    * pmod(doc_id, batchFiles), [[graft.Checkpoints.renderBatches]]), with
+    * `conf`'s shuffle partitions set while `f` starts and awaits its
+    * query. The rendered crawl is deleted once `f` returns or throws: it
+    * is a full copy of the crawl on local disk, and `f` has terminated its
+    * query by then. */
   private def withCrawlBatches[T](
       spark: SparkSession, docs: DataFrame, batchFiles: Int,
       conf: EventStreams.StreamRunConf)(f: DataFrame => T): T = {
-    val streamDir = java.nio.file.Files.createTempDirectory("graft-crawl")
+    val streamDir = graft.Checkpoints.scratchDir(spark, "graft-crawl")
     try {
-      renderCrawlBatches(docs, batchFiles, streamDir)
+      graft.Checkpoints.renderBatches(
+        docs.withColumn("bat", pmod(col("doc_id"), lit(batchFiles))),
+        "bat", "parquet", streamDir)(b => f"batch$b%02d.parquet")
       EventStreams.withStreamingShufflePartitions(spark, conf.shufflePartitions) {
         f(spark.readStream.schema(documentSchema)
-          .option("maxFilesPerTrigger", 1).parquet(streamDir.toString))
+          .option("maxFilesPerTrigger", 1).parquet(streamDir))
       }
-    } finally org.apache.hadoop.fs.FileUtil.fullyDelete(streamDir.toFile)
-  }
-
-  /** Render a crawl relation into `streamDir` as one parquet file per
-    * micro-batch (`batch b` = pmod(doc_id, batchFiles)) with strictly
-    * increasing mtimes — FileStreamSource orders by (mtime, path), so
-    * throttled replays process batches in a fixed order and every
-    * downstream cascade is a pure function of the corpus. ONE partitioned
-    * write renders every file (partitionBy drops the bat column, so the
-    * stream schema is untouched); a per-batch filter+write loop would
-    * re-scan the corpus batchFiles times. The partitioned write's own dir
-    * is deleted once its files are moved. */
-  private def renderCrawlBatches(
-      docs: DataFrame, batchFiles: Int, streamDir: java.nio.file.Path): Unit = {
-    import java.nio.file.Files
-    val tmp = Files.createTempDirectory("graft-crawl-part").toFile
-    try {
-      docs.withColumn("bat", pmod(col("doc_id"), lit(batchFiles)))
-        .coalesce(1).write.partitionBy("bat").mode("overwrite")
-        .parquet(tmp.toString)
-      (0 until batchFiles).foreach { b =>
-        val partDir = new java.io.File(tmp, s"bat=$b")
-        val part = Option(partDir.listFiles).getOrElse(Array.empty)
-          .find(_.getName.endsWith(".parquet"))
-          .getOrElse(throw new IllegalStateException(s"no part file for batch $b"))
-        val dest = streamDir.resolve(f"batch$b%02d.parquet")
-        Files.move(part.toPath, dest)
-        require(dest.toFile.setLastModified((b + 1) * 60000L),
-          s"could not stamp batch $b's replay order")
-      }
-    } finally org.apache.hadoop.fs.FileUtil.fullyDelete(tmp)
+    } finally graft.Checkpoints.release(streamDir)
   }
 
   /** One micro-batch of the KEYED-CONNECTOR incremental dedup lifecycle

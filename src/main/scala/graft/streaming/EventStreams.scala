@@ -162,21 +162,17 @@ object EventStreams {
     * dropDuplicatesWithinWatermark contract vs a batch distinct. */
   def dedupReplayToTable(spark: SparkSession, dir: String, tableName: String,
       conf: StreamRunConf = StreamRunConf()): DataFrame = {
-    import java.nio.file.Files
     val ev = graft.sources.Tables(spark, dir).events
     val dups = ev.filter(pmod(col("event_id"), lit(7)) === 0)
-    val tmp = Files.createTempDirectory("graft-dedup-tmp")
-    val streamDir = Files.createTempDirectory("graft-dedup-stream")
+    val streamDir = graft.Checkpoints.scratchDir(spark, "graft-dedup-stream")
     try {
-      ev.unionAll(dups)
-        .unionAll(dups.filter(pmod(col("event_id"), lit(21)) === 0))
-        .coalesce(1).write.mode("overwrite").parquet(tmp.toString)
-      val part = Option(tmp.toFile.listFiles)
-        .getOrElse(Array.empty).find(_.getName.endsWith(".parquet"))
-        .getOrElse(throw new IllegalStateException("no dedup fixture part file"))
-      Files.move(part.toPath, streamDir.resolve("events.parquet"))
+      graft.Checkpoints.renderBatches(
+        ev.unionAll(dups)
+          .unionAll(dups.filter(pmod(col("event_id"), lit(21)) === 0))
+          .withColumn("bat", lit(0)),
+        "bat", "parquet", streamDir)(_ => "events.parquet")
       withStreamingShufflePartitions(spark, conf.shufflePartitions) {
-        val q = dedupedEventStream(spark, streamDir.toString)
+        val q = dedupedEventStream(spark, streamDir)
           .select(col("event_id"), col("ts"), col("user_id"),
             col("event_type"), col("value"))
           .writeStream.format("memory").queryName(tableName)
@@ -184,7 +180,7 @@ object EventStreams {
           .trigger(Trigger.AvailableNow()).start()
         q.awaitTermination()
       }
-    } finally deleteDirs(tmp, streamDir) // the memory sink holds the output
+    } finally graft.Checkpoints.release(streamDir) // the memory sink holds the output
     spark.table(tableName)
   }
 
@@ -518,33 +514,24 @@ object EventStreams {
   }
 
   /** Run `f` over the view/purchase slice of `events` rendered as TWO
-    * mtime-ordered parquet batch files (real events, then the sentinel
+    * mtime-ordered parquet batch files ([[graft.Checkpoints.renderBatches]]:
+    * real events, then the sentinel
     * pair 2×maxDelay past the real maximum on BOTH sides — the global
     * watermark is the min across inputs) and opened as a throttled file
     * stream: the bounded-replay drain device every outer interval-join
     * driver needs, extracted once. Sentinel rows carry user_id = −1;
     * drivers filter them from the output. `f` runs its query to
-    * termination into a memory sink, so the rendered dirs are deleted
-    * once it returns or throws. */
+    * termination into a memory sink, so the rendered dir is deleted once
+    * it returns or throws. */
   private def withViewPurchaseStream[T](
       spark: SparkSession, dir: String, maxDelayMinutes: Int)(
       f: DataFrame => T): T = {
-    import java.nio.file.Files
     val base = graft.sources.Tables(spark, dir).events
       .filter(col("event_type").isin("view", "purchase"))
       .select(col("event_id"), col("user_id"), col("event_type"),
         col("ts").cast("timestamp").as("ts"))
-    val streamDir = Files.createTempDirectory("graft-vconv-src")
-    val tmp = Files.createTempDirectory("graft-vconv-tmp")
-    val tmp2 = Files.createTempDirectory("graft-vconv-tmp2")
+    val streamDir = graft.Checkpoints.scratchDir(spark, "graft-vconv-src")
     try {
-      base.coalesce(1).write.mode("overwrite").parquet(tmp.toString)
-      val part0 = Option(tmp.toFile.listFiles).getOrElse(Array.empty)
-        .find(_.getName.endsWith(".parquet"))
-        .getOrElse(throw new IllegalStateException("no rendered events file"))
-      Files.move(part0.toPath, streamDir.resolve("batch00.parquet"))
-      require(streamDir.resolve("batch00.parquet").toFile
-        .setLastModified(60000L), "could not stamp batch 0")
       val maxTs = base.agg(org.apache.spark.sql.functions.max(col("ts")))
         .head().getTimestamp(0)
       val sentinelTs = new java.sql.Timestamp(
@@ -554,21 +541,14 @@ object EventStreams {
         (-1L, -1L, "view", sentinelTs),
         (-2L, -1L, "purchase", sentinelTs))
         .toDF("event_id", "user_id", "event_type", "ts")
-      sentinel.coalesce(1).write.mode("overwrite").parquet(tmp2.toString)
-      val part1 = Option(tmp2.toFile.listFiles).getOrElse(Array.empty)
-        .find(_.getName.endsWith(".parquet"))
-        .getOrElse(throw new IllegalStateException("no sentinel file"))
-      Files.move(part1.toPath, streamDir.resolve("batch01.parquet"))
-      require(streamDir.resolve("batch01.parquet").toFile
-        .setLastModified(120000L), "could not stamp the sentinel batch")
+      graft.Checkpoints.renderBatches(
+        base.withColumn("bat", lit(0))
+          .unionByName(sentinel.withColumn("bat", lit(1))),
+        "bat", "parquet", streamDir)(b => f"batch$b%02d.parquet")
       f(spark.readStream.schema(base.schema)
-        .option("maxFilesPerTrigger", 1).parquet(streamDir.toString))
-    } finally deleteDirs(streamDir, tmp, tmp2)
+        .option("maxFilesPerTrigger", 1).parquet(streamDir))
+    } finally graft.Checkpoints.release(streamDir)
   }
-
-  /** Delete the local dirs a stream driver rendered its input into. */
-  private def deleteDirs(dirs: java.nio.file.Path*): Unit =
-    dirs.foreach(d => org.apache.hadoop.fs.FileUtil.fullyDelete(d.toFile))
 
   /** Drive [[leftOuterIntervalJoinStreams]] end-to-end over the events
     * table: views left-outer-joined to the purchases that followed

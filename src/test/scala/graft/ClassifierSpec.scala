@@ -13,6 +13,21 @@ class ClassifierSpec extends SparkSpec {
     BigDecimal(math.log(x) / math.log(2.0))
       .setScale(9, BigDecimal.RoundingMode.HALF_UP).toDouble
 
+  test("q113 rebuilds its persisted model once the model's dir is released") {
+    // a stopped context releases every dir it owns; the memo must then
+    // rebuild the model instead of reading a deleted path
+    val q113 = SparkEntry.queries("q113_nb_model")
+    val first = q113(spark, sfDir)
+    val want = first.collect().toSeq
+    val modelDirs = first.inputFiles.toSeq
+      .map(f => new java.io.File(new java.net.URI(f)).getParent).distinct
+    assert(modelDirs.nonEmpty && modelDirs.forall(
+      new java.io.File(_).getName.startsWith("graft-nb-model")), modelDirs)
+    modelDirs.foreach(Checkpoints.release)
+    assert(modelDirs.forall(!new java.io.File(_).exists))
+    assert(q113(spark, sfDir).collect().toSeq === want)
+  }
+
   test("hand-computed model: Laplace likelihoods, OOV mass, priors") {
     import spark.implicits._
     val docs = Seq(

@@ -4,7 +4,7 @@ import java.util.concurrent.atomic.AtomicLong
 import scala.jdk.CollectionConverters._
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.{DataFrame, Row}
-import graft.sources.{BoundedErrorAccumulator, HttpPublisher, PagedSource, RateLimitedSink}
+import graft.sources.{BoundedErrorAccumulator, HttpPublisher, RateLimitedSink}
 import graft.migration.{ErrorChannel, Fixtures}
 
 /** Shared mutable recorder for the sink test — local-mode executors live in
@@ -72,38 +72,6 @@ class SinkSourceSpec extends SparkSpec {
     assert(rows === df.count())
     assert(SinkRecorder.batches.get() === n)
     assert(n >= 3) // 8 rows, batch 3, 2 partitions => at least 3 batches
-  }
-
-  test("paged source: page recovery, range pruning, manifest counts (S1/S2/F4/A1)") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-pages").toString
-    val pages = Fixtures.customers.grouped(3).zipWithIndex.toSeq
-    pages.foreach { case (group, i) =>
-      val rows = group.map { c =>
-        s"""{"email":${ujson(c.email)},"name":${ujson(c.name)}}"""
-      }
-      java.nio.file.Files.write(
-        java.nio.file.Paths.get(s"$dir/page-${i + 1}.json"),
-        rows.mkString("\n").getBytes("UTF-8"))
-    }
-    java.nio.file.Files.write(java.nio.file.Paths.get(s"$dir/meta.json"),
-      s"""{"pagination":{"total_count":${Fixtures.customers.size},"total_pages":${pages.size}}}"""
-        .getBytes("UTF-8"))
-
-    val schema = org.apache.spark.sql.types.StructType(Seq(
-      org.apache.spark.sql.types.StructField("email", org.apache.spark.sql.types.StringType),
-      org.apache.spark.sql.types.StructField("name", org.apache.spark.sql.types.StringType)))
-
-    val all = PagedSource.readPages(spark, dir, schema)
-    assert(all.count() === Fixtures.customers.size)
-    assert(all.select("page").distinct().count() === pages.size)
-
-    val ranged = PagedSource.readPages(spark, dir, schema, Some(2), Some(2))
-    assert(ranged.count() === 3)
-    assert(ranged.select("page").distinct().head().getInt(0) === 2)
-
-    val (totalCount, totalPages) = PagedSource.readManifest(spark, dir)
-    assert(totalCount === Fixtures.customers.size.toLong)
-    assert(totalPages === pages.size.toLong)
   }
 
   private def ujson(s: String): String =

@@ -691,6 +691,27 @@ class StreamingSpec extends SparkSpec {
     assert(deduped.count() > 0 && conversions.count() > 0)
   }
 
+  test("registered queries delete the intermediates they render") {
+    // q131 and q226 render their page fixtures on a memo miss (the
+    // "/." spelling of the dataset dir is a key no earlier call built);
+    // q206 renders its crawl on every call. Only the dirs that the
+    // returned frames read may outlive the call
+    val tmp = new java.io.File(System.getProperty("java.io.tmpdir"))
+    val cases = Seq(
+      ("q131_v2_page_scan", s"$sfDir/.", Seq("graft-q131-part")),
+      ("q226_count_pushdown_pruned", s"$sfDir/.", Seq("graft-q226-part")),
+      ("q206_stream_keyed_exactly_once", sfDir,
+        Seq("graft-q206-part", "graft-q206-src", "graft-q206-ck")))
+    for ((name, data, prefixes) <- cases) {
+      def rendered(): Set[String] = Option(tmp.listFiles).getOrElse(Array.empty)
+        .map(_.getName).filter(n => prefixes.exists(n.startsWith)).toSet
+      val before = rendered()
+      val rows = SparkEntry.queries(name)(spark, data).collect()
+      assert(rows.nonEmpty, s"$name returned no rows")
+      assert(rendered() -- before === Set.empty, s"$name left its intermediates")
+    }
+  }
+
   test("dedup store: the seed and every trigger of both lifecycles release " +
     "the checkpoints they create") {
     import graft.streaming.DocumentStreams
