@@ -12,7 +12,14 @@ import org.apache.spark.sql.SparkSession
   *    reference's America/Toronto, SyncTickets.php:38);
   *  - AQE on (runtime re-planning, skew-join handling);
   *  - shuffle partitioning defaulted for the local harness — a cluster
-  *    deployment overrides it to ~2-3x total executor cores.
+  *    deployment overrides it to ~2-3x total executor cores;
+  *  - `spark.sql.legacy.parquet.nanosAsLong`: events.parquet's `ts` has
+  *    been written as TIMESTAMP(NANOS) by some fixture generations, which
+  *    Spark reads only as a long under this conf
+  *    ([[graft.sources.Tables.events]] normalizes every layout).
+  *
+  * Every other conf a query or stream needs is scoped to its call by
+  * [[withSessionConfs]].
   */
 object GraftSession {
 
@@ -24,6 +31,29 @@ object GraftSession {
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.sql.adaptive.enabled", "true")
       .config("spark.sql.shuffle.partitions", shufflePartitions.toString)
+      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
+
+  /** Run `body` with the session confs `kvs` set, then give every key back
+    * the value it had: a key that was set is set again, a key that was
+    * unset is unset. A get/set round-trip would not do for the second
+    * kind: `conf.get` of a key with no default (such as
+    * `spark.sql.adaptive.autoBroadcastJoinThreshold`) is null, and setting
+    * null throws. The restore runs even when `body` throws.
+    *
+    * The confs are SESSION state: this is safe because Verify, Bench and
+    * the specs run registered queries and streams one at a time on one
+    * session. A runner that shares the session between concurrent calls
+    * would race the confs and must give each call its own
+    * `spark.newSession()` (confs are per session). */
+  def withSessionConfs[A](s: SparkSession)(kvs: (String, String)*)(
+      body: => A): A = {
+    val prev = kvs.map { case (k, _) => k -> s.conf.getOption(k) }
+    kvs.foreach { case (k, v) => s.conf.set(k, v) }
+    try body finally prev.foreach {
+      case (k, Some(v)) => s.conf.set(k, v)
+      case (k, None) => s.conf.unset(k)
+    }
+  }
 
   /** The local test/bench shape (local[n] with matching partitioning). */
   def local(cores: Int = 32): SparkSession =

@@ -113,35 +113,37 @@ object Graph {
       seeds: DataFrame, seedCol: String, maxHops: Int): DataFrame = {
     require(maxHops >= 0, "maxHops must be >= 0")
     val e = edges.select(col(srcCol).as("s"), col(dstCol).as("d"))
-    val ee = e.unionAll(e.select(col("d").as("s"), col("s").as("d")))
-      .localCheckpoint(true)
+    val (ee, releaseEe) = graft.Checkpoints.owned(
+      e.unionAll(e.select(col("d").as("s"), col("s").as("d"))))
     try {
-      var visited = seeds.select(col(seedCol).as("node")).distinct()
-        .withColumn("hops", lit(0)).localCheckpoint(true)
-      var frontier = visited
+      var (visited, releaseVisited) = graft.Checkpoints.owned(
+        seeds.select(col(seedCol).as("node")).distinct()
+          .withColumn("hops", lit(0)))
+      // the first frontier IS the visited set: one release owns it
+      var (frontier, releaseFrontier) = (visited, () => ())
       var h = 0
       while (h < maxHops && !frontier.isEmpty) {
         h += 1
-        val next = ee.join(frontier.select(col("node").as("s")), Seq("s"))
-          .select(col("d").as("node")).distinct()
-          .join(visited.select(col("node")), Seq("node"), "left_anti")
-          .withColumn("hops", lit(h))
-          .localCheckpoint(true)
-        val merged = visited.unionAll(next).localCheckpoint(true)
+        val (next, releaseNext) = graft.Checkpoints.owned(
+          ee.join(frontier.select(col("node").as("s")), Seq("s"))
+            .select(col("d").as("node")).distinct()
+            .join(visited.select(col("node")), Seq("node"), "left_anti")
+            .withColumn("hops", lit(h)))
+        val (merged, releaseMerged) =
+          graft.Checkpoints.owned(visited.unionAll(next))
         // the merged checkpoint has materialized (eager), so the
         // superseded round's blocks are dead weight — release them to
-        // keep storage O(|V|), not O(maxHops · |V|); the initial round
-        // has frontier eq visited, so guard the double-unpersist
-        if (!(frontier eq visited)) frontier.unpersist()
-        visited.unpersist()
-        visited = merged
-        frontier = next
+        // keep storage O(|V|), not O(maxHops · |V|)
+        releaseFrontier()
+        releaseVisited()
+        visited = merged; releaseVisited = releaseMerged
+        frontier = next; releaseFrontier = releaseNext
       }
-      // the last frontier's blocks are folded into the final visited
-      // checkpoint already; only the returned frame needs to stay live
-      if (!(frontier eq visited)) frontier.unpersist()
+      // the last frontier's rows are in the final visited checkpoint;
+      // only the returned frame stays live
+      releaseFrontier()
       visited
-    } finally { ee.unpersist(); () }
+    } finally releaseEe()
   }
 
   /** Per-node triangle participation counts over an UNDIRECTED simple
@@ -237,48 +239,48 @@ object Graph {
       // sides below; recomputing the degree joins per use would triple
       // the shuffle work
       .localCheckpoint(true)
-    try {
-      // checkpointed: (a) both join sides below consume it — inline it
-      // would aggregate twice; (b) the checkpoint carries EXACT size
-      // stats, so Catalyst picks broadcast-hash when the adjacency table
-      // fits the threshold and sort-merge when |V| outgrows it — the
-      // size-based strategy flip is the 100 TB story, not a hardcoded
-      // hint either way
-      val adj = oriented.groupBy(col("src"))
-        .agg(collect_list(col("dst")).as("nbrs"))
-        .localCheckpoint(true)
-      // the dedup gate, folded into the already-materialized adjacency:
-      // a duplicate canonical edge = a repeated dst within one nbrs list
-      // (both copies orient the same way). One map-only scan of the
-      // V-row checkpointed table — no validation shuffle of the edge set.
-      val dupEdges = adj
-        .select((size(col("nbrs")) -
-          size(array_distinct(col("nbrs")))).as("d"))
-        .filter(col("d") > 0)
-        .agg(coalesce(sum(col("d")), lit(0L))).head().getLong(0)
-      require(dupEdges == 0L,
-        s"triangleCounts expects deduplicated canonical edges; found " +
-          s"$dupEdges duplicate edge(s)")
-      // for edge u→v: the triangles it owns are N⁺(u) ∩ N⁺(v); an edge
-      // whose head has no out-edges owns none (inner join drops it)
-      val e2 = oriented
-        .join(adj.select(col("src"), col("nbrs").as("nu")), Seq("src"))
-        .join(adj.select(col("src").as("dst"), col("nbrs").as("nv")),
-          Seq("dst"))
-        .select(col("src"), col("dst"),
-          array_intersect(col("nu"), col("nv")).as("ws"))
-        .filter(size(col("ws")) > 0)
-      // each triangle contributes once per corner: every closing node w
-      // once, and the two edge ends once per closing node — emitted as
-      // ONE exploded array per edge (a three-way union would execute the
-      // whole join subtree three times; Spark does not share common
-      // subplans across Union branches)
-      e2.select(explode(concat(col("ws"),
-          array_repeat(col("src"), size(col("ws"))),
-          array_repeat(col("dst"), size(col("ws"))))).as("node"))
-        .groupBy(col("node"))
-        .agg(count(lit(1)).as("n_triangles"))
-    } finally { oriented.unpersist(); e.unpersist(); e0.unpersist(); () }
+    // checkpointed: (a) both join sides below consume it — inline it
+    // would aggregate twice; (b) the checkpoint carries EXACT size
+    // stats, so Catalyst picks broadcast-hash when the adjacency table
+    // fits the threshold and sort-merge when |V| outgrows it — the
+    // size-based strategy flip is the 100 TB story, not a hardcoded
+    // hint either way
+    val adj = oriented.groupBy(col("src"))
+      .agg(collect_list(col("dst")).as("nbrs"))
+      .localCheckpoint(true)
+    // the dedup gate, folded into the already-materialized adjacency:
+    // a duplicate canonical edge = a repeated dst within one nbrs list
+    // (both copies orient the same way). One map-only scan of the
+    // V-row checkpointed table — no validation shuffle of the edge set.
+    val dupEdges = adj
+      .select((size(col("nbrs")) -
+        size(array_distinct(col("nbrs")))).as("d"))
+      .filter(col("d") > 0)
+      .agg(coalesce(sum(col("d")), lit(0L))).head().getLong(0)
+    require(dupEdges == 0L,
+      s"triangleCounts expects deduplicated canonical edges; found " +
+        s"$dupEdges duplicate edge(s)")
+    // for edge u→v: the triangles it owns are N⁺(u) ∩ N⁺(v); an edge
+    // whose head has no out-edges owns none (inner join drops it)
+    val e2 = oriented
+      .join(adj.select(col("src"), col("nbrs").as("nu")), Seq("src"))
+      .join(adj.select(col("src").as("dst"), col("nbrs").as("nv")),
+        Seq("dst"))
+      .select(col("src"), col("dst"),
+        array_intersect(col("nu"), col("nv")).as("ws"))
+      .filter(size(col("ws")) > 0)
+    // each triangle contributes once per corner: every closing node w
+    // once, and the two edge ends once per closing node — emitted as
+    // ONE exploded array per edge (a three-way union would execute the
+    // whole join subtree three times; Spark does not share common
+    // subplans across Union branches). The returned frame is lazy and
+    // reads the checkpoints above when the caller runs it, so none of
+    // them is released here.
+    e2.select(explode(concat(col("ws"),
+        array_repeat(col("src"), size(col("ws"))),
+        array_repeat(col("dst"), size(col("ws"))))).as("node"))
+      .groupBy(col("node"))
+      .agg(count(lit(1)).as("n_triangles"))
   }
 
   /** Synchronous label propagation (Raghavan et al. 2007) over an
@@ -328,12 +330,12 @@ object Graph {
       .select(least(col("a"), col("b")).as("a"),
         greatest(col("a"), col("b")).as("b"))
       .distinct()
-    val und = norm
-      .unionAll(norm.select(col("b").as("a"), col("a").as("b")))
-      .localCheckpoint(true)
+    val (und, releaseUnd) = graft.Checkpoints.owned(
+      norm.unionAll(norm.select(col("b").as("a"), col("a").as("b"))))
     try {
-      var labels = und.select(col("a").as("node")).distinct()
-        .withColumn("lab", col("node")).localCheckpoint(true)
+      var (labels, releaseLabels) = graft.Checkpoints.owned(
+        und.select(col("a").as("node")).distinct()
+          .withColumn("lab", col("node")))
       // a localCheckpoint's LogicalRDD carries NO usable size stats, so
       // Catalyst plans the round join as SMJ and re-shuffles the O(|E|)
       // closure EVERY round (measured: 2.4s/round, 145 MB shuffled at
@@ -355,11 +357,10 @@ object Graph {
           .agg(count(lit(1)).as("cnt"))
         // (max cnt, then min label): negate inside the struct so ONE
         // max aggregate carries both tie-break levels
-        val next = votes
+        val (next, releaseNext) = graft.Checkpoints.owned(votes
           .groupBy(col("node"))
           .agg(max(struct(col("cnt"), (-col("lab")).as("neg"))).as("w"))
-          .select(col("node"), (-col("w.neg")).as("lab"))
-          .localCheckpoint(true)
+          .select(col("node"), (-col("w.neg")).as("lab")))
         // EARLY STOP without losing determinism: synchronous updates make
         // a zero-change round a fixed point — every later round is the
         // identity, so stopping returns EXACTLY the fixed-round result on
@@ -382,11 +383,11 @@ object Graph {
             .filter(col("lab") =!= col("prev"))
             .limit(1).count() == 0L
         }
-        labels.unpersist()
-        labels = next
+        releaseLabels()
+        labels = next; releaseLabels = releaseNext
         r += 1
       }
       labels.select(col("node"), col("lab").as("label"))
-    } finally { und.unpersist(); () }
+    } finally releaseUnd()
   }
 }

@@ -231,29 +231,30 @@ object Similarity {
       // sort, no single-task gather, replay-stable
       val denom = 1000000L
       val floor = math.min(trainCap, math.max(kFloor, 64L))
+      def sampleAt(keep: Long) = graft.Checkpoints.owned(
+        slim.filter(pmod(xxhash64(col(idCol)), lit(denom)) < lit(keep)))
       var keep = math.max(1L, denom * trainCap / n)
-      var sample = slim.filter(
-        pmod(xxhash64(col(idCol)), lit(denom)) < lit(keep)).localCheckpoint(true)
+      var (sample, release) = sampleAt(keep)
       // counting the checkpointed sample is in-memory, not a source scan
       while (sample.count() < floor && keep < denom) {
         keep = math.min(denom, keep * 8)
         // release the superseded eager checkpoint before widening, or
         // every rejected sample's blocks stay pinned through training
-        sample.unpersist()
-        sample = slim.filter(
-          pmod(xxhash64(col(idCol)), lit(denom)) < lit(keep)).localCheckpoint(true)
+        release()
+        val (wider, releaseWider) = sampleAt(keep)
+        sample = wider; release = releaseWider
       }
       sample
     }
     if (n <= trainCap) {
-      val whole = slim.localCheckpoint(true)
+      val (whole, release) = graft.Checkpoints.owned(slim)
       val actual = whole.count() // in-memory count of the checkpoint
       if (actual <= trainCap) whole
       else {
         // the trusted count lied; the recount above cost nothing extra
         // and IS the true count — release the oversize checkpoint and
         // re-enter the gated path sized by it
-        whole.unpersist()
+        release()
         gated(actual)
       }
     } else gated(n)

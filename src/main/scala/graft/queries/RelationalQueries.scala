@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import graft.operators.{Layout, Sketches}
+import graft.GraftSession.withSessionConfs
 import graft.sources.Tables
 import org.apache.spark.sql.types.{DoubleType, IntegerType, LongType, StringType, StructField, StructType}
 
@@ -760,8 +761,8 @@ object RelationalQueries extends QueryPack {
     * over the unpruned table builds a one-row manifest-count scan, and
     * ZERO pages are listed, opened, or fetched (SinkSourceSpec proves
     * the no-requests claim over live HTTP; page-pruned or grouped
-    * counts refuse and scan normally). The body require()s the pushed
-    * scan shape off the executed plan. At 100 TB-of-API this is the
+    * counts refuse and scan normally). PlanSpec's q217 row pins the
+    * pushed scan shape. At 100 TB-of-API this is the
     * difference between one meta round-trip and paging the entire
     * remote corpus to count it. */
   private val q217 = Q(
@@ -771,11 +772,7 @@ object RelationalQueries extends QueryPack {
       val schema = StructType(Seq(StructField("o_orderkey", LongType)))
       s.read.format("graft-pages").schema(schema).load(pages)
         .createOrReplaceTempView("graft_pages_q217")
-      val out = s.sql("SELECT count(*) AS n_rows FROM graft_pages_q217")
-      val p = out.queryExecution.executedPlan.toString
-      require(p.contains("from manifest"),
-        s"COUNT(*) was not pushed into the paged scan:\n${p.take(1200)}")
-      out
+      s.sql("SELECT count(*) AS n_rows FROM graft_pages_q217")
     },
     Some("""SELECT CAST(count(*) AS BIGINT) AS n_rows
       FROM orders WHERE o_orderkey < 500"""))
@@ -815,7 +812,8 @@ object RelationalQueries extends QueryPack {
     * over LIVE HTTP with the pruned range including the short last page
     * (the correction term is exercised, not just the easy full-pages
     * product), and the no-fetch claim require()d against the server's
-    * request log — meta.json may be requested, page bodies never. At
+    * request log — meta.json may be requested, page bodies never.
+    * PlanSpec's q226 row pins the manifest-answered scan. At
     * 100 TB-of-API: one meta round-trip instead of paging the pruned
     * remainder of the corpus to count it. */
   private val q226 = Q(
@@ -848,15 +846,10 @@ object RelationalQueries extends QueryPack {
           .createOrReplaceTempView("graft_pages_q226")
         // pages >= 2: drops exactly one full first page, keeps the short
         // last page inside the range — the apportionment's both terms
-        val q = s.sql(
-          "SELECT count(*) AS n_rows FROM graft_pages_q226 WHERE page >= 2")
-        val p = q.queryExecution.executedPlan.toString
-        require(p.contains("from manifest"),
-          s"pruned COUNT was not answered by the manifest:\n${p.take(1200)}")
         // eager materialization so the returned frame is wire-independent
-        // (the plan pin above reads the PRE-checkpoint plan — a
-        // localCheckpoint replaces it with a LogicalRDD)
-        val out = q.localCheckpoint(true)
+        val out = s.sql(
+          "SELECT count(*) AS n_rows FROM graft_pages_q226 WHERE page >= 2")
+          .localCheckpoint(true)
         val pagesHit = scala.jdk.CollectionConverters
           .ListHasAsScala(requested).asScala.filter(_.contains("page-")).toSeq
         require(pagesHit.isEmpty,
@@ -916,40 +909,26 @@ object RelationalQueries extends QueryPack {
   /** The bucketed co-located join GRADED (sources.Bucketing, spec-only
     * through r9): lineitem ⋈ orders with both sides bucketed + sorted on
     * the join key — the 100 TB big-big join shape where the per-query
-    * exchange is amortized into the ingest-time layout. The body
-    * require()s the executed join subplan carries ZERO Exchange and is
-    * bucket-aware, with broadcast disabled so the claim is about
-    * co-location, not about the dimension fitting in memory (at sf
-    * fixtures Spark would otherwise broadcast). Revenue-by-year
-    * aggregate on top; plain-SQL oracle.
-    *
-    * CONTRACT: the set/restore of `autoBroadcastJoinThreshold` mutates
-    * SESSION state — safe because the harness runs registered queries
-    * sequentially on one session (Verify/Bench/specs all do) and the
-    * restore is in `finally`; a concurrent runner sharing the session
-    * would race the conf and must clone the session first
-    * (`spark.newSession()` confs are per-session). */
+    * exchange is amortized into the ingest-time layout. Broadcast is
+    * disabled so the claim is about co-location, not about the
+    * dimension fitting in memory (at sf fixtures Spark would otherwise
+    * broadcast), and the aggregate materializes under that conf;
+    * PlanSpec's q158 row pins the executed join subtree: ZERO Exchange
+    * and a bucket-aware scan. Revenue-by-year aggregate on top;
+    * plain-SQL oracle. */
   private val q158 = Q(
     "q158_bucketed_join",
     (s, dir) => {
       val (li, ord) = bucketedOrdersLineitem(s, dir)
-      val old = s.conf.get("spark.sql.autoBroadcastJoinThreshold")
-      try {
-        s.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-        val j = graft.sources.Bucketing.bucketedJoin(
-          s, li, ord, "l_orderkey", "o_orderkey")
-        val p = j.queryExecution.executedPlan.toString
-        require(!p.contains("Exchange"),
-          s"bucketed join planned a shuffle:\n${p.take(1200)}")
-        require(p.contains("Bucketed: true"), "scan is not bucket-aware")
-        j.groupBy(year(col("o_orderdate")).as("o_year"))
+      withSessionConfs(s)("spark.sql.autoBroadcastJoinThreshold" -> "-1") {
+        graft.sources.Bucketing.bucketedJoin(
+            s, li, ord, "l_orderkey", "o_orderkey")
+          .groupBy(year(col("o_orderdate")).as("o_year"))
           .agg(round(sum(col("l_extendedprice")), 2).as("revenue"),
             count(lit(1)).as("n"))
           .orderBy(col("o_year"))
-          // materialize under the no-broadcast conf so the executed join
-          // matches the asserted plan (the conf is restored in finally)
           .localCheckpoint(true)
-      } finally s.conf.set("spark.sql.autoBroadcastJoinThreshold", old)
+      }
     },
     Some("""SELECT CAST(year(o_orderdate) AS INT) AS o_year,
         round(sum(l_extendedprice), 2) AS revenue,
@@ -973,35 +952,25 @@ object RelationalQueries extends QueryPack {
     * then co-locate a 2ⁿ ⋈ 2ⁿ⁻¹ join by reading the wider side's bucket
     * pairs together, with NO Exchange on either side (without it, the
     * mismatched counts would re-shuffle a side and the ingest-time
-    * layout would be worthless across epochs). The body require()s zero
-    * Exchange in the executed plan with broadcast disabled; a sort on
-    * the coalesced side is expected and allowed (two sorted buckets read
-    * as one partition are merely locally unsorted — cheap, no network).
-    * Same sequential-session conf contract as q158. */
+    * layout would be worthless across epochs). Broadcast is disabled as
+    * in q158; PlanSpec's q160 row pins the executed join subtree: zero
+    * Exchange and a `Coalesced` scan. A sort on the coalesced side is
+    * expected and allowed (two sorted buckets read as one partition are
+    * merely locally unsorted — cheap, no network). */
   private val q160 = Q(
     "q160_bucket_coalesced_join",
     (s, dir) => {
       val (li, ord) = bucketedDriftTables(s, dir)
-      val oldB = s.conf.get("spark.sql.autoBroadcastJoinThreshold")
-      val oldC = s.conf.get("spark.sql.bucketing.coalesceBucketsInJoin.enabled")
-      try {
-        s.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-        s.conf.set("spark.sql.bucketing.coalesceBucketsInJoin.enabled", "true")
-        val j = graft.sources.Bucketing.bucketedJoin(
-          s, li, ord, "l_orderkey", "o_orderkey")
-        val p = j.queryExecution.executedPlan.toString
-        require(!p.contains("Exchange"),
-          s"epoch-drifted bucketed join planned a shuffle:\n${p.take(1200)}")
-        require(p.contains("Coalesced"),
-          s"wider side was not bucket-coalesced:\n${p.take(1200)}")
-        j.groupBy(col("o_orderpriority"))
+      withSessionConfs(s)(
+        "spark.sql.autoBroadcastJoinThreshold" -> "-1",
+        "spark.sql.bucketing.coalesceBucketsInJoin.enabled" -> "true") {
+        graft.sources.Bucketing.bucketedJoin(
+            s, li, ord, "l_orderkey", "o_orderkey")
+          .groupBy(col("o_orderpriority"))
           .agg(round(sum(col("l_extendedprice")), 2).as("revenue"),
             count(lit(1)).as("n"))
           .orderBy(col("o_orderpriority"))
           .localCheckpoint(true)
-      } finally {
-        s.conf.set("spark.sql.autoBroadcastJoinThreshold", oldB)
-        s.conf.set("spark.sql.bucketing.coalesceBucketsInJoin.enabled", oldC)
       }
     },
     Some("""SELECT o_orderpriority,
@@ -1023,39 +992,31 @@ object RelationalQueries extends QueryPack {
     * and shuffling the ~matching fraction (one-sided: false positives
     * only, the join stays exact, which is why the oracle is plain SQL).
     * The body lowers the application-side threshold (sized for real
-    * clusters, fixture scans are far below it) and require()s the
-    * injected predicate in the executed plan; same sequential-session
-    * conf contract as q158. */
+    * clusters, fixture scans are far below it) and materializes under
+    * it; PlanSpec's q163 row pins the injected predicate in the
+    * executed plan. */
   private val q163 = Q(
     "q163_runtime_bloom_join",
     (s, dir) => {
-      val keys = Seq(
-        "spark.sql.optimizer.runtime.bloomFilter.enabled",
-        "spark.sql.optimizer.runtime.bloomFilter.applicationSideScanSizeThreshold",
-        "spark.sql.autoBroadcastJoinThreshold")
-      val old = keys.map(k => k -> s.conf.get(k))
-      try {
-        s.conf.set(keys(0), "true")
-        s.conf.set(keys(1), "0") // fixture scans sit far below the 10GB default
-        s.conf.set(keys(2), "-1") // SMJ: the shuffle the filter exists to starve
+      withSessionConfs(s)(
+        "spark.sql.optimizer.runtime.bloomFilter.enabled" -> "true",
+        // fixture scans sit far below the 10GB default
+        "spark.sql.optimizer.runtime.bloomFilter.applicationSideScanSizeThreshold" -> "0",
+        // SMJ: the shuffle the filter exists to starve
+        "spark.sql.autoBroadcastJoinThreshold" -> "-1") {
         val t = Tables(s, dir)
         val dim = t.orders
           .filter(col("o_orderpriority") === "1-URGENT")
           .select(col("o_orderkey"), col("o_orderdate"))
-        val res = t.lineitem
+        t.lineitem
           .select(col("l_orderkey"), col("l_extendedprice"))
           .join(dim, col("l_orderkey") === col("o_orderkey"))
           .groupBy(year(col("o_orderdate")).as("o_year"))
           .agg(round(sum(col("l_extendedprice")), 2).as("revenue"),
             count(lit(1)).as("n"))
           .orderBy(col("o_year"))
-        val p = res.queryExecution.executedPlan.toString
-        require(p.contains("might_contain"),
-          s"runtime bloom filter was not injected:\n${p.take(1200)}")
-        // materialize under the conf so the executed plan is the
-        // asserted one (restored in finally)
-        res.localCheckpoint(true)
-      } finally old.foreach { case (k, v) => s.conf.set(k, v) }
+          .localCheckpoint(true)
+      }
     },
     Some("""SELECT CAST(year(o_orderdate) AS INT) AS o_year,
         round(sum(l_extendedprice), 2) AS revenue,
@@ -1085,8 +1046,8 @@ object RelationalQueries extends QueryPack {
     * injects a `dynamicpruning` subquery into the fact scan's
     * PartitionFilters — whole partitions are never listed, opened, or
     * read. At 100 TB this is the difference between scanning every
-    * date partition and scanning the qualifying ones; the body
-    * require()s the injected filter in the executed plan. The median
+    * date partition and scanning the qualifying ones; PlanSpec's q164
+    * row pins the injected filter in the executed plan. The median
     * threshold is computed driver-side (a 1-row scalar over a
     * years-count frame — model-sized, like every sanctioned collect),
     * and the dim aggregate itself is what makes the pruning dynamic.
@@ -1100,16 +1061,12 @@ object RelationalQueries extends QueryPack {
         .agg(count(lit(1)).as("c"))
       val med = dim0.agg(percentile(col("c"), lit(0.5))).head().getDouble(0)
       val dim = dim0.filter(col("c") > med).select(col("o_year"))
-      val res = fact
+      fact
         .join(dim, col("l_year") === col("o_year"))
         .groupBy(col("l_year").cast("int").as("l_year"))
         .agg(round(sum(col("l_extendedprice")), 2).as("revenue"),
           count(lit(1)).as("n"))
         .orderBy(col("l_year"))
-      val p = res.queryExecution.executedPlan.toString
-      require(p.contains("dynamicpruning"),
-        s"partition filter was not dynamically injected:\n${p.take(1200)}")
-      res
     },
     Some("""WITH d AS (SELECT CAST(year(o_orderdate) AS INT) AS o_year,
           count(*) AS c FROM orders GROUP BY 1),
@@ -1128,8 +1085,8 @@ object RelationalQueries extends QueryPack {
     * into advisory-sized chunks at runtime, duplicating the dim side's
     * matching partition — same effect as salting, zero query rewrite.
     * The body sizes the skew thresholds to the fixture (the defaults
-    * are cluster-scaled: 256 MB advisory, median×5 factor) and
-    * require()s BOTH markers in the executed final plan:
+    * are cluster-scaled: 256 MB advisory, median×5 factor); PlanSpec's
+    * q165 row pins BOTH markers in the final plan of the body's collect:
     * `SortMergeJoin(skew=true)` and a `skewed` AQEShuffleRead. Two
     * constraints found while probing, both real scale facts:
     *  - map-output sizes are COMPRESSED, so a constant synthetic hot
@@ -1149,17 +1106,12 @@ object RelationalQueries extends QueryPack {
   private val q165 = Q(
     "q165_aqe_skew_join",
     (s, dir) => {
-      val keys = Seq(
-        "spark.sql.adaptive.skewJoin.enabled",
-        "spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes",
-        "spark.sql.adaptive.advisoryPartitionSizeInBytes",
-        "spark.sql.autoBroadcastJoinThreshold")
-      val old = keys.map(k => k -> s.conf.get(k))
-      try {
-        s.conf.set(keys(0), "true")
-        s.conf.set(keys(1), "16KB") // fixture-scale; default 256MB is cluster-sized
-        s.conf.set(keys(2), "16KB")
-        s.conf.set(keys(3), "-1")
+      withSessionConfs(s)(
+        "spark.sql.adaptive.skewJoin.enabled" -> "true",
+        // fixture-scale; default 256MB is cluster-sized
+        "spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes" -> "16KB",
+        "spark.sql.adaptive.advisoryPartitionSizeInBytes" -> "16KB",
+        "spark.sql.autoBroadcastJoinThreshold" -> "-1") {
         val t = Tables(s, dir)
         val fact = t.lineitem.repartition(8).select(
           when(col("l_orderkey") % lit(20) =!= lit(0), lit(-1L))
@@ -1175,18 +1127,10 @@ object RelationalQueries extends QueryPack {
           .agg(round(sum(col("l_extendedprice")), 2).as("revenue"),
             count(lit(1)).as("n"))
           .orderBy(col("o_orderpriority"))
-        // AQE finalizes the plan only when THIS queryExecution runs
-        // (localCheckpoint spawns its own execution and would leave
-        // res's adaptive plan un-finalized) — collect the priority-count
-        // result (≤7 rows) and assert on the final plan
-        val rows = res.collect()
-        val p = res.queryExecution.executedPlan.toString
-        require(p.contains("skew=true"),
-          s"AQE did not mark the join skewed:\n${p.take(1200)}")
-        require(p.contains("skewed"),
-          s"no skewed AQEShuffleRead in the final plan:\n${p.take(1200)}")
-        s.createDataFrame(java.util.Arrays.asList(rows: _*), res.schema)
-      } finally old.foreach { case (k, v) => s.conf.set(k, v) }
+        // the priority-count result is ≤7 rows: collect it under the
+        // skew confs, so the skew split is what runs
+        s.createDataFrame(java.util.Arrays.asList(res.collect(): _*), res.schema)
+      }
     },
     Some("""WITH f AS (SELECT CASE WHEN l_orderkey % 20 <> 0 THEN -1
             ELSE l_orderkey END AS k, l_extendedprice FROM lineitem),
@@ -1214,21 +1158,16 @@ object RelationalQueries extends QueryPack {
     * dropped below the dim's scan size (so the initial plan is the SMJ
     * a big dim gets), the `adaptive.autoBroadcastJoinThreshold` stays
     * above the filtered size (so the runtime rewrite can fire). The
-    * body require()s BOTH halves off the finalized adaptive plan:
-    * SortMergeJoin in the initial plan, BroadcastHashJoin in the final
-    * plan. Join is exact either way; plain-SQL oracle. */
+    * body collects under these confs; PlanSpec's q166 row pins BOTH
+    * halves off the finalized adaptive plan: SortMergeJoin in the
+    * initial plan, BroadcastHashJoin in the final plan. Join is exact
+    * either way; plain-SQL oracle. */
   private val q166 = Q(
     "q166_aqe_join_replan",
     (s, dir) => {
-      val keys = Seq(
-        "spark.sql.autoBroadcastJoinThreshold",
-        "spark.sql.adaptive.autoBroadcastJoinThreshold")
-      // getOption: the adaptive threshold is UNSET by default (null) —
-      // a get/set round-trip would throw on restore
-      val old = keys.map(k => k -> s.conf.getOption(k))
-      try {
-        s.conf.set(keys(0), "1KB")
-        s.conf.set(keys(1), "4MB")
+      withSessionConfs(s)(
+        "spark.sql.autoBroadcastJoinThreshold" -> "1KB",
+        "spark.sql.adaptive.autoBroadcastJoinThreshold" -> "4MB") {
         val t = Tables(s, dir)
         val dim = t.orders
           .filter(pmod(xxhash64(col("o_orderkey")), lit(50)) === lit(0))
@@ -1240,17 +1179,7 @@ object RelationalQueries extends QueryPack {
           .agg(round(sum(col("l_extendedprice")), 2).as("revenue"),
             count(lit(1)).as("n"))
           .orderBy(col("o_orderpriority"))
-        val rows = res.collect() // finalize the adaptive plan
-        val p = res.queryExecution.executedPlan.toString
-        val parts = p.split("== Initial Plan ==")
-        require(parts.length == 2 && parts(1).contains("SortMergeJoin"),
-          s"static plan was not the shuffle join:\n${p.take(1200)}")
-        require(parts(0).contains("BroadcastHashJoin"),
-          s"AQE did not re-plan to broadcast at runtime:\n${p.take(1200)}")
-        s.createDataFrame(java.util.Arrays.asList(rows: _*), res.schema)
-      } finally old.foreach {
-        case (k, Some(v)) => s.conf.set(k, v)
-        case (k, None) => s.conf.unset(k)
+        s.createDataFrame(java.util.Arrays.asList(res.collect(): _*), res.schema)
       }
     },
     Some {
@@ -1293,6 +1222,12 @@ object RelationalQueries extends QueryPack {
     (s"$base/fact", s"$base/dim")
   }
 
+  /** The session confs of a storage-partitioned join (q168, q176). */
+  private val SpjConfs = Seq(
+    "spark.sql.sources.v2.bucketing.enabled" -> "true",
+    "spark.sql.requireAllClusterKeysForCoPartition" -> "false",
+    "spark.sql.autoBroadcastJoinThreshold" -> "-1")
+
   /** Storage-partitioned join (SPARK-37375) graded — the CONNECTOR leg of
     * the co-location story: q158/q160 prove shuffle-free big-big joins
     * through Hive bucketing (catalog tables); this proves the same claim
@@ -1301,10 +1236,11 @@ object RelationalQueries extends QueryPack {
     * `identity(shard)` (sources/v2/KeyedJsonSource) and each shard
     * directory carries its key via `HasPartitionKey`, so Catalyst aligns
     * the two sides' partitions at planning time and the fact ⋈ dim join
-    * runs with ZERO Exchange. This is the Iceberg-era layout contract at
-    * 100 TB: co-location travels with the data layout, not with a
-    * catalog registration. Three confs gate it, set/restored in-body
-    * (q158's sequential-session contract): `v2.bucketing.enabled` (off
+    * runs with ZERO Exchange (PlanSpec's q168 row pins the executed join
+    * subtree: no Exchange, a SortMergeJoin). This is the Iceberg-era
+    * layout contract at 100 TB: co-location travels with the data
+    * layout, not with a catalog registration. Three confs gate it
+    * ([[SpjConfs]]): `v2.bucketing.enabled` (off
     * by default), `requireAllClusterKeysForCoPartition=false` (the join
     * keys (shard, key) are a SUPERSET of the partition keys — with the
     * default `true`, partition-keys ⊊ join-keys forces a shuffle), and
@@ -1315,15 +1251,7 @@ object RelationalQueries extends QueryPack {
     "q168_storage_partitioned_join",
     (s, dir) => {
       val (factDir, dimDir) = keyedJsonPair(s, dir)
-      val keys = Seq(
-        "spark.sql.sources.v2.bucketing.enabled",
-        "spark.sql.requireAllClusterKeysForCoPartition",
-        "spark.sql.autoBroadcastJoinThreshold")
-      val old = keys.map(k => k -> s.conf.getOption(k))
-      try {
-        s.conf.set(keys(0), "true")
-        s.conf.set(keys(1), "false")
-        s.conf.set(keys(2), "-1")
+      withSessionConfs(s)(SpjConfs: _*) {
         val factSchema = StructType(Seq(
           StructField("l_orderkey", LongType),
           StructField("l_extendedprice", DoubleType),
@@ -1336,24 +1264,14 @@ object RelationalQueries extends QueryPack {
           .option("keycol", "shard").load(factDir)
         val dim = s.read.format("graft-keyed").schema(dimSchema)
           .option("keycol", "shard").load(dimDir)
-        val j = fact.join(dim,
-          fact("shard") === dim("shard")
-            && col("l_orderkey") === col("o_orderkey"))
-        val p = j.queryExecution.executedPlan.toString
-        require(!p.contains("Exchange"),
-          s"storage-partitioned join planned a shuffle:\n${p.take(1200)}")
-        require(p.contains("SortMergeJoin"),
-          s"expected a co-partitioned SMJ:\n${p.take(1200)}")
-        j.groupBy(col("o_orderpriority"))
+        fact.join(dim,
+            fact("shard") === dim("shard")
+              && col("l_orderkey") === col("o_orderkey"))
+          .groupBy(col("o_orderpriority"))
           .agg(round(sum(col("l_extendedprice")), 2).as("revenue"),
             count(lit(1)).as("n"))
           .orderBy(col("o_orderpriority"))
-          // materialize under the SPJ confs so the executed join matches
-          // the asserted plan (confs are restored in finally)
           .localCheckpoint(true)
-      } finally old.foreach {
-        case (k, Some(v)) => s.conf.set(k, v)
-        case (k, None) => s.conf.unset(k)
       }
     },
     Some("""SELECT o_orderpriority,
@@ -1368,10 +1286,11 @@ object RelationalQueries extends QueryPack {
     * so Spark shuffles ONCE at ingest and every shard directory is
     * written whole under the temp-dir/driver-commit protocol; the read
     * side then reports the layout via KeyGroupedPartitioning and the
-    * fact ⋈ dim join runs with ZERO Exchange. This is the lakehouse
-    * amortization graded end to end IN ONE CONNECTOR: the ingest
-    * exchange is the last shuffle these tables' join keys ever see.
-    * Same confs/oracle as q168. */
+    * fact ⋈ dim join runs with ZERO Exchange (PlanSpec's q176 row pins
+    * the executed join subtree). This is the lakehouse amortization
+    * graded end to end IN ONE CONNECTOR: the ingest exchange is the
+    * last shuffle these tables' join keys ever see. Same confs/oracle as
+    * q168. */
   private def keyedWrittenPair(
       s: org.apache.spark.sql.SparkSession, dir: String): (String, String) = {
     val base = graft.Checkpoints.memo(s, "q176-keyed", dir) { base =>
@@ -1398,15 +1317,7 @@ object RelationalQueries extends QueryPack {
       for (d <- Seq(factDir, dimDir))
         require(!new java.io.File(d).listFiles().exists(_.getName.startsWith("_tmp")),
           s"uncommitted write residue under $d")
-      val keys = Seq(
-        "spark.sql.sources.v2.bucketing.enabled",
-        "spark.sql.requireAllClusterKeysForCoPartition",
-        "spark.sql.autoBroadcastJoinThreshold")
-      val old = keys.map(k => k -> s.conf.getOption(k))
-      try {
-        s.conf.set(keys(0), "true")
-        s.conf.set(keys(1), "false")
-        s.conf.set(keys(2), "-1")
+      withSessionConfs(s)(SpjConfs: _*) {
         val factSchema = StructType(Seq(
           StructField("l_orderkey", LongType),
           StructField("l_extendedprice", DoubleType),
@@ -1419,20 +1330,14 @@ object RelationalQueries extends QueryPack {
           .option("keycol", "shard").load(factDir)
         val dim = s.read.format("graft-keyed").schema(dimSchema)
           .option("keycol", "shard").load(dimDir)
-        val j = fact.join(dim,
-          fact("shard") === dim("shard")
-            && col("l_orderkey") === col("o_orderkey"))
-        val p = j.queryExecution.executedPlan.toString
-        require(!p.contains("Exchange"),
-          s"writer-produced layout must SPJ shuffle-free:\n${p.take(1200)}")
-        j.groupBy(col("o_orderpriority"))
+        fact.join(dim,
+            fact("shard") === dim("shard")
+              && col("l_orderkey") === col("o_orderkey"))
+          .groupBy(col("o_orderpriority"))
           .agg(round(sum(col("l_extendedprice")), 2).as("revenue"),
             count(lit(1)).as("n"))
           .orderBy(col("o_orderpriority"))
           .localCheckpoint(true)
-      } finally old.foreach {
-        case (k, Some(v)) => s.conf.set(k, v)
-        case (k, None) => s.conf.unset(k)
       }
     },
     Some("""SELECT o_orderpriority,
@@ -1554,9 +1459,10 @@ object RelationalQueries extends QueryPack {
     * supplier-name variant keys sees a dimension-sized frame, advises
     * broadcast, and the operator executes it — the r13 verdict's "the
     * advisory only matters if the engine's own joins consume it" closed
-    * in the graded path. The body require()s BOTH halves off the real
-    * artifacts: the advice says broadcast AND the executed variant join
-    * IS a BroadcastHashJoin (the q158/q160 plan-pin pattern). Results are
+    * in the graded path. BOTH halves are checked off the real artifacts:
+    * the body require()s that the advice says broadcast, and PlanSpec's
+    * q223 row pins that the executed variant join IS a BroadcastHashJoin.
+    * Results are
     * strategy-independent, so the brute-force oracle grades the steered
     * plan exactly like q143 grades the static one. */
   private val q223 = Q(
@@ -1566,13 +1472,7 @@ object RelationalQueries extends QueryPack {
         Tables(s, dir).supplier, col("s_name"), col("s_suppkey"), k = 1)
       require(advice.strategy == "broadcast",
         s"dimension-sized variant frame must advise broadcast: $advice")
-      val res = pairs.orderBy(col("id_a"), col("id_b"))
-      val variantJoins = res.queryExecution.executedPlan.toString
-        .linesIterator.filter(l => l.contains("Join") && l.contains("[v#"))
-        .mkString("\n")
-      require(variantJoins.contains("BroadcastHashJoin"),
-        s"executed variant join must match the advisory:\n$variantJoins")
-      res
+      pairs.orderBy(col("id_a"), col("id_b"))
     },
     Some("""SELECT a.s_suppkey AS id_a, b.s_suppkey AS id_b,
         CAST(levenshtein(a.s_name, b.s_name) AS INT) AS dist
@@ -1587,8 +1487,8 @@ object RelationalQueries extends QueryPack {
     * executors), where the zero-padded entity names' hot deletion-variant
     * blocks genuinely dominate a reducer — the advisory must pick salt,
     * size the buckets, and the operator must execute the salted join
-    * (plan-pinned: the variant join carries the `__salt` key and is NOT
-    * a broadcast). maxSaltBuckets=8 keeps the test-scale replication
+    * (PlanSpec's q224 row: the variant join carries the `__salt` key and
+    * is NOT a broadcast). maxSaltBuckets=8 keeps the test-scale replication
     * cheap; the SAME brute-force oracle as q143 proves salting moved
     * shuffle placement, never semantics. */
   private val q224 = Q(
@@ -1607,15 +1507,7 @@ object RelationalQueries extends QueryPack {
         maxHotShare = 1.0)
       require(advice.strategy == "salt" && advice.saltBuckets >= 2,
         s"hot variant blocks at 200k-partition fair share must salt: $advice")
-      val res = pairs.orderBy(col("id_a"), col("id_b"))
-      val variantJoins = res.queryExecution.executedPlan.toString
-        .linesIterator.filter(l => l.contains("Join") && l.contains("[v#"))
-        .mkString("\n")
-      require(variantJoins.contains("__salt"),
-        s"executed variant join must carry the salt key:\n$variantJoins")
-      require(!variantJoins.contains("BroadcastHashJoin"),
-        s"salted join must not broadcast a past-dimension side:\n$variantJoins")
-      res
+      pairs.orderBy(col("id_a"), col("id_b"))
     },
     Some("""SELECT a.c_custkey AS id_a, b.c_custkey AS id_b,
         CAST(levenshtein(a.c_name, b.c_name) AS INT) AS dist
@@ -1623,24 +1515,34 @@ object RelationalQueries extends QueryPack {
       WHERE levenshtein(a.c_name, b.c_name) <= 1
       ORDER BY id_a, id_b"""))
 
-  /** Snapshot-and-restore for session confs a fixture must set (ADVICE
-    * r16: q233/q234 left six aggressive `spark.graft.advisor.*`
-    * thresholds on the shared session — any future conf-reading query
-    * would inherit them depending on run order). The restore runs in a
-    * finally around the BODY; a body that must keep its advised plan
-    * through the driver's write-time re-optimization returns
-    * `ofRows(optimizedPlan)` (markers already stripped, rewrite already
-    * applied, hints ride the logical Joins) so the restored defaults
-    * can never re-advise it. */
-  private def withSessionConfs[A](s: SparkSession)(kvs: (String, String)*)(
-      body: => A): A = {
-    val prev = kvs.map { case (k, _) => k -> s.conf.getOption(k) }
-    kvs.foreach { case (k, v) => s.conf.set(k, v) }
-    try body finally prev.foreach {
-      case (k, Some(v)) => s.conf.set(k, v)
-      case (k, None) => s.conf.unset(k)
+  /** `sql` optimized under the session confs `confs` and returned as its
+    * optimized plan: the GRAFT_ADVISE marker is already stripped, the
+    * rewrite already applied and the hints ride the logical joins, so
+    * the materialization under the restored session defaults plans it
+    * once and can never re-advise it. */
+  private def advisedSql(s: SparkSession, confs: (String, String)*)(
+      sql: String): DataFrame =
+    withSessionConfs(s)(confs: _*) {
+      org.apache.spark.sql.GraftColumnBridge
+        .ofRows(s, s.sql(sql).queryExecution.optimizedPlan)
     }
-  }
+
+  /** The advisor thresholds of the SQL salt operating point (q233-q235),
+    * q224's shape: broadcast disallowed and the fair share of a 100 TB
+    * deployment's shuffle width (targetPartitions=200000).
+    * maxHotShare is lifted (r16): at that fair share of 1, EVERY key's
+    * corrected output breaches the 1.5× skew test at fixture SFs, so the
+    * breaching "hot mass" is the whole frame and the measured demotion
+    * ceiling would (correctly, for that degenerate estimate) route to
+    * shuffle+AQE — these queries grade the salted EXECUTION; the ceiling
+    * itself is JoinAdvisorSpec's. */
+  private val SqlSaltConfs = Seq(
+    "spark.graft.advisor.broadcastMaxRows" -> "0",
+    "spark.graft.advisor.skewFactor" -> "1.5",
+    "spark.graft.advisor.minSaltOutputRows" -> "100",
+    "spark.graft.advisor.maxSaltBuckets" -> "8",
+    "spark.graft.advisor.targetPartitions" -> "200000",
+    "spark.graft.advisor.maxHotShare" -> "1.0")
 
   /** The advisory consumed through PLAIN SQL TEXT at its BROADCAST
     * operating point — the r15 verdict's "promote the advisory from
@@ -1648,12 +1550,12 @@ object RelationalQueries extends QueryPack {
     * the query ([[graft.plans.GraftAdviseHintRule]] →
     * [[graft.plans.AdvisedEquiJoinRewrite]]) routes the orders⋈customer
     * equi-join through the sketch pass, which sees a dimension-sized
-    * customer side and executes a BROADCAST hint. Causality is pinned
-    * by materializing the plan at autoBroadcastJoinThreshold=-1 (size-
-    * based broadcast disabled, restored after the pin): the
-    * BroadcastHashJoin in the executed plan can only have come from the
-    * rule's verdict. Thresholds are set EXPLICITLY (not defaults) so a
-    * sibling query's sticky advisor confs cannot flip the verdict.
+    * customer side and executes a BROADCAST hint. PlanSpec's q232 row
+    * pins causality: it plans the returned frame at
+    * autoBroadcastJoinThreshold=-1 (size-based broadcast disabled), so
+    * the BroadcastHashJoin in the executed plan can only have come from
+    * the rule's verdict. Thresholds are set EXPLICITLY (not defaults) so
+    * a sibling query's sticky advisor confs cannot flip the verdict.
     * Results are strategy-independent; the oracle grades the plain
     * aggregate. */
   private val q232 = Q(
@@ -1661,26 +1563,15 @@ object RelationalQueries extends QueryPack {
     (s, dir) => {
       Tables(s, dir).orders.createOrReplaceTempView("graft_orders_q232")
       Tables(s, dir).customer.createOrReplaceTempView("graft_customer_q232")
-      withSessionConfs(s)(
+      advisedSql(s,
         "spark.graft.advisor.broadcastMaxRows" -> "1000000",
-        "spark.sql.autoBroadcastJoinThreshold" -> "-1") {
-        val res = s.sql("""
-          SELECT /*+ GRAFT_ADVISE */ c_mktsegment,
-            CAST(count(*) AS BIGINT) AS n_orders,
-            round(sum(o_totalprice), 2) AS revenue
-          FROM graft_orders_q232 JOIN graft_customer_q232
-            ON o_custkey = c_custkey
-          GROUP BY c_mktsegment ORDER BY c_mktsegment""")
-        val p = res.queryExecution.executedPlan.toString
-        require(p.contains("BroadcastHashJoin"),
-          "with size-based broadcast disabled, only the GRAFT_ADVISE " +
-            s"verdict can broadcast — it did not:\n${p.take(1200)}")
-        // the OPTIMIZED plan rides out (marker stripped, broadcast hint
-        // on the logical join): materialization never re-advises, so
-        // the restored session defaults cannot flip the graded plan
-        org.apache.spark.sql.GraftColumnBridge
-          .ofRows(s, res.queryExecution.optimizedPlan)
-      }
+        "spark.sql.autoBroadcastJoinThreshold" -> "-1")("""
+        SELECT /*+ GRAFT_ADVISE */ c_mktsegment,
+          CAST(count(*) AS BIGINT) AS n_orders,
+          round(sum(o_totalprice), 2) AS revenue
+        FROM graft_orders_q232 JOIN graft_customer_q232
+          ON o_custkey = c_custkey
+        GROUP BY c_mktsegment ORDER BY c_mktsegment""")
     },
     Some("""SELECT c_mktsegment, CAST(count(*) AS BIGINT) AS n_orders,
         round(sum(o_totalprice), 2) AS revenue
@@ -1696,38 +1587,18 @@ object RelationalQueries extends QueryPack {
     * PLAIN SQL into the TARGETED-salt union: hot-key rows split off,
     * the left leg salted by xxhash64 over its columns, the right leg
     * replicated buckets×, cold remainder joined plain, shuffle_hash
-    * pinned on both legs. Plan-pinned (salt key present, Union present,
-    * no broadcast); the oracle re-derives the aggregate from the same
-    * fold in DuckDB, proving the rewrite moved shuffle placement, never
-    * semantics. The advisor confs are restored in a finally block
-    * (they must stay set through the driver's write-time
-    * re-optimization of THIS query's plan, so the restore runs in the
-    * returned-DataFrame wrapper, not around the sql() call) — a future
-    * marker-carrying query must inherit the session DEFAULTS, not this
-    * fixture's aggressive thresholds. The body lifts maxHotShare to
-    * 1.0 (shipped default 0.1): at the 200k-partition fair share the
-    * degenerate corrected estimate marks the WHOLE frame breaching at
-    * fixture SFs, and the measured demotion ceiling would correctly
-    * route to shuffle+AQE — this query grades the salted EXECUTION;
-    * the ceiling's own economics are JoinAdvisorSpec's. */
+    * pinned on both legs. PlanSpec's q233 row pins the salt key, the
+    * Union and no broadcast; the oracle re-derives the aggregate from
+    * the same fold in DuckDB, proving the rewrite moved shuffle
+    * placement, never semantics. The advisor confs ([[SqlSaltConfs]])
+    * are set only while [[advisedSql]] optimizes the query — a later
+    * marker-carrying query inherits the session DEFAULTS, not this
+    * fixture's aggressive thresholds. */
   private val q233 = Q(
     "q233_advised_sql_salted",
     (s, dir) => {
       Tables(s, dir).lineitem.createOrReplaceTempView("graft_lineitem_q233")
       Tables(s, dir).orders.createOrReplaceTempView("graft_orders_q233")
-      withSessionConfs(s)(
-        "spark.graft.advisor.broadcastMaxRows" -> "0",
-        "spark.graft.advisor.skewFactor" -> "1.5",
-        "spark.graft.advisor.minSaltOutputRows" -> "100",
-        "spark.graft.advisor.maxSaltBuckets" -> "8",
-        "spark.graft.advisor.targetPartitions" -> "200000",
-        // ceiling lifted (r16): at the 200k-partition fair share of 1,
-        // EVERY key's corrected output breaches the 1.5× skew test at
-        // fixture SFs, so the breaching "hot mass" is the whole frame
-        // and the measured demotion ceiling would (correctly, for that
-        // degenerate estimate) route to shuffle+AQE — this query grades
-        // the salted EXECUTION; the ceiling itself is JoinAdvisorSpec's
-        "spark.graft.advisor.maxHotShare" -> "1.0") {
       // the hot key is hot on BOTH sides, with the right multiplicity
       // CONSTANT (3 VALUES rows + any real orderkey-1 row): a hot key
       // against a single right row is a 600-row reducer no advisory
@@ -1736,7 +1607,7 @@ object RelationalQueries extends QueryPack {
       // Catalyst then broadcast (the r16 fixture lesson); the constant
       // fan-out keeps the verdict salt at every SF while the output
       // stays linear in lineitem
-      val res = s.sql("""
+      advisedSql(s, SqlSaltConfs: _*)("""
         SELECT /*+ GRAFT_ADVISE */ k, CAST(count(*) AS BIGINT) AS n,
           round(sum(l_extendedprice), 2) AS amt
         FROM (SELECT CASE WHEN l_orderkey % 10 = 0 THEN 1
@@ -1747,21 +1618,6 @@ object RelationalQueries extends QueryPack {
               SELECT 1 AS k FROM (VALUES (1), (2), (3)) AS t(x)) o
           USING (k)
         GROUP BY k ORDER BY k""")
-      val p = res.queryExecution.executedPlan.toString
-      require(p.contains("__gsalt"),
-        s"executed join must carry the salt key:\n${p.take(1500)}")
-      require(p.contains("Union"),
-        s"targeted salting splits hot/cold legs under a Union:\n" +
-          p.take(1500))
-      require(!p.contains("BroadcastHashJoin"),
-        s"salted join must not broadcast a past-dimension side:\n" +
-          p.take(1500))
-      // ship the OPTIMIZED plan (salt rewrite applied, marker gone):
-      // write-time re-optimization under the RESTORED defaults can
-      // never re-advise the graded salted shape away
-      org.apache.spark.sql.GraftColumnBridge
-        .ofRows(s, res.queryExecution.optimizedPlan)
-      }
     },
     Some("""SELECT k, CAST(count(*) AS BIGINT) AS n,
         round(sum(l_extendedprice), 2) AS amt
@@ -1783,21 +1639,15 @@ object RelationalQueries extends QueryPack {
     * once, and NULL-keyed left rows (every 97th orderkey) ride the
     * cold leg — dropping them was the one way this rewrite could
     * silently lose rows, so the fixture makes them load-bearing. Same
-    * q233 conf shape; the DuckDB oracle re-derives the whole aggregate
-    * including the NULL-key group and the matched-count column. */
+    * [[SqlSaltConfs]] as q233 and the same PlanSpec pins (q234 row); the
+    * DuckDB oracle re-derives the whole aggregate including the NULL-key
+    * group and the matched-count column. */
   private val q234 = Q(
     "q234_advised_sql_outer_salted",
     (s, dir) => {
       Tables(s, dir).lineitem.createOrReplaceTempView("graft_lineitem_q234")
       Tables(s, dir).orders.createOrReplaceTempView("graft_orders_q234")
-      withSessionConfs(s)(
-        "spark.graft.advisor.broadcastMaxRows" -> "0",
-        "spark.graft.advisor.skewFactor" -> "1.5",
-        "spark.graft.advisor.minSaltOutputRows" -> "100",
-        "spark.graft.advisor.maxSaltBuckets" -> "8",
-        "spark.graft.advisor.targetPartitions" -> "200000",
-        "spark.graft.advisor.maxHotShare" -> "1.0") {
-      val res = s.sql("""
+      advisedSql(s, SqlSaltConfs: _*)("""
         SELECT /*+ GRAFT_ADVISE */ k, CAST(count(*) AS BIGINT) AS n,
           CAST(count(k2) AS BIGINT) AS matched,
           round(sum(l_extendedprice), 2) AS amt
@@ -1811,19 +1661,6 @@ object RelationalQueries extends QueryPack {
                    SELECT 1 AS k2 FROM (VALUES (1), (2), (3)) AS t(x)) o
           ON l.k = o.k2
         GROUP BY k ORDER BY k""")
-      val p = res.queryExecution.executedPlan.toString
-      require(p.contains("__gsalt"),
-        s"executed outer join must carry the salt key:\n${p.take(1500)}")
-      require(p.contains("Union"),
-        s"targeted salting splits hot/cold legs under a Union:\n" +
-          p.take(1500))
-      require(!p.contains("BroadcastHashJoin"),
-        s"salted join must not broadcast a past-dimension side:\n" +
-          p.take(1500))
-      // optimized plan out + confs restored — see q233
-      org.apache.spark.sql.GraftColumnBridge
-        .ofRows(s, res.queryExecution.optimizedPlan)
-      }
     },
     Some("""SELECT k, CAST(count(*) AS BIGINT) AS n,
         CAST(count(k2) AS BIGINT) AS matched,
@@ -1860,8 +1697,8 @@ object RelationalQueries extends QueryPack {
     *  - matched pairs (odd non-fold keys + the constant VALUES fan-out
     *    on the hot key 1) emit exactly once, from the outer leg only
     *    (the anti leg must exclude matched right rows).
-    * Same q233/q234 conf shape (restored in the finally); plan-pinned:
-    * salt key present, Union present, no broadcast. The DuckDB oracle
+    * Same [[SqlSaltConfs]] as q233/q234; PlanSpec's q235 row pins the
+    * salt key, the Union, no broadcast and no FullOuter node. The DuckDB oracle
     * re-derives the whole aggregate — per-group total, left-presence,
     * right-presence and amount — including both NULL-key populations
     * collapsing into one NULL group under coalesce(k, k2). */
@@ -1870,14 +1707,7 @@ object RelationalQueries extends QueryPack {
     (s, dir) => {
       Tables(s, dir).lineitem.createOrReplaceTempView("graft_lineitem_q235")
       Tables(s, dir).orders.createOrReplaceTempView("graft_orders_q235")
-      withSessionConfs(s)(
-        "spark.graft.advisor.broadcastMaxRows" -> "0",
-        "spark.graft.advisor.skewFactor" -> "1.5",
-        "spark.graft.advisor.minSaltOutputRows" -> "100",
-        "spark.graft.advisor.maxSaltBuckets" -> "8",
-        "spark.graft.advisor.targetPartitions" -> "200000",
-        "spark.graft.advisor.maxHotShare" -> "1.0") {
-      val res = s.sql("""
+      advisedSql(s, SqlSaltConfs: _*)("""
         SELECT /*+ GRAFT_ADVISE */ coalesce(k, k2) AS kk,
           CAST(count(*) AS BIGINT) AS n,
           CAST(count(l_extendedprice) AS BIGINT) AS n_left,
@@ -1895,24 +1725,6 @@ object RelationalQueries extends QueryPack {
           SELECT 1 AS k2, 1 AS rv FROM (VALUES (1), (2), (3)) AS t(x)) o
           ON l.k = o.k2
         GROUP BY coalesce(k, k2) ORDER BY kk""")
-      val p = res.queryExecution.executedPlan.toString
-      require(p.contains("__gsalt"),
-        s"executed full-outer join must carry the salt key:\n${p.take(1500)}")
-      require(p.contains("Union"),
-        s"the outer-union decomposition must be present:\n${p.take(1500)}")
-      require(!p.contains("BroadcastHashJoin"),
-        s"salted full outer must not broadcast a past-dimension side:\n" +
-          p.take(1500))
-      // the decomposed plan contains only LeftOuter/LeftAnti joins, so
-      // ANY "FullOuter" render means the rewrite did not fire (r17
-      // ADVICE: join nodes render as "SortMergeJoin [k], [k2], FullOuter"
-      // — the earlier "SortMergeJoin(FullOuter" pattern could never match)
-      require(!p.contains("FullOuter"),
-        s"the FullOuter node itself must be decomposed away:\n${p.take(1500)}")
-      // optimized plan out + confs restored — see q233
-      org.apache.spark.sql.GraftColumnBridge
-        .ofRows(s, res.queryExecution.optimizedPlan)
-      }
     },
     Some("""SELECT coalesce(k, k2) AS kk,
         CAST(count(*) AS BIGINT) AS n,

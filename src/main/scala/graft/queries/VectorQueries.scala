@@ -1118,8 +1118,8 @@ object VectorQueries extends QueryPack {
     * ([[graft.operators.Similarity.knnGraphAdvised]]), on q120's exact
     * geometry (k=3, nlist=8, nprobe=2, shared centroids): the list side
     * is dimension-sized at this scale, so the advisory must say
-    * broadcast and the executed candidate join must BE a
-    * BroadcastHashJoin. Same oracle as q120/q128 — steering moves
+    * broadcast (require()d) and the executed candidate join must BE a
+    * BroadcastHashJoin (PlanSpec's q230 row). Same oracle as q120/q128 — steering moves
     * shuffle placement, never semantics. */
   private val q230 = Q(
     "q230_advised_knn_broadcast",
@@ -1129,11 +1129,6 @@ object VectorQueries extends QueryPack {
         model = Some(sharedCentroids(s, dir)))
       require(advice.strategy == "broadcast",
         s"dimension-sized list side must advise broadcast: $advice")
-      // the executed-plan pin (candidate join IS a BroadcastHashJoin)
-      // lives in SimilaritySpec ("q230/q231 operating points execute
-      // their advised plans") — materializing executedPlan.toString
-      // here paid a full extra physical planning + plan render inside
-      // the bench's timed region every rep (r18 verdict item 8)
       edges
     },
     Some(knnGraphOracleSql))
@@ -1147,8 +1142,8 @@ object VectorQueries extends QueryPack {
     * deployment scale this models) and the fair share is computed for a
     * 100 TB deployment's shuffle width (targetPartitions=200k): the
     * advisory must pick salt, name cid 0 among the hot keys, and the
-    * operator must execute the TARGETED salted join (plan-pinned: the
-    * candidate join carries `__salt` and is NOT a broadcast). All
+    * operator must execute the TARGETED salted join (PlanSpec's q231 row:
+    * the candidate join carries `__salt` and is NOT a broadcast). All
     * fixture geometry is dyadic-rational 2-D (k/256 components, ±1
     * axes), so every cosine is a correctly-rounded IEEE expression both
     * engines compute bit-identically — the oracle re-derives
@@ -1185,9 +1180,6 @@ object VectorQueries extends QueryPack {
         s"a dominant IVF list at 200k-partition fair share must salt: $advice")
       require(advice.hotKeys.contains("0"),
         s"the folded direction's cid 0 must be MG-named hot: $advice")
-      // the executed-plan pins (__salt carried, no BroadcastHashJoin)
-      // live in SimilaritySpec ("q230/q231 operating points execute
-      // their advised plans") — see q230 for the r18 verdict rationale
       edges
     },
     Some("""WITH v AS (SELECT c_custkey AS vec_id,

@@ -19,13 +19,12 @@ final class Tables(val spark: SparkSession, val dir: String) {
   def lineitem: DataFrame   = t("lineitem")
   /** events.parquet's `ts` physical type has varied across fixture
     * generations — TIMESTAMP(NANOS) (readable only as long via the legacy
-    * conf; truncated to micros with integer `div`, since double division
+    * conf, which [[graft.GraftSession.builder]] sets; truncated to micros with integer `div`, since double division
     * loses precision at 1e18 ns), TIMESTAMP_NTZ (micros, no zone), or a
     * plain zoned timestamp. Normalize all three to TimestampType micros;
     * the session runs UTC, so the NTZ cast is value-preserving.
     */
   def events: DataFrame = {
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     val raw = t("events")
     import org.apache.spark.sql.functions.{col, expr}
     raw.schema("ts").dataType match {

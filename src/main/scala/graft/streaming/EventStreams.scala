@@ -42,7 +42,6 @@ object EventStreams {
     * value-preserving). */
   def readEventStream(spark: SparkSession, dir: String,
       maxFilesPerTrigger: Option[Int] = None): DataFrame = {
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     val tsType = spark.read.parquet(s"$dir/events.parquet").schema("ts").dataType
     val reader = spark.readStream
       .schema(rawSchema(tsType))
@@ -67,12 +66,9 @@ object EventStreams {
     * [[StreamRunConf]]. Applies only to queries STARTED under the conf
     * (it's fixed at query start). */
   private[streaming] def withStreamingShufflePartitions[T](
-      spark: SparkSession, n: Int)(f: => T): T = {
-    val key = "spark.sql.shuffle.partitions"
-    val prior = spark.conf.get(key)
-    spark.conf.set(key, n.toString)
-    try f finally spark.conf.set(key, prior)
-  }
+      spark: SparkSession, n: Int)(f: => T): T =
+    graft.GraftSession.withSessionConfs(spark)(
+      "spark.sql.shuffle.partitions" -> n.toString)(f)
 
   /** Deployment knobs for the run-to-completion `*ToTable` runners:
     *
@@ -400,20 +396,16 @@ object EventStreams {
       spark: SparkSession, dir: String, tableName: String,
       gapMinutes: Int = 30,
       conf: StreamRunConf = StreamRunConf()): DataFrame = {
-    val key = "spark.sql.streaming.stateStore.providerClass"
-    val prior = spark.conf.getOption(key)
-    spark.conf.set(key,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try withStreamingShufflePartitions(spark, conf.shufflePartitions) {
+    graft.GraftSession.withSessionConfs(spark)(
+        "spark.sql.streaming.stateStore.providerClass" ->
+          "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
+        "spark.sql.shuffle.partitions" -> conf.shufflePartitions.toString) {
       val q = sessionizeStreamTws(readEventStream(spark, dir), gapMinutes)
         .toDF()
         .writeStream.format("memory").queryName(tableName)
         .outputMode("append").options(conf.options)
         .trigger(Trigger.AvailableNow()).start()
       q.awaitTermination()
-    } finally prior match {
-      case Some(v) => spark.conf.set(key, v)
-      case None => spark.conf.unset(key)
     }
     spark.table(tableName)
       .select(col("user_id"),

@@ -67,6 +67,29 @@ class GraftSessionSpec extends SparkSpec {
     assert(GraftSession.defaultBuckets(0L, 33) === 64)
   }
 
+  test("withSessionConfs restores a set key, unsets an unset one, also on a throw") {
+    val set = "spark.sql.autoBroadcastJoinThreshold"
+    // no default: conf.get is null here, so a get/set restore would throw
+    val unset = "spark.sql.adaptive.autoBroadcastJoinThreshold"
+    val prior = spark.conf.getOption(set)
+    assert(spark.conf.getOption(unset).isEmpty)
+    def check(): Unit = {
+      assert(spark.conf.getOption(set) === prior)
+      assert(spark.conf.getOption(unset).isEmpty)
+    }
+    val seen = GraftSession.withSessionConfs(spark)(set -> "-1", unset -> "4MB") {
+      (spark.conf.get(set), spark.conf.get(unset))
+    }
+    assert(seen === ("-1", "4MB"))
+    check()
+    intercept[IllegalStateException] {
+      GraftSession.withSessionConfs(spark)(set -> "1KB", unset -> "8MB") {
+        throw new IllegalStateException("body failed")
+      }
+    }
+    check()
+  }
+
   test("builderFor sizes the session's shuffle width from the defaults") {
     val d = GraftSession.scaleDefaults(corpusRows = 1000L, clusterCores = 4)
     // inspect the builder's effect through a throwaway config clone: the

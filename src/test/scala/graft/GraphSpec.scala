@@ -136,6 +136,23 @@ class GraphSpec extends SparkSpec {
     assert(zero === Map(1L -> 0))
   }
 
+  test("kHopReachability releases every round: storage grows by the result only") {
+    import spark.implicits._
+    // a 5-node path: every one of the 3 rounds adds a frontier and a
+    // merged visited set, and the edge checkpoint lives through them all
+    val edges = Seq((1L, 2L), (2L, 3L), (3L, 4L), (4L, 5L)).toDF("u", "v")
+    val sc = spark.sparkContext
+    val before = sc.getPersistentRDDs.keySet
+    val got = Graph.kHopReachability(edges, "u", "v", Seq(1L).toDF("id"), "id", 3)
+    val grown = sc.getPersistentRDDs.keySet -- before
+    val returned = got.queryExecution.logical.collect {
+      case r: org.apache.spark.sql.execution.LogicalRDD => r.rdd.id
+    }.toSet
+    assert(returned.size === 1)
+    assert(grown === returned, s"rounds left pinned: ${grown -- returned}")
+    assert(got.count() === 4L)
+  }
+
   test("labelPropagation: hand-traced sync rounds, tie-break to min " +
     "label, communities split across a bridge") {
     import spark.implicits._

@@ -1,7 +1,12 @@
 package graft
 
 import graft.sources.Tables
+import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
+import org.apache.spark.sql.execution.{LogicalRDD, QueryExecution, SparkPlan}
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.joins.BaseJoinExec
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.util.QueryExecutionListener
 
 /** Plan-shape audit: the 100 TB posture, asserted. Filters/projections must
   * reach the parquet scan, dimension joins must broadcast, fact-fact joins
@@ -13,6 +18,143 @@ class PlanSpec extends SparkSpec {
 
   private def plan(name: String): String =
     SparkEntry.queries(name)(spark, sfDir).queryExecution.executedPlan.toString
+
+  // ---- plan pins over the registered query bodies ------------------------
+  //
+  // The bodies compute; these rows prove the plan property each one claims
+  // (co-location with no shuffle, COUNT from the manifest, the advised join
+  // strategy). Every row runs the REGISTERED body through SparkEntry.queries.
+
+  /** The physical plan a registered body's result came from. A body that
+    * returns a lazy frame is planned here: its frame's executed plan. A
+    * body that materialized its result under its own confs (localCheckpoint
+    * or collect — its frame is then a LogicalRDD or LocalRelation) is read
+    * off the last action it ran, captured by a QueryExecutionListener. */
+  private def registeredPlan(name: String): SparkPlan = {
+    val sc = spark.sparkContext
+    val actions = new java.util.concurrent.ConcurrentLinkedDeque[QueryExecution]()
+    val listener = new QueryExecutionListener {
+      override def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit =
+        actions.add(qe)
+      override def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    org.apache.spark.GraftSparkBridge.drainListenerBus(sc)
+    spark.listenerManager.register(listener)
+    val df = try SparkEntry.queries(name)(spark, sfDir) finally {
+      org.apache.spark.GraftSparkBridge.drainListenerBus(sc)
+      spark.listenerManager.unregister(listener)
+    }
+    df.queryExecution.analyzed match {
+      case _: LogicalRDD | _: LocalRelation => actions.getLast.executedPlan
+      case _ => df.queryExecution.executedPlan
+    }
+  }
+
+  private object AqeTree extends AdaptiveSparkPlanHelper
+  private val wholePlan: SparkPlan => String = _.toString
+  /** the subtree under the first join of the (final, if adaptive) plan: a
+    * pin taken on the join frame, before an aggregate and a sort on top
+    * added their own Exchanges */
+  private val joinSubtree: SparkPlan => String = p =>
+    AqeTree.find(p)(_.isInstanceOf[BaseJoinExec]).fold("")(_.toString)
+  /** the lines that render a join node keyed on `key` */
+  private def joinLines(key: String): SparkPlan => String =
+    _.toString.linesIterator.filter(l => l.contains("Join") && l.contains(key))
+      .mkString("\n")
+  /** the two halves of a finalized adaptive plan */
+  private def adaptiveHalf(initial: Boolean): SparkPlan => String = { p =>
+    val halves = p.toString.split("== Initial Plan ==")
+    assert(halves.length === 2, s"not a finalized adaptive plan:\n$p")
+    halves(if (initial) 1 else 0)
+  }
+
+  private case class Pin(
+      query: String, claim: String,
+      required: Seq[String] = Nil, forbidden: Seq[String] = Nil,
+      scope: SparkPlan => String = wholePlan,
+      confs: Seq[(String, String)] = Nil)
+
+  private val quadratic = Seq("CartesianProduct", "BroadcastNestedLoopJoin")
+  /** a GRAFT_ADVISE SQL join run as the targeted-salt union */
+  private def saltedSql(query: String, claim: String, alsoForbidden: String*) =
+    Pin(query, claim, required = Seq("__gsalt", "Union"),
+      forbidden = "BroadcastHashJoin" +: alsoForbidden)
+
+  private val pins = Seq(
+    Pin("q158_bucketed_join", "the bucketed join shuffles neither side",
+      required = Seq("Bucketed: true"), forbidden = Seq("Exchange"),
+      scope = joinSubtree),
+    Pin("q160_bucket_coalesced_join",
+      "the epoch-drifted bucketed join coalesces the wider side, no shuffle",
+      required = Seq("Coalesced"), forbidden = Seq("Exchange"),
+      scope = joinSubtree),
+    Pin("q163_runtime_bloom_join", "a runtime bloom filter is injected",
+      required = Seq("might_contain")),
+    Pin("q164_dynamic_partition_pruning",
+      "the fact scan carries a dynamic partition filter",
+      required = Seq("dynamicpruning")),
+    Pin("q165_aqe_skew_join", "AQE splits the skewed join",
+      required = Seq("skew=true", "skewed")),
+    Pin("q166_aqe_join_replan", "the static plan is a sort-merge join",
+      required = Seq("SortMergeJoin"), scope = adaptiveHalf(initial = true)),
+    Pin("q166_aqe_join_replan", "AQE re-plans the join to broadcast",
+      required = Seq("BroadcastHashJoin"), scope = adaptiveHalf(initial = false)),
+    Pin("q168_storage_partitioned_join",
+      "the storage-partitioned join is a co-partitioned SMJ, no shuffle",
+      required = Seq("SortMergeJoin"), forbidden = Seq("Exchange"),
+      scope = joinSubtree),
+    Pin("q176_keyed_write_spj", "the writer-produced layout joins with no shuffle",
+      forbidden = Seq("Exchange"), scope = joinSubtree),
+    Pin("q170_range_join", "the bucketed range join is not quadratic",
+      forbidden = quadratic),
+    Pin("q171_range_join_rewrite",
+      "the rewrite rule explodes intervals; the join is not quadratic",
+      required = Seq("Generate"), forbidden = quadratic, scope = joinSubtree),
+    Pin("q217_count_pushdown", "COUNT(*) is answered from the manifest",
+      required = Seq("from manifest")),
+    Pin("q226_count_pushdown_pruned",
+      "the page-pruned COUNT is answered from the manifest",
+      required = Seq("from manifest")),
+    Pin("q223_advised_fuzzy_broadcast", "the variant join broadcasts as advised",
+      required = Seq("BroadcastHashJoin"), scope = joinLines("[v#")),
+    Pin("q224_advised_fuzzy_salted", "the variant join is salted, not broadcast",
+      required = Seq("__salt"), forbidden = Seq("BroadcastHashJoin"),
+      scope = joinLines("[v#")),
+    Pin("q225_advised_range_broadcast",
+      "the bucket join broadcasts as advised and is not quadratic",
+      required = Seq("BroadcastHashJoin"), forbidden = quadratic),
+    Pin("q229_advised_range_salted", "the bucket join is salted, not broadcast",
+      required = Seq("__sl"), forbidden = Seq("BroadcastHashJoin")),
+    Pin("q230_advised_knn_broadcast",
+      "the candidate join broadcasts as advised",
+      required = Seq("BroadcastHashJoin"), scope = joinLines("cid#")),
+    Pin("q231_advised_knn_salted",
+      "the candidate join is salted, not broadcast",
+      required = Seq("__salt"), forbidden = Seq("BroadcastHashJoin"),
+      scope = joinLines("cid#")),
+    // with size-based broadcast off, only the GRAFT_ADVISE verdict can
+    // broadcast
+    Pin("q232_advised_sql_broadcast", "only the advisory verdict broadcasts",
+      required = Seq("BroadcastHashJoin"),
+      confs = Seq("spark.sql.autoBroadcastJoinThreshold" -> "-1")),
+    saltedSql("q233_advised_sql_salted",
+      "the SQL join runs the targeted-salt union"),
+    saltedSql("q234_advised_sql_outer_salted",
+      "the SQL left outer join runs the targeted-salt union"),
+    // the decomposed plan holds only LeftOuter/LeftAnti joins, so any
+    // "FullOuter" render means the rewrite did not fire
+    saltedSql("q235_advised_sql_full_outer_salted",
+      "the SQL full outer join is decomposed into salted legs", "FullOuter"))
+
+  for (pin <- pins) test(s"${pin.query}: ${pin.claim}") {
+    val p = graft.GraftSession.withSessionConfs(spark)(pin.confs: _*) {
+      pin.scope(registeredPlan(pin.query))
+    }
+    val missing = pin.required.filterNot(p.contains)
+    val present = pin.forbidden.filter(p.contains)
+    assert(p.nonEmpty && missing.isEmpty && present.isEmpty,
+      s"missing $missing, present $present in:\n${p.take(2000)}")
+  }
 
   test("q06: selective predicates are pushed to the parquet scan") {
     val p = plan("q06_discount_revenue")

@@ -14,14 +14,28 @@ import org.apache.spark.sql.types.{ArrayType, MapType, StructType}
   *
   * Schema-only: each query's frame is CONSTRUCTED (plans analyze; model
   * training in the ANN queries runs driver-side at sf0.001) but never
-  * executed, so the suite stays cheap.
+  * executed, so the suite stays cheap. The same loop checks that no body
+  * leaves a session conf changed: a query's confs are scoped to its call
+  * ([[graft.GraftSession.withSessionConfs]]), and session-wide ones are
+  * set by [[graft.GraftSession.builder]].
   */
 class RegisteredQuerySpec extends SparkSpec {
 
   test("every registered query emits only driver-sortable scalar columns") {
+    // a key a body sets that was unset before had its default then: the
+    // default is what a fresh session on the same context reads
+    val defaults = spark.newSession().conf
     val offenders = SparkEntry.queries.toSeq.sortBy(_._1).flatMap {
       case (name, fn) =>
-        fn(spark, sfDir).schema.fields.collect {
+        val before = spark.conf.getAll
+        val schema = fn(spark, sfDir).schema
+        val changed = (before.keySet ++ spark.conf.getAll.keySet).toSeq.sorted
+          .flatMap { k =>
+            val was = before.get(k).orElse(defaults.getOption(k))
+            val now = spark.conf.getOption(k)
+            if (was == now) None else Some(s"$name leaves conf $k: $was -> $now")
+          }
+        changed ++ schema.fields.collect {
           case f if f.dataType.isInstanceOf[ArrayType] ||
                     f.dataType.isInstanceOf[MapType] ||
                     f.dataType.isInstanceOf[StructType] =>
@@ -29,7 +43,8 @@ class RegisteredQuerySpec extends SparkSpec {
         }
     }
     assert(offenders.isEmpty,
-      s"driver-unsortable columns in registered queries:\n  ${offenders.mkString("\n  ")}")
+      s"driver-unsortable columns or leaked confs in registered queries:\n  " +
+        offenders.mkString("\n  "))
   }
 
   test("every oracleSql key has a matching registered query") {

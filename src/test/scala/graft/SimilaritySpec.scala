@@ -181,49 +181,6 @@ class SimilaritySpec extends SparkSpec {
     } finally spark.conf.unset("spark.graft.advisor.knnGraph")
   }
 
-  test("q230/q231 operating points execute their advised plans " +
-    "(executed-plan pins moved out of the timed query bodies, r19)") {
-    // the r18 verdict (item 8): the query bodies materialized
-    // executedPlan.toString inside the bench's timed region — one full
-    // extra physical planning + plan render per rep. The pins live here
-    // now, on the exact registered geometries.
-    def cidJoins(df: org.apache.spark.sql.DataFrame): String =
-      df.queryExecution.executedPlan.toString
-        .linesIterator.filter(l => l.contains("Join") && l.contains("cid#"))
-        .mkString("\n")
-    // q230 geometry: dimension-sized list side → broadcast advice AND
-    // an executed BroadcastHashJoin on the candidate join
-    val model = Similarity.kmeansCentroids(emb, 8, 3)
-    val (aB, dfB) = Similarity.knnGraphAdvised(
-      emb, k = 3, nlist = 8, nprobe = 2, model = Some(model))
-    assert(aB.strategy === "broadcast")
-    assert(cidJoins(dfB).contains("BroadcastHashJoin"),
-      s"executed candidate join must match the advisory:\n${cidJoins(dfB)}")
-    // q231 geometry VERBATIM (the folded-direction customer corpus,
-    // broadcast disallowed, 200k-partition fair share): salt advice
-    // with cid 0 MG-named hot, __salt carried, NOT a broadcast
-    val key = col("c_custkey")
-    val j = (key % 124).cast("double") / 256.0
-    val embCol = when(key % 5 =!= 0, array(lit(1.0), j))
-      .when(key % 3 === 0, array(lit(-1.0), j))
-      .when(key % 3 === 1, array(j, lit(1.0)))
-      .otherwise(array(j, lit(-1.0)))
-    val corpus = Tables(spark, sfDir).customer.filter(key % 8 === 0)
-      .select(key.as("vec_id"), embCol.as("embedding"))
-    val m231 = Seq(0 -> Seq(1.0, 0.0), 1 -> Seq(-1.0, 0.0),
-      2 -> Seq(0.0, 1.0), 3 -> Seq(0.0, -1.0))
-    val (aS, dfS) = Similarity.knnGraphAdvised(
-      corpus, k = 3, nlist = 4, nprobe = 2, model = Some(m231),
-      broadcastMaxRows = 0L, skewFactor = 1.5, minSaltOutputRows = 100L,
-      maxSaltBuckets = 8, targetPartitions = Some(200000), maxHotShare = 1.0)
-    assert(aS.strategy === "salt" && aS.saltBuckets >= 2, aS.toString)
-    assert(aS.hotKeys.contains("0"), aS.toString)
-    val js = cidJoins(dfS)
-    assert(js.contains("__salt"), s"salted candidate join executes:\n$js")
-    assert(!js.contains("BroadcastHashJoin"),
-      s"salted join must not broadcast a past-dimension side:\n$js")
-  }
-
   test("knnGraph paths reject a zero-norm centroid model (NaN cosine guard)") {
     // a zero-norm centroid makes its cosine NaN, and the expression/join
     // probe paths rank NaN differently — the bit-identity contract only
