@@ -405,9 +405,9 @@ object Bench {
     else "max"
 
   /** Warm-up eligibility (r15 verdict #4): first-JVM-execution
-    * codegen/JIT cost measured at ~3× steady state on q208
-    * (LpaModeProbe: 12.9 s vs 3.4 s) — rep 1 of every heavy query
-    * carries it, min-of-2 only partially hides it, and the residue is
+    * codegen/JIT cost measured at ~3× steady state on q208 (a
+    * phase-timed probe, NOTES.md: 12.9 s vs 3.4 s) — rep 1 of every heavy
+    * query carries it, min-of-2 only partially hides it, and the residue is
     * the manufacturing process for golden-window anchors. Queries whose
     * ENVELOPE exceeds 2 s get one untimed warm-up rep (the cheap tail
     * swings from GC jitter, not JIT, and doubling 200 sub-second

@@ -9,13 +9,15 @@ import org.apache.spark.scheduler.{SparkListener, SparkListenerApplicationEnd}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.execution.LogicalRDD
 
-/** The resources an operator or query creates and must give back: eager
-  * local checkpoints, and the local scratch dirs that fixtures, rendered
-  * batch files and query outputs live in.
+/** The resources an operator or query creates and must give back: local
+  * checkpoints, and the local scratch dirs that fixtures, rendered batch
+  * files and query outputs live in.
   *
   * A frame's `unpersist()` drops cache entries only: a localCheckpoint's
-  * blocks belong to the RDD under the checkpointed frame's `LogicalRDD`
-  * leaf, and that RDD is what a checkpoint's release unpersists.
+  * blocks (eager or lazy) belong to the RDD under the checkpointed frame's
+  * `LogicalRDD` leaf, and that RDD is what a release unpersists. An
+  * iterative operator runs its rounds through [[fixpoint]]; an operator
+  * releases every checkpoint its returned frame does not read.
   *
   * A scratch dir is owned by the SparkContext it was made under. A dir
   * that a returned frame still reads cannot be deleted when the call
@@ -24,12 +26,52 @@ import org.apache.spark.sql.execution.LogicalRDD
   * reads after the call is released at once by its creator. */
 object Checkpoints {
 
-  /** `df` eagerly local-checkpointed, and the release of its blocks: the
-    * caller runs it once its last action over the frame has finished. */
-  def owned(df: DataFrame): (DataFrame, () => Unit) = {
-    val cp = df.localCheckpoint(true)
-    val pinned = cp.queryExecution.logical.collect { case r: LogicalRDD => r.rdd }
-    (cp, () => pinned.foreach(_.unpersist(blocking = false)))
+  /** `df` local-checkpointed (eagerly unless `eager` is false), and the
+    * release of its blocks: the caller runs it once its last action over
+    * the frame has finished. */
+  def owned(df: DataFrame, eager: Boolean = true): (DataFrame, () => Unit) = {
+    val cp = df.localCheckpoint(eager)
+    (cp, () => releaseRead(cp))
+  }
+
+  /** Release the checkpoints under `df`'s plan now: for a caller that has
+    * materialized all it reads of a lazy frame an operator checkpointed
+    * inside, when no other frame reads those checkpoints. */
+  def releaseRead(df: DataFrame): Unit =
+    df.queryExecution.logical.collect { case r: LogicalRDD => r.rdd }
+      .foreach(_.unpersist(blocking = false))
+
+  /** `body`'s value, given an `own` that checkpoints a frame as [[owned]]
+    * does and releases it when `body` returns or throws. */
+  def scoped[A](body: (DataFrame => DataFrame) => A): A = {
+    val releases = scala.collection.mutable.ArrayBuffer.empty[() => Unit]
+    try body { df => val (cp, release) = owned(df); releases += release; cp }
+    finally releases.foreach(_())
+  }
+
+  /** The round loop of an iterative operator: round 0 is `init`, round r
+    * is `step(round r-1, r)`, each an eager [[owned]] checkpoint. After
+    * each round, `done(prev, next, r)` decides whether to stop; it is first
+    * asked of round 0 alone (prev = next). A round is released once its
+    * successor has materialized and `done` has read both; a throwing
+    * `step` or `done` releases all. Returns the last round, whether `done`
+    * held (false at the `maxRounds` bound), and the last round's release. */
+  def fixpoint(init: DataFrame, maxRounds: Int)(
+      step: (DataFrame, Int) => DataFrame)(
+      done: (DataFrame, DataFrame, Int) => Boolean): (DataFrame, Boolean, () => Unit) = {
+    var (last, release) = owned(init)
+    try {
+      var (round, held) = (0, done(last, last, 0))
+      while (!held && round < maxRounds) {
+        round += 1
+        val (next, releaseNext) = owned(step(last, round))
+        held = try done(last, next, round)
+          catch { case e: Throwable => releaseNext(); throw e }
+        release()
+        last = next; release = releaseNext
+      }
+      (last, held, release)
+    } catch { case e: Throwable => release(); throw e }
   }
 
   private val ownedDirs = TrieMap.empty[SparkContext, TrieMap[String, Unit]]

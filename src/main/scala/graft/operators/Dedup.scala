@@ -18,18 +18,19 @@ import graft.functions.TextFunctions._
   * All signature math is built-in-expression columns (TextFunctions) —
   * codegen'd, no UDFs, deterministic salts.
   *
-  * FAULT-TOLERANCE NOTE on the internal lazy `localCheckpoint`s
+  * FAULT-TOLERANCE NOTE on the internal `localCheckpoint`s: a
+  * localCheckpoint trades lineage for executor block storage — it shares
+  * a heavy subtree across consumers WITHIN one execution, but the blocks
+  * are documented-unrecoverable on executor loss. The connected-components
+  * rounds run through [[graft.Checkpoints.fixpoint]], which releases
+  * every round but the last. The lazy checkpoints a returned frame reads
   * (hashSets/banded, sigs' banded, winnow fps/byDoc, duplicateSpans
-  * grams, baseEntities, and the Pq/Classifier/LangModel/Multimodal
-  * siblings): a localCheckpoint trades lineage for executor block
-  * storage — it shares a heavy subtree across consumers WITHIN one
-  * execution, but the blocks are documented-unrecoverable on executor
-  * loss and linger until the RDD is GC'd. On the fixture harness that
-  * is the right trade everywhere it is used; a long-lived cluster
+  * grams, baseEntities, and the Classifier/LangModel/Multimodal siblings)
+  * linger until the RDD is GC'd. On the fixture harness
+  * that is the right trade everywhere it is used; a long-lived cluster
   * deployment with dynamic allocation or preemption should flip these
   * to reliable checkpoints (or persist(DISK_ONLY) with explicit
-  * unpersist) — the same trade Graph.scala's scaladoc documents for
-  * its eager checkpoints.
+  * unpersist).
   */
 object Dedup {
 
@@ -312,56 +313,53 @@ object Dedup {
     * starts as its own label; each iteration propagates the min label
     * across edges (one join + one min-aggregate per iteration, converges
     * in O(cluster diameter) rounds; near-dup clusters are near-cliques so
-    * diameter is tiny). Lineage is cut with an eager localCheckpoint per
-    * round — at cluster scale swap in `checkpoint()` on a durable dir, or
-    * the two-phase large-star/small-star algorithm (Kiveris et al.,
-    * "Connected Components in MapReduce and Beyond") for O(log n) rounds
-    * on high-diameter graphs.
+    * diameter is tiny). The rounds run through
+    * [[graft.Checkpoints.fixpoint]], and the returned frame reads only the
+    * last round — at cluster scale swap in `checkpoint()` on a durable
+    * dir, or the two-phase large-star/small-star algorithm (Kiveris et
+    * al., "Connected Components in MapReduce and Beyond") for O(log n)
+    * rounds on high-diameter graphs.
     *
     * Input: pairs with id_a/id_b. Output: (doc_id, cluster_id = min doc_id
     * reachable), one row per vertex that appears in a pair. Unsorted (see
     * [[minhashNearDupPairs]]).
     */
-  def connectedComponents(pairs: DataFrame, maxIter: Int = 25): DataFrame = {
-    val edges = pairs.select(col("id_a").cast("long").as("src"), col("id_b").cast("long").as("dst"))
-      .union(pairs.select(col("id_b").cast("long").as("src"), col("id_a").cast("long").as("dst")))
-      .distinct()
-      .localCheckpoint(true)
-    var labels = edges.select(col("src").as("id")).distinct()
-      .withColumn("label", col("id"))
-      .localCheckpoint(true)
-    // Convergence probe: every id's label is NON-INCREASING round to
-    // round (next = min(old, propagated)), so Σ label is strictly
-    // monotone and "sum unchanged ⟺ fixpoint". One shuffle-free
-    // aggregate over the just-checkpointed frame replaces the earlier
-    // join-based changed-row probe (a keyed exchange of both label
-    // frames per round). decimal(38,0): exact at any scale — 10^12 ids
-    // of magnitude 2^63 sum under 10^32, far inside 38 digits, where a
-    // LongType sum would wrap.
-    def labelSum(df: DataFrame): java.math.BigDecimal =
-      df.agg(sum(col("label").cast("decimal(38,0)")).as("s")).head.getDecimal(0)
-    var prevSum = labelSum(labels)
-    var converged = false
-    var i = 0
-    while (!converged && i < maxIter) {
-      val prop = edges.join(labels.withColumnRenamed("id", "src"), Seq("src"))
-        .select(col("dst").as("id"), col("label"))
-      val next = labels.unionByName(prop)
-        .groupBy("id").agg(min("label").as("label"))
-        .localCheckpoint(true)
-      val nextSum = labelSum(next)
-      labels = next
-      converged = nextSum.compareTo(prevSum) == 0
-      prevSum = nextSum
-      i += 1
+  def connectedComponents(pairs: DataFrame, maxIter: Int = 25): DataFrame =
+    graft.Checkpoints.scoped { own =>
+      val edges = own(pairs
+        .select(col("id_a").cast("long").as("src"), col("id_b").cast("long").as("dst"))
+        .union(pairs.select(col("id_b").cast("long").as("src"), col("id_a").cast("long").as("dst")))
+        .distinct())
+      // Convergence probe: every id's label is NON-INCREASING round to
+      // round (next = min(old, propagated)), so Σ label is strictly
+      // monotone and "sum unchanged ⟺ fixpoint": one shuffle-free
+      // aggregate per round over the just-checkpointed frame, kept for the
+      // next round's comparison. decimal(38,0): exact at any scale — 10^12
+      // ids of magnitude 2^63 sum under 10^32, far inside 38 digits, where
+      // a LongType sum would wrap.
+      var prevSum: java.math.BigDecimal = null
+      val (labels, converged, release) = graft.Checkpoints.fixpoint(
+          edges.select(col("src").as("id")).distinct()
+            .withColumn("label", col("id")), maxIter) { (labels, _) =>
+        val prop = edges.join(labels.withColumnRenamed("id", "src"), Seq("src"))
+          .select(col("dst").as("id"), col("label"))
+        labels.unionByName(prop)
+          .groupBy("id").agg(min("label").as("label"))
+      } { (_, next, round) =>
+        val before = prevSum
+        prevSum = next.agg(sum(col("label").cast("decimal(38,0)"))).head.getDecimal(0)
+        round > 0 && prevSum.compareTo(before) == 0
+      }
+      // partially-propagated labels are silently WRONG clusters — refuse
+      if (!converged) {
+        release()
+        throw new IllegalStateException(
+          s"connectedComponents did not converge in $maxIter rounds " +
+            "(graph diameter exceeds the bound; raise maxIter or use " +
+            "large-star/small-star for high-diameter graphs)")
+      }
+      labels.select(col("id").as("doc_id"), col("label").as("cluster_id"))
     }
-    // partially-propagated labels are silently WRONG clusters — refuse
-    if (!converged) throw new IllegalStateException(
-      s"connectedComponents did not converge in $maxIter rounds " +
-        "(graph diameter exceeds the bound; raise maxIter or use " +
-        "large-star/small-star for high-diameter graphs)")
-    labels.select(col("id").as("doc_id"), col("label").as("cluster_id"))
-  }
 
   /** Connected components via alternating large-star/small-star rounds
     * (Kiveris et al., "Connected Components in MapReduce and Beyond",
@@ -381,20 +379,14 @@ object Dedup {
     * centers are the component minima. Same contract as
     * [[connectedComponents]]: converge-or-throw, output (doc_id,
     * cluster_id = min reachable id), one row per vertex in `pairs`.
+    * The rounds run through [[graft.Checkpoints.fixpoint]]; the returned
+    * frame reads the last round and `verts`, which both stay live.
     */
   def connectedComponentsStar(pairs: DataFrame, maxIter: Int = 20): DataFrame = {
-    val verts = pairs.select(col("id_a").cast("long").as("id"))
-      .union(pairs.select(col("id_b").cast("long").as("id")))
-      .distinct()
-      .localCheckpoint(true)
-    // canonical child→parent orientation (u > v), the shape small-star
-    // consumes and both operations preserve
-    var g = pairs
-      .select(col("id_a").cast("long").as("a"), col("id_b").cast("long").as("b"))
-      .filter(col("a") =!= col("b"))
-      .select(greatest(col("a"), col("b")).as("u"), least(col("a"), col("b")).as("v"))
-      .distinct()
-      .localCheckpoint(true)
+    val (verts, releaseVerts) = graft.Checkpoints.owned(
+      pairs.select(col("id_a").cast("long").as("id"))
+        .union(pairs.select(col("id_b").cast("long").as("id")))
+        .distinct())
     // the fixpoint of LS∘SS is exactly a star forest: every child points to
     // EXACTLY ONE parent AND no parent is itself a child (LS/SS preserve
     // components, so star-forest ⇒ every component is one star ⇒ labels
@@ -402,21 +394,27 @@ object Dedup {
     // declares graphs like {(10,5),(20,5),(10,1),(20,2)} converged —
     // children with two parents whose parents are never children — and
     // splits one component into several clusters. Two cheap limit-1 probes
-    // per round: a degree count on the same child key smallStar shuffles
-    // on, then the parent∩child semi-join.
+    // per round (and one pair before the first): a degree count on the
+    // same child key smallStar shuffles on, then the parent∩child
+    // semi-join.
     def isStarForest(edges: DataFrame): Boolean =
       edges.groupBy("u").agg(count(lit(1)).as("deg")).filter(col("deg") > 1L).isEmpty &&
         edges.join(edges.select(col("u").as("v")), Seq("v"), "left_semi").isEmpty
-    var converged = isStarForest(g)
-    var i = 0
-    while (!converged && i < maxIter) {
-      g = smallStar(largeStar(g)).localCheckpoint(true)
-      converged = isStarForest(g)
-      i += 1
+    // canonical child→parent orientation (u > v), the shape small-star
+    // consumes and both operations preserve
+    val (g, converged, release) = try graft.Checkpoints.fixpoint(pairs
+        .select(col("id_a").cast("long").as("a"), col("id_b").cast("long").as("b"))
+        .filter(col("a") =!= col("b"))
+        .select(greatest(col("a"), col("b")).as("u"), least(col("a"), col("b")).as("v"))
+        .distinct(), maxIter)(
+      (g, _) => smallStar(largeStar(g)))((_, g, _) => isStarForest(g))
+    catch { case e: Throwable => releaseVerts(); throw e }
+    if (!converged) {
+      release(); releaseVerts()
+      throw new IllegalStateException(
+        s"connectedComponentsStar did not converge in $maxIter rounds " +
+          "(expected O(log n); raise maxIter)")
     }
-    if (!converged) throw new IllegalStateException(
-      s"connectedComponentsStar did not converge in $maxIter rounds " +
-        "(expected O(log n); raise maxIter)")
     verts.join(g.select(col("u").as("id"), col("v").as("label")), Seq("id"), "left")
       .select(col("id").as("doc_id"),
         coalesce(col("label"), col("id")).as("cluster_id"))

@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import graft.Checkpoints
 import graft.plans.OrderedFold.orderedSum
 
 /** Graph centrality over corpus-derived similarity graphs. PageRank on
@@ -46,11 +47,11 @@ object Graph {
       dstCol: Column,
       iterations: Int = 5,
       damping: Double = 0.85,
-      snapDp: Int = 9): DataFrame = {
-    val e = edges.select(srcCol.as("src"), dstCol.as("dst")).localCheckpoint()
-    val nodes = e.select(col("src").as("node"))
+      snapDp: Int = 9): DataFrame = Checkpoints.scoped { own =>
+    val e = own(edges.select(srcCol.as("src"), dstCol.as("dst")))
+    val nodes = own(e.select(col("src").as("node"))
       .union(e.select(col("dst").as("node")))
-      .distinct().localCheckpoint()
+      .distinct())
     val n = nodes.count().toDouble
     val outdeg = e.groupBy(col("src")).agg(count(lit(1)).as("outdeg"))
     val teleport = (1.0 - damping) / n
@@ -59,40 +60,40 @@ object Graph {
     // changes); detect it once, and skip the per-iteration scalar job
     // entirely on graphs where every node has out-edges (kNN graphs by
     // construction) — `+ 0.0` below is then a bit-exact no-op.
-    val danglingNodes = nodes
-      .join(outdeg.withColumnRenamed("src", "node"), Seq("node"), "left_anti")
-      .localCheckpoint()
+    val danglingNodes = own(nodes
+      .join(outdeg.withColumnRenamed("src", "node"), Seq("node"), "left_anti"))
     val hasDangling = danglingNodes.limit(1).count() > 0
 
-    var ranks = nodes.select(col("node"), lit(1.0 / n).as("pr"))
-    for (_ <- 1 to iterations) {
-      // Dangling mass: global scalar (pinned node-order fold).
-      val dmShare =
-        if (!hasDangling) 0.0
-        else {
-          val dmRow = ranks.join(danglingNodes, Seq("node"), "left_semi")
-            .agg(orderedSum(col("node"), col("pr")).as("dm"))
-            .collect()(0)
-          (if (dmRow.isNullAt(0)) 0.0 else dmRow.getDouble(0)) / n
-        }
+    val scale = math.pow(10.0, snapDp)
+    // a fixed iteration count: `done` never holds
+    val (ranks, _, _) = Checkpoints.fixpoint(
+        nodes.select(col("node"), lit(1.0 / n).as("pr")), iterations) {
+      (ranks, _) =>
+        // Dangling mass: global scalar (pinned node-order fold).
+        val dmShare =
+          if (!hasDangling) 0.0
+          else {
+            val dmRow = ranks.join(danglingNodes, Seq("node"), "left_semi")
+              .agg(orderedSum(col("node"), col("pr")).as("dm"))
+              .collect()(0)
+            (if (dmRow.isNullAt(0)) 0.0 else dmRow.getDouble(0)) / n
+          }
 
-      val summed = e
-        .join(ranks.withColumnRenamed("node", "src"), Seq("src"))
-        .join(outdeg, Seq("src"))
-        .select(col("dst").as("node"), col("src"),
-          (col("pr") / col("outdeg").cast("double")).as("contrib"))
-        .groupBy(col("node"))
-        .agg(orderedSum(col("src"), col("contrib")).as("insum"))
+        val summed = e
+          .join(ranks.withColumnRenamed("node", "src"), Seq("src"))
+          .join(outdeg, Seq("src"))
+          .select(col("dst").as("node"), col("src"),
+            (col("pr") / col("outdeg").cast("double")).as("contrib"))
+          .groupBy(col("node"))
+          .agg(orderedSum(col("src"), col("contrib")).as("insum"))
 
-      val scale = math.pow(10.0, snapDp)
-      val raw = lit(teleport) + lit(damping) *
-        (coalesce(col("insum"), lit(0.0)) + lit(dmShare))
-      ranks = nodes.join(summed, Seq("node"), "left")
-        .select(col("node"),
-          (floor(raw * lit(scale) + lit(0.5)).cast("double") / lit(scale))
-            .as("pr"))
-        .localCheckpoint()
-    }
+        val raw = lit(teleport) + lit(damping) *
+          (coalesce(col("insum"), lit(0.0)) + lit(dmShare))
+        nodes.join(summed, Seq("node"), "left")
+          .select(col("node"),
+            (floor(raw * lit(scale) + lit(0.5)).cast("double") / lit(scale))
+              .as("pr"))
+    }((_, _, _) => false)
     ranks
   }
 
@@ -104,46 +105,35 @@ object Graph {
     * transitivity is exactly k-hop reachability.
     *
     * Scale shape: one join + anti-join + dedup per ROUND, maxHops
-    * rounds total — frontier-sized frames, never corpus², and the
-    * visited set is a checkpointed DataFrame, no driver-side state.
-    * BFS order guarantees the first arrival IS the minimum distance, so
-    * no min-aggregation pass is needed at the end. */
+    * rounds total — frontier-sized joins, never corpus², no driver-side
+    * state. Each [[graft.Checkpoints.fixpoint]] round checkpoints the
+    * (node, hops) visited set, whose `hops = r-1` rows are round r's
+    * frontier; the returned frame reads only the last round. BFS order
+    * guarantees the first arrival IS the minimum distance, so no
+    * min-aggregation pass is needed at the end. */
   def kHopReachability(
       edges: DataFrame, srcCol: String, dstCol: String,
       seeds: DataFrame, seedCol: String, maxHops: Int): DataFrame = {
     require(maxHops >= 0, "maxHops must be >= 0")
-    val e = edges.select(col(srcCol).as("s"), col(dstCol).as("d"))
-    val (ee, releaseEe) = graft.Checkpoints.owned(
-      e.unionAll(e.select(col("d").as("s"), col("s").as("d"))))
-    try {
-      var (visited, releaseVisited) = graft.Checkpoints.owned(
-        seeds.select(col(seedCol).as("node")).distinct()
-          .withColumn("hops", lit(0)))
-      // the first frontier IS the visited set: one release owns it
-      var (frontier, releaseFrontier) = (visited, () => ())
-      var h = 0
-      while (h < maxHops && !frontier.isEmpty) {
-        h += 1
-        val (next, releaseNext) = graft.Checkpoints.owned(
-          ee.join(frontier.select(col("node").as("s")), Seq("s"))
-            .select(col("d").as("node")).distinct()
-            .join(visited.select(col("node")), Seq("node"), "left_anti")
-            .withColumn("hops", lit(h)))
-        val (merged, releaseMerged) =
-          graft.Checkpoints.owned(visited.unionAll(next))
-        // the merged checkpoint has materialized (eager), so the
-        // superseded round's blocks are dead weight — release them to
-        // keep storage O(|V|), not O(maxHops · |V|)
-        releaseFrontier()
-        releaseVisited()
-        visited = merged; releaseVisited = releaseMerged
-        frontier = next; releaseFrontier = releaseNext
+    Checkpoints.scoped { own =>
+      val e = edges.select(col(srcCol).as("s"), col(dstCol).as("d"))
+      val ee = own(e.unionAll(e.select(col("d").as("s"), col("s").as("d"))))
+      val (visited, _, _) = Checkpoints.fixpoint(
+          seeds.select(col(seedCol).as("node")).distinct()
+            .withColumn("hops", lit(0)), maxHops) { (visited, h) =>
+        visited.unionAll(ee
+          .join(visited.filter(col("hops") === h - 1)
+            .select(col("node").as("s")), Seq("s"))
+          .select(col("d").as("node")).distinct()
+          .join(visited.select(col("node")), Seq("node"), "left_anti")
+          .withColumn("hops", lit(h)))
+      } { (_, visited, h) =>
+        // an empty frontier ends the BFS; after the last round there is
+        // no next round to skip
+        h < maxHops && visited.filter(col("hops") === h).isEmpty
       }
-      // the last frontier's rows are in the final visited checkpoint;
-      // only the returned frame stays live
-      releaseFrontier()
       visited
-    } finally releaseEe()
+    }
   }
 
   /** Per-node triangle participation counts over an UNDIRECTED simple
@@ -177,77 +167,78 @@ object Graph {
     *
     * @return (node, n_triangles) for every node in ≥1 triangle. */
   def triangleCounts(edges: DataFrame, srcCol: String, dstCol: String): DataFrame = {
-    // checkpoint FIRST: the edge frame (often a join+distinct pipeline)
-    // feeds the gate, the degree aggregate, and the orientation joins —
-    // uncheckpointed it would be derived three times over
-    val e0 = edges.select(col(srcCol).as("a"), col(dstCol).as("b"))
-      .localCheckpoint(true)
-    // RE-WIDEN when the incoming frame arrives byte-coalesced: AQE sizes
-    // the caller's distinct output by BYTES, and a ~16-byte edge row
-    // makes a graph-sized edge set look tiny (the sf0.1 co-purchase
-    // graph lands on 10 partitions), but the wedge stage below runs
-    // MAP-SIDE over this exact partitioning with per-row cost
-    // |N(u)|+|N(v)| — heavy out of all proportion to row bytes, so the
-    // whole operator degrades to a handful of long tasks whose critical
-    // path also soaks up every scheduling hiccup (the q184 bimodality).
-    // Hash on (a, b) spreads hub edges uniformly; the extra exchange
-    // only happens when width was lost (at deployment scale the edge
-    // set's byte-sized partition count already exceeds the session
-    // width, and this is a no-op branch).
-    // Try-parsed rather than a bare toInt: a session that sets a
-    // non-integer width (e.g. "auto" on managed platforms) must skip
-    // the re-widen — an already-wide frame is the common case — not
-    // throw an unlocated NumberFormatException from inside the operator
-    val width = scala.util.Try(edges.sparkSession.conf
-      .get("spark.sql.shuffle.partitions").trim.toInt).getOrElse(0)
-    val e = if (width > 0 && e0.rdd.getNumPartitions * 2 <= width)
-      e0.repartition(width, col("a"), col("b")).localCheckpoint(true)
-    else e0
-    // canonical-form gate: cheap relative to the joins it guards
-    val bad = e.filter(col("a") >= col("b")).limit(1).count()
-    require(bad == 0L,
-      "triangleCounts expects canonical edges (src < dst); found src >= dst")
-    // The DEDUP gate (an exact duplicate canonical edge passes src<dst
-    // but double-counts every triangle its oriented edge touches) is NOT
-    // a separate distinct() job here: callers typically hand this
-    // operator a frame that just paid its own distinct shuffle, and a
-    // validation-only re-shuffle of the full edge set was the operator's
-    // single biggest fixed cost (the q184 ledger). Both copies of a
-    // duplicate edge orient identically, so duplicates surface as
-    // repeated dst entries in ONE adjacency list — the check rides the
-    // adjacency build below for free (see the `dupEdges` scan).
-    // degree over the undirected graph = appearances on either side;
-    // checkpointed for EXACT size stats — a V-row two-long table usually
-    // fits the broadcast threshold, turning both orientation joins into
-    // broadcast-hash (zero edge shuffles), and degrades to shuffle joins
-    // by the same size rule when |V| outgrows it
-    val deg = e.select(col("a").as("node"))
-      .unionAll(e.select(col("b").as("node")))
-      .groupBy(col("node")).agg(count(lit(1)).as("deg"))
-      .localCheckpoint(true)
-    val withDeg = e
-      .join(deg.select(col("node").as("a"), col("deg").as("da")), Seq("a"))
-      .join(deg.select(col("node").as("b"), col("deg").as("db")), Seq("b"))
-    val oriented = withDeg.select(
-        when(col("da") < col("db") ||
-            (col("da") === col("db") && col("a") < col("b")),
-          struct(col("a").as("src"), col("b").as("dst")))
-          .otherwise(struct(col("b").as("src"), col("a").as("dst")))
-          .as("o"))
-      .select(col("o.src"), col("o.dst"))
-      // checkpoint: the frame feeds the adjacency build and both join
-      // sides below; recomputing the degree joins per use would triple
-      // the shuffle work
-      .localCheckpoint(true)
-    // checkpointed: (a) both join sides below consume it — inline it
-    // would aggregate twice; (b) the checkpoint carries EXACT size
-    // stats, so Catalyst picks broadcast-hash when the adjacency table
-    // fits the threshold and sort-merge when |V| outgrows it — the
-    // size-based strategy flip is the 100 TB story, not a hardcoded
-    // hint either way
-    val adj = oriented.groupBy(col("src"))
-      .agg(collect_list(col("dst")).as("nbrs"))
-      .localCheckpoint(true)
+    val (oriented, adj) = Checkpoints.scoped { own =>
+      // checkpoint FIRST: the edge frame (often a join+distinct pipeline)
+      // feeds the gate, the degree aggregate, and the orientation joins —
+      // uncheckpointed it would be derived three times over
+      val e0 = own(edges.select(col(srcCol).as("a"), col(dstCol).as("b")))
+      // RE-WIDEN when the incoming frame arrives byte-coalesced: AQE sizes
+      // the caller's distinct output by BYTES, and a ~16-byte edge row
+      // makes a graph-sized edge set look tiny (the sf0.1 co-purchase
+      // graph lands on 10 partitions), but the wedge stage below runs
+      // MAP-SIDE over this exact partitioning with per-row cost
+      // |N(u)|+|N(v)| — heavy out of all proportion to row bytes, so the
+      // whole operator degrades to a handful of long tasks whose critical
+      // path also soaks up every scheduling hiccup (the q184 bimodality).
+      // Hash on (a, b) spreads hub edges uniformly; the extra exchange
+      // only happens when width was lost (at deployment scale the edge
+      // set's byte-sized partition count already exceeds the session
+      // width, and this is a no-op branch).
+      // Try-parsed rather than a bare toInt: a session that sets a
+      // non-integer width (e.g. "auto" on managed platforms) must skip
+      // the re-widen — an already-wide frame is the common case — not
+      // throw an unlocated NumberFormatException from inside the operator
+      val width = scala.util.Try(edges.sparkSession.conf
+        .get("spark.sql.shuffle.partitions").trim.toInt).getOrElse(0)
+      val e = if (width > 0 && e0.rdd.getNumPartitions * 2 <= width)
+        own(e0.repartition(width, col("a"), col("b")))
+      else e0
+      // canonical-form gate: cheap relative to the joins it guards
+      val bad = e.filter(col("a") >= col("b")).limit(1).count()
+      require(bad == 0L,
+        "triangleCounts expects canonical edges (src < dst); found src >= dst")
+      // The DEDUP gate (an exact duplicate canonical edge passes src<dst
+      // but double-counts every triangle its oriented edge touches) is NOT
+      // a separate distinct() job here: callers typically hand this
+      // operator a frame that just paid its own distinct shuffle, and a
+      // validation-only re-shuffle of the full edge set was the operator's
+      // single biggest fixed cost (the q184 ledger). Both copies of a
+      // duplicate edge orient identically, so duplicates surface as
+      // repeated dst entries in ONE adjacency list — the check rides the
+      // adjacency build below for free (see the `dupEdges` scan).
+      // degree over the undirected graph = appearances on either side;
+      // checkpointed for EXACT size stats — a V-row two-long table usually
+      // fits the broadcast threshold, turning both orientation joins into
+      // broadcast-hash (zero edge shuffles), and degrades to shuffle joins
+      // by the same size rule when |V| outgrows it
+      val deg = own(e.select(col("a").as("node"))
+        .unionAll(e.select(col("b").as("node")))
+        .groupBy(col("node")).agg(count(lit(1)).as("deg")))
+      val withDeg = e
+        .join(deg.select(col("node").as("a"), col("deg").as("da")), Seq("a"))
+        .join(deg.select(col("node").as("b"), col("deg").as("db")), Seq("b"))
+      val oriented = withDeg.select(
+          when(col("da") < col("db") ||
+              (col("da") === col("db") && col("a") < col("b")),
+            struct(col("a").as("src"), col("b").as("dst")))
+            .otherwise(struct(col("b").as("src"), col("a").as("dst")))
+            .as("o"))
+        .select(col("o.src"), col("o.dst"))
+        // checkpoint: the frame feeds the adjacency build and both join
+        // sides below; recomputing the degree joins per use would triple
+        // the shuffle work
+        .localCheckpoint(true)
+      // checkpointed: (a) both join sides below consume it — inline it
+      // would aggregate twice; (b) the checkpoint carries EXACT size
+      // stats, so Catalyst picks broadcast-hash when the adjacency table
+      // fits the threshold and sort-merge when |V| outgrows it — the
+      // size-based strategy flip is the 100 TB story, not a hardcoded
+      // hint either way
+      val adj = oriented.groupBy(col("src"))
+        .agg(collect_list(col("dst")).as("nbrs"))
+        .localCheckpoint(true)
+      (oriented, adj)
+    }
     // the dedup gate, folded into the already-materialized adjacency:
     // a duplicate canonical edge = a repeated dst within one nbrs list
     // (both copies orient the same way). One map-only scan of the
@@ -274,8 +265,8 @@ object Graph {
     // ONE exploded array per edge (a three-way union would execute the
     // whole join subtree three times; Spark does not share common
     // subplans across Union branches). The returned frame is lazy and
-    // reads the checkpoints above when the caller runs it, so none of
-    // them is released here.
+    // reads `oriented` and `adj` when the caller runs it, so only the
+    // edge and degree checkpoints above are released here.
     e2.select(explode(concat(col("ws"),
         array_repeat(col("src"), size(col("ws"))),
         array_repeat(col("dst"), size(col("ws"))))).as("node"))
@@ -308,8 +299,9 @@ object Graph {
     * edge closure is checkpointed ONCE and reused every round; a round
     * is one edges ⋈ labels shuffle join plus two key-partitioned
     * aggregations — O(|E|) work per round, labels frame O(|V|), driver
-    * state O(1). Superseded label checkpoints are released as soon as
-    * the next round's materializes (the [[kHopReachability]] rule).
+    * state O(1). The rounds run through [[graft.Checkpoints.fixpoint]],
+    * which releases each superseded label checkpoint as soon as the next
+    * round's materializes; the returned frame reads only the last round.
     *
     * Returns `(node, label)` for every non-isolated node (an isolated
     * node has no neighbors to vote — and no edge row to arrive on). */
@@ -320,22 +312,17 @@ object Graph {
     val e = edges.select(
       col(srcCol).cast("long").as("a"), col(dstCol).cast("long").as("b"))
     // symmetric closure via NORMALIZED pairs: distinct on (least,
-    // greatest) shuffles |E| rows and the swap is a map-side union on
-    // the deduped frame — the former union-then-distinct shape shuffled
-    // 2|E| rows to the same answer, and was q208's #1 shuffle mover
-    // (the r13/r14 envelope flags traced to exactly this stage's cost).
-    // Same output by construction: {(least,greatest)} dedups every
+    // greatest) shuffles |E| rows (not the 2|E| of union-then-distinct)
+    // and the swap is a map-side union on the deduped frame. Same output
+    // by construction: {(least,greatest)} dedups every
     // orientation/duplicate, both directions re-emitted once each.
     val norm = e.filter(col("a") =!= col("b"))
       .select(least(col("a"), col("b")).as("a"),
         greatest(col("a"), col("b")).as("b"))
       .distinct()
-    val (und, releaseUnd) = graft.Checkpoints.owned(
-      norm.unionAll(norm.select(col("b").as("a"), col("a").as("b"))))
-    try {
-      var (labels, releaseLabels) = graft.Checkpoints.owned(
-        und.select(col("a").as("node")).distinct()
-          .withColumn("lab", col("node")))
+    Checkpoints.scoped { own =>
+      val und = own(
+        norm.unionAll(norm.select(col("b").as("a"), col("a").as("b"))))
       // a localCheckpoint's LogicalRDD carries NO usable size stats, so
       // Catalyst plans the round join as SMJ and re-shuffles the O(|E|)
       // closure EVERY round (measured: 2.4s/round, 145 MB shuffled at
@@ -343,24 +330,24 @@ object Graph {
       // a node — so broadcast it explicitly while it plausibly fits
       // (~64 MB at the 4M default) and the round's only shuffle is the
       // partial-aggregated (node, lab) vote exchange; past the gate,
-      // fall back to the shuffled join (both sides genuinely big).
-      val nNodes = labels.count()
-      var r = 0
-      var converged = false
-      while (r < rounds && !converged) {
-        val labSide = labels.select(col("node").as("b"), col("lab"))
-        val votes = und
-          .join(
-            if (nNodes <= maxBroadcastNodes) broadcast(labSide) else labSide,
-            Seq("b"))
+      // fall back to the shuffled join (both sides genuinely big). Every
+      // round labels the same nodes: counted once, off round 0.
+      var nNodes = 0L
+      def gated(labels: DataFrame) =
+        if (nNodes <= maxBroadcastNodes) broadcast(labels) else labels
+      val (labels, _, _) = Checkpoints.fixpoint(
+          und.select(col("a").as("node")).distinct()
+            .withColumn("lab", col("node")), rounds) { (labels, r) =>
+        if (r == 1) nNodes = labels.count()
+        und.join(gated(labels.select(col("node").as("b"), col("lab"))), Seq("b"))
           .groupBy(col("a").as("node"), col("lab"))
           .agg(count(lit(1)).as("cnt"))
-        // (max cnt, then min label): negate inside the struct so ONE
-        // max aggregate carries both tie-break levels
-        val (next, releaseNext) = graft.Checkpoints.owned(votes
+          // (max cnt, then min label): negate inside the struct so ONE
+          // max aggregate carries both tie-break levels
           .groupBy(col("node"))
           .agg(max(struct(col("cnt"), (-col("lab")).as("neg"))).as("w"))
-          .select(col("node"), (-col("w.neg")).as("lab")))
+          .select(col("node"), (-col("w.neg")).as("lab"))
+      } { (labels, next, r) =>
         // EARLY STOP without losing determinism: synchronous updates make
         // a zero-change round a fixed point — every later round is the
         // identity, so stopping returns EXACTLY the fixed-round result on
@@ -373,21 +360,14 @@ object Graph {
         // runs only where it can pay: never after the FINAL round
         // (convergence buys nothing) and never after round 1 (labels
         // start as node ids — a non-trivial graph cannot reach a fixed
-        // point in one round, so a rounds≤2 run pays zero probe cost;
-        // q208's bench envelope pinned the regression this rule undoes).
-        if (r >= 1 && r + 1 < rounds) {
-          val prev = labels.select(col("node"), col("lab").as("prev"))
-          converged = next
-            .join(if (nNodes <= maxBroadcastNodes) broadcast(prev) else prev,
-              Seq("node"))
-            .filter(col("lab") =!= col("prev"))
-            .limit(1).count() == 0L
-        }
-        releaseLabels()
-        labels = next; releaseLabels = releaseNext
-        r += 1
+        // point in one round, so a rounds≤2 run pays zero probe cost).
+        r >= 2 && r < rounds && next
+          .join(gated(labels.select(col("node"), col("lab").as("prev"))),
+            Seq("node"))
+          .filter(col("lab") =!= col("prev"))
+          .limit(1).count() == 0L
       }
       labels.select(col("node"), col("lab").as("label"))
-    } finally releaseUnd()
+    }
   }
 }

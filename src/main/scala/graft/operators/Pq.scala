@@ -57,52 +57,54 @@ object Pq {
     // rule as kmeansCentroids); encode still emits them with a null code
     val slim = corpus.select(col(idCol), col(embCol))
       .filter(col(embCol).isNotNull)
-    val training = Similarity.boundedTrainingSample(
+    val (training, releaseTraining) = Similarity.boundedTrainingSample(
       slim, idCol, trainCap, 4L * ksub, corpusRows)
-    // one explode → (id, sub, subvec); reused by every Lloyd pass
-    val subRows = training
+    // one explode → (id, sub, subvec); reused by every Lloyd pass.
+    // Lazily checkpointed (r18): every Lloyd pass re-derived the explode
+    // from the training sample otherwise
+    val (subRows, releaseSubRows) = graft.Checkpoints.owned(training
       .select(col(idCol), explode(array((0 until m).map(s =>
         struct(lit(s).as("sub"),
           slice(col(embCol).cast("array<double>"), s * dsub + 1, dsub).as("sv"))): _*)).as("e"))
-      .select(col(idCol), col("e.sub").as("sub"), col("e.sv").as("sv"))
-      // lazily checkpointed (r18): every Lloyd pass re-derived the
-      // explode from the training sample otherwise
-      .localCheckpoint(eager = false)
-    var books: Seq[(Int, Int, Seq[Double])] =
-      Similarity.seedRows(training, ksub, idCol, embCol)
-        .collect().zipWithIndex.flatMap { case (r, c) =>
-          val e = r.getSeq[Double](1)
-          (0 until m).map(s => (s, c, e.slice(s * dsub, (s + 1) * dsub)))
-        }.toSeq
-    for (_ <- 0 until iters) {
-      val cbDf = spark.createDataFrame(books).toDF("sub", "code", "cw")
-      // per-(vector, sub) argmin as ONE partial-aggregating min(struct)
-      // instead of the former row_number window (r18, guide §4 prefer
-      // aggregates over sorts): (__d, code) pairs are distinct within a
-      // group (one row per candidate code), so the struct min picks
-      // exactly the window's (min __d, then min code) winner and `sv`
-      // (functionally dependent on the group key) is never compared —
-      // and the map-side combine replaces a full per-iteration sort.
-      val assigned = subRows.join(broadcast(cbDf), Seq("sub"))
-        .withColumn("__d", round(l2Sq(col("sv"), col("cw")), 9))
-        .groupBy(col(idCol), col("sub"))
-        .agg(min(struct(col("__d"), col("code"), col("sv"))).as("w"))
-        .select(col("sub"), col("w.code").as("code"), col("w.sv").as("sv"))
-      val updated: Map[(Int, Int), Seq[Double]] = assigned
-        .select(col("sub"), col("code"), posexplode(col("sv")).as(Seq("pos", "v")))
-        .groupBy(col("sub"), col("code"), col("pos")).agg(avg(col("v")).as("mu"))
-        .groupBy(col("sub"), col("code"))
-        .agg(array_sort(collect_list(struct(col("pos"), col("mu")))).as("ps"))
-        .select(col("sub"), col("code"),
-          transform(col("ps"), p => p.getField("mu")).as("cw"))
-        .collect()
-        .map(r => ((r.getInt(0), r.getInt(1)),
-          r.getSeq[Double](2).map(Similarity.round9))).toMap
-      books = books.map { case (s, c, old) =>
-        (s, c, updated.getOrElse((s, c), old))
+      .select(col(idCol), col("e.sub").as("sub"), col("e.sv").as("sv")),
+      eager = false)
+    try {
+      var books: Seq[(Int, Int, Seq[Double])] =
+        Similarity.seedRows(training, ksub, idCol, embCol)
+          .collect().zipWithIndex.flatMap { case (r, c) =>
+            val e = r.getSeq[Double](1)
+            (0 until m).map(s => (s, c, e.slice(s * dsub, (s + 1) * dsub)))
+          }.toSeq
+      for (_ <- 0 until iters) {
+        val cbDf = spark.createDataFrame(books).toDF("sub", "code", "cw")
+        // per-(vector, sub) argmin as ONE partial-aggregating min(struct)
+        // instead of the former row_number window (r18, guide §4 prefer
+        // aggregates over sorts): (__d, code) pairs are distinct within a
+        // group (one row per candidate code), so the struct min picks
+        // exactly the window's (min __d, then min code) winner and `sv`
+        // (functionally dependent on the group key) is never compared —
+        // and the map-side combine replaces a full per-iteration sort.
+        val assigned = subRows.join(broadcast(cbDf), Seq("sub"))
+          .withColumn("__d", round(l2Sq(col("sv"), col("cw")), 9))
+          .groupBy(col(idCol), col("sub"))
+          .agg(min(struct(col("__d"), col("code"), col("sv"))).as("w"))
+          .select(col("sub"), col("w.code").as("code"), col("w.sv").as("sv"))
+        val updated: Map[(Int, Int), Seq[Double]] = assigned
+          .select(col("sub"), col("code"), posexplode(col("sv")).as(Seq("pos", "v")))
+          .groupBy(col("sub"), col("code"), col("pos")).agg(avg(col("v")).as("mu"))
+          .groupBy(col("sub"), col("code"))
+          .agg(array_sort(collect_list(struct(col("pos"), col("mu")))).as("ps"))
+          .select(col("sub"), col("code"),
+            transform(col("ps"), p => p.getField("mu")).as("cw"))
+          .collect()
+          .map(r => ((r.getInt(0), r.getInt(1)),
+            r.getSeq[Double](2).map(Similarity.round9))).toMap
+        books = books.map { case (s, c, old) =>
+          (s, c, updated.getOrElse((s, c), old))
+        }
       }
-    }
-    books
+      books
+    } finally { releaseSubRows(); releaseTraining() }
   }
 
   /** The codebooks as a small (sub, code, codeword) table — model state

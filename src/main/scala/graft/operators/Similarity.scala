@@ -188,31 +188,33 @@ object Similarity {
     // gives such rows list 0 downstream (assignToCentroids' coalesce)
     val slim = corpus.select(col(idCol), col(embCol))
       .filter(col(embCol).isNotNull)
-    val training =
+    val (training, releaseTraining) =
       boundedTrainingSample(slim, idCol, trainCap, 4L * k, corpusRows)
-    var centroids: Seq[(Int, Seq[Double])] =
-      seedRows(training, k, idCol, embCol)
-        .collect().zipWithIndex
-        .map { case (r, i) => (i, r.getSeq[Double](1)) }.toSeq
-    for (_ <- 0 until iters) {
-      val assigned = assignToCentroids(training, centroids, idCol, embCol)
-      val updated: Map[Int, Seq[Double]] = assigned
-        .select(col("cid"), posexplode(col(embCol).cast("array<double>")).as(Seq("pos", "v")))
-        .groupBy(col("cid"), col("pos")).agg(avg(col("v")).as("m"))
-        .groupBy(col("cid"))
-        .agg(array_sort(collect_list(struct(col("pos"), col("m")))).as("ps"))
-        .select(col("cid"), transform(col("ps"), p => p.getField("m")).as("centroid"))
-        .collect().map(r => (r.getInt(0), r.getSeq[Double](1).map(round9))).toMap
-      // a centroid that captured no rows this round (duplicate seed losing
-      // every tie, or a list emptied by a better neighbor) carries through
-      // UNCHANGED rather than being dropped — the Lloyd groupBy only emits
-      // assigned cids, and silently returning < k centroids would shrink
-      // ivfTopK's nlist out from under the caller
-      centroids = centroids.map { case (cid, old) =>
-        (cid, updated.getOrElse(cid, old))
+    try {
+      var centroids: Seq[(Int, Seq[Double])] =
+        seedRows(training, k, idCol, embCol)
+          .collect().zipWithIndex
+          .map { case (r, i) => (i, r.getSeq[Double](1)) }.toSeq
+      for (_ <- 0 until iters) {
+        val assigned = assignToCentroids(training, centroids, idCol, embCol)
+        val updated: Map[Int, Seq[Double]] = assigned
+          .select(col("cid"), posexplode(col(embCol).cast("array<double>")).as(Seq("pos", "v")))
+          .groupBy(col("cid"), col("pos")).agg(avg(col("v")).as("m"))
+          .groupBy(col("cid"))
+          .agg(array_sort(collect_list(struct(col("pos"), col("m")))).as("ps"))
+          .select(col("cid"), transform(col("ps"), p => p.getField("m")).as("centroid"))
+          .collect().map(r => (r.getInt(0), r.getSeq[Double](1).map(round9))).toMap
+        // a centroid that captured no rows this round (duplicate seed losing
+        // every tie, or a list emptied by a better neighbor) carries through
+        // UNCHANGED rather than being dropped — the Lloyd groupBy only emits
+        // assigned cids, and silently returning < k centroids would shrink
+        // ivfTopK's nlist out from under the caller
+        centroids = centroids.map { case (cid, old) =>
+          (cid, updated.getOrElse(cid, old))
+        }
       }
-    }
-    centroids
+      centroids
+    } finally releaseTraining()
   }
 
   /** Sample-bounded deterministic training frame, shared by the IVF
@@ -220,12 +222,13 @@ object Similarity {
     * the full sizing contract): an eager localCheckpoint of either the
     * whole (small) corpus or a hash-gated ~trainCap-row subsample, with
     * geometric gate-widening to a `kFloor` usable floor and self-correcting
-    * trusted counts in both directions. */
+    * trusted counts in both directions. Returned with its release: a
+    * trainer runs it once training has finished. */
   private[operators] def boundedTrainingSample(
       slim: DataFrame, idCol: String, trainCap: Long, kFloor: Long,
-      corpusRows: Option[Long]): DataFrame = {
+      corpusRows: Option[Long]): (DataFrame, () => Unit) = {
     val n = corpusRows.getOrElse(slim.count())
-    def gated(n: Long): DataFrame = {
+    def gated(n: Long): (DataFrame, () => Unit) = {
       // deterministic unbiased gate (same device as Sampling's hash gate):
       // keep a row iff its id-hash falls under the target fraction — no
       // sort, no single-task gather, replay-stable
@@ -244,12 +247,12 @@ object Similarity {
         val (wider, releaseWider) = sampleAt(keep)
         sample = wider; release = releaseWider
       }
-      sample
+      (sample, release)
     }
     if (n <= trainCap) {
       val (whole, release) = graft.Checkpoints.owned(slim)
       val actual = whole.count() // in-memory count of the checkpoint
-      if (actual <= trainCap) whole
+      if (actual <= trainCap) (whole, release)
       else {
         // the trusted count lied; the recount above cost nothing extra
         // and IS the true count — release the oversize checkpoint and

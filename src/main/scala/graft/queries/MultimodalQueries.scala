@@ -166,6 +166,9 @@ object MultimodalQueries extends QueryPack {
         .connectedComponents(pairs.select(col("id_a"), col("id_b")))
         .filter(col("cluster_id") < col("doc_id"))
         .select(col("doc_id").as("media_id"))
+      // the clustering has materialized the pairs: the banded-hash
+      // checkpoint under them is read no more
+      graft.Checkpoints.releaseRead(pairs)
       media.select(col("media_id"))
         .join(dropped, Seq("media_id"), "left_anti")
         .orderBy(col("media_id"))

@@ -252,16 +252,14 @@ class PipelinesSpec extends SparkSpec {
         .map(a => (a.message_id, a.filename, a.size, s"$base/files/${a.filename}"))
         .toDF("message_id", "filename", "size", "url")
       val acc = spark.sparkContext.collectionAccumulator[(String, String)]("e2e-errs")
-      val sc = spark.sparkContext
-      val persistedBefore = sc.getPersistentRDDs.keySet
-      val report = Pipelines.syncTickets(
+      val (report, pinnedBySync) = rddsPinnedBy(Pipelines.syncTickets(
         wireTickets, Fixtures.messagesDf(spark), liveAttachments,
         Fixtures.grooveMailboxesDf(spark), Fixtures.grooveAgentsDf(spark),
         Fixtures.hsMailboxesDf(spark), Fixtures.hsUsersDf(spark),
         Fixtures.hsCustomersDf(spark), Fixtures.existingConversationsDf(spark),
         Fixtures.defaultMailboxEmail, SyncOptions(bypassValidation = true))(
         new HttpPublisher(s"$base/hs/conversations", acc.add _,
-          idCol = Some("groove_ticket_number"))).toOption.get
+          idCol = Some("groove_ticket_number"))).toOption.get)(_ => Set.empty)
 
       assert(report.published.toInt === expected.size)
       // each POST carries its record's replay key: the ticket number
@@ -273,8 +271,7 @@ class PipelinesSpec extends SparkSpec {
           s"Idempotency-Key $key on the POST of ticket $number")
       }
       // the fetched-payload checkpoint is released once the publish ends
-      assert((sc.getPersistentRDDs.keySet -- persistedBefore).isEmpty,
-        s"syncTickets left RDDs persisted: ${sc.getPersistentRDDs.keySet -- persistedBefore}")
+      assert(pinnedBySync.isEmpty, s"syncTickets left RDDs persisted: $pinnedBySync")
       assert(acc.value.isEmpty, s"publish errors: ${acc.value}")
       // the failed note must carry the live fetch failure's reason (the
       // reference reports the caught exception next to the note, TP:314)
@@ -319,14 +316,13 @@ class PipelinesSpec extends SparkSpec {
         s"point migration fetched unrelated payloads: $fetched")
 
       // view-ticket over live attachments releases its checkpoint too
-      val persistedBeforeView = sc.getPersistentRDDs.keySet
-      val dump = Pipelines.viewTicket(
+      val (dump, pinnedByView) = rddsPinnedBy(Pipelines.viewTicket(
         wireTickets, Fixtures.messagesDf(spark), liveAttachments,
         Fixtures.hsMailboxesDf(spark), Fixtures.hsUsersDf(spark),
-        Fixtures.hsCustomersDf(spark), Fixtures.defaultMailboxEmail, 1001L)
+        Fixtures.hsCustomersDf(spark), Fixtures.defaultMailboxEmail, 1001L))(
+        _ => Set.empty)
       assert(dump.contains("\"groove_ticket_number\":1001"))
-      assert((sc.getPersistentRDDs.keySet -- persistedBeforeView).isEmpty,
-        "viewTicket left RDDs persisted")
+      assert(pinnedByView.isEmpty, "viewTicket left RDDs persisted")
     } finally server.stop(0)
   }
 }

@@ -715,28 +715,22 @@ class StreamingSpec extends SparkSpec {
   test("dedup store: the seed and every trigger of both lifecycles release " +
     "the checkpoints they create") {
     import graft.streaming.DocumentStreams
-    val sc = spark.sparkContext
-    def persisted(): Seq[Int] = sc.getPersistentRDDs.keys.toSeq.sorted
-    val before = (persisted() :+ -1).max
-    val (idx, out) = (tmpDir("release-idx"), tmpDir("release-out"))
-    DocumentStreams.initCurationStore(spark, curationSeed(), idx, out)
-    DocumentStreams.processCurationBatch(spark, crawlBatch(0), 0L, idx, out,
-      numHashes = 64, bands = 4, threshold = 0.95)
-    DocumentStreams.processCurationBatch(spark, crawlBatch(1), 1L, idx, out,
-      numHashes = 64, bands = 4, threshold = 0.95, compactEvery = 2)
-    assert(DocumentStreams.readCommits(spark, idx).entries ===
-      Seq("compact00001"), "the second trigger must have compacted")
-    val (kIdx, kOut) = (tmpDir("release-kidx"), tmpDir("release-kout"))
-    DocumentStreams.initCurationStore(spark, curationSeed(), kIdx, kOut,
-      seedSurvivors = false)
-    DocumentStreams.processKeyedDedupBatch(spark, crawlBatch(0), 0L,
-      kIdx, kOut, shards = 8, numHashes = 64, bands = 4, threshold = 0.95)
-    // a release unpersists asynchronously: poll to a deadline
-    val deadline = System.nanoTime() + 10L * 1000 * 1000 * 1000
-    while (persisted().exists(_ > before) && System.nanoTime() < deadline)
-      Thread.sleep(100)
-    assert(persisted().filter(_ > before) === Seq.empty,
-      "RDDs the store calls persisted are still held")
+    val (_, grown) = rddsPinnedBy {
+      val (idx, out) = (tmpDir("release-idx"), tmpDir("release-out"))
+      DocumentStreams.initCurationStore(spark, curationSeed(), idx, out)
+      DocumentStreams.processCurationBatch(spark, crawlBatch(0), 0L, idx, out,
+        numHashes = 64, bands = 4, threshold = 0.95)
+      DocumentStreams.processCurationBatch(spark, crawlBatch(1), 1L, idx, out,
+        numHashes = 64, bands = 4, threshold = 0.95, compactEvery = 2)
+      assert(DocumentStreams.readCommits(spark, idx).entries ===
+        Seq("compact00001"), "the second trigger must have compacted")
+      val (kIdx, kOut) = (tmpDir("release-kidx"), tmpDir("release-kout"))
+      DocumentStreams.initCurationStore(spark, curationSeed(), kIdx, kOut,
+        seedSurvivors = false)
+      DocumentStreams.processKeyedDedupBatch(spark, crawlBatch(0), 0L,
+        kIdx, kOut, shards = 8, numHashes = 64, bands = 4, threshold = 0.95)
+    }(_ => Set.empty)
+    assert(grown === Set.empty, "RDDs the store calls persisted are still held")
   }
 
   test("keyed survivor store: generation compaction swaps atomically — a " +
